@@ -933,10 +933,7 @@ _MS_TOPK = 3
 # kernel call: every vector crosses the Python boundary n_other/_PAIR_BANK
 # times instead of n_other times (the r21 pair-expanded Arrow rewrite was
 # a wash for exactly that reason), and the per-pair kernel cost drops to
-# a vectorized multiply-add. The kernels replay the JVM fold's IEEE op
-# sequence exactly (see _np_fold_dot), so snapped outputs stay
-# bit-identical to the expression form — pinned by
-# tests/test_similarity_recall.py::test_blocked_pair_kernels_match_jvm_fold.
+# a vectorized multiply-add (the layout itself lives in _bank_pairs).
 _PAIR_BANK = 256
 
 
@@ -966,102 +963,112 @@ def _np_fold_sq(A):
     return acc
 
 
-def _np_fold_norm(A):
-    """Row norms: one correctly-rounded sqrt over the _np_fold_sq fold."""
+def _np_cos6(A, B):
+    """c6 snap of every A×B row pair — the HOF form's
+    floor(dot / greatest(na*nb, 1e-12) * 1e6 + 0.5) in its IEEE op order,
+    each norm one correctly-rounded sqrt over the _np_fold_sq fold."""
     import numpy as np
 
-    return np.sqrt(_np_fold_sq(A))
+    na, nb = np.sqrt(_np_fold_sq(A)), np.sqrt(_np_fold_sq(B))
+    return np.floor(
+        _np_fold_dot(A, B) / np.maximum(np.multiply.outer(na, nb), 1e-12)
+        * 1e6
+        + 0.5
+    ).astype(np.int64)
 
 
-def _np_bank(rows):
-    """(ids, matrix) from an Arrow bank of (vec_id, embedding) structs;
-    float32 parquet values widen exactly to float64."""
+def _np_d6(A, B):
+    """Squared-L2 snap of every A×B row pair — the HOF form's
+    floor((sqa + sqb - 2*dot) * 1e6 + 0.5) in its IEEE op order."""
+    import numpy as np
+
+    return np.floor(
+        (np.add.outer(_np_fold_sq(A), _np_fold_sq(B)) - 2 * _np_fold_dot(A, B)) * 1e6
+        + 0.5
+    ).astype(np.int64)
+
+
+def _np_bank(rows, labeled):
+    """(ids, labels or None, matrix) from an Arrow bank of
+    (vec_id[, label], embedding) structs; float32 parquet values widen
+    exactly to float64."""
     import numpy as np
 
     ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    M = np.array([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
-    return ids, M
-
-
-def _np_labeled_bank(rows):
-    """(ids, labels, matrix) from an Arrow bank of
-    (vec_id, label, embedding) structs."""
-    import numpy as np
-
-    ids = np.array([r["vec_id"] for r in rows], dtype=np.int64)
-    labels = np.array([r["label"] for r in rows], dtype=np.int64)
+    labels = np.array([r["label"] for r in rows], dtype=np.int64) if labeled else None
     M = np.array([np.asarray(r["embedding"], dtype=np.float64) for r in rows])
     return ids, labels, M
 
 
-def _cross_banks(spark, left_banks, right_banks, kernel, schema, cond=None):
-    """crossJoin the two (tiny) bank tables, spread bank pairs
-    round-robin over the session's cores (bank-pair rows are few and
-    uniform-cost; hash placement would be Poisson-unbalanced — the r21
-    minhash A/B), and run the numpy kernel per pair."""
-    joined = (
-        left_banks.join(right_banks, cond)
-        if cond is not None
-        else left_banks.crossJoin(right_banks)
+def _bank_pairs(spark, left, right, kernel, schema, every, labeled=False, upper=False):
+    """The blocked pair layout (see _PAIR_BANK), in one place: the
+    ``schema`` frame of ``kernel(a, b) -> {column: array}`` over every
+    pair of decoded banks (ids, labels|None, M) of ``left`` × ``right``.
+    A bank is one contiguous id range, keyed ``vec_id DIV
+    every·_PAIR_BANK`` (``every``: a side's id stride, one int or a
+    (left, right) pair). ``right=None`` pairs ``left`` with itself over
+    one lazily checkpointed bank table; ``upper`` keeps blk_a <= blk_b,
+    which holds every ida < idb pair exactly once. Bank pairs are few and
+    uniform-cost, so they go round-robin over the cores (hash placement
+    is Poisson-unbalanced — the r21 minhash A/B). Kernels on
+    _np_cos6/_np_d6 replay the HOF fold's IEEE op order, so their snaps
+    are bit-identical to the per-pair expression forms — pinned in
+    tests/test_similarity_recall.py::test_blocked_*_kernels_match_jvm_fold.
+    """
+    import pandas as pd
+
+    every_l, every_r = every if isinstance(every, tuple) else (every, every)
+    bank = F.collect_list(
+        F.struct("vec_id", *(["label"] if labeled else []), "embedding")
     )
+
+    def banks(df, ids_per_vec):
+        key = F.expr(f"vec_id DIV {ids_per_vec * _PAIR_BANK}")
+        return df.groupBy(key.alias("blk")).agg(bank.alias("bank"))
+
+    if right is None:
+        left_banks = right_banks = banks(left, every_l).localCheckpoint(eager=False)
+    else:
+        left_banks, right_banks = banks(left, every_l), banks(right, every_r)
+    la = left_banks.select(F.col("blk").alias("blk_a"), F.col("bank").alias("bank_a"))
+    rb = right_banks.select(F.col("blk").alias("blk_b"), F.col("bank").alias("bank_b"))
+    joined = la.join(rb, F.col("blk_a") <= F.col("blk_b")) if upper else la.crossJoin(rb)
+
+    def run(it):
+        for pdf in it:
+            for a, b in zip(pdf["bank_a"], pdf["bank_b"]):
+                yield pd.DataFrame(kernel(_np_bank(a, labeled), _np_bank(b, labeled)))
+
+    run.__name__ = kernel.__name__  # names the MapInPandas plan node
+
     return joined.repartition(spark.sparkContext.defaultParallelism).mapInPandas(
-        kernel, schema
+        run, schema
     )
 
 
 def _maxsim_scored(spark: SparkSession, emb: DataFrame) -> DataFrame:
     """(query_id, vec_id, score6) for every query×corpus pair (self-pairs
-    included — callers filter) via the blocked-bank kernel; score6 is
-    bit-identical to the per-pair HOF expression form (pinned in
-    tests/test_similarity_recall.py::test_blocked_pair_kernels_match_jvm_fold).
-    """
+    included — callers filter): score6 = Σ_i max_j c6(q_i, d_j) over the
+    8-dim sub-vectors, scored by _bank_pairs."""
+    from functools import reduce
+
     import numpy as np
-    import pandas as pd
 
-    bank = F.collect_list(F.struct("vec_id", "embedding"))
-    d_banks = emb.groupBy(
-        F.expr(f"vec_id DIV {_PAIR_BANK}").alias("blk_d")
-    ).agg(bank.alias("bank_d"))
-    q_banks = (
-        emb.where(F.col("vec_id") % 100 == 0)
-        .groupBy(F.expr(f"vec_id DIV {100 * _PAIR_BANK}").alias("blk_q"))
-        .agg(bank.alias("bank_q"))
-    )
+    def maxsim(q, d):
+        (idq, _, Q), (idd, _, D) = q, d
+        subs = [slice(i * 8, i * 8 + 8) for i in range(_MS_SUBS)]
+        total = sum(
+            reduce(np.maximum, (_np_cos6(Q[:, i], D[:, j]) for j in subs)) for i in subs
+        )
+        return {
+            "query_id": np.repeat(idq, len(idd)),
+            "vec_id": np.tile(idd, len(idq)),
+            "score6": total.ravel(),
+        }
 
-    def _maxsim_blocks(it):
-        for pdf in it:
-            for bank_q, bank_d in zip(pdf["bank_q"], pdf["bank_d"]):
-                idq, Q = _np_bank(bank_q)
-                idd, D = _np_bank(bank_d)
-                qn = [_np_fold_norm(Q[:, i * 8 : i * 8 + 8]) for i in range(_MS_SUBS)]
-                dn = [_np_fold_norm(D[:, j * 8 : j * 8 + 8]) for j in range(_MS_SUBS)]
-                total = np.zeros((len(idq), len(idd)), dtype=np.int64)
-                for i in range(_MS_SUBS):
-                    best = None
-                    for j in range(_MS_SUBS):
-                        s6 = np.floor(
-                            _np_fold_dot(
-                                Q[:, i * 8 : i * 8 + 8], D[:, j * 8 : j * 8 + 8]
-                            )
-                            / np.maximum(
-                                np.multiply.outer(qn[i], dn[j]), 1e-12
-                            )
-                            * 1e6
-                            + 0.5
-                        ).astype(np.int64)
-                        best = s6 if best is None else np.maximum(best, s6)
-                    total += best
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(idq, len(idd)),
-                        "vec_id": np.tile(idd, len(idq)),
-                        "score6": total.ravel(),
-                    }
-                )
-
-    return _cross_banks(
-        spark, q_banks, d_banks, _maxsim_blocks,
-        "query_id bigint, vec_id bigint, score6 bigint",
+    return _bank_pairs(
+        spark, emb.where(F.col("vec_id") % 100 == 0), emb, maxsim,
+        "query_id bigint, vec_id bigint, score6 bigint", every=(100, 1),
     )
 
 
@@ -1083,14 +1090,8 @@ def q_maxsim_late_interaction(spark: SparkSession, sf_dir: str) -> DataFrame:
     (the similarity_topk brute shape — the oracle-checkable witness); at
     100 TB candidate generation swaps to the ANN paths above and MaxSim
     re-scores candidates only, which is precisely ColBERT's two-stage
-    serving design. Per-pair cost (r22, guide §4.2 — see _PAIR_BANK):
-    the 8×8 sub-cosine kernel runs as a blocked Arrow/numpy pass over
-    bank pairs — the previous per-pair Catalyst HOF expression cost
-    ~150 µs/pair interpreted, and the r21 pair-expanded pandas rewrite
-    was a wash because both vectors crossed the Arrow boundary once PER
-    PAIR; banks ship each vector once per opposing bank instead. The
-    kernel replays the HOF fold's IEEE op order, so score6 is
-    bit-identical (pinned in tests/test_similarity_recall.py)."""
+    serving design. The 8×8 sub-cosine kernel runs over bank pairs
+    (_bank_pairs)."""
     from pyspark.sql import Window
 
     scored = (
@@ -1119,53 +1120,22 @@ _BITEXT_TAU = 1.0  # keep pairs whose margin beats the kNN mean
 
 
 def _bitext_pairs(spark: SparkSession, emb: DataFrame) -> DataFrame:
-    """All cross-side (src_id, tgt_id, c6) cosine pairs via the blocked
-    bank kernel (r22, guide §4.2 — see _PAIR_BANK): each side grouped
-    into ≤_PAIR_BANK-vector banks keyed by contiguous id range, bank
-    pairs crossed and scored in one numpy pass. The c6 snap is the exact
-    expression the HOF form computed —
-    floor(dot / greatest(na*nb, 1e-12) * 1e6 + 0.5) — with dot/norm
-    folds replayed in the JVM's IEEE op order (_np_fold_dot), so the
-    pair table is bit-identical to the expression form (pinned in
-    tests/test_similarity_recall.py::test_blocked_pair_kernels_match_jvm_fold).
-    """
+    """All cross-side (src_id, tgt_id, c6) cosine pairs — even vec_ids
+    against odd — scored by _bank_pairs."""
     import numpy as np
-    import pandas as pd
+
+    def bitext_c6(a, b):
+        (ida, _, A), (idb, _, B) = a, b
+        return {
+            "src_id": np.repeat(ida, len(idb)),
+            "tgt_id": np.tile(idb, len(ida)),
+            "c6": _np_cos6(A, B).ravel(),
+        }
 
     side = F.col("vec_id") % 2
-    blk = F.expr(f"vec_id DIV {2 * _PAIR_BANK}")
-    bank = F.collect_list(F.struct("vec_id", "embedding"))
-    a_banks = (
-        emb.where(side == 0).groupBy(blk.alias("blk_a")).agg(bank.alias("bank_a"))
-    )
-    b_banks = (
-        emb.where(side == 1).groupBy(blk.alias("blk_b")).agg(bank.alias("bank_b"))
-    )
-
-    def _c6_blocks(it):
-        for pdf in it:
-            for bank_a, bank_b in zip(pdf["bank_a"], pdf["bank_b"]):
-                ida, A = _np_bank(bank_a)
-                idb, B = _np_bank(bank_b)
-                na = _np_fold_norm(A)
-                nb = _np_fold_norm(B)
-                c6 = np.floor(
-                    _np_fold_dot(A, B)
-                    / np.maximum(np.multiply.outer(na, nb), 1e-12)
-                    * 1e6
-                    + 0.5
-                ).astype(np.int64)
-                yield pd.DataFrame(
-                    {
-                        "src_id": np.repeat(ida, len(idb)),
-                        "tgt_id": np.tile(idb, len(ida)),
-                        "c6": c6.ravel(),
-                    }
-                )
-
-    return _cross_banks(
-        spark, a_banks, b_banks, _c6_blocks,
-        "src_id bigint, tgt_id bigint, c6 bigint",
+    return _bank_pairs(
+        spark, emb.where(side == 0), emb.where(side == 1), bitext_c6,
+        "src_id bigint, tgt_id bigint, c6 bigint", every=2,
     )
 
 
@@ -1916,6 +1886,28 @@ _ECE_K = 10  # kNN votes per query — bins are the 11 discrete posteriors
 _ECE_QMOD = 20  # every 20th vector is a held-out query (5% sample)
 
 
+def _ece_scored(spark: SparkSession, emb: DataFrame) -> DataFrame:
+    """(query_id, qlabel, label, vec_id, c6) for every query×corpus pair
+    (self-pairs included — callers filter), scored by _bank_pairs."""
+    import numpy as np
+
+    def ece_c6(q, d):
+        (idq, qlbl, Q), (idd, lbl, D) = q, d
+        return {
+            "query_id": np.repeat(idq, len(idd)),
+            "qlabel": np.repeat(qlbl, len(idd)).astype(np.int32),
+            "label": np.tile(lbl, len(idq)).astype(np.int32),
+            "vec_id": np.tile(idd, len(idq)),
+            "c6": _np_cos6(Q, D).ravel(),
+        }
+
+    return _bank_pairs(
+        spark, emb.where(F.col("vec_id") % _ECE_QMOD == 0), emb, ece_c6,
+        "query_id bigint, qlabel int, label int, vec_id bigint, c6 bigint",
+        every=(_ECE_QMOD, 1), labeled=True,
+    )
+
+
 def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Reliability table / expected-calibration-error input (Naeini et
     al. 2015; Guo et al. 2017) for a kNN classifier on the embedding
@@ -1935,52 +1927,11 @@ def q_calibration_ece(spark: SparkSession, sf_dir: str) -> DataFrame:
     window is an 11-row aggregate. Production swaps the brute scorer for
     an ANN candidate generator, identical tail.
     """
-    import numpy as np
-    import pandas as pd
-
-    emb = load(spark, sf_dir, "embeddings")
-    # blocked-bank kernel (r22, guide §4.2 — see _PAIR_BANK); the c6
-    # snap replays the HOF fold's IEEE op order, bit-identical (pinned
-    # in tests/test_similarity_recall.py)
-    bank = F.collect_list(F.struct("vec_id", "label", "embedding"))
-    d_banks = emb.groupBy(
-        F.expr(f"vec_id DIV {_PAIR_BANK}").alias("blk_d")
-    ).agg(bank.alias("bank_d"))
-    q_banks = (
-        emb.where(F.col("vec_id") % _ECE_QMOD == 0)
-        .groupBy(F.expr(f"vec_id DIV {_ECE_QMOD * _PAIR_BANK}").alias("blk_q"))
-        .agg(bank.alias("bank_q"))
-    )
-
-    def _ece_blocks(it):
-        for pdf in it:
-            for bank_q, bank_d in zip(pdf["bank_q"], pdf["bank_d"]):
-                idq, qlbl, Q = _np_labeled_bank(bank_q)
-                idd, lbl, D = _np_labeled_bank(bank_d)
-                qn = _np_fold_norm(Q)
-                dn = _np_fold_norm(D)
-                c6 = np.floor(
-                    _np_fold_dot(Q, D)
-                    / np.maximum(np.multiply.outer(qn, dn), 1e-12)
-                    * 1e6
-                    + 0.5
-                ).astype(np.int64)
-                yield pd.DataFrame(
-                    {
-                        "query_id": np.repeat(idq, len(idd)),
-                        "qlabel": np.repeat(qlbl, len(idd)).astype(np.int32),
-                        "label": np.tile(lbl, len(idq)).astype(np.int32),
-                        "vec_id": np.tile(idd, len(idq)),
-                        "c6": c6.ravel(),
-                    }
-                )
-
-    scored = _cross_banks(
-        spark, q_banks, d_banks, _ece_blocks,
-        "query_id bigint, qlabel int, label int, vec_id bigint, c6 bigint",
-    ).where(F.col("vec_id") != F.col("query_id"))
     from pyspark.sql import Window
 
+    scored = _ece_scored(spark, load(spark, sf_dir, "embeddings")).where(
+        F.col("vec_id") != F.col("query_id")
+    )
     w = Window.partitionBy("query_id").orderBy(F.col("c6").desc(), "vec_id")
     votes = (
         scored.withColumn("rk", F.row_number().over(w))
@@ -2294,52 +2245,21 @@ _DBSCAN_MINPTS = 3  # neighbors (excluding self) to qualify as core
 
 
 def _dbscan_pairs(spark: SparkSession, emb3: DataFrame) -> DataFrame:
-    """Eps-surviving (ida, idb, d6) squared-L2 pairs (ida < idb) via the
-    blocked bank kernel (r22, guide §4.2 — see _PAIR_BANK). The d6 snap —
-    floor((sqa + sqb - 2*dot) * 1e6 + 0.5) — replays the HOF fold's IEEE
-    op order (pinned in tests/test_similarity_recall.py); the eps filter
-    is an integer compare, applied in-kernel so only surviving pairs
-    cross the Arrow boundary. blk_a <= blk_b halves the bank pairs
-    (banks are contiguous id ranges, so every ida < idb pair lives in
-    exactly one kept bank pair)."""
+    """Eps-surviving (ida, idb, d6) squared-L2 pairs (ida < idb) scored
+    by _bank_pairs over the upper bank triangle; the eps filter is an
+    integer compare, applied in-kernel so only surviving pairs cross the
+    Arrow boundary."""
     import numpy as np
-    import pandas as pd
 
-    bank = F.collect_list(F.struct("vec_id", "embedding"))
-    blk = F.expr(f"vec_id DIV {3 * _PAIR_BANK}")
-    # one scan+agg shared by both join sides (§2.4 — lazy: the single
-    # downstream action materializes it once)
-    banks = emb3.groupBy(blk.alias("blk")).agg(bank.alias("bank")).localCheckpoint(
-        eager=False
-    )
-    a_banks = banks.select(F.col("blk").alias("blk_a"), F.col("bank").alias("bank_a"))
-    b_banks = banks.select(F.col("blk").alias("blk_b"), F.col("bank").alias("bank_b"))
+    def dbscan_d6(a, b):
+        (ida, _, A), (idb, _, B) = a, b
+        d6 = _np_d6(A, B)
+        ii, jj = np.nonzero(np.less.outer(ida, idb) & (d6 <= _DBSCAN_EPS6))
+        return {"ida": ida[ii], "idb": idb[jj], "d6": d6[ii, jj]}
 
-    def _d6_blocks(it):
-        for pdf in it:
-            for bank_a, bank_b in zip(pdf["bank_a"], pdf["bank_b"]):
-                ida, A = _np_bank(bank_a)
-                idb, B = _np_bank(bank_b)
-                sqa = _np_fold_sq(A)
-                sqb = _np_fold_sq(B)
-                d6 = np.floor(
-                    (np.add.outer(sqa, sqb) - 2 * _np_fold_dot(A, B)) * 1e6
-                    + 0.5
-                ).astype(np.int64)
-                keep = (np.less.outer(ida, idb)) & (d6 <= _DBSCAN_EPS6)
-                ii, jj = np.nonzero(keep)
-                yield pd.DataFrame(
-                    {
-                        "ida": ida[ii],
-                        "idb": idb[jj],
-                        "d6": d6[ii, jj],
-                    }
-                )
-
-    return _cross_banks(
-        spark, a_banks, b_banks, _d6_blocks,
-        "ida bigint, idb bigint, d6 bigint",
-        cond=F.col("blk_a") <= F.col("blk_b"),
+    return _bank_pairs(
+        spark, emb3, None, dbscan_d6, "ida bigint, idb bigint, d6 bigint",
+        every=3, upper=True,
     )
 
 
@@ -2557,48 +2477,19 @@ _SIL_MOD = 4  # deterministic sample: vec_id % 4 == 0 (pairs are O(n²))
 
 
 def _sil_pairs(spark: SparkSession, emb4: DataFrame) -> DataFrame:
-    """Labeled (ida, la, lb, d6) squared-L2 pairs (ida != idb) via the
-    blocked bank kernel (r22, guide §4.2 — see _PAIR_BANK): d6 is the
-    DBSCAN spelling replayed in the HOF fold's IEEE op order (pinned in
-    tests/test_similarity_recall.py); the ida != idb predicate becomes
-    an in-kernel mask."""
+    """Labeled (ida, la, lb, d6) squared-L2 pairs (ida != idb) scored by
+    _bank_pairs; the ida != idb predicate is an in-kernel mask."""
     import numpy as np
-    import pandas as pd
 
-    bank = F.collect_list(F.struct("vec_id", "label", "embedding"))
-    blk = F.expr(f"vec_id DIV {_SIL_MOD * _PAIR_BANK}")
-    # one scan+agg shared by both join sides (§2.4 — lazy: the single
-    # downstream action materializes it once)
-    banks = emb4.groupBy(blk.alias("blk")).agg(bank.alias("bank")).localCheckpoint(
-        eager=False
-    )
-    a_banks = banks.select(F.col("blk").alias("blk_a"), F.col("bank").alias("bank_a"))
-    b_banks = banks.select(F.col("blk").alias("blk_b"), F.col("bank").alias("bank_b"))
+    def sil_d6(a, b):
+        (ida, la, A), (idb, lb, B) = a, b
+        d6 = _np_d6(A, B)
+        ii, jj = np.nonzero(np.not_equal.outer(ida, idb))
+        return {"ida": ida[ii], "la": la[ii], "lb": lb[jj], "d6": d6[ii, jj]}
 
-    def _sil_blocks(it):
-        for pdf in it:
-            for bank_a, bank_b in zip(pdf["bank_a"], pdf["bank_b"]):
-                ida, la, A = _np_labeled_bank(bank_a)
-                idb, lb, B = _np_labeled_bank(bank_b)
-                sqa = _np_fold_sq(A)
-                sqb = _np_fold_sq(B)
-                d6 = np.floor(
-                    (np.add.outer(sqa, sqb) - 2 * _np_fold_dot(A, B)) * 1e6
-                    + 0.5
-                ).astype(np.int64)
-                ii, jj = np.nonzero(np.not_equal.outer(ida, idb))
-                yield pd.DataFrame(
-                    {
-                        "ida": ida[ii],
-                        "la": la[ii],
-                        "lb": lb[jj],
-                        "d6": d6[ii, jj],
-                    }
-                )
-
-    return _cross_banks(
-        spark, a_banks, b_banks, _sil_blocks,
-        "ida bigint, la bigint, lb bigint, d6 bigint",
+    return _bank_pairs(
+        spark, emb4, None, sil_d6, "ida bigint, la bigint, lb bigint, d6 bigint",
+        every=_SIL_MOD, labeled=True,
     )
 
 

@@ -45,10 +45,22 @@ class Message(Generic[T]):
     payload: T
 
 
+# The running stage's dismissal event, published per thread by
+# runtime.spawn_stage. A port blocked on its queue polls it, so a
+# Daemon.teardown() interrupts a stage stuck in send/recv/close; threads
+# that are not stages have none and block as before.
+_stage = threading.local()
+
+
+def _raise_if_dismissed(op: str) -> None:
+    dismissed = getattr(_stage, "dismissed", None)
+    if dismissed is not None and dismissed.is_set():
+        raise NotConnected(f"stage dismissed while blocked on {op}")
+
+
 class _QueueSender:
-    def __init__(self, q: queue.Queue, cancelled: threading.Event | None = None):
+    def __init__(self, q: queue.Queue):
         self._q = q
-        self._cancelled = cancelled or threading.Event()
 
     def send(self, msg: Message) -> None:
         while True:
@@ -56,8 +68,7 @@ class _QueueSender:
                 self._q.put(msg, timeout=0.05)
                 return
             except queue.Full:
-                if self._cancelled.is_set():
-                    raise NotConnected("channel cancelled while blocked on send")
+                _raise_if_dismissed("send")
 
 
 class OutputPort(Generic[T]):
@@ -115,6 +126,7 @@ class InputPort(Generic[T]):
             try:
                 msg = self._q.get(timeout=remaining if remaining is not None else 0.1)
             except queue.Empty:
+                _raise_if_dismissed("recv")
                 if deadline is not None and time.monotonic() >= deadline:
                     raise TimeoutError("recv timed out")
                 continue

@@ -25,6 +25,7 @@ import time
 from dataclasses import dataclass, field
 from typing import Any
 
+from gasket_rs_spark.pipeline import messaging
 from gasket_rs_spark.pipeline.metrics import Registry
 from gasket_rs_spark.pipeline.retries import Retry, RetryPolicy, retry_call
 
@@ -285,6 +286,7 @@ def spawn_stage(stage: Stage, policy: Policy | None = None) -> Tether:
     anchor = _Anchor()
 
     def run() -> None:
+        messaging._stage.dismissed = anchor.dismissed
         machine = StageMachine(stage, policy, anchor)
         while machine.transition() is not StagePhase.ENDED:
             pass

@@ -16,13 +16,14 @@ auditable, not just claimed.
 from __future__ import annotations
 
 import math
+import os
 import sys
 import time
 import traceback
 
 import duckdb
 
-REPO = "/root/repo"
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
 from gasket_rs_spark.tables import TABLE_NAMES  # noqa: E402

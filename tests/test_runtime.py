@@ -170,6 +170,44 @@ def test_tether_blocked_detection():
     tether.join_stage(timeout=5)
 
 
+def test_teardown_interrupts_stage_blocked_on_full_queue():
+    """A dismissed stage stops waiting on its ports: the sink ends after
+    one message, the unbounded source fills the cap-2 edge and blocks in
+    send, and Daemon.teardown() still ends it (and its close) promptly
+    instead of leaving it alive past the 5 s join."""
+    from gasket_rs_spark.pipeline.messaging import InputPort, OutputPort, connect_ports
+
+    class SourceWorker(Worker):
+        def schedule(self, stage):
+            return Scheduled.unit_of(0)
+
+        def execute(self, unit, stage):
+            stage.output.send(unit)
+
+        def teardown(self):
+            src.output.close()
+
+    class SinkWorker(Worker):
+        def schedule(self, stage):
+            stage.input.recv()
+            return Scheduled.done()
+
+    src, sink = Stage(name="source"), Stage(name="sink")
+    src.output, src.worker = OutputPort(), SourceWorker
+    sink.input, sink.worker = InputPort(), SinkWorker
+    connect_ports(src.output, sink.input, cap=2)
+    tethers = [spawn_stage(s) for s in (src, sink)]
+    deadline = time.monotonic() + 10
+    while tethers[1].phase is not StagePhase.ENDED or len(src.output) < 2:
+        assert time.monotonic() < deadline, "source never filled the queue"
+        time.sleep(0.01)
+    time.sleep(0.2)  # the source is now inside send on the full queue
+    t0 = time.monotonic()
+    Daemon(tethers).teardown()
+    assert time.monotonic() - t0 < 1.0
+    assert all(t.phase is StagePhase.ENDED for t in tethers)
+
+
 @pytest.mark.parametrize(
     "retry_n,expected",
     [(0, 0.0), (1, 0.002), (2, 0.004), (3, 0.008), (20, 0.05)],

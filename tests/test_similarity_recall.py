@@ -293,12 +293,12 @@ def test_jl_projection_distortion_centers_on_one(spark, sf_dir):
 
 def test_blocked_pair_kernels_match_jvm_fold(spark, sf_dir):
     """r22 §4.2 pin: the blocked Arrow/numpy pair kernels (_bitext_pairs,
-    _maxsim_scored) must be BIT-IDENTICAL to the Catalyst HOF expression
-    forms they replaced — the numpy code replays the JVM fold's IEEE op
-    sequence (sequential per-dim multiply-add, _np_fold_dot), so the
-    floor(x*1e6 + 0.5) snaps cannot diverge. exceptAll both ways over
-    the full intermediate frames (not just the top-k output, which could
-    mask sub-rank diffs)."""
+    _maxsim_scored, _ece_scored) must be BIT-IDENTICAL to the Catalyst
+    HOF expression forms they replaced — the numpy code replays the JVM
+    fold's IEEE op sequence (sequential per-dim multiply-add,
+    _np_fold_dot), so the floor(x*1e6 + 0.5) snaps cannot diverge.
+    exceptAll both ways over the full intermediate frames (not just the
+    top-k output, which could mask sub-rank diffs)."""
     from pyspark.sql import functions as F
     from pyspark.sql.functions import broadcast
 
@@ -376,6 +376,25 @@ def test_blocked_pair_kernels_match_jvm_fold(spark, sf_dir):
     )
     assert blocked_scored.exceptAll(hof_scored).count() == 0
     assert hof_scored.exceptAll(blocked_scored).count() == 0
+
+    # --- calibration_ece scored frame: labeled HOF c6 of every
+    # _ECE_QMOD-th vector against the corpus (self-pairs excluded by the
+    # join predicate; filter the kernel frame the same way)
+    lv = emb.select("vec_id", "label", as_double.alias("vb"), norm.alias("nb"))
+    ece_q = lv.where(F.col("vec_id") % S._ECE_QMOD == 0).toDF(
+        "query_id", "qlabel", "va", "na"
+    )
+    c6 = F.floor(
+        dot / F.greatest(F.col("na") * F.col("nb"), F.lit(1e-12)) * 1e6 + F.lit(0.5)
+    ).cast("bigint")
+    hof_ece = lv.join(broadcast(ece_q), F.col("vec_id") != F.col("query_id")).select(
+        "query_id", "qlabel", "label", "vec_id", c6.alias("c6")
+    )
+    blocked_ece = S._ece_scored(spark, emb).where(
+        F.col("vec_id") != F.col("query_id")
+    )
+    assert blocked_ece.exceptAll(hof_ece).count() == 0
+    assert hof_ece.exceptAll(blocked_ece).count() == 0
 
 
 def test_blocked_distance_kernels_match_jvm_fold(spark, sf_dir):
