@@ -1,9 +1,14 @@
 """Typed ports and wiring — parity with gasket/src/messaging.rs.
 
 The reference wires statically-typed stages over bounded tokio channels at
-runtime. Here the transport is a bounded ``queue.Queue`` per edge (same
-backpressure model: a full queue blocks the producer), and "typed" means an
-optional schema/type tag checked at connect time — the analogue of the
+runtime. Here each edge is a slot-token ``_Channel``: two C-level
+``queue.SimpleQueue``s, one holding the messages and one holding ``cap``
+slot tokens. A sender takes a token before it puts and a receiver returns
+one after it gets, so a full channel blocks the producer at exactly
+``cap`` (the reference's backpressure model) while each put and get is
+one C call — ``queue.Queue`` takes a Python-level lock and condition on
+every call, which dominated the per-message cost. "Typed" means
+an optional schema/type tag checked at connect time — the analogue of the
 compile-time payload types (README.md:16), enforced at wiring ("analysis")
 time like Spark checks DataFrame schemas.
 
@@ -40,7 +45,7 @@ class PortTypeMismatch(TypeError):
     pass
 
 
-@dataclass(frozen=True)
+@dataclass(frozen=True, slots=True)
 class Message(Generic[T]):
     payload: T
 
@@ -58,46 +63,78 @@ def _raise_if_dismissed(op: str) -> None:
         raise NotConnected(f"stage dismissed while blocked on {op}")
 
 
-class _QueueSender:
-    def __init__(self, q: queue.Queue):
-        self._q = q
+def _get_until(q, deadline: float | None):
+    """``q.get`` in waits of at most 0.1 s, so a dismissed stage stops
+    waiting (NotConnected); raises ``queue.Empty`` once ``deadline`` (a
+    ``time.monotonic()`` reading, or None for no limit) has passed."""
+    while True:
+        wait = 0.1 if deadline is None else min(0.1, max(0.0, deadline - time.monotonic()))
+        try:
+            return q.get(timeout=wait)
+        except queue.Empty:
+            _raise_if_dismissed("recv")
+            if deadline is not None and time.monotonic() >= deadline:
+                raise
+
+
+class _Channel:
+    """Bounded FIFO edge: ``_items`` carries the messages, ``_slots`` holds
+    one token per free slot. ``send`` takes a token before it puts and
+    ``get`` returns one after it takes a message, so exactly ``cap`` sends
+    complete with no receiver; the close sentinel takes a slot like any
+    message. A sender waiting for a token polls its stage's dismissal."""
+
+    def __init__(self, cap: int):
+        if cap < 1:
+            raise ValueError(f"channel capacity must be at least 1, got {cap}")
+        self._items: queue.SimpleQueue = queue.SimpleQueue()
+        self._slots: queue.SimpleQueue = queue.SimpleQueue()
+        for _ in range(cap):
+            self._slots.put(None)
 
     def send(self, msg: Message) -> None:
         while True:
             try:
-                self._q.put(msg, timeout=0.05)
-                return
-            except queue.Full:
+                self._slots.get(timeout=0.05)
+                break
+            except queue.Empty:
                 _raise_if_dismissed("send")
+        self._items.put(msg)
+
+    def get(self, timeout: float | None = None) -> Message:
+        msg = self._items.get(timeout=timeout)
+        self._slots.put(None)
+        return msg
+
+    def qsize(self) -> int:
+        return self._items.qsize()
 
 
 class OutputPort(Generic[T]):
-    """messaging.rs:40-69: send() into the connected channel; error if not
-    connected; len() exposes the queue depth."""
+    """messaging.rs:40-69: send() into every connected edge; error if not
+    connected; len() exposes the deepest edge's queue depth."""
 
     def __init__(self, schema: Any = None):
         self.schema = schema
-        self._senders: list[_QueueSender] = []
-        self._queues: list[queue.Queue] = []
+        self._edges: list[_Channel | _BroadcastRing] = []
 
-    def connect(self, sender: _QueueSender, q: queue.Queue) -> None:
-        self._senders.append(sender)
-        self._queues.append(q)
+    def connect(self, edge: _Channel | _BroadcastRing) -> None:
+        self._edges.append(edge)
 
     def send(self, msg: Message | Any) -> None:
         if not isinstance(msg, Message):
             msg = Message(msg)
-        if not self._senders:
+        if not self._edges:
             raise NotConnected("output port is not connected")
-        for s in self._senders:
-            s.send(msg)
+        for edge in self._edges:
+            edge.send(msg)
 
     def close(self) -> None:
-        for s in self._senders:
-            s.send(Message(_SENTINEL))
+        for edge in self._edges:
+            edge.send(Message(_SENTINEL))
 
     def __len__(self) -> int:
-        return max((q.qsize() for q in self._queues), default=0)
+        return max((edge.qsize() for edge in self._edges), default=0)
 
 
 class InputPort(Generic[T]):
@@ -105,11 +142,11 @@ class InputPort(Generic[T]):
 
     def __init__(self, schema: Any = None):
         self.schema = schema
-        self._q: queue.Queue | None = None
+        self._q: _Channel | _RingReceiver | None = None
         self._producers = 0
         self._ended_producers = 0
 
-    def connect(self, q: queue.Queue) -> None:
+    def connect(self, q: _Channel | _RingReceiver) -> None:
         if self._q is not None and self._q is not q:
             raise RuntimeError("input port already connected to a different channel")
         self._q = q
@@ -117,19 +154,16 @@ class InputPort(Generic[T]):
 
     def recv(self, timeout: float | None = None):
         """Blocking receive. Returns the Message, or None once every
-        connected producer has closed (end of stream — WorkSchedule::Done)."""
+        connected producer has closed (end of stream — WorkSchedule::Done);
+        raises TimeoutError after ``timeout`` seconds."""
         if self._q is None:
             raise NotConnected("input port is not connected")
         deadline = None if timeout is None else time.monotonic() + timeout
         while True:
-            remaining = None if deadline is None else max(0.0, deadline - time.monotonic())
             try:
-                msg = self._q.get(timeout=remaining if remaining is not None else 0.1)
+                msg = _get_until(self._q, deadline)
             except queue.Empty:
-                _raise_if_dismissed("recv")
-                if deadline is not None and time.monotonic() >= deadline:
-                    raise TimeoutError("recv timed out")
-                continue
+                raise TimeoutError("recv timed out") from None
             if msg.payload is _SENTINEL:
                 self._ended_producers += 1
                 if self._ended_producers >= self._producers:
@@ -151,18 +185,18 @@ def _check_types(output: OutputPort, input_: InputPort) -> None:
 def connect_ports(output: OutputPort, input_: InputPort, cap: int) -> None:
     """1:1 edge over a bounded channel (messaging.rs:404-411)."""
     _check_types(output, input_)
-    q: queue.Queue = queue.Queue(maxsize=cap)
-    output.connect(_QueueSender(q), q)
-    input_.connect(q)
+    channel = _Channel(cap)
+    output.connect(channel)
+    input_.connect(channel)
 
 
 def funnel_ports(outputs: list[OutputPort], input_: InputPort, cap: int) -> None:
     """N:1 merge: many producers share one channel (messaging.rs:413-423)."""
-    q: queue.Queue = queue.Queue(maxsize=cap)
+    channel = _Channel(cap)
     for out in outputs:
         _check_types(out, input_)
-        out.connect(_QueueSender(q), q)
-        input_.connect(q)
+        out.connect(channel)
+        input_.connect(channel)
 
 
 class Lagged(RuntimeError):
@@ -226,17 +260,9 @@ class _BroadcastRing:
             return self._len
 
 
-class _RingSender:
-    def __init__(self, ring: _BroadcastRing):
-        self._ring = ring
-
-    def send(self, msg: Message) -> None:
-        self._ring.send(msg)
-
-
 class _RingReceiver:
     """Per-subscriber cursor into a _BroadcastRing; duck-types the
-    queue.Queue surface InputPort.recv drives (get/qsize)."""
+    _Channel surface InputPort.recv drives (get/qsize)."""
 
     def __init__(self, ring: _BroadcastRing):
         self._ring = ring
@@ -288,13 +314,13 @@ def broadcast_port(
         for inp in inputs:
             _check_types(output, inp)
             inp.connect(_RingReceiver(ring))
-        output.connect(_RingSender(ring), ring)
+        output.connect(ring)
         return
     for inp in inputs:
         _check_types(output, inp)
-        q: queue.Queue = queue.Queue(maxsize=cap)
-        output.connect(_QueueSender(q), q)
-        inp.connect(q)
+        channel = _Channel(cap)
+        output.connect(channel)
+        inp.connect(channel)
 
 
 class Fanout:
@@ -357,10 +383,11 @@ class TimerPort:
                 pass  # slow consumer: drop ticks, like a watch channel
 
     def recv(self, timeout: float | None = None) -> Message:
+        """Next tick; raises ``queue.Empty`` after ``timeout`` seconds."""
         if self._thread is None:
             self._thread = threading.Thread(target=self._run, daemon=True)
             self._thread.start()
-        return self._q.get(timeout=timeout)
+        return _get_until(self._q, None if timeout is None else time.monotonic() + timeout)
 
     def stop(self) -> None:
         self._stop.set()

@@ -38,22 +38,28 @@ class WorkSchedule(enum.Enum):
     DONE = "done"
 
 
-@dataclass
+# Module-level aliases for the enum members the stage tick uses: a
+# class-attribute enum lookup costs about 0.2 µs, and ticks run ten times
+# per message in a four-stage chain.
+_IDLE, _UNIT, _DONE = WorkSchedule.IDLE, WorkSchedule.UNIT, WorkSchedule.DONE
+
+
+@dataclass(slots=True)
 class Scheduled:
     kind: WorkSchedule
     unit: Any = None
 
     @classmethod
     def idle(cls) -> "Scheduled":
-        return cls(WorkSchedule.IDLE)
+        return cls(_IDLE)
 
     @classmethod
     def unit_of(cls, unit: Any) -> "Scheduled":
-        return cls(WorkSchedule.UNIT, unit)
+        return cls(_UNIT, unit)
 
     @classmethod
     def done(cls) -> "Scheduled":
-        return cls(WorkSchedule.DONE)
+        return cls(_DONE)
 
 
 class WorkerError(Exception):
@@ -106,6 +112,12 @@ class StagePhase(enum.Enum):
     ENDED = "ended"
 
 
+_BOOTSTRAP, _SCHEDULING, _EXECUTING, _TEARDOWN, _ENDED = (
+    StagePhase.BOOTSTRAP, StagePhase.SCHEDULING, StagePhase.EXECUTING,
+    StagePhase.TEARDOWN, StagePhase.ENDED,
+)
+
+
 @dataclass
 class Policy:
     """runtime.rs:422-439."""
@@ -143,63 +155,54 @@ class StageMachine:
         self.anchor = anchor
         self.worker = stage.worker()
         self.tick_count = stage.metrics.track_counter("tick_count")
+        # one Retry per machine; its count is reset for each new unit
         self._work_retry = Retry(policy.work_retry)
         self._pending_unit: Any = None
-        self.phase = StagePhase.BOOTSTRAP
+        self._dismissed = anchor.dismissed
+        self.phase = _BOOTSTRAP
 
     # -- phase ops ---------------------------------------------------------
 
     def _cancelled(self) -> bool:
-        return self.anchor.dismissed.is_set()
-
-    def _tick(self) -> None:
-        self.tick_count.inc()
-        self.anchor.phase = self.phase
-        self.anchor.last_tick = time.monotonic()
+        return self._dismissed.is_set()
 
     def transition(self) -> StagePhase:
         """One state-machine tick: actuate current phase, apply the event
-        (runtime.rs:291-316)."""
+        (runtime.rs:291-316), then publish the tick."""
         try:
-            if self.phase is StagePhase.BOOTSTRAP:
-                self._actuate_bootstrap()
-            elif self.phase is StagePhase.SCHEDULING:
-                self._actuate_schedule()
-            elif self.phase is StagePhase.EXECUTING:
-                self._actuate_execute()
-            elif self.phase is StagePhase.TEARDOWN:
-                self._actuate_teardown()
+            self._ACTUATORS[self.phase](self)
         except BaseException as err:  # noqa: BLE001 — supervisor decides
             self.anchor.error = err
-            if self.phase is StagePhase.TEARDOWN:
-                self.phase = StagePhase.ENDED
-            else:
-                self.phase = StagePhase.TEARDOWN
-        self._tick()
-        return self.phase
+            self.phase = _ENDED if self.phase is _TEARDOWN else _TEARDOWN
+        self.tick_count.inc()
+        anchor = self.anchor
+        anchor.phase = phase = self.phase
+        anchor.last_tick = time.monotonic()
+        return phase
 
     def _actuate_bootstrap(self) -> None:
         if self._cancelled():
-            self.phase = StagePhase.TEARDOWN
+            self.phase = _TEARDOWN
             return
         retry_call(
             lambda: self.worker.bootstrap(self.stage),
             self.policy.bootstrap_retry,
             cancelled=self._cancelled,
         )
-        self.phase = StagePhase.SCHEDULING
+        self.phase = _SCHEDULING
 
     def _actuate_schedule(self) -> None:
         if self._cancelled():
-            self.phase = StagePhase.TEARDOWN
+            self.phase = _TEARDOWN
             return
         sched = self.worker.schedule(self.stage)
-        if sched.kind is WorkSchedule.DONE:
-            self.phase = StagePhase.TEARDOWN
-        elif sched.kind is WorkSchedule.UNIT:
+        kind = sched.kind
+        if kind is _UNIT:
             self._pending_unit = sched.unit
-            self._work_retry = Retry(self.policy.work_retry)
-            self.phase = StagePhase.EXECUTING
+            self._work_retry.count = 0
+            self.phase = _EXECUTING
+        elif kind is _DONE:
+            self.phase = _TEARDOWN
         # IDLE: stay in SCHEDULING (runtime.rs: NextUnit(None) → Scheduling)
 
     def _actuate_execute(self) -> None:
@@ -207,7 +210,7 @@ class StageMachine:
         SAME unit is re-executed max_retries+1 times (runtime.rs:627-659),
         then dismissed (skip, back to scheduling) or escalated."""
         if self._cancelled():
-            self.phase = StagePhase.TEARDOWN
+            self.phase = _TEARDOWN
             return
         try:
             self.worker.execute(self._pending_unit, self.stage)
@@ -216,7 +219,7 @@ class StageMachine:
                 # teardown then re-bootstrap without ending (runtime.rs:268,280)
                 self.worker.teardown()
                 self.worker = self.stage.worker()
-                self.phase = StagePhase.BOOTSTRAP
+                self.phase = _BOOTSTRAP
                 return
             if err.kind == WorkerError.PANIC:
                 raise
@@ -225,7 +228,7 @@ class StageMachine:
         except Exception:
             self._retry_or_escalate()
             return
-        self.phase = StagePhase.SCHEDULING
+        self.phase = _SCHEDULING
 
     def _retry_or_escalate(self) -> None:
         self._work_retry.next()
@@ -233,7 +236,7 @@ class StageMachine:
             if self.policy.work_retry.dismissible:
                 # skip the unit, schedule fresh (runtime.rs:272-274)
                 self._pending_unit = None
-                self.phase = StagePhase.SCHEDULING
+                self.phase = _SCHEDULING
                 return
             raise WorkerError(WorkerError.PANIC)
         self._work_retry.wait_backoff(self._cancelled)
@@ -241,7 +244,16 @@ class StageMachine:
 
     def _actuate_teardown(self) -> None:
         retry_call(self.worker.teardown, self.policy.teardown_retry)
-        self.phase = StagePhase.ENDED
+        self.phase = _ENDED
+
+    # phase → actuator, built once; an ENDED machine only ticks
+    _ACTUATORS = {
+        _BOOTSTRAP: _actuate_bootstrap,
+        _SCHEDULING: _actuate_schedule,
+        _EXECUTING: _actuate_execute,
+        _TEARDOWN: _actuate_teardown,
+        _ENDED: lambda self: None,
+    }
 
 
 class Tether:
@@ -288,7 +300,7 @@ def spawn_stage(stage: Stage, policy: Policy | None = None) -> Tether:
     def run() -> None:
         messaging._stage.dismissed = anchor.dismissed
         machine = StageMachine(stage, policy, anchor)
-        while machine.transition() is not StagePhase.ENDED:
+        while machine.transition() is not _ENDED:
             pass
 
     thread = threading.Thread(target=run, name=f"stage-{stage.name}", daemon=True)

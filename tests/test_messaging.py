@@ -3,6 +3,7 @@ compare_inbound_sequence helper (testing.rs:3-27)."""
 
 from __future__ import annotations
 
+import sys
 import threading
 
 import pytest
@@ -53,11 +54,13 @@ def test_type_checked_wiring():
 
 
 def test_backpressure_blocks_producer():
-    """messaging.rs:384-391: a full bounded channel suspends send()."""
+    """messaging.rs:384-391: a full bounded channel suspends send();
+    exactly ``cap`` sends complete with no consumer."""
     out, inp = OutputPort(), InputPort()
     connect_ports(out, inp, cap=2)
     out.send(1)
     out.send(2)
+    assert len(out) == 2 and len(inp) == 2
     done = threading.Event()
 
     def producer():
@@ -80,6 +83,47 @@ def test_funnel_merges_all_producers():
     o1.send("c")
     got = sorted(inp.recv(timeout=1).payload for _ in range(3))
     assert got == ["a", "b", "c"]
+
+
+def test_funnel_contention_exactly_once_in_order():
+    """4 producer threads × 2,000 messages over one cap-3 channel, with a
+    short switch interval to force interleaving: every message arrives
+    exactly once, each producer's order is preserved, and end of stream
+    comes only after all four producers have closed."""
+    n_producers, n_msgs = 4, 2000
+    outs, inp = [OutputPort() for _ in range(n_producers)], InputPort()
+    funnel_ports(outs, inp, cap=3)
+
+    def produce(p: int) -> None:
+        for i in range(n_msgs):
+            outs[p].send((p, i))
+        outs[p].close()
+
+    old_interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=produce, args=(p,), daemon=True)
+                   for p in range(n_producers)]
+        for t in threads:
+            t.start()
+        got: list[list[int]] = [[] for _ in range(n_producers)]
+        while (msg := inp.recv(timeout=10.0)) is not None:
+            p, i = msg.payload
+            got[p].append(i)
+        for t in threads:
+            t.join(timeout=10.0)
+            assert not t.is_alive()
+    finally:
+        sys.setswitchinterval(old_interval)
+    assert got == [list(range(n_msgs))] * n_producers
+    assert len(inp) == 0
+
+
+def test_channel_needs_a_slot():
+    """A zero-capacity edge could never accept a send; wiring refuses it,
+    as the reference's bounded channel does."""
+    with pytest.raises(ValueError):
+        connect_ports(OutputPort(), InputPort(), cap=0)
 
 
 def test_funnel_end_of_stream_waits_for_all():

@@ -68,17 +68,21 @@ class MockStage(Stage):
         return MockWorker(self)
 
 
-def test_stage_machine_happy_path():
-    """runtime.rs:590-615: bootstrap → 5 units → done → teardown → ended."""
-    stage = MockStage(units=5)
+@pytest.mark.parametrize("units", [0, 1, 5, 50])
+def test_stage_machine_happy_path(units):
+    """runtime.rs:590-615: bootstrap → N units → done → teardown → ended.
+    Without failures that is exactly 2N + 3 ticks: one bootstrap, a
+    schedule and an execute per unit, the schedule that returns done, and
+    the teardown."""
+    stage = MockStage(units=units)
     tether = spawn_stage(stage, Policy())
     tether.join_stage(timeout=10)
     assert tether.phase is StagePhase.ENDED
     assert stage.bootstrap_count == 1
-    assert stage.execute_count == 5
-    assert stage.executed_units == [1, 2, 3, 4, 5]
+    assert stage.execute_count == units
+    assert stage.executed_units == list(range(1, units + 1))
     assert stage.teardown_count == 1
-    assert tether.read_metrics()["tick_count"] > 0
+    assert tether.read_metrics()["tick_count"] == 2 * units + 3
 
 
 def test_honors_max_retries():
@@ -93,6 +97,33 @@ def test_honors_max_retries():
     assert stage.executed_units == [1, 1, 1, 1]
     assert stage.teardown_count == 1
     assert tether.error is not None
+
+
+def test_retry_budget_is_per_unit():
+    """Each unit gets the full max_retries budget: a unit that fails only
+    its first attempt is retried once and succeeds, for every unit, under
+    a non-dismissible policy with max_retries=1. A budget carried over
+    from the previous unit would escalate unit 2 to PANIC."""
+
+    class FailFirstAttemptWorker(MockWorker):
+        def execute(self, unit, stage):
+            self.cfg.execute_count += 1
+            self.cfg.executed_units.append(unit)
+            if self.cfg.executed_units.count(unit) == 1:
+                raise RuntimeError(f"injected first-attempt failure on unit {unit}")
+
+    class FailFirstStage(MockStage):
+        def worker(self):
+            return FailFirstAttemptWorker(self)
+
+    stage = FailFirstStage(units=3)
+    policy = Policy(work_retry=RetryPolicy(max_retries=1, backoff_unit=0.001))
+    tether = spawn_stage(stage, policy)
+    tether.join_stage(timeout=10)
+    assert tether.phase is StagePhase.ENDED
+    assert stage.executed_units == [1, 1, 2, 2, 3, 3]
+    assert tether.error is None
+    assert stage.teardown_count == 1
 
 
 def test_dismissible_skips_unit_and_continues():
@@ -206,6 +237,44 @@ def test_teardown_interrupts_stage_blocked_on_full_queue():
     Daemon(tethers).teardown()
     assert time.monotonic() - t0 < 1.0
     assert all(t.phase is StagePhase.ENDED for t in tethers)
+
+
+@pytest.mark.parametrize("wait", ["timer_recv", "input_recv_timeout"])
+def test_teardown_interrupts_stage_blocked_in_timed_wait(wait):
+    """A stage whose schedule waits on a 10 s TimerPort tick, or on a
+    silent InputPort with a 10 s timeout, still ends promptly on
+    Daemon.teardown() instead of holding the 5 s join."""
+    from gasket_rs_spark.pipeline.messaging import (
+        InputPort, OutputPort, TimerPort, connect_ports,
+    )
+
+    timer = TimerPort(interval=10.0)
+    silent, inp = OutputPort(), InputPort()
+    connect_ports(silent, inp, cap=1)
+
+    class WaitingWorker(Worker):
+        def schedule(self, stage):
+            if wait == "timer_recv":
+                timer.recv()
+            else:
+                inp.recv(timeout=10.0)
+            return Scheduled.done()
+
+        def teardown(self):
+            timer.stop()
+
+    stage = Stage(name="waiting")
+    stage.worker = WaitingWorker
+    tether = spawn_stage(stage)
+    deadline = time.monotonic() + 10
+    while tether.phase is not StagePhase.SCHEDULING:
+        assert time.monotonic() < deadline, "stage never reached scheduling"
+        time.sleep(0.01)
+    time.sleep(0.2)  # the stage is now inside the wait
+    t0 = time.monotonic()
+    Daemon([tether]).teardown()
+    assert time.monotonic() - t0 < 1.0
+    assert tether.phase is StagePhase.ENDED
 
 
 @pytest.mark.parametrize(
