@@ -26,6 +26,10 @@ Cross-round comparability: the headline composition changed in round 2
 moved in), so every run ALSO times and emits the original round-1
 composition as ``headline_v1_total_sec`` — both series stay comparable
 across all rounds.
+
+The same headline loop runs at any SF (e.g. the tiled sf1 from
+``scripts/gen_sf_fixture.py``); extras are timed only at sf0.1 (see
+_extras_plan and _detail_name).
 """
 
 from __future__ import annotations
@@ -35,7 +39,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
+REPO = os.path.dirname(os.path.abspath(__file__))
 
 HEADLINE = [
     "flagship_revenue_by_region",
@@ -306,6 +310,10 @@ HEADLINE_V1 = [
 # insurance against environment drift that content hashing cannot see.
 EXTRAS_RETIME_AGE = 4
 
+# The SF whose detail files hold the committed series and the extras
+# carry-forward; every other SF writes its own sf-stamped detail.
+ANCHOR_SF = 0.1
+
 
 def _loadavg() -> list[float]:
     """1/5/15-min load averages — the container-external-contention proxy
@@ -544,7 +552,55 @@ def _load_gate() -> dict:
             "load_avg": la, "waited_sec": round(waited, 1)}
 
 
-def _extras_plan(queries) -> tuple[list[str], dict, dict, dict]:
+def _warm_up(spark, queries) -> None:
+    """Warm the JVM/codegen path AND the Python/Arrow worker pool outside
+    timing, at a tiny SF whatever SF is benched: the first pandas-UDF query
+    in a session otherwise pays ~2s of worker spin-up inside its measurement."""
+    for name in ("flagship_revenue_by_region", "dedup_minhash_lsh"):
+        queries[name](spark, "/root/testdata/sf0.001").collect()
+
+
+def _time_pass(spark, queries, names, sf_dir, meter, phase) -> tuple[dict, dict]:
+    """One timing pass: ({name: seconds}, phase-tagged pass load). Sketch
+    bases persist per invocation and Spark's CacheManager dedups identical
+    plans, so caches are cleared first — else a later pass would time warm
+    cache reads, not the query. The noop sink evaluates the complete plan
+    (count() would let Catalyst prune projections and under-measure)."""
+    from gasket_rs_spark.session import clear_caches
+
+    clear_caches(spark)
+    meter.start()
+    times = {}
+    for name in names:
+        t0 = time.perf_counter()
+        queries[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        times[name] = time.perf_counter() - t0
+    return times, {"phase": phase, **meter.stop()}
+
+
+def _next_round() -> int:
+    """The round being benched: one past the newest committed
+    CORRECTNESS_r*.json."""
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
+    from gen_registry_order import available_rounds
+
+    return max(available_rounds(), default=0) + 1
+
+
+def _detail_name(sf: float, anchor: bool, rnd: int) -> str:
+    """VERDICT r12 #5: the committed quiet-box anchor (BENCH_DETAIL.json)
+    must survive the driver's close run — r12's close overwrote it with
+    loaded-box numbers. Only an explicit sf0.1 anchor run
+    (SPARK_GRAFT_BENCH_ANCHOR=1, set by the builder on a quiet box)
+    writes BENCH_DETAIL.json; other sf0.1 runs (the driver's close
+    included) write the round-stamped close file beside it, and any other
+    SF writes an sf-stamped one, so no SF can overwrite another's."""
+    if sf != ANCHOR_SF:
+        return f"BENCH_DETAIL_sf{sf:g}_r{rnd}_close.json"
+    return "BENCH_DETAIL.json" if anchor else f"BENCH_DETAIL_r{rnd}_close.json"
+
+
+def _extras_plan(queries, sf: float) -> tuple[list[str], dict, dict, dict]:
     """Incremental extras timing (VERDICT r11 #6): with 180+ extras at
     235-272 s/pass x 2 passes, retiming everything every round grows
     without bound. Each extra carries ``extras_meta[name] =
@@ -554,27 +610,18 @@ def _extras_plan(queries) -> tuple[list[str], dict, dict, dict]:
     (c) its timing is older than EXTRAS_RETIME_AGE rounds. Everything
     else carries forward verbatim, tagged with its age, so the detail
     file stays complete while the per-round timing cost tracks the
-    round's actual code churn. Seeding (first run after r11): extras
-    present in the previous detail without meta are treated as timed at
-    the last driver round, with module changes detected against that
-    round's git snapshot commit. SPARK_GRAFT_FULL_EXTRAS=1 forces a
-    full sweep."""
+    round's actual code churn. SPARK_GRAFT_FULL_EXTRAS=1 forces a full
+    sweep. Off the anchor SF nothing is planned: the carried timings are
+    sf0.1 values."""
+    if sf != ANCHOR_SF:
+        return [], {}, {}, {}
     import hashlib
 
-    repo = os.path.dirname(os.path.abspath(__file__))
-    sys.path.insert(0, os.path.join(repo, "scripts"))
-    from gen_registry_order import (
-        _module_changed_since,
-        _round_snapshot_commits,
-        available_rounds,
-    )
-
-    rounds = available_rounds()
-    current_round = (max(rounds) + 1) if rounds else 1
+    current_round = _next_round()
 
     def module_rel(name: str) -> str:
         mod = sys.modules[queries[name].__module__]
-        return os.path.relpath(mod.__file__, repo)
+        return os.path.relpath(mod.__file__, REPO)
 
     # ADVICE r12: hashing only the defining module let a perf-relevant
     # change in a shared helper (tables.load, session config, registry
@@ -592,39 +639,20 @@ def _extras_plan(queries) -> tuple[list[str], dict, dict, dict]:
     def module_sha(name: str) -> str:
         h = hashlib.sha256()
         for rel in (module_rel(name), *core_shared):
-            path = os.path.join(repo, rel)
+            path = os.path.join(REPO, rel)
             if os.path.exists(path):
                 with open(path, "rb") as f:
                     h.update(f.read())
         return h.hexdigest()[:16]
 
-    detail_path = os.path.join(repo, "BENCH_DETAIL.json")
-    prev: dict = {}
-    if os.path.exists(detail_path):
-        try:
-            with open(detail_path) as f:
-                prev = json.load(f)
-        except (OSError, json.JSONDecodeError):
-            prev = {}
+    try:
+        with open(os.path.join(REPO, "BENCH_DETAIL.json")) as f:
+            prev = json.load(f)
+    except (OSError, json.JSONDecodeError):
+        prev = {}
     prev_extras = prev.get("extras", {})
     prev_min = prev.get("extras_min", {})
-    prev_meta = prev.get("extras_meta")
-    if prev_meta is None and prev_extras:
-        # seed: the previous detail predates the meta field — its extras
-        # were timed during the last driver round; "changed since" falls
-        # back to git diff vs that round's snapshot commit
-        seed_round = max(rounds) if rounds else 0
-        snap = _round_snapshot_commits().get(seed_round)
-        prev_meta = {}
-        for n in prev_extras:
-            if n not in queries:
-                continue
-            if snap is not None and not _module_changed_since(module_rel(n), snap):
-                prev_meta[n] = {
-                    "last_timed_round": seed_round,
-                    "module_sha": module_sha(n),
-                }
-            # else: no meta entry -> retimed below
+    prev_meta = prev.get("extras_meta", {})
 
     force_full = bool(os.environ.get("SPARK_GRAFT_FULL_EXTRAS"))
     to_time: list[str] = []
@@ -632,7 +660,7 @@ def _extras_plan(queries) -> tuple[list[str], dict, dict, dict]:
     carried_min: dict[str, float] = {}
     meta: dict[str, dict] = {}
     for n in EXTRAS:
-        m = (prev_meta or {}).get(n)
+        m = prev_meta.get(n)
         sha = module_sha(n)
         stale = (
             force_full
@@ -656,8 +684,9 @@ def _extras_plan(queries) -> tuple[list[str], dict, dict, dict]:
 
 
 def main() -> None:
+    sys.path.insert(0, REPO)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
+    sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1])
     load_gate = _load_gate()
     load_avg_start = _loadavg()
 
@@ -666,12 +695,7 @@ def main() -> None:
 
     spark = get_session("gasket-bench")
     queries = all_queries()
-
-    # Warm the JVM/codegen path AND the Python/Arrow worker pool outside
-    # timing (tiny SF): the first pandas-UDF query in a session otherwise
-    # pays ~2s of worker spin-up inside its measurement.
-    queries["flagship_revenue_by_region"](spark, "/root/testdata/sf0.001").collect()
-    queries["dedup_minhash_lsh"](spark, "/root/testdata/sf0.001").collect()
+    _warm_up(spark, queries)
 
     witness_mode = "--witnesses" in sys.argv[1:]
     # One timing pass covers both headline compositions (their union).
@@ -685,33 +709,18 @@ def main() -> None:
     # HEADLINE_MAX_EXTRA_PASSES) until HEADLINE_TARGET_CLEAN passes are
     # clean, so the committed floor never again rests on one clean pass
     # when the box merely had a transient co-tenant burst.
-    from gasket_rs_spark.session import clear_caches
-
-    samples: dict[str, list[float]] = {name: [] for name in names}
-    pass_loads: list[dict] = []
     meter = _PassMeter()
-    headline_flags: list[bool] = []
+    runs: list[tuple[dict, dict]] = []
     while (
-        len(headline_flags) < 1
+        not runs
         if witness_mode
-        else _headline_pass_wanted(headline_flags)
+        else _headline_pass_wanted([pl["clean"] for _, pl in runs])
     ):
-        # Sketch bases persist per invocation and Spark's CacheManager
-        # dedups identical plans — without this, passes 2-3 would time
-        # warm cache reads, not the query.
-        clear_caches(spark)
-        meter.start()
-        for name in names:
-            fn = queries[name]
-            t0 = time.perf_counter()
-            # noop sink: evaluates the complete plan (count() would let
-            # Catalyst prune projections and under-measure).
-            fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
-            samples[name].append(time.perf_counter() - t0)
-        pl = {"phase": "headline", **meter.stop()}
-        pass_loads.append(pl)
-        headline_flags.append(pl["clean"])
-    passes = len(headline_flags)
+        runs.append(_time_pass(spark, queries, names, sf_dir, meter, "headline"))
+    samples = {name: [times[name] for times, _ in runs] for name in names}
+    pass_loads = [pl for _, pl in runs]
+    headline_flags = [pl["clean"] for pl in pass_loads]
+    passes = len(runs)
 
     # Committed median/min are computed over the SAMPLE passes: the first
     # (up to) 3 clean passes when >= 2 are clean — identical to the
@@ -742,24 +751,15 @@ def main() -> None:
         for n, ts in samples.items()
     } if clean_idx else dict(timings_min)
 
-    extras: dict[str, float] = {}
-    extras_min: dict[str, float] = {}
-    extras_meta: dict[str, dict] = {}
-    extras_retimed: list[str] = []
-    if not witness_mode:
-        to_time, extras, extras_min, extras_meta = _extras_plan(queries)
-        extras_retimed = to_time
-        extras_samples: dict[str, list[float]] = {n: [] for n in to_time}
-        for _ in range(2):
-            clear_caches(spark)
-            meter.start()
-            for name in to_time:
-                t0 = time.perf_counter()
-                queries[name](spark, sf_dir).write.format("noop").mode(
-                    "overwrite"
-                ).save()
-                extras_samples[name].append(time.perf_counter() - t0)
-            pass_loads.append({"phase": "extras", **meter.stop()})
+    extras_retimed, extras, extras_min, extras_meta = (
+        ([], {}, {}, {}) if witness_mode else _extras_plan(queries, sf)
+    )
+    if extras_retimed:
+        runs = [
+            _time_pass(spark, queries, extras_retimed, sf_dir, meter, "extras")
+            for _ in range(2)
+        ]
+        pass_loads += [pl for _, pl in runs]
         # ADVICE r13: headline clean-gating didn't reach the extras phase —
         # a co-tenant arriving during extras polluted timings that then
         # carried forward for up to EXTRAS_RETIME_AGE rounds unflagged.
@@ -767,19 +767,16 @@ def main() -> None:
         # stamp forces a re-time on the next run (see _extras_plan).
         # ADVICE r14: with exactly one dirty pass the committed values
         # come from the clean pass instead (see _extras_commit).
-        extras_pass_clean = [
-            pl["clean"] for pl in pass_loads if pl["phase"] == "extras"
-        ]
         committed, committed_min, stamp_clean, cold_pass = _extras_commit(
-            extras_samples, extras_pass_clean
+            {n: [times[n] for times, _ in runs] for n in extras_retimed},
+            [pl["clean"] for _, pl in runs],
         )
         extras.update(committed)
         extras_min.update(committed_min)
-        for n in to_time:
-            extras_meta[n]["clean"] = stamp_clean
-            # ADVICE r15: which pass supplied the committed cold value —
-            # a warm-pass-sourced cold (index > 0) is auditable here.
-            extras_meta[n]["cold_pass"] = cold_pass
+        for n in extras_retimed:
+            # ADVICE r15: cold_pass says which pass supplied the committed
+            # cold value — a warm-pass-sourced cold (index > 0) is auditable.
+            extras_meta[n].update(clean=stamp_clean, cold_pass=cold_pass)
 
     if witness_mode:
         out = {
@@ -787,7 +784,7 @@ def main() -> None:
             "value": round(sum(timings.values()), 3),
             "unit": "sec",
             "queries": timings,
-            "sf": float(sf),
+            "sf": sf,
         }
         print(json.dumps(out))
     else:
@@ -806,7 +803,7 @@ def main() -> None:
             "queries": timings,
             "queries_min": timings_min,
             "passes": passes,
-            "sf": float(sf),
+            "sf": sf,
             "headline_v1_total_sec": round(sum(timings[n] for n in HEADLINE_V1), 3),
             # Sum of per-query MINIMA: the noise-robust floor on a shared
             # container (per-query noise is additive-positive, so min is
@@ -882,7 +879,7 @@ def main() -> None:
             "extras_meta": extras_meta,
             "extras_retimed": extras_retimed,
             "extras_retimed_count": len(extras_retimed),
-            "extras_carried_count": len(EXTRAS) - len(extras_retimed),
+            "extras_carried_count": len(extras) - len(extras_retimed),
             # Load proxy bracketing the run (VERDICT r8 #7): start is the
             # pre-existing box load; end includes this bench's own local[N]
             # threads, so START is the contention signal to read.
@@ -893,25 +890,10 @@ def main() -> None:
             # suspect for cross-round comparison.
             "load_gate": load_gate,
         }
-        # VERDICT r12 #5: the committed quiet-box anchor (BENCH_DETAIL.json)
-        # must survive the driver's close run — r12's close overwrote it
-        # with loaded-box numbers. Only an explicit anchor run
-        # (SPARK_GRAFT_BENCH_ANCHOR=1, set by the builder on a quiet box)
-        # writes BENCH_DETAIL.json; every other invocation (the driver's
-        # close included) writes the round-stamped
-        # BENCH_DETAIL_r{N}_close.json beside it. Extras carry-forward
-        # always reads the committed anchor (see _extras_plan).
-        repo_dir = os.path.dirname(os.path.abspath(__file__))
-        if os.environ.get("SPARK_GRAFT_BENCH_ANCHOR"):
-            detail_name = "BENCH_DETAIL.json"
-        else:
-            sys.path.insert(0, os.path.join(repo_dir, "scripts"))
-            from gen_registry_order import available_rounds
-
-            rounds = available_rounds()
-            rnd = (max(rounds) + 1) if rounds else 1
-            detail_name = f"BENCH_DETAIL_r{rnd}_close.json"
-        with open(os.path.join(repo_dir, detail_name), "w") as f:
+        detail_name = _detail_name(
+            sf, bool(os.environ.get("SPARK_GRAFT_BENCH_ANCHOR")), _next_round()
+        )
+        with open(os.path.join(REPO, detail_name), "w") as f:
             json.dump(detail, f, indent=1)
         out = {
             # Primary value since round 7: sum of per-query MINIMA over the
@@ -928,7 +910,7 @@ def main() -> None:
             # driver's bounded stdout tail safe AND the primary metric
             # visibly witness-free.
             "queries": {n: timings[n] for n in HEADLINE},
-            "sf": float(sf),
+            "sf": sf,
             "headline_median_total_sec": detail["value"],
             # Round-1 composition, same run — keeps cross-round series
             # comparable after the round-2 headline recomposition.

@@ -175,9 +175,11 @@ def _strong_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # co feeds TWO consumers (histogram, edge filter) and its derived
         # edges frame feeds FIVE more — without lineage truncation the
         # basket self-join (the dominant shuffle) re-executed per branch.
-        # Round-10 interleaved A/B (scripts/ab_triangles_r10.py, load 0.12):
-        # shipped r9 shape min 4.10 s / med 5.09 s → this shape min 3.19 s /
-        # med 3.43 s at sf0.1, identical output. Same storage rule as
+        # Round-10 interleaved A/B (load 0.12): shipped r9 shape min 4.10 s
+        # / med 5.09 s → this shape min 3.19 s / med 3.43 s at sf0.1,
+        # identical output; rerun with `scripts/ab.py 4657ee8^ 4657ee8
+        # --metric graph_triangles -- python3 {ab} time --sf <sf0.1>
+        # graph_triangles`. Same storage rule as
         # pagerank/dedup: share multi-consumer frames via
         # localCheckpoint(eager=True), keep single-consumer plans lazy.
         .localCheckpoint(eager=True)

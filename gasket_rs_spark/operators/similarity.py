@@ -97,7 +97,9 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cluster's cores regardless of input file layout; the 2000-row
     # exchange at sf0.1 is noise next to the scoring it parallelizes
     # (interleaved A/B min: sf0.1 0.814 -> 0.624 s, sf1 with 10-file
-    # layout 4.154 -> 2.300 s; scripts/ab_topk_repart_r22.py).
+    # layout 4.154 -> 2.300 s; rerun with `scripts/ab.py 34f5cf9 847ce88
+    # --metric similarity_topk -- python3 {ab} time --sf <sf1>
+    # similarity_topk`).
     scored = (
         emb.repartition(spark.sparkContext.defaultParallelism)
         .join(broadcast(queries), F.col("vec_id") != F.col("query_id"))

@@ -226,7 +226,9 @@ class _BroadcastRing:
     subscriber (however lagged) eventually observes end-of-stream."""
 
     def __init__(self, cap: int):
-        self._cap = max(1, cap)
+        if cap < 1:
+            raise ValueError(f"broadcast capacity must be at least 1, got {cap}")
+        self._cap = cap
         self._buf: list[Message | None] = [None] * self._cap
         self._len = 0  # number of retained entries
         self._head = 0  # sequence number of the oldest retained entry

@@ -341,3 +341,44 @@ def test_headline_sample_short_flag():
     idx, dirty = bench._headline_sample_passes([False] * 5)
     assert dirty is True
     assert bench._headline_sample_short(idx, dirty) is False
+
+
+# ---- bench artifacts are scoped by SF ----------------------------------
+
+
+def test_detail_name_per_sf_and_anchor_flag():
+    """Only an sf0.1 run may write the sf0.1 files; the anchor flag
+    cannot make another SF overwrite BENCH_DETAIL.json."""
+    assert bench._detail_name(0.1, False, 24) == "BENCH_DETAIL_r24_close.json"
+    assert bench._detail_name(0.1, True, 24) == "BENCH_DETAIL.json"
+    for anchor in (False, True):
+        assert bench._detail_name(1.0, anchor, 24) == "BENCH_DETAIL_sf1_r24_close.json"
+        assert (
+            bench._detail_name(0.01, anchor, 7) == "BENCH_DETAIL_sf0.01_r7_close.json"
+        )
+
+
+def test_no_extras_planned_off_anchor():
+    """The carried extras are sf0.1 timings: another SF neither carries
+    nor retimes them."""
+    for sf in (0.001, 0.01, 1.0):
+        assert bench._extras_plan({}, sf) == ([], {}, {}, {})
+
+
+def test_anchor_extras_plan_covers_every_extra():
+    """At sf0.1 each extra is either retimed or carried from the
+    committed BENCH_DETAIL.json, with meta either way."""
+    from gasket_rs_spark.registry import all_queries
+
+    to_time, carried, carried_min, meta = bench._extras_plan(all_queries(), 0.1)
+    assert sorted(to_time + list(carried)) == sorted(bench.EXTRAS)
+    assert set(carried_min) == set(carried) and set(meta) == set(bench.EXTRAS)
+
+
+def test_importing_bench_leaves_sys_path_and_modules_alone():
+    code = (
+        "import sys; sys.path.append(sys.argv[1]); before = list(sys.path); "
+        "import bench; assert sys.path == before, sys.path; "
+        "assert not {'pyspark', 'gasket_rs_spark'} & set(sys.modules)"
+    )
+    subprocess.run([sys.executable, "-c", code, REPO], cwd="/", check=True, timeout=60)

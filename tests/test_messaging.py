@@ -119,11 +119,23 @@ def test_funnel_contention_exactly_once_in_order():
     assert len(inp) == 0
 
 
-def test_channel_needs_a_slot():
-    """A zero-capacity edge could never accept a send; wiring refuses it,
-    as the reference's bounded channel does."""
-    with pytest.raises(ValueError):
-        connect_ports(OutputPort(), InputPort(), cap=0)
+@pytest.mark.parametrize(
+    "wire",
+    [
+        lambda cap: connect_ports(OutputPort(), InputPort(), cap=cap),
+        lambda cap: funnel_ports([OutputPort()], InputPort(), cap=cap),
+        lambda cap: broadcast_port(OutputPort(), [InputPort()], cap=cap),
+        lambda cap: broadcast_port(OutputPort(), [InputPort()], cap=cap, lagged=True),
+    ],
+    ids=["connect", "funnel", "broadcast", "lagged_broadcast"],
+)
+def test_channel_needs_a_slot(wire):
+    """A zero-capacity edge could never accept a send, and a lagged ring
+    of no slots could hold no message; wiring refuses both, as the
+    reference's bounded channel and tokio's broadcast::channel(0) do."""
+    for cap in (0, -3):
+        with pytest.raises(ValueError):
+            wire(cap)
 
 
 def test_funnel_end_of_stream_waits_for_all():
