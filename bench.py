@@ -605,8 +605,9 @@ def _extras_plan(queries, sf: float) -> tuple[list[str], dict, dict, dict]:
     235-272 s/pass x 2 passes, retiming everything every round grows
     without bound. Each extra carries ``extras_meta[name] =
     {last_timed_round, module_sha}`` in BENCH_DETAIL; an extra is
-    RETIMED only when (a) it has no carried timing, (b) the sha256 of
-    its implementing module file changed since it was last timed, or
+    RETIMED only when (a) it has no carried timing, (b) the code of its
+    implementing module (``code_fingerprint``: comments and docstrings
+    do not count) changed since it was last timed, or
     (c) its timing is older than EXTRAS_RETIME_AGE rounds. Everything
     else carries forward verbatim, tagged with its age, so the detail
     file stays complete while the per-round timing cost tracks the
@@ -618,6 +619,7 @@ def _extras_plan(queries, sf: float) -> tuple[list[str], dict, dict, dict]:
     import hashlib
 
     current_round = _next_round()
+    from gen_registry_order import code_fingerprint
 
     def module_rel(name: str) -> str:
         mod = sys.modules[queries[name].__module__]
@@ -641,8 +643,8 @@ def _extras_plan(queries, sf: float) -> tuple[list[str], dict, dict, dict]:
         for rel in (module_rel(name), *core_shared):
             path = os.path.join(REPO, rel)
             if os.path.exists(path):
-                with open(path, "rb") as f:
-                    h.update(f.read())
+                with open(path) as f:
+                    h.update(code_fingerprint(f.read()).encode())
         return h.hexdigest()[:16]
 
     try:

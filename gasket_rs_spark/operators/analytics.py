@@ -11,30 +11,17 @@ broadcast-sized result at any corpus size.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gasket_rs_spark.tables import load
+from gasket_rs_spark.tables import events_with_sec, load
 
 
-def _events_sec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    # floor, not `div` (truncation toward zero): the DuckDB oracles use
-    # `//` which floors, and the two diverge on pre-1970 timestamps.
-    return load(spark, sf_dir, "events").withColumn(
-        "ts_sec", F.floor(F.unix_millis("ts") / F.lit(1000))
-    )
-
-
-def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ordered signup → click → purchase funnel.
-
-    Per user: first signup, first click at-or-after that signup, first
-    purchase at-or-after that click — three chained per-user windows
-    (one shuffle; each stage's threshold is the previous window column).
-    Emits the global stage counts: users entering, completing stage 1/2/3.
-    """
+def _funnel_per_user(ev: DataFrame) -> DataFrame:
+    """Per user: first signup, first click at-or-after it, first purchase
+    at-or-after that click — three chained per-user windows (one shuffle;
+    each stage's threshold is the previous window column)."""
     w = Window.partitionBy("user_id")
-    ev = _events_sec(spark, sf_dir)
     staged = (
         ev.withColumn(
             "t_signup",
@@ -61,11 +48,52 @@ def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).over(w),
         )
     )
-    per_user = staged.groupBy("user_id").agg(
+    return staged.groupBy("user_id").agg(
         F.min("t_signup").alias("t_signup"),
         F.min("t_click").alias("t_click"),
         F.min("t_purchase").alias("t_purchase"),
     )
+
+
+def _day_range(df: DataFrame) -> DataFrame:
+    """One ``day`` row per day in [min(day), max(day)] of ``df`` — the
+    calendar-bounded spine (exploded from a 1-row aggregate)."""
+    return df.agg(F.min("day").alias("d0"), F.max("day").alias("d1")).select(
+        F.explode(F.sequence("d0", "d1")).alias("day")
+    )
+
+
+def _daily_counts(ev: DataFrame, by_type: bool = False, **counts: Column) -> DataFrame:
+    """Day-bucketed event counts zero-filled over [min day, max day]: one
+    row per ``day`` (per ``event_type, day`` with ``by_type``, over the
+    types present), so a day without events — or without events of one
+    type — is a 0 count, never a missing row. ``ev`` carries ``ts_sec``
+    (``events_with_sec``); day = floor(ts_sec / 86400). ``counts`` names
+    the bigint count aggregates (default ``c`` = count(*)).
+
+    Scale: one corpus pass to the per-day counts; the spine and the
+    zero-filled grid are calendar-bounded."""
+    keys = ["event_type", "day"] if by_type else ["day"]
+    counts = counts or {"c": F.count("*")}
+    per_day = (
+        ev.withColumn("day", F.floor(F.col("ts_sec") / F.lit(86400)).cast("bigint"))
+        .groupBy(*keys)
+        .agg(*[c.cast("bigint").alias(n) for n, c in counts.items()])
+    )
+    spine = _day_range(per_day)
+    if by_type:
+        spine = per_day.select("event_type").distinct().crossJoin(F.broadcast(spine))
+    return spine.join(per_day, keys, "left").select(
+        *keys, *[F.coalesce(n, F.lit(0)).cast("bigint").alias(n) for n in counts]
+    )
+
+
+def q_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Ordered signup → click → purchase funnel (per-user stages from
+    ``_funnel_per_user``). Emits the global stage counts: users entering,
+    completing stage 1/2/3.
+    """
+    per_user = _funnel_per_user(events_with_sec(spark, sf_dir))
     return per_user.agg(
         F.count("*").alias("n_users"),
         F.count("t_signup").alias("n_signed_up"),
@@ -79,7 +107,7 @@ def q_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     counted per week-offset of later activity — first-touch via one
     per-user window, then a distinct over the bounded (cohort, offset,
     user) triples and a hash count."""
-    ev = _events_sec(spark, sf_dir)
+    ev = events_with_sec(spark, sf_dir)
     w = Window.partitionBy("user_id")
     # floor matches the oracle's integer `//` for both signs; the old
     # double-divide + cast("bigint") truncated toward zero instead.
@@ -140,7 +168,7 @@ def q_timeseries_locf(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL (no fabricated state). Ties on the same second break on
     event_id (unique), so fills are deterministic cross-engine.
     """
-    ev = _events_sec(spark, sf_dir)
+    ev = events_with_sec(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts_sec", "event_id")
@@ -171,7 +199,7 @@ def q_rolling_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     threshold compare so a point within one ulp of 3.0 cannot flip
     between engines; rows without a full preceding frame (fewer than 2
     observations or zero variance) are excluded from scoring."""
-    ev = _events_sec(spark, sf_dir)
+    ev = events_with_sec(spark, sf_dir)
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts_sec", "event_id")
@@ -260,7 +288,7 @@ def q_session_path_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     one lead() inside each session, counted globally — the Markov-chain
     input for funnel modeling / next-action prediction. Two windows and
     one aggregation, all partitioned by user."""
-    ev = _events_sec(spark, sf_dir)
+    ev = events_with_sec(spark, sf_dir)
     w_user = Window.partitionBy("user_id").orderBy("ts_sec", "event_id")
     gap_break = F.when(
         (F.col("ts_sec") - F.lag("ts_sec").over(w_user)) > _SESSION_GAP_SEC, 1
@@ -288,7 +316,7 @@ def q_distribution_drift_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     zero-filled over the (week × type) grid (a missing type IS drift),
     L1 snapped on the 1e-6 grid. The grid is bounded (weeks × 5 types),
     so every join here is broadcast-sized at any corpus scale."""
-    ev = _events_sec(spark, sf_dir).withColumn(
+    ev = events_with_sec(spark, sf_dir).withColumn(
         "week", F.floor(F.col("ts_sec") / F.lit(604800)).cast("bigint")
     )
     counts = ev.groupBy("week", "event_type").agg(F.count("*").alias("c"))
@@ -337,39 +365,7 @@ def q_funnel_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     window chain (shared with the unbounded funnel), then a 3-row
     broadcast of W literals and one aggregate.
     """
-    w = Window.partitionBy("user_id")
-    ev = _events_sec(spark, sf_dir)
-    staged = (
-        ev.withColumn(
-            "t_signup",
-            F.min(F.when(F.col("event_type") == "signup", F.col("ts_sec"))).over(w),
-        )
-        .withColumn(
-            "t_click",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "click")
-                    & (F.col("ts_sec") >= F.col("t_signup")),
-                    F.col("ts_sec"),
-                )
-            ).over(w),
-        )
-        .withColumn(
-            "t_purchase",
-            F.min(
-                F.when(
-                    (F.col("event_type") == "purchase")
-                    & (F.col("ts_sec") >= F.col("t_click")),
-                    F.col("ts_sec"),
-                )
-            ).over(w),
-        )
-    )
-    per_user = staged.groupBy("user_id").agg(
-        F.min("t_signup").alias("t_signup"),
-        F.min("t_click").alias("t_click"),
-        F.min("t_purchase").alias("t_purchase"),
-    )
+    per_user = _funnel_per_user(events_with_sec(spark, sf_dir))
     wins = spark.createDataFrame(
         [(int(x),) for x in _FW_WINDOWS], "window_sec bigint"
     )
@@ -408,7 +404,7 @@ def q_session_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix cannot). Same 30-min-gap sessionization, two lead()s inside
     one session window, global count, deterministic (n DESC, types)
     top-k."""
-    ev = _events_sec(spark, sf_dir)
+    ev = events_with_sec(spark, sf_dir)
     w_user = Window.partitionBy("user_id").orderBy("ts_sec", "event_id")
     gap_break = F.when(
         (F.col("ts_sec") - F.lag("ts_sec").over(w_user)) > _SESSION_GAP_SEC, 1
@@ -543,7 +539,7 @@ def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     (quantile_normalize_sketch) feeding the identical bounded
     pair/median tail; the tail itself is O(weeks²) per type regardless
     of corpus size."""
-    ev = _events_sec(spark, sf_dir).select(
+    ev = events_with_sec(spark, sf_dir).select(
         "event_type",
         "event_id",
         F.floor(F.col("ts_sec") / F.lit(604800)).cast("bigint").alias("week"),
@@ -831,7 +827,7 @@ def q_conformal_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     one per-type distributed sort for the order statistic (rank
     statistics' inherent cost; types sort in parallel), one broadcast
     join of the 5-row quantile table for the coverage pass."""
-    ev = _events_sec(spark, sf_dir).select(
+    ev = events_with_sec(spark, sf_dir).select(
         "event_type",
         "event_id",
         F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
@@ -944,7 +940,7 @@ def q_ewma_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     map-side combine; the grid and the 8-lag windows live on the
     bounded weeks×types frame (≈hundreds of rows at any corpus size)."""
     weights = _ewma_weights()
-    ev = _events_sec(spark, sf_dir).withColumn(
+    ev = events_with_sec(spark, sf_dir).withColumn(
         "week", F.floor(F.col("ts_sec") / F.lit(604800)).cast("bigint")
     )
     counts = ev.groupBy("week", "event_type").agg(
@@ -1070,24 +1066,7 @@ def q_holt_linear_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the corpus pays one (type, day) count agg; each fold runs
     over a calendar-bounded array (≤ tens of thousands of elements for
     decades) — per-type state is one int64, types fold in parallel."""
-    ev = _events_sec(spark, sf_dir).withColumn(
-        "day", F.floor(F.col("ts_sec") / F.lit(86400)).cast("bigint")
-    )
-    counts = ev.groupBy("event_type", "day").agg(
-        F.count("*").cast("bigint").alias("c")
-    )
-    days = (
-        counts.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-        .select(F.explode(F.sequence("d0", "d1")).alias("day"))
-    )
-    grid = (
-        counts.select("event_type").distinct()
-        .crossJoin(F.broadcast(days))
-        .join(counts, ["event_type", "day"], "left")
-        .select(
-            "event_type", "day", F.coalesce("c", F.lit(0)).cast("bigint").alias("c")
-        )
-    )
+    grid = _daily_counts(events_with_sec(spark, sf_dir), by_type=True)
     arrs = grid.groupBy("event_type").agg(
         F.expr(
             "transform(sort_array(collect_list(struct(day, c))), s -> s.c)"
@@ -1228,7 +1207,7 @@ def q_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     int64 at fixture scales exactly as it had to under Spark). The r21
     A/B replaced 21 localCheckpoint job barriers over ≤5-row frames
     with pure driver arithmetic."""
-    ev = _events_sec(spark, sf_dir)
+    ev = events_with_sec(spark, sf_dir)
     w = Window.partitionBy("user_id").orderBy("ts_sec", "event_id")
     trans = (
         ev.select("user_id", "event_id", "ts_sec", F.col("event_type").alias("src"))
@@ -1314,7 +1293,7 @@ def q_attribution_multi_touch(spark: SparkSession, sf_dir: str) -> DataFrame:
     window pair partitioned by purchase (per-purchase state is the
     touch count, bounded by the window span), then a |channels|-row
     aggregate."""
-    ev = _events_sec(spark, sf_dir)
+    ev = events_with_sec(spark, sf_dir)
     touches = ev.where(
         F.col("event_type").isin("click", "view", "signup")
     ).select(
@@ -1375,16 +1354,8 @@ def q_acf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     thousands of rows for decades), localCheckpointed once and reused
     by the totals, the lag join (a 7×-exploded bounded self-join) and
     the denominator — no second corpus scan."""
-    ev = _events_sec(spark, sf_dir).withColumn(
-        "day", F.floor(F.col("ts_sec") / F.lit(86400)).cast("bigint")
-    )
-    counts = ev.groupBy("day").agg(F.count("*").cast("bigint").alias("c"))
-    grid = (
-        counts.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-        .select(F.explode(F.sequence("d0", "d1")).alias("day"))
-        .join(counts, "day", "left")
-        .select("day", F.coalesce("c", F.lit(0)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)  # bounded; feeds tot + both join sides
+    grid = _daily_counts(events_with_sec(spark, sf_dir)).localCheckpoint(
+        eager=True  # bounded; feeds tot + both join sides
     )
     tot = grid.agg(
         F.count("*").cast("bigint").alias("n"), F.sum("c").cast("bigint").alias("s")
@@ -1436,24 +1407,7 @@ def q_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: per-(type, day) count agg, calendar-bounded grid, one
     partitioned window per type — no global sort, no driver loop."""
-    ev = _events_sec(spark, sf_dir).withColumn(
-        "day", F.floor(F.col("ts_sec") / F.lit(86400)).cast("bigint")
-    )
-    counts = ev.groupBy("event_type", "day").agg(
-        F.count("*").cast("bigint").alias("c")
-    )
-    days = (
-        counts.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-        .select(F.explode(F.sequence("d0", "d1")).alias("day"))
-    )
-    grid = (
-        counts.select("event_type").distinct()
-        .crossJoin(F.broadcast(days))
-        .join(counts, ["event_type", "day"], "left")
-        .select(
-            "event_type", "day", F.coalesce("c", F.lit(0)).cast("bigint").alias("c")
-        )
-    )
+    grid = _daily_counts(events_with_sec(spark, sf_dir), by_type=True)
     tot = grid.groupBy(F.col("event_type").alias("t_type")).agg(
         F.count("*").cast("bigint").alias("n"), F.sum("c").cast("bigint").alias("s")
     )
@@ -1485,24 +1439,20 @@ _PSI_B = 10  # fixed value-distribution buckets
 _PSI_W = 50  # bucket width over events.value
 
 
-def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """POPULATION STABILITY INDEX between a reference and a current
-    event population (the credit-scoring / model-monitoring standard;
-    PSI < 0.1 stable, > 0.25 shifted): values land in 10 fixed-width
-    buckets, populations split deterministically on event_id, and
-    PSI = Σ_b (p_b − q_b)·ln(p_b/q_b) with add-one (Laplace) smoothing
-    so empty buckets stay finite. Complements
-    q_distribution_drift_weekly (L1 on shares) with the
-    log-ratio-weighted industry metric.
+def _binned_shares(spark: SparkSession, sf_dir: str, flag: Column) -> DataFrame:
+    """Two event populations — ``flag`` true (``n1``) and false (``n0``) —
+    over the fixed _PSI_B-bucket grid of events.value, zero-filled (a
+    missing bucket is signal), with add-one (Laplace) smoothed shares:
+    per bucket the share difference ``diff6``, the log share ratio
+    ``ln6`` = ln(p1/p0), their product ``contrib12`` (1e-12 units) and
+    its total ``sum12`` — PSI and IV are both Σ (p1 − p0)·ln(p1/p0).
 
     Determinism: the ln argument is a ratio of exact int64 products,
     one ln per bucket snapped to 1e-6; the share difference is two
-    IEEE divisions + one subtract, snapped to 1e-6; each bucket's
-    contribution is the int64 product diff6·ln6 (1e-12 units) and the
-    total is an integer sum. Scale: one corpus pass → fixed 10-row
-    grid (zero-filled — a missing bucket IS drift)."""
+    IEEE divisions + one subtract, snapped to 1e-6; the contributions
+    are int64 products and the total is an integer sum."""
     ev = load(spark, sf_dir, "events").select(
-        (F.col("event_id") % 3 == 0).alias("is_ref"),
+        flag.alias("f"),
         F.least(
             F.expr(f"cast(floor(value / {_PSI_W}) as bigint)"),
             F.lit(_PSI_B - 1).cast("bigint"),
@@ -1514,55 +1464,75 @@ def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("b")
     )
     counts = ev.groupBy("b").agg(
-        F.sum(F.col("is_ref").cast("bigint")).cast("bigint").alias("ref_n"),
-        F.sum((~F.col("is_ref")).cast("bigint")).cast("bigint").alias("cur_n"),
+        F.sum(F.col("f").cast("bigint")).cast("bigint").alias("n1"),
+        F.sum((~F.col("f")).cast("bigint")).cast("bigint").alias("n0"),
     )
     tot = ev.agg(
-        F.sum(F.col("is_ref").cast("bigint")).cast("bigint").alias("nr"),
-        F.sum((~F.col("is_ref")).cast("bigint")).cast("bigint").alias("nc"),
+        F.sum(F.col("f").cast("bigint")).cast("bigint").alias("t1"),
+        F.sum((~F.col("f")).cast("bigint")).cast("bigint").alias("t0"),
     )
-    filled = (
+    per = (
         grid.join(counts, "b", "left")
         .select(
             "b",
-            F.coalesce("ref_n", F.lit(0)).cast("bigint").alias("ref_n"),
-            F.coalesce("cur_n", F.lit(0)).cast("bigint").alias("cur_n"),
+            F.coalesce("n1", F.lit(0)).cast("bigint").alias("n1"),
+            F.coalesce("n0", F.lit(0)).cast("bigint").alias("n0"),
         )
         .crossJoin(F.broadcast(tot))
+        .select(
+            "b",
+            "n1",
+            "n0",
+            F.floor(
+                (
+                    (F.col("n1") + 1).cast("double")
+                    / (F.col("t1") + _PSI_B).cast("double")
+                    - (F.col("n0") + 1).cast("double")
+                    / (F.col("t0") + _PSI_B).cast("double")
+                )
+                * 1e6
+                + F.lit(0.5)
+            )
+            .cast("bigint")
+            .alias("diff6"),
+            F.floor(
+                F.log(
+                    ((F.col("n1") + 1) * (F.col("t0") + _PSI_B)).cast("double")
+                    / ((F.col("n0") + 1) * (F.col("t1") + _PSI_B)).cast("double")
+                )
+                * 1e6
+                + F.lit(0.5)
+            )
+            .cast("bigint")
+            .alias("ln6"),
+        )
+        .withColumn("contrib12", (F.col("diff6") * F.col("ln6")).cast("bigint"))
     )
-    per = filled.select(
+    total = per.agg(F.sum("contrib12").cast("bigint").alias("sum12"))
+    return per.crossJoin(F.broadcast(total))
+
+
+def q_psi_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """POPULATION STABILITY INDEX between a reference and a current
+    event population (the credit-scoring / model-monitoring standard;
+    PSI < 0.1 stable, > 0.25 shifted): values land in 10 fixed-width
+    buckets, populations split deterministically on event_id, and
+    PSI = Σ_b (p_b − q_b)·ln(p_b/q_b) with add-one (Laplace) smoothing
+    so empty buckets stay finite. Complements
+    q_distribution_drift_weekly (L1 on shares) with the
+    log-ratio-weighted industry metric.
+
+    Determinism: see _binned_shares. Scale: one corpus pass → fixed
+    10-row grid (zero-filled — a missing bucket IS drift)."""
+    return _binned_shares(spark, sf_dir, F.col("event_id") % 3 == 0).select(
         "b",
-        "ref_n",
-        "cur_n",
-        F.floor(
-            (
-                (F.col("ref_n") + 1).cast("double")
-                / (F.col("nr") + _PSI_B).cast("double")
-                - (F.col("cur_n") + 1).cast("double")
-                / (F.col("nc") + _PSI_B).cast("double")
-            )
-            * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("diff6"),
-        F.floor(
-            F.log(
-                ((F.col("ref_n") + 1) * (F.col("nc") + _PSI_B)).cast("double")
-                / ((F.col("cur_n") + 1) * (F.col("nr") + _PSI_B)).cast("double")
-            )
-            * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("ln6"),
-    ).withColumn("contrib12", (F.col("diff6") * F.col("ln6")).cast("bigint"))
-    total = per.agg(F.sum("contrib12").cast("bigint").alias("psi12"))
-    return (
-        per.crossJoin(F.broadcast(total))
-        .select("b", "ref_n", "cur_n", "diff6", "ln6", "contrib12", "psi12")
-        .orderBy("b")
-    )
+        F.col("n1").alias("ref_n"),
+        F.col("n0").alias("cur_n"),
+        "diff6",
+        "ln6",
+        "contrib12",
+        F.col("sum12").alias("psi12"),
+    ).orderBy("b")
 
 
 _APRIORI_ITEMS = 12  # part-class item space (l_partkey % 12)
@@ -1669,7 +1639,7 @@ def q_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     ties; the prefix-sum MULTISET is invariant to equal-key reordering
     so the max is stable; argmax realizes as max(struct(cum, −t)).
     One partitioned window per type — the sessionizer's shuffle."""
-    ev = _events_sec(spark, sf_dir).select(
+    ev = events_with_sec(spark, sf_dir).select(
         "event_type", "event_id", F.col("ts_sec").cast("bigint").alias("t0")
     )
     pts = ev.select(
@@ -1722,17 +1692,7 @@ def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     variance (an all-tied series zeroes it, and S is 0 there too — the
     guarded z is 0, never a divergent NaN cast). The trend verdict compares
     |z| against the Python-inlined 1.959964 literal."""
-    ev = _events_sec(spark, sf_dir).withColumn(
-        "day", F.floor(F.col("ts_sec") / F.lit(86400)).cast("bigint")
-    )
-    counts = ev.groupBy("day").agg(F.count("*").cast("bigint").alias("c"))
-    grid = (
-        counts.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-        .select(F.explode(F.sequence("d0", "d1")).alias("day"))
-        .join(counts, "day", "left")
-        .select("day", F.coalesce("c", F.lit(0)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)
-    )
+    grid = _daily_counts(events_with_sec(spark, sf_dir)).localCheckpoint(eager=True)
     a = grid.select(F.col("day").alias("di"), F.col("c").alias("ci"))
     b = grid.select(F.col("day").alias("dj"), F.col("c").alias("cj"))
     s_stat = (
@@ -1801,18 +1761,12 @@ def q_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
     Variant note: effects are not re-centered through an overall term
     (the classic presentation's optional step), identically on both
     engines. Scale: one corpus pass → the calendar-bounded matrix."""
-    ev = _events_sec(spark, sf_dir).withColumn(
-        "day", F.floor(F.col("ts_sec") / F.lit(86400)).cast("bigint")
-    )
-    counts = ev.groupBy("day").agg(F.count("*").cast("bigint").alias("c"))
     cells = (
-        counts.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-        .select(F.explode(F.sequence("d0", "d1")).alias("day"))
-        .join(counts, "day", "left")
+        _daily_counts(events_with_sec(spark, sf_dir))
         .select(
             (F.col("day") % 7).cast("bigint").alias("dow"),
             F.expr("day div 7").cast("bigint").alias("week"),
-            F.coalesce("c", F.lit(0)).cast("bigint").alias("c"),
+            "c",
         )
         .withColumn("resid", F.col("c"))
         .withColumn("roweff", F.lit(0).cast("bigint"))
@@ -1921,17 +1875,7 @@ def q_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair join is metadata-sized at any corpus SF); the argmax breaks
     ties by day. One corpus pass to daily counts, everything after on
     the day grid."""
-    ev = _events_sec(spark, sf_dir).withColumn(
-        "day", F.floor(F.col("ts_sec") / F.lit(86400)).cast("bigint")
-    )
-    counts = ev.groupBy("day").agg(F.count("*").cast("bigint").alias("c"))
-    grid = (
-        counts.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-        .select(F.explode(F.sequence("d0", "d1")).alias("day"))
-        .join(counts, "day", "left")
-        .select("day", F.coalesce("c", F.lit(0)).cast("bigint").alias("c"))
-        .localCheckpoint(eager=True)
-    )
+    grid = _daily_counts(events_with_sec(spark, sf_dir)).localCheckpoint(eager=True)
     a = grid.select(F.col("day").alias("di"), F.col("c").alias("ci"))
     b = grid.select(F.col("day").alias("dj"), F.col("c").alias("cj"))
     pairs = a.join(F.broadcast(b), F.col("dj") > F.col("di")).select(
@@ -1984,23 +1928,7 @@ def q_dispersion_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     one int64 ratio on the 1e-6 grid — no float ever. Zero-filled day
     grid (a missing day is a zero count, and zeros are dispersion
     signal). One corpus pass; 5×-days-row everything after."""
-    ev = _events_sec(spark, sf_dir).withColumn(
-        "day", F.floor(F.col("ts_sec") / F.lit(86400)).cast("bigint")
-    )
-    counts = ev.groupBy("event_type", "day").agg(
-        F.count("*").cast("bigint").alias("c")
-    )
-    days = ev.agg(F.min("day").alias("d0"), F.max("day").alias("d1")).select(
-        F.explode(F.sequence("d0", "d1")).alias("day")
-    )
-    types = ev.select("event_type").distinct()
-    grid = (
-        types.crossJoin(F.broadcast(days))
-        .join(counts, ["event_type", "day"], "left")
-        .select(
-            "event_type", "day", F.coalesce("c", F.lit(0)).cast("bigint").alias("c")
-        )
-    )
+    grid = _daily_counts(events_with_sec(spark, sf_dir), by_type=True)
     return (
         grid.groupBy("event_type")
         .agg(
@@ -2036,18 +1964,9 @@ def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     varies across engines); same for the global SS; one final division
     makes strength6. Output: the 7 dow rows (n, mean) with the
     corpus-level strength on every row."""
-    ev = _events_sec(spark, sf_dir).withColumn(
-        "day", F.floor(F.col("ts_sec") / F.lit(86400)).cast("bigint")
-    )
-    counts = ev.groupBy("day").agg(F.count("*").cast("bigint").alias("c"))
     grid = (
-        counts.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-        .select(F.explode(F.sequence("d0", "d1")).alias("day"))
-        .join(counts, "day", "left")
-        .select(
-            (F.col("day") % 7).cast("bigint").alias("dow"),
-            F.coalesce("c", F.lit(0)).cast("bigint").alias("c"),
-        )
+        _daily_counts(events_with_sec(spark, sf_dir))
+        .select((F.col("day") % 7).cast("bigint").alias("dow"), "c")
         .localCheckpoint(eager=True)
     )
     per_dow = grid.groupBy("dow").agg(
@@ -2144,7 +2063,7 @@ def q_event_debounce(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure integer gaps from one lag window on the (user, type) key —
     at 100 TB this is a single partitioned sort, the same shuffle the
     sessionizer already pays."""
-    ev = _events_sec(spark, sf_dir)
+    ev = events_with_sec(spark, sf_dir)
     w = Window.partitionBy("user_id", "event_type").orderBy("ts_sec", "event_id")
     flagged = ev.select(
         "event_type",
@@ -2191,14 +2110,12 @@ def q_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
     the window (q_sketch_hll_distinct's machinery). Also emits 1-day
     distincts, making the WAU/DAU stickiness ratio readable off the
     row."""
-    ev = _events_sec(spark, sf_dir).select(
+    ev = events_with_sec(spark, sf_dir).select(
         F.floor(F.col("ts_sec") / F.lit(86400)).cast("bigint").alias("day"),
         "user_id",
     )
     ud = ev.distinct().localCheckpoint(eager=True)
-    grid = ud.agg(F.min("day").alias("d0"), F.max("day").alias("d1")).select(
-        F.explode(F.sequence("d0", "d1")).alias("day")
-    )
+    grid = _day_range(ud)
     win = (
         grid.alias("g")
         .join(
@@ -2247,28 +2164,11 @@ def q_lead_lag_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan → per-day×type counts; the grid is
     calendar-bounded, localCheckpointed, and the 15-lag join is a
     bounded self-join."""
-    ev = _events_sec(spark, sf_dir).withColumn(
-        "day", F.floor(F.col("ts_sec") / F.lit(86400)).cast("bigint")
-    )
-    counts = ev.groupBy("day").agg(
-        F.sum((F.col("event_type") == _XCORR_A).cast("bigint"))
-        .cast("bigint")
-        .alias("ca"),
-        F.sum((F.col("event_type") == _XCORR_B).cast("bigint"))
-        .cast("bigint")
-        .alias("cb"),
-    )
-    grid = (
-        counts.agg(F.min("day").alias("d0"), F.max("day").alias("d1"))
-        .select(F.explode(F.sequence("d0", "d1")).alias("day"))
-        .join(counts, "day", "left")
-        .select(
-            "day",
-            F.coalesce("ca", F.lit(0)).cast("bigint").alias("ca"),
-            F.coalesce("cb", F.lit(0)).cast("bigint").alias("cb"),
-        )
-        .localCheckpoint(eager=True)
-    )
+    grid = _daily_counts(
+        events_with_sec(spark, sf_dir),
+        ca=F.sum((F.col("event_type") == _XCORR_A).cast("bigint")),
+        cb=F.sum((F.col("event_type") == _XCORR_B).cast("bigint")),
+    ).localCheckpoint(eager=True)
     tot = grid.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("ca").cast("bigint").alias("sa"),
@@ -2313,7 +2213,7 @@ def q_topk_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts. Scale: one corpus pass → (week, user) counts (map-side
     combinable), one partitioned rank window, then the week-pair join
     runs on K-row frames."""
-    ev = _events_sec(spark, sf_dir).withColumn(
+    ev = events_with_sec(spark, sf_dir).withColumn(
         "week", F.floor(F.col("ts_sec") / F.lit(604800)).cast("bigint")
     )
     wu = ev.groupBy("week", "user_id").agg(F.count("*").cast("bigint").alias("c"))
@@ -2425,7 +2325,7 @@ def q_interarrival_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two partitioned sort-windows (lag, then rank) on the same
     event_type key — AQE reuses the exchange; the rank filter is a
     semi-join against a 3-row literal percentile list."""
-    ev = _events_sec(spark, sf_dir)
+    ev = events_with_sec(spark, sf_dir)
     w = Window.partitionBy("event_type").orderBy("ts_sec", "event_id")
     gaps = (
         ev.select(
@@ -2470,72 +2370,16 @@ def q_woe_iv_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
     Good = purchase events, bad = everything else; same fixed 10-bucket
     grid as q_psi_drift.
 
-    Determinism: identical to the PSI spelling — exact int64 products
-    inside ONE ln per bucket (snapped), IEEE-division share difference
-    (snapped), integer contribution products, integer total."""
-    ev = load(spark, sf_dir, "events").select(
-        (F.col("event_type") == "purchase").alias("is_good"),
-        F.least(
-            F.expr(f"cast(floor(value / {_PSI_W}) as bigint)"),
-            F.lit(_PSI_B - 1).cast("bigint"),
-        ).alias("b"),
-    )
-    grid = spark.range(1).select(
-        F.explode(
-            F.sequence(F.lit(0).cast("bigint"), F.lit(_PSI_B - 1).cast("bigint"))
-        ).alias("b")
-    )
-    counts = ev.groupBy("b").agg(
-        F.sum(F.col("is_good").cast("bigint")).cast("bigint").alias("good_n"),
-        F.sum((~F.col("is_good")).cast("bigint")).cast("bigint").alias("bad_n"),
-    )
-    tot = ev.agg(
-        F.sum(F.col("is_good").cast("bigint")).cast("bigint").alias("ng"),
-        F.sum((~F.col("is_good")).cast("bigint")).cast("bigint").alias("nb"),
-    )
-    per = (
-        grid.join(counts, "b", "left")
-        .select(
-            "b",
-            F.coalesce("good_n", F.lit(0)).cast("bigint").alias("good_n"),
-            F.coalesce("bad_n", F.lit(0)).cast("bigint").alias("bad_n"),
-        )
-        .crossJoin(F.broadcast(tot))
-        .select(
-            "b",
-            "good_n",
-            "bad_n",
-            F.floor(
-                (
-                    (F.col("good_n") + 1).cast("double")
-                    / (F.col("ng") + _PSI_B).cast("double")
-                    - (F.col("bad_n") + 1).cast("double")
-                    / (F.col("nb") + _PSI_B).cast("double")
-                )
-                * 1e6
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("diff6"),
-            F.floor(
-                F.log(
-                    ((F.col("good_n") + 1) * (F.col("nb") + _PSI_B)).cast("double")
-                    / ((F.col("bad_n") + 1) * (F.col("ng") + _PSI_B)).cast("double")
-                )
-                * 1e6
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("woe6"),
-        )
-        .withColumn("iv_contrib12", (F.col("diff6") * F.col("woe6")).cast("bigint"))
-    )
-    total = per.agg(F.sum("iv_contrib12").cast("bigint").alias("iv12"))
-    return (
-        per.crossJoin(F.broadcast(total))
-        .select("b", "good_n", "bad_n", "diff6", "woe6", "iv_contrib12", "iv12")
-        .orderBy("b")
-    )
+    Determinism: identical to the PSI spelling (_binned_shares)."""
+    return _binned_shares(spark, sf_dir, F.col("event_type") == "purchase").select(
+        "b",
+        F.col("n1").alias("good_n"),
+        F.col("n0").alias("bad_n"),
+        "diff6",
+        F.col("ln6").alias("woe6"),
+        F.col("contrib12").alias("iv_contrib12"),
+        F.col("sum12").alias("iv12"),
+    ).orderBy("b")
 
 
 _KM_BUCKET_SEC = 4 * 3600  # survival-time bucket width (4 hours)
@@ -2560,7 +2404,7 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: one corpus pass to per-user durations (two per-user aggs),
     then everything runs on the fixed 48-bucket frame."""
-    ev = _events_sec(spark, sf_dir)
+    ev = events_with_sec(spark, sf_dir)
     su = (
         ev.where(F.col("event_type") == "signup")
         .groupBy("user_id")

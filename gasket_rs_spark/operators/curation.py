@@ -24,6 +24,7 @@ from gasket_rs_spark.operators.dedup import (
     _components,
     _minhash_pairs,
     _minhash_sigs,
+    _shingle_pairs,
     _shingles,
 )
 from gasket_rs_spark.tables import load
@@ -32,51 +33,27 @@ _MIN_CHARS = 100
 _MIN_TOKENS = 20
 
 
-def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """documents → quality filter → exact dedup → near-dup canonicalize →
-    per-language corpus stats of the surviving training set."""
+def _gated_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Quality gate (≥ _MIN_CHARS characters and ≥ _MIN_TOKENS
+    whitespace tokens), then exact dedup: min doc_id per text
+    (hash-keyed shuffle, text never moves)."""
     docs = load(spark, sf_dir, "documents")
     kept = docs.where(
         (F.length("text") >= _MIN_CHARS)
         & (F.size(F.split("text", " ")) >= _MIN_TOKENS)
     )
-    # Exact dedup: min doc_id per text (hash-keyed shuffle, text never moves).
     exact_keep = (
         kept.groupBy(F.xxhash64("text").alias("_h"))
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
     )
-    survivors = kept.join(exact_keep, "doc_id")
-    # Near-dup clustering on the (already shrunken) survivor set: exact
-    # Jaccard pair graph → min-label components → keep cluster minimum.
-    sh = survivors.select("doc_id", _shingles().alias("sh")).withColumn(
-        "n_sh", F.size("sh")
-    )
-    ex = sh.select(
-        "doc_id", "n_sh", F.explode("sh").alias("shingle_str")
-    ).select("doc_id", "n_sh", F.xxhash64("shingle_str").alias("shingle"))
-    # Singleton prune — exact, see q_dedup_ngram_jaccard.
-    ex = (
-        ex.repartition("shingle")
-        .withColumn("_c", F.count("*").over(Window.partitionBy("shingle")))
-        .where(F.col("_c") >= 2)
-        .drop("_c")
-    )
-    a = ex.select(F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"), "shingle")
-    b = ex.select(F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"), "shingle")
-    pairs = (
-        a.join(b, "shingle")
-        .where(F.col("doc_a") < F.col("doc_b"))
-        .groupBy("doc_a", "doc_b", "n_a", "n_b")
-        .agg(F.count("*").alias("n_common"))
-        .where(
-            F.round(
-                F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
-            )
-            >= _JACCARD_THRESHOLD
-        )
-        .select("doc_a", "doc_b")
-    )
+    return kept.join(exact_keep, "doc_id")
+
+
+def _canonical_stats(survivors: DataFrame, pairs: DataFrame) -> DataFrame:
+    """Near-dup canonical keep — min-label components of the (doc_a,
+    doc_b) pair graph, one survivor (the component minimum) per cluster —
+    then the per-language corpus stats of the kept training set."""
     comp = _components(survivors.select("doc_id"), pairs)
     canonical = comp.where(F.col("doc_id") == F.col("component")).select("doc_id")
     final = survivors.join(canonical, "doc_id")
@@ -89,6 +66,31 @@ def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("lang", "n_docs", "total_chars", "avg_len")
     )
+
+
+def q_curation_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """documents → quality filter → exact dedup → near-dup canonicalize →
+    per-language corpus stats of the surviving training set."""
+    survivors = _gated_survivors(spark, sf_dir)
+    # Near-dup clustering on the (already shrunken) survivor set: exact
+    # Jaccard pair graph → min-label components → keep cluster minimum.
+    sh = survivors.select("doc_id", _shingles().alias("sh")).withColumn(
+        "n_sh", F.size("sh")
+    )
+    pairs = (
+        _shingle_pairs(sh)
+        .where(F.col("doc_a") < F.col("doc_b"))
+        .groupBy("doc_a", "doc_b", "n_a", "n_b")
+        .agg(F.count("*").alias("n_common"))
+        .where(
+            F.round(
+                F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
+            )
+            >= _JACCARD_THRESHOLD
+        )
+        .select("doc_a", "doc_b")
+    )
+    return _canonical_stats(survivors, pairs)
 
 
 def q_curation_pipeline_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -107,17 +109,7 @@ def q_curation_pipeline_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     parameter-specific); equality-modulo-recall vs the exact composite
     plus a no-cartesian plan pin live in tests/test_curation_lsh.py.
     """
-    docs = load(spark, sf_dir, "documents")
-    kept = docs.where(
-        (F.length("text") >= _MIN_CHARS)
-        & (F.size(F.split("text", " ")) >= _MIN_TOKENS)
-    )
-    exact_keep = (
-        kept.groupBy(F.xxhash64("text").alias("_h"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    survivors = kept.join(exact_keep, "doc_id")
+    survivors = _gated_survivors(spark, sf_dir)
     pairs = _minhash_pairs(
         _minhash_sigs(
             survivors.select("doc_id", "text").repartition(
@@ -125,18 +117,7 @@ def q_curation_pipeline_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         )
     ).select("doc_a", "doc_b")
-    comp = _components(survivors.select("doc_id"), pairs)
-    canonical = comp.where(F.col("doc_id") == F.col("component")).select("doc_id")
-    final = survivors.join(canonical, "doc_id")
-    return (
-        final.groupBy("lang")
-        .agg(
-            F.count("*").alias("n_docs"),
-            F.sum("n_chars").cast("bigint").alias("total_chars"),
-            (F.floor(F.avg(F.length("text")) * 10000 + 0.5) / 10000).alias("avg_len"),
-        )
-        .select("lang", "n_docs", "total_chars", "avg_len")
-    )
+    return _canonical_stats(survivors, pairs)
 
 
 def q_llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -138,28 +138,24 @@ def q_dedup_first_per_key(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact near-dup pairs: token-3-shingle Jaccard >= 0.5 (all-pairs).
+def _shingle_pairs(docs: DataFrame) -> DataFrame:
+    """Every ordered pair of documents sharing a shingle, as (shingle,
+    doc_a, n_a, doc_b, n_b), from ``docs`` = (doc_id, sh, n_sh) with the
+    shingle-set sizes n_a/n_b carried from the full arrays.
 
-    Correctness witness for the LSH path: shingle-explode → self-join on
-    shingle → per-pair intersection counts → Jaccard via |A|+|B|-|A∩B|.
-    Quadratic in the worst case — see q_dedup_minhash_lsh for scale.
+    Joins on xxhash64(shingle), not the string: an 8-byte shuffle key and
+    integer comparisons instead of ~20-byte strings (collision odds at
+    64 bits are negligible against the corpus shingle count).
+
+    Singleton prune (exact): a shingle occurring in only one document
+    can never witness a pair, and n_a/n_b come from the full arrays — so
+    dropping singletons changes nothing downstream while removing the
+    (dominant) unique-shingle mass from the self-join. One shuffle on
+    shingle serves both the count and the join. 2.5× measured at sf0.1.
     """
-    docs = load(spark, sf_dir, "documents").select(
-        "doc_id", _shingles().alias("sh")
-    ).withColumn("n_sh", F.size("sh"))
-    # Join on xxhash64(shingle), not the string: an 8-byte shuffle key and
-    # integer comparisons instead of ~20-byte strings (collision odds at
-    # 64 bits are negligible against the corpus shingle count).
     ex = docs.select(
         "doc_id", "n_sh", F.explode("sh").alias("shingle_str")
     ).select("doc_id", "n_sh", F.xxhash64("shingle_str").alias("shingle"))
-    # Singleton prune (exact): a shingle occurring in only one document
-    # can never witness a pair, and n_a/n_b are carried from the full
-    # arrays — so dropping singletons changes nothing downstream while
-    # removing the (dominant) unique-shingle mass from the self-join.
-    # One shuffle on shingle serves both the count and the join. 2.5×
-    # measured at sf0.1.
     ex = (
         ex.repartition("shingle")
         .withColumn("_c", F.count("*").over(Window.partitionBy("shingle")))
@@ -172,11 +168,24 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     b = ex.select(
         F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"), "shingle"
     )
+    return a.join(b, "shingle")
+
+
+def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Exact near-dup pairs: token-3-shingle Jaccard >= 0.5 (all-pairs).
+
+    Correctness witness for the LSH path: shingle-explode → self-join on
+    shingle → per-pair intersection counts → Jaccard via |A|+|B|-|A∩B|.
+    Quadratic in the worst case — see q_dedup_minhash_lsh for scale.
+    """
+    docs = load(spark, sf_dir, "documents").select(
+        "doc_id", _shingles().alias("sh")
+    ).withColumn("n_sh", F.size("sh"))
     # Size-ratio prune (sound for J >= 0.5): the intersection can't exceed
     # the smaller set, and J >= t forces |smaller| >= t * |larger| — so
     # pairs with a >2x shingle-count ratio can never reach the threshold.
     pairs = (
-        a.join(b, "shingle")
+        _shingle_pairs(docs)
         .where(
             (F.col("doc_a") < F.col("doc_b"))
             & (F.col("n_a") <= 2 * F.col("n_b"))
@@ -223,23 +232,8 @@ def q_dedup_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("n_sh", F.size("sh"))
         .where(F.col("n_sh") >= 1)
     )
-    ex = docs.select(
-        "doc_id", "n_sh", F.explode("sh").alias("shingle_str")
-    ).select("doc_id", "n_sh", F.xxhash64("shingle_str").alias("shingle"))
-    ex = (
-        ex.repartition("shingle")
-        .withColumn("_c", F.count("*").over(Window.partitionBy("shingle")))
-        .where(F.col("_c") >= 2)
-        .drop("_c")
-    )
-    a = ex.select(
-        F.col("doc_id").alias("doc_a"), F.col("n_sh").alias("n_a"), "shingle"
-    )
-    b = ex.select(
-        F.col("doc_id").alias("doc_b"), F.col("n_sh").alias("n_b"), "shingle"
-    )
     return (
-        a.join(b, "shingle")
+        _shingle_pairs(docs)
         .where(
             (F.col("doc_a") != F.col("doc_b"))
             & (F.col("n_b") * _CONTAIN_DEN >= F.col("n_a") * _CONTAIN_NUM)

@@ -23,7 +23,7 @@ is a sum, so salting composes if needed.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gasket_rs_spark.tables import load
@@ -114,6 +114,24 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = _PR_ITERS) -> Data
     return ranks.select("node", "pr")
 
 
+def _purchase_edges(
+    spark: SparkSession, sf_dir: str, cust: Column, supp: Column
+) -> DataFrame:
+    """The distinct customer–supplier purchase edges (orders ⋈ lineitem
+    on the order key), projected as ``cust`` (over o_custkey) and
+    ``supp`` (over l_suppkey) — the one extraction behind every
+    bipartite-graph witness here."""
+    return (
+        load(spark, sf_dir, "orders")
+        .join(
+            load(spark, sf_dir, "lineitem"),
+            F.col("o_orderkey") == F.col("l_orderkey"),
+        )
+        .select(cust, supp)
+        .distinct()
+    )
+
+
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 suppliers by PageRank on the purchase graph.
 
@@ -123,17 +141,13 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     is dangling every iteration — the witness exercises the
     redistribution term, not just the sparse matvec.
     """
-    orders = load(spark, sf_dir, "orders")
-    lineitem = load(spark, sf_dir, "lineitem")
     customer = load(spark, sf_dir, "customer")
     supplier = load(spark, sf_dir, "supplier")
-    edges = (
-        orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("src"),
-            (F.col("l_suppkey") * 2 + 1).alias("dst"),
-        )
-        .distinct()
+    edges = _purchase_edges(
+        spark,
+        sf_dir,
+        (F.col("o_custkey") * 2).alias("src"),
+        (F.col("l_suppkey") * 2 + 1).alias("dst"),
     )
     nodes = customer.select((F.col("c_custkey") * 2).alias("node")).unionByName(
         supplier.select((F.col("s_suppkey") * 2 + 1).alias("node"))
@@ -454,15 +468,11 @@ def _bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Undirected customer–supplier purchase edges with disjoint node ids
     (customer → 2c, supplier → 2s+1) — the pagerank witness's graph,
     reused so the graph family shares one extraction shape."""
-    orders = load(spark, sf_dir, "orders")
-    lineitem = load(spark, sf_dir, "lineitem")
-    return (
-        orders.join(lineitem, orders.o_orderkey == lineitem.l_orderkey)
-        .select(
-            (F.col("o_custkey") * 2).alias("a"),
-            (F.col("l_suppkey") * 2 + 1).alias("b"),
-        )
-        .distinct()
+    return _purchase_edges(
+        spark,
+        sf_dir,
+        (F.col("o_custkey") * 2).alias("a"),
+        (F.col("l_suppkey") * 2 + 1).alias("b"),
     )
 
 
@@ -559,6 +569,34 @@ def kcore_peel(edges: DataFrame, kf: DataFrame, iters: int) -> DataFrame:
 _LP_CAP = 32  # per-supplier neighbor-list cap before pair generation
 
 
+def _capped_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The bipartite customer–supplier purchase graph with each
+    supplier's fan-out capped at ``_LP_CAP`` customers: a deterministic
+    row_number over md5(supp:cust) — identical hex-string ordering on
+    both engines. Checkpointed: it feeds the degrees and both pair
+    sides."""
+    raw = _purchase_edges(
+        spark, sf_dir, F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp")
+    )
+    wcap = Window.partitionBy("supp").orderBy(
+        F.md5(F.concat_ws(":", F.col("supp"), F.col("cust"))), "cust"
+    )
+    return (
+        raw.withColumn("rn", F.row_number().over(wcap))
+        .where(F.col("rn") <= _LP_CAP)
+        .select("cust", "supp")
+        .localCheckpoint(eager=True)
+    )
+
+
+def _neighbor_pairs(edges: DataFrame) -> DataFrame:
+    """Customer pairs ca < cb per shared supplier, from the equi-join on
+    that neighbor — only pairs with a common neighbor ever materialize."""
+    a = edges.select(F.col("supp"), F.col("cust").alias("ca"))
+    b = edges.select(F.col("supp"), F.col("cust").alias("cb"))
+    return a.join(b, "supp").where(F.col("ca") < F.col("cb"))
+
+
 def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Common-neighbor / Jaccard link prediction (Liben-Nowell & Kleinberg
     2003) over the bipartite purchase graph: for customer pairs sharing
@@ -586,30 +624,10 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     neighbor ever materialize, never customers²; the cap bounds the
     per-key fan-out, so no AQE skew handling is even needed.
     """
-    raw = (
-        load(spark, sf_dir, "orders")
-        .join(
-            load(spark, sf_dir, "lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
-        .distinct()
-    )
-    wcap = Window.partitionBy("supp").orderBy(
-        F.md5(F.concat_ws(":", F.col("supp"), F.col("cust"))), "cust"
-    )
-    edges = (
-        raw.withColumn("rn", F.row_number().over(wcap))
-        .where(F.col("rn") <= _LP_CAP)
-        .select("cust", "supp")
-        .localCheckpoint(eager=True)  # feeds deg + both join sides
-    )
+    edges = _capped_edges(spark, sf_dir)
     deg = edges.groupBy("cust").agg(F.count("*").cast("bigint").alias("deg"))
-    a = edges.select(F.col("supp"), F.col("cust").alias("ca"))
-    b = edges.select(F.col("supp"), F.col("cust").alias("cb"))
     cn = (
-        a.join(b, "supp")
-        .where(F.col("ca") < F.col("cb"))
+        _neighbor_pairs(edges)
         .groupBy("ca", "cb")
         .agg(F.count("*").cast("bigint").alias("cn"))
     )
@@ -659,24 +677,7 @@ def q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to q_link_prediction — candidates keyed on
     the shared neighbor, fan-out bounded by the cap, plus one broadcast
     join of the (supplier, weight) table (≤ suppliers rows)."""
-    raw = (
-        load(spark, sf_dir, "orders")
-        .join(
-            load(spark, sf_dir, "lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .select(F.col("o_custkey").alias("cust"), F.col("l_suppkey").alias("supp"))
-        .distinct()
-    )
-    wcap = Window.partitionBy("supp").orderBy(
-        F.md5(F.concat_ws(":", F.col("supp"), F.col("cust"))), "cust"
-    )
-    edges = (
-        raw.withColumn("rn", F.row_number().over(wcap))
-        .where(F.col("rn") <= _LP_CAP)
-        .select("cust", "supp")
-        .localCheckpoint(eager=True)
-    )
+    edges = _capped_edges(spark, sf_dir)
     weights = _aa_weights()
     warr = F.array(*[F.lit(x) for x in weights])
     sdeg = (
@@ -685,11 +686,8 @@ def q_adamic_adar(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("sdeg") >= 2)
         .select("supp", F.element_at(warr, F.col("sdeg") - 1).alias("w6"))
     )
-    a = edges.select(F.col("supp"), F.col("cust").alias("ca"))
-    b = edges.select(F.col("supp"), F.col("cust").alias("cb"))
     scored = (
-        a.join(b, "supp")
-        .where(F.col("ca") < F.col("cb"))
+        _neighbor_pairs(edges)
         .join(F.broadcast(sdeg), "supp")
         .groupBy("ca", "cb")
         .agg(
@@ -801,17 +799,11 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Labels are checkpointed per round to truncate lineage; skewed hubs
     are AQE skew-join territory. No pair explosion anywhere — cost is
     O(E) per round."""
-    raw = (
-        load(spark, sf_dir, "orders")
-        .join(
-            load(spark, sf_dir, "lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .select(
-            (F.col("o_custkey") * 2).cast("bigint").alias("src"),
-            (F.col("l_suppkey") * 2 + 1).cast("bigint").alias("dst"),
-        )
-        .distinct()
+    raw = _purchase_edges(
+        spark,
+        sf_dir,
+        (F.col("o_custkey") * 2).cast("bigint").alias("src"),
+        (F.col("l_suppkey") * 2 + 1).cast("bigint").alias("dst"),
     )
     lab = propagate_labels(raw, _LPA_ITERS)
     return (
@@ -847,19 +839,12 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     cross-joined back (broadcast) — the q_graph_pagerank discipline,
     including per-round localCheckpoint. Top-k extraction is
     sort-limit (TakeOrdered), never a global window."""
-    edges = (
-        load(spark, sf_dir, "orders")
-        .join(
-            load(spark, sf_dir, "lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .select(
-            F.col("o_custkey").cast("bigint").alias("cust"),
-            F.col("l_suppkey").cast("bigint").alias("supp"),
-        )
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
+    edges = _purchase_edges(
+        spark,
+        sf_dir,
+        F.col("o_custkey").cast("bigint").alias("cust"),
+        F.col("l_suppkey").cast("bigint").alias("supp"),
+    ).localCheckpoint(eager=False)
     auth = edges.select("supp").distinct().select(
         "supp", F.lit(1_000_000).cast("bigint").alias("a6")
     )
@@ -974,17 +959,11 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     explosion. The int64 moments hold to ~10¹⁵ edges·deg³; past that
     the moments themselves go to double (or Spark DECIMAL) with the
     same downstream arithmetic."""
-    raw = (
-        load(spark, sf_dir, "orders")
-        .join(
-            load(spark, sf_dir, "lineitem"),
-            F.col("o_orderkey") == F.col("l_orderkey"),
-        )
-        .select(
-            (F.col("o_custkey") * 2).cast("bigint").alias("src"),
-            (F.col("l_suppkey") * 2 + 1).cast("bigint").alias("dst"),
-        )
-        .distinct()
+    raw = _purchase_edges(
+        spark,
+        sf_dir,
+        (F.col("o_custkey") * 2).cast("bigint").alias("src"),
+        (F.col("l_suppkey") * 2 + 1).cast("bigint").alias("dst"),
     )
     edges = raw.union(
         raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))

@@ -1326,6 +1326,45 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _query_scores(
+    spark: SparkSession, sf_dir: str, raw_dot: bool = False
+) -> tuple[DataFrame, DataFrame, DataFrame]:
+    """The retrieval-metric corpus pass: every 100th vector is a query,
+    broadcast against every OTHER corpus vector. Returns ``(emb,
+    queries, scored)``; ``scored`` holds (query_id, qlabel, vec_id,
+    label, c6 = cosine snapped to 1e-6) plus, with ``raw_dot``, d3 = the
+    raw dot product snapped to 1e-3 from the SAME pair dot product. The
+    cosine denominator takes the 1e-12 norm-product guard."""
+    emb = _with_vec(load(spark, sf_dir, "embeddings"))
+    queries = emb.where(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("label").alias("qlabel"),
+        F.col("vec").alias("qvec"),
+        F.col("nrm").alias("qnrm"),
+    )
+    dot = _dot(F.col("qvec"), F.col("vec"))
+    snaps = [
+        F.floor(dot / F.greatest(F.col("qnrm") * F.col("nrm"), F.lit(1e-12)) * 1e6 + F.lit(0.5))
+        .cast("bigint")
+        .alias("c6")
+    ]
+    if raw_dot:
+        snaps.append(F.floor(dot * 1e3 + F.lit(0.5)).cast("bigint").alias("d3"))
+    scored = emb.join(broadcast(queries), F.col("vec_id") != F.col("query_id")).select(
+        "query_id", "qlabel", "vec_id", "label", *snaps
+    )
+    return emb, queries, scored
+
+
+def _top10(scored: DataFrame) -> DataFrame:
+    """Each query's top-10 neighbours by (c6 DESC, vec_id) — unique
+    ranks, so ties cannot flip between engines — with their rank rk."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("query_id").orderBy(F.col("c6").desc(), "vec_id")
+    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= 10)
+
+
 def _ndcg_weights() -> tuple[list[int], list[int]]:
     """Per-rank DCG gain weights floor(1e6/log2(r+1)+0.5) for r=1..10 and
     their prefix sums (ideal-DCG table) — precomputed in PYTHON and
@@ -1361,32 +1400,10 @@ def q_retrieval_ndcg(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange.
     """
     w6, idcg6 = _ndcg_weights()
-    emb = _with_vec(load(spark, sf_dir, "embeddings"))
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlabel"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = emb.join(broadcast(queries), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        "qlabel",
-        "vec_id",
-        "label",
-        F.floor(
-            _dot(F.col("qvec"), F.col("vec")) / F.greatest(F.col("qnrm") * F.col("nrm"), F.lit(1e-12)) * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("c6"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("c6").desc(), "vec_id")
+    emb, _, scored = _query_scores(spark, sf_dir)
     warr = F.array(*[F.lit(x) for x in w6])
     dcg = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 10)
+        _top10(scored)
         .groupBy("query_id", "qlabel")
         .agg(
             F.sum(
@@ -1453,32 +1470,10 @@ def q_retrieval_mrr(spark: SparkSession, sf_dir: str) -> DataFrame:
     join. Production swaps the brute scorer for the ANN candidate
     generators feeding the same metric tail."""
     w6 = _mrr_weights()
-    emb = _with_vec(load(spark, sf_dir, "embeddings"))
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlabel"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = emb.join(broadcast(queries), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        "qlabel",
-        "vec_id",
-        "label",
-        F.floor(
-            _dot(F.col("qvec"), F.col("vec")) / F.greatest(F.col("qnrm") * F.col("nrm"), F.lit(1e-12)) * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("c6"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("c6").desc(), "vec_id")
+    emb, _, scored = _query_scores(spark, sf_dir)
     warr = F.array(*[F.lit(x) for x in w6])
     per_q = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 10)
+        _top10(scored)
         .groupBy("query_id", "qlabel")
         .agg(
             F.coalesce(
@@ -1533,31 +1528,9 @@ def q_precision_at_k(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: the corpus pass is the same broadcast-query score + top-10
     window; everything after lives on ≤10 rows."""
-    emb = _with_vec(load(spark, sf_dir, "embeddings"))
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlabel"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-    )
-    scored = emb.join(broadcast(queries), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        "qlabel",
-        "vec_id",
-        "label",
-        F.floor(
-            _dot(F.col("qvec"), F.col("vec")) / F.greatest(F.col("qnrm") * F.col("nrm"), F.lit(1e-12)) * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("c6"),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("c6").desc(), "vec_id")
+    _, queries, scored = _query_scores(spark, sf_dir)
     rel_at_rank = (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 10)
+        _top10(scored)
         .groupBy("rk")
         .agg(
             F.sum((F.col("label") == F.col("qlabel")).cast("bigint"))
@@ -1634,24 +1607,7 @@ def q_ranker_winrate(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one broadcast-query corpus pass, two per-query top-10
     windows over the same exchange, then a 1-row aggregate."""
     w6, _ = _ndcg_weights()
-    emb = _with_vec(load(spark, sf_dir, "embeddings"))
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("label").alias("qlabel"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-    )
-    dot = _dot(F.col("qvec"), F.col("vec"))
-    scored = emb.join(broadcast(queries), F.col("vec_id") != F.col("query_id")).select(
-        "query_id",
-        "qlabel",
-        "vec_id",
-        "label",
-        F.floor(dot / F.greatest(F.col("qnrm") * F.col("nrm"), F.lit(1e-12)) * 1e6 + F.lit(0.5))
-        .cast("bigint")
-        .alias("c6"),
-        F.floor(dot * 1e3 + F.lit(0.5)).cast("bigint").alias("d3"),
-    )
+    _, _, scored = _query_scores(spark, sf_dir, raw_dot=True)
     from pyspark.sql import Window
 
     wa = Window.partitionBy("query_id").orderBy(F.col("c6").desc(), "vec_id")

@@ -357,13 +357,12 @@ def q_winsorize_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def q_lang_source_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Chi-square independence test of the lang × source contingency
-    table — the distribution-QA check a corpus build runs to detect
-    source-conditional language skew. Expected counts are
-    row_total·col_total/N over the FULL zero-filled grid (absent cells
-    contribute their expected mass — the same zero-fill lesson as the
-    drift witness); the statistic snaps at 6dp, dof = (R−1)(C−1).
+def _lang_source_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """One row: the χ² statistic of the lang × source contingency table
+    (snapped at 6dp) with its cell count ``n_cells``, total ``n`` and
+    dimension sizes ``r`` (langs) and ``c`` (sources). Expected counts
+    are row_total·col_total/N over the FULL zero-filled grid, so absent
+    cells contribute their expected mass.
 
     Scale: one (lang, source) count aggregation; the grid is |langs|×
     |sources| (dimension-sized, broadcast cross join); N and the
@@ -378,8 +377,6 @@ def q_lang_source_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(obs, ["lang", "source"], "left")
         .crossJoin(F.broadcast(n_t))
         .select(
-            "lang",
-            "source",
             F.coalesce("o", F.lit(0)).alias("o"),
             (F.col("rt") * F.col("ct") / F.col("n")).alias("e"),
         )
@@ -388,19 +385,25 @@ def q_lang_source_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
     r_c = row_t.crossJoin(F.broadcast(col_t)).agg(
         F.countDistinct("lang").alias("r"), F.countDistinct("source").alias("c")
     )
-    return (
-        grid.agg(
-            (F.floor(F.sum(cell) * 1e6 + F.lit(0.5)) / 1e6).alias("chi2"),
-            F.count("*").alias("n_cells"),
-            F.sum("o").alias("n"),
-        )
-        .crossJoin(F.broadcast(r_c))
-        .select(
-            "chi2",
-            "n_cells",
-            "n",
-            ((F.col("r") - 1) * (F.col("c") - 1)).alias("dof"),
-        )
+    return grid.agg(
+        (F.floor(F.sum(cell) * 1e6 + F.lit(0.5)) / 1e6).alias("chi2"),
+        F.count("*").alias("n_cells"),
+        F.sum("o").alias("n"),
+    ).crossJoin(F.broadcast(r_c))
+
+
+def q_lang_source_chisq(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Chi-square independence test of the lang × source contingency
+    table — the distribution-QA check a corpus build runs to detect
+    source-conditional language skew. Expected counts are
+    row_total·col_total/N over the FULL zero-filled grid (absent cells
+    contribute their expected mass — the same zero-fill lesson as the
+    drift witness); the statistic snaps at 6dp, dof = (R−1)(C−1)."""
+    return _lang_source_chi2(spark, sf_dir).select(
+        "chi2",
+        "n_cells",
+        "n",
+        ((F.col("r") - 1) * (F.col("c") - 1)).alias("dof"),
     )
 
 
@@ -730,6 +733,27 @@ def q_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _en_length_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The score histogram of the n_chars-vs-English classifier: one row
+    per exact integer score ``s`` = n_chars with its positive (``np``,
+    lang = 'en') and negative (``nn``) counts. One map-side-combinable
+    groupBy, bounded by the score's value range, not the corpus;
+    checkpointed because every consumer reads it twice."""
+    docs = load(spark, sf_dir, "documents")
+    return (
+        docs.select(
+            F.col("n_chars").cast("bigint").alias("s"),
+            (F.col("lang") == "en").cast("int").alias("pos"),
+        )
+        .groupBy("s")
+        .agg(
+            F.sum("pos").cast("bigint").alias("np"),
+            F.sum(1 - F.col("pos")).cast("bigint").alias("nn"),
+        )
+        .localCheckpoint(eager=True)
+    )
+
+
 def q_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     """EXACT ROC-AUC of a quality signal against a binary label (here:
     does n_chars separate English from non-English documents) — the
@@ -747,19 +771,7 @@ def q_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries greatest(..., 1.0) on both engines: a single-class corpus
     would otherwise hit 0/0 (the ADVICE-r11 class). One row out. EXACT
     oracle."""
-    docs = load(spark, sf_dir, "documents")
-    hist = (
-        docs.select(
-            F.col("n_chars").cast("bigint").alias("s"),
-            (F.col("lang") == "en").cast("int").alias("pos"),
-        )
-        .groupBy("s")
-        .agg(
-            F.sum("pos").cast("bigint").alias("np"),
-            F.sum(1 - F.col("pos")).cast("bigint").alias("nn"),
-        )
-        .localCheckpoint(eager=True)  # bounded rows; two consumers
-    )
+    hist = _en_length_hist(spark, sf_dir)
     h2 = hist.select(F.col("s").alias("s2"), F.col("nn").alias("nn2"))
     below = (
         hist.join(h2, F.col("s2") < F.col("s"), "left")
@@ -1636,19 +1648,7 @@ def q_roc_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: rides the same bounded value-histogram as the AUC witness
     (one map-side-combinable groupBy, corpus-independent row count);
     the 21-threshold grid crosses the histogram broadcast-side."""
-    docs = load(spark, sf_dir, "documents")
-    hist = (
-        docs.select(
-            F.col("n_chars").cast("bigint").alias("s"),
-            (F.col("lang") == "en").cast("int").alias("pos"),
-        )
-        .groupBy("s")
-        .agg(
-            F.sum("pos").cast("bigint").alias("np"),
-            F.sum(1 - F.col("pos")).cast("bigint").alias("nn"),
-        )
-        .localCheckpoint(eager=True)  # bounded rows; range + cross consumers
-    )
+    hist = _en_length_hist(spark, sf_dir)
     rng = hist.agg(
         F.min("s").alias("s_min"),
         F.max("s").alias("s_max"),
@@ -1839,30 +1839,8 @@ def q_cramers_v(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scale: same shape as the χ² witness — one (lang,source) count agg,
     dimension-sized grid, broadcast marginals."""
-    docs = load(spark, sf_dir, "documents")
-    obs = docs.groupBy("lang", "source").agg(F.count("*").alias("o"))
-    row_t = obs.groupBy("lang").agg(F.sum("o").alias("rt"))
-    col_t = obs.groupBy("source").agg(F.sum("o").alias("ct"))
-    n_t = obs.agg(F.sum("o").alias("n"))
-    grid = (
-        row_t.crossJoin(F.broadcast(col_t))
-        .join(obs, ["lang", "source"], "left")
-        .crossJoin(F.broadcast(n_t))
-        .select(
-            F.coalesce("o", F.lit(0)).alias("o"),
-            (F.col("rt") * F.col("ct") / F.col("n")).alias("e"),
-        )
-    )
-    cell = F.pow(F.col("o") - F.col("e"), 2) / F.col("e")
-    r_c = row_t.crossJoin(F.broadcast(col_t)).agg(
-        F.countDistinct("lang").alias("r"), F.countDistinct("source").alias("c")
-    )
     return (
-        grid.agg(
-            (F.floor(F.sum(cell) * 1e6 + F.lit(0.5)) / 1e6).alias("chi2"),
-            F.sum("o").cast("bigint").alias("n"),
-        )
-        .crossJoin(F.broadcast(r_c))
+        _lang_source_chi2(spark, sf_dir)
         .select(
             "chi2",
             "n",
@@ -1947,6 +1925,38 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _events_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """events (event_id, event_type) with the value snapped to int64
+    micro-units ``v6``."""
+    return load(spark, sf_dir, "events").select(
+        "event_id",
+        "event_type",
+        F.floor(F.col("value") * 1e6 + F.lit(0.5)).cast("bigint").alias("v6"),
+    )
+
+
+def _lower_median(df: DataFrame, col: str) -> DataFrame:
+    """Per event_type, the row at the LOWER median of ``col`` — rank
+    (n+1) div 2 of the (col, event_id)-ordered partitioned window, so no
+    engine ever averages two middle values in floats — as (event_type,
+    col, rn, n). A partitioned sort-window: no global sort."""
+    w = Window.partitionBy("event_type").orderBy(col, "event_id")
+    return df.select(
+        "event_type",
+        col,
+        F.row_number().over(w).alias("rn"),
+        F.count("*").over(Window.partitionBy("event_type")).alias("n"),
+    ).where(F.col("rn") == F.expr("(n + 1) div 2"))
+
+
+def _abs_dev(ev: DataFrame, med: DataFrame) -> DataFrame:
+    """Each ``_events_v6`` row with its type's ``med6`` (broadcast) and
+    absolute deviation ``d6`` = |v6 − med6|."""
+    return ev.join(F.broadcast(med.select("event_type", "med6")), "event_type").select(
+        "event_id", "event_type", "v6", "med6", F.abs(F.col("v6") - F.col("med6")).alias("d6")
+    )
+
+
 _MAD_K = 3  # flag |x - median| > K * MAD
 
 
@@ -1965,37 +1975,10 @@ def q_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: two partitioned sort-windows over the corpus (no global
     sort, no single-partition window) + broadcast joins of the 5-row
     median frames."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_id",
-        "event_type",
-        F.floor(F.col("value") * 1e6 + F.lit(0.5)).cast("bigint").alias("v6"),
-    )
-    w = Window.partitionBy("event_type").orderBy("v6", "event_id")
-    cnt = Window.partitionBy("event_type")
-    med = (
-        ev.select(
-            "event_type",
-            "v6",
-            F.row_number().over(w).alias("rn"),
-            F.count("*").over(cnt).alias("n"),
-        )
-        .where(F.col("rn") == F.expr("(n + 1) div 2"))
-        .select("event_type", F.col("v6").alias("med6"))
-    )
-    dev = ev.join(F.broadcast(med), "event_type").select(
-        "event_id", "event_type", "v6", "med6", F.abs(F.col("v6") - F.col("med6")).alias("d6")
-    )
-    wd = Window.partitionBy("event_type").orderBy("d6", "event_id")
-    mad = (
-        dev.select(
-            "event_type",
-            "d6",
-            F.row_number().over(wd).alias("rn"),
-            F.count("*").over(cnt).alias("n"),
-        )
-        .where(F.col("rn") == F.expr("(n + 1) div 2"))
-        .select("event_type", F.col("d6").alias("mad6"))
-    )
+    ev = _events_v6(spark, sf_dir)
+    med = _lower_median(ev, "v6").select("event_type", F.col("v6").alias("med6"))
+    dev = _abs_dev(ev, med)
+    mad = _lower_median(dev, "d6").select("event_type", F.col("d6").alias("mad6"))
     return (
         dev.join(F.broadcast(mad), "event_type")
         .groupBy("event_type")
@@ -2246,40 +2229,17 @@ def q_huber_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     median, 0 elsewhere → μ fixes at the median). Scale: the per-type
     median/MAD windows are the corpus passes; the 4-round loop re-joins
     the CACHED residual base against a 5-row μ frame per round."""
-    ev = load(spark, sf_dir, "events").select(
-        "event_type",
-        "event_id",
-        F.floor(F.col("value") * 1e6 + F.lit(0.5)).cast("bigint").alias("v6"),
-    )
-    w = Window.partitionBy("event_type").orderBy("v6", "event_id")
-    cnt = Window.partitionBy("event_type")
+    ev = _events_v6(spark, sf_dir)
     # eager checkpoint: med feeds THREE consumers (dev, base, the output
     # row) — unmaterialized, the corpus-wide median window re-ran once
     # per consumer inside the base-build job (§2.4)
     med = (
-        ev.select(
-            "event_type",
-            "v6",
-            F.row_number().over(w).alias("rn"),
-            F.count("*").over(cnt).alias("n"),
-        )
-        .where(F.col("rn") == F.expr("(n + 1) div 2"))
-        .select("event_type", F.col("v6").alias("med6"), F.col("n").alias("n"))
+        _lower_median(ev, "v6")
+        .select("event_type", F.col("v6").alias("med6"), "n")
         .localCheckpoint(eager=True)
     )
-    dev = ev.join(F.broadcast(med), "event_type").select(
-        "event_type", "event_id", "v6", "med6", "n",
-        F.abs(F.col("v6") - F.col("med6")).alias("d6"),
-    )
-    wd = Window.partitionBy("event_type").orderBy("d6", "event_id")
     mad = (
-        dev.select(
-            "event_type",
-            "d6",
-            F.row_number().over(wd).alias("rn"),
-            F.count("*").over(cnt).alias("nn"),
-        )
-        .where(F.col("rn") == F.expr("(nn + 1) div 2"))
+        _lower_median(_abs_dev(ev, med), "d6")
         .select(
             "event_type",
             F.col("d6").alias("mad6"),

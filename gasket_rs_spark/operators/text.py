@@ -13,7 +13,7 @@ regex path used for real corpora.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gasket_rs_spark.tables import load
@@ -2164,6 +2164,24 @@ def _textrank_oracle() -> str:
     return "".join(body)
 
 
+def _source_vocab(spark: SparkSession, sf_dir: str, **aggs: Column) -> DataFrame:
+    """Per source: ``n_tokens``, ``vocab`` (distinct whitespace tokens)
+    and the bigint ``aggs`` over the per-(source, token) counts ``n``.
+    One corpus pass → (source, token) counts (map-side combinable), then
+    vocabulary-bounded aggregates."""
+    toks = load(spark, sf_dir, "documents").select(
+        "source", F.explode(F.split("text", " ")).alias("tok")
+    )
+    counts = toks.groupBy("source", "tok").agg(
+        F.count("*").cast("bigint").alias("n")
+    )
+    return counts.groupBy("source").agg(
+        F.sum("n").cast("bigint").alias("n_tokens"),
+        F.count("*").cast("bigint").alias("vocab"),
+        *[c.cast("bigint").alias(name) for name, c in aggs.items()],
+    )
+
+
 def q_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SIMPSON DIVERSITY of the token distribution per source — the
     transcendental-free twin of token entropy: λ = Σ n_i(n_i−1) /
@@ -2176,24 +2194,11 @@ def q_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_tokens ≤ 1 would give 0/0 → NaN, and an all-distinct source
     (simpson6 = 0) would give 1e12/0 → Inf, where Spark's bigint cast
     saturates but DuckDB's CAST errors — data-dependent divergence the
-    guards close identically on both engines (ADVICE r11).
-
-    Scale: one corpus pass → (source, token) counts (map-side
-    combinable), then vocabulary-bounded aggregates."""
-    toks = load(spark, sf_dir, "documents").select(
-        "source", F.explode(F.split("text", " ")).alias("tok")
-    )
-    counts = toks.groupBy("source", "tok").agg(
-        F.count("*").cast("bigint").alias("n")
-    )
+    guards close identically on both engines (ADVICE r11)."""
     return (
-        counts.groupBy("source")
-        .agg(
-            F.sum("n").cast("bigint").alias("n_tokens"),
-            F.count("*").cast("bigint").alias("vocab"),
-            F.sum(F.col("n") * (F.col("n") - 1)).cast("bigint").alias("coll"),
-        )
-        .select(
+        _source_vocab(
+            spark, sf_dir, coll=F.sum(F.col("n") * (F.col("n") - 1))
+        ).select(
             "source",
             "n_tokens",
             "vocab",
@@ -2235,21 +2240,13 @@ def q_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Pure int64 frequency-of-frequency counts; each estimator is one
     IEEE division, snapped, identical on both engines."""
-    toks = load(spark, sf_dir, "documents").select(
-        "source", F.explode(F.split("text", " ")).alias("tok")
-    )
-    counts = toks.groupBy("source", "tok").agg(
-        F.count("*").cast("bigint").alias("n")
-    )
     return (
-        counts.groupBy("source")
-        .agg(
-            F.sum("n").cast("bigint").alias("n_tokens"),
-            F.count("*").cast("bigint").alias("vocab"),
-            F.sum((F.col("n") == 1).cast("bigint")).cast("bigint").alias("f1"),
-            F.sum((F.col("n") == 2).cast("bigint")).cast("bigint").alias("f2"),
-        )
-        .select(
+        _source_vocab(
+            spark,
+            sf_dir,
+            f1=F.sum((F.col("n") == 1).cast("bigint")),
+            f2=F.sum((F.col("n") == 2).cast("bigint")),
+        ).select(
             "source",
             "n_tokens",
             "vocab",

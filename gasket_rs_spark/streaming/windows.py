@@ -21,17 +21,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gasket_rs_spark.tables import load
+from gasket_rs_spark.tables import events_with_sec, load
 
 _TUMBLE_SEC = 600
 _SLIDE_SEC = 300
 _SESSION_GAP = "30 minutes"
-
-
-def _events_with_sec(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return load(spark, sf_dir, "events").withColumn(
-        "ts_sec", F.expr("unix_millis(ts) div 1000")
-    )
 
 
 def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -119,7 +113,7 @@ def q_stream_watermark_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     single-task global ``Window.orderBy`` this replaces would wedge at
     100x scale.
     """
-    events = _events_with_sec(spark, sf_dir)
+    events = events_with_sec(spark, sf_dir)
     bounds = events.agg(
         F.min("event_id").alias("lo"),
         (
@@ -165,7 +159,7 @@ def q_stream_dedup_watermark_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     minutes older (or absent). Deterministic, oracle-checkable stand-in
     for the streaming state-store dedup.
     """
-    events = _events_with_sec(spark, sf_dir)
+    events = events_with_sec(spark, sf_dir)
     w = Window.partitionBy("user_id", "event_type").orderBy("event_id")
     return (
         events.withColumn("prev_sec", F.lag("ts_sec").over(w))
@@ -175,30 +169,38 @@ def q_stream_dedup_watermark_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_LOJ_HORIZON_MS = 3_600_000  # 1 hour, matches interval_join_streams_left_outer
+_LOJ_HORIZON_MS = 3_600_000  # 1 hour, matches interval_join_streams' default
 
 
-def q_stream_left_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """LEFT-OUTER watermarked stream-stream interval join, simulated
-    deterministically in batch (VERDICT r11 #3) — the oracle twin of
-    ``stream.interval_join_streams_left_outer``, which is pytest-only
+def _interval_join_sim(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Outer watermarked stream-stream interval join, simulated
+    deterministically in batch — the oracle twin of
+    ``stream.interval_join_streams(how=...)``, which is pytest-only
     because Spark emits null-extended rows on state EVICTION and the
     general emitted-null set is batch-boundary-dependent.
 
     Under the repo's replay conditions the emission IS deterministic and
-    this query reproduces it bit-for-bit (pinned by
-    tests/test_streaming.py::test_left_outer_join_sim_matches_streaming):
-    each side arrives as ONE data batch (single staged file), so batch 1
-    joins with watermark still at epoch 0 and emits every matched pair;
-    the trailing no-data batch advances the global watermark to
-    wm = min(max click ts, max purchase ts) − horizon (Spark's default
-    min-of-sides multi-watermark policy) and evicts left-side state,
-    null-extending exactly the unmatched purchases with ts < wm. An
-    unmatched purchase newer than wm could still match a future click,
-    so it stays in state and is withheld when the stream ends — on the
-    sf0.001 fixture 195 of 197 unmatched purchases emit and the 2
-    past-wm tail rows do not, on both the real stream and this sim (the
-    equality pin compares the full row sets).
+    this reproduces it bit-for-bit (pinned by the ``*_join_sim_matches_
+    streaming`` tests in tests/test_streaming.py): each side arrives as
+    ONE data batch (single staged file), so batch 1 joins with watermark
+    still at epoch 0 and emits every matched pair; the trailing no-data
+    batch advances the global watermark to wm = min(max click ts, max
+    purchase ts) − horizon (Spark's default min-of-sides policy) and
+    evicts state. The eviction thresholds differ per side because the
+    interval predicate is asymmetric (click_ts ≤ purchase_ts ≤ click_ts
+    + horizon):
+
+    - an unmatched PURCHASE at pts null-extends iff pts < wm — a
+      qualifying click (cts ∈ [pts − horizon, pts]) can no longer
+      arrive once the watermark passes pts;
+    - an unmatched CLICK at cts null-extends iff cts < wm − horizon —
+      it could only match purchases with pts ∈ [cts, cts + horizon],
+      all below the watermark by then.
+
+    Unmatched rows newer than their threshold stay in state and are
+    withheld when the stream ends — on the sf0.001 fixture 195 of 197
+    unmatched purchases emit under the left-outer join, on both the real
+    stream and this sim.
 
     Scale: equi-join on user_id (shuffle on an 8-byte key) with the
     interval as a residual range predicate; the watermark scalar is one
@@ -221,7 +223,7 @@ def q_stream_left_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # produced data — a one-sided fixture would collapse min(mx) to the
     # present side's max and null-extend rows the real stream (global
     # watermark still at epoch 0) would never emit. wm_ms = NULL then:
-    # `pts_ms < NULL` is NULL, so no null-extended row passes the filter.
+    # `ts < NULL` is NULL, so no null-extended row passes the filter.
     wm = (
         events.where(F.col("event_type").isin("click", "purchase"))
         .groupBy("event_type")
@@ -237,74 +239,13 @@ def q_stream_left_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
         & (F.col("cts_ms") <= F.col("pts_ms"))
         & (F.col("cts_ms") >= F.col("pts_ms") - F.lit(_LOJ_HORIZON_MS))
     )
+    user = {
+        "left": F.col("pu").alias("p_user"),
+        "full": F.coalesce(F.col("pu"), F.col("cu")).alias("join_user"),
+        "right": F.col("cu").alias("c_user"),
+    }[how]
     return (
-        p.join(c, cond, "left")
-        .crossJoin(F.broadcast(wm))
-        .where(F.col("click_id").isNotNull() | (F.col("pts_ms") < F.col("wm_ms")))
-        .select("purchase_id", "click_id", F.col("pu").alias("p_user"))
-    )
-
-
-def q_stream_full_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """FULL-OUTER watermarked stream-stream interval join, simulated
-    deterministically in batch (VERDICT r12 #3) — the oracle twin of
-    ``stream.interval_join_streams_full_outer``, completing the
-    stream-join family next to the left-outer sim above.
-
-    Same replay conditions, same global watermark wm = min-of-sides max
-    event time − horizon; the eviction thresholds differ per side
-    because the interval predicate is asymmetric (click_ts ≤ purchase_ts
-    ≤ click_ts + horizon):
-
-    - an unmatched PURCHASE at pts null-extends iff pts < wm — a
-      qualifying click (cts ∈ [pts − horizon, pts]) can no longer
-      arrive once the watermark passes pts (identical to the left-outer
-      sim, whose emission is pinned bit-equal to the real stream);
-    - an unmatched CLICK at cts null-extends iff cts < wm − horizon —
-      it could only match purchases with pts ∈ [cts, cts + horizon],
-      all below the watermark by then (right-side state eviction
-      mirrors the left, shifted by the horizon).
-
-    Unmatched rows newer than their threshold stay in state and are
-    withheld when the stream ends — on both the real stream and this
-    sim (the equality pin in tests/test_streaming.py compares the full
-    row sets, and the one-sided-input guard from the left-outer sim
-    applies identically: wm is NULL unless both sides produced data).
-
-    Scale: one equi-join on user_id with the interval as a residual
-    range predicate + one broadcast watermark scalar — no windows, no
-    driver loop, state bounded by horizon + watermark exactly as the
-    real stream's would be."""
-    events = load(spark, sf_dir, "events").withColumn(
-        "ts_ms", F.expr("unix_millis(ts)")
-    )
-    c = events.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("cu"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts_ms").alias("cts_ms"),
-    )
-    p = events.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("pu"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts_ms").alias("pts_ms"),
-    )
-    wm = (
-        events.where(F.col("event_type").isin("click", "purchase"))
-        .groupBy("event_type")
-        .agg(F.max("ts_ms").alias("mx"))
-        .agg(
-            F.when(
-                F.count("*") == 2, F.min("mx") - F.lit(_LOJ_HORIZON_MS)
-            ).alias("wm_ms")
-        )
-    )
-    cond = (
-        (F.col("cu") == F.col("pu"))
-        & (F.col("cts_ms") <= F.col("pts_ms"))
-        & (F.col("cts_ms") >= F.col("pts_ms") - F.lit(_LOJ_HORIZON_MS))
-    )
-    return (
-        p.join(c, cond, "full")
+        p.join(c, cond, how)
         .crossJoin(F.broadcast(wm))
         .where(
             (F.col("click_id").isNotNull() & F.col("purchase_id").isNotNull())
@@ -317,73 +258,26 @@ def q_stream_full_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
                 & (F.col("cts_ms") < F.col("wm_ms") - F.lit(_LOJ_HORIZON_MS))
             )
         )
-        .select(
-            "purchase_id",
-            "click_id",
-            F.coalesce(F.col("pu"), F.col("cu")).alias("join_user"),
-        )
+        .select("purchase_id", "click_id", user)
     )
+
+
+def q_stream_left_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """LEFT-OUTER stream-stream interval join sim (VERDICT r11 #3):
+    every matched pair plus the evicted unmatched purchases."""
+    return _interval_join_sim(spark, sf_dir, "left")
+
+
+def q_stream_full_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """FULL-OUTER stream-stream interval join sim (VERDICT r12 #3):
+    null-extensions on both sides, at their per-side thresholds."""
+    return _interval_join_sim(spark, sf_dir, "full")
 
 
 def q_stream_right_outer_join_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """RIGHT-OUTER watermarked stream-stream interval join, simulated
-    deterministically in batch (VERDICT r13 #4) — the oracle twin of
-    ``stream.interval_join_streams_right_outer``, making the
-    interval-join sim family total (inner / left / right / full).
-
-    Same replay conditions and global watermark wm = min-of-sides max
-    event time − horizon as the left/full-outer sims. Only the CLICK
-    side null-extends here, at the threshold the full-outer sim derived
-    for right-side state: an unmatched click at cts null-extends iff
-    cts < wm − horizon (it could only match purchases with
-    pts ∈ [cts, cts + horizon], all below the watermark by then);
-    newer unmatched clicks stay in state and are withheld when the
-    stream ends. Pinned bit-equal to the real streaming emission by
-    tests/test_streaming.py::test_right_outer_join_sim_matches_streaming;
-    the one-sided-input guard applies identically (wm NULL unless both
-    sides produced data — no null-extensions then).
-
-    Scale: one equi-join on user_id with the interval as a residual
-    range predicate + one broadcast watermark scalar — no windows, no
-    driver loop, state bounded by horizon + watermark exactly as the
-    real stream's would be."""
-    events = load(spark, sf_dir, "events").withColumn(
-        "ts_ms", F.expr("unix_millis(ts)")
-    )
-    c = events.where(F.col("event_type") == "click").select(
-        F.col("user_id").alias("cu"),
-        F.col("event_id").alias("click_id"),
-        F.col("ts_ms").alias("cts_ms"),
-    )
-    p = events.where(F.col("event_type") == "purchase").select(
-        F.col("user_id").alias("pu"),
-        F.col("event_id").alias("purchase_id"),
-        F.col("ts_ms").alias("pts_ms"),
-    )
-    wm = (
-        events.where(F.col("event_type").isin("click", "purchase"))
-        .groupBy("event_type")
-        .agg(F.max("ts_ms").alias("mx"))
-        .agg(
-            F.when(
-                F.count("*") == 2, F.min("mx") - F.lit(_LOJ_HORIZON_MS)
-            ).alias("wm_ms")
-        )
-    )
-    cond = (
-        (F.col("cu") == F.col("pu"))
-        & (F.col("cts_ms") <= F.col("pts_ms"))
-        & (F.col("cts_ms") >= F.col("pts_ms") - F.lit(_LOJ_HORIZON_MS))
-    )
-    return (
-        p.join(c, cond, "right")
-        .crossJoin(F.broadcast(wm))
-        .where(
-            F.col("purchase_id").isNotNull()
-            | (F.col("cts_ms") < F.col("wm_ms") - F.lit(_LOJ_HORIZON_MS))
-        )
-        .select("purchase_id", "click_id", F.col("cu").alias("c_user"))
-    )
+    """RIGHT-OUTER stream-stream interval join sim (VERDICT r13 #4):
+    every matched pair plus the evicted unmatched clicks."""
+    return _interval_join_sim(spark, sf_dir, "right")
 
 
 ORACLES: dict[str, str] = {

@@ -65,6 +65,15 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
+def events_with_sec(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """``events`` plus ``ts_sec``, its epoch seconds truncated toward zero
+    (``div``) — the spelling of the oracles' ``epoch_ms(ts) // 1000``,
+    which also truncates, so the two agree before 1970 as well."""
+    return load(spark, sf_dir, "events").withColumn(
+        "ts_sec", F.expr("unix_millis(ts) div 1000")
+    )
+
+
 def _normalize_ts(dtype) -> F.Column:
     from pyspark.sql.types import LongType
 

@@ -1,0 +1,141 @@
+"""Report copy-pasted code in the package.
+
+A code line is a source line with its comments, docstrings and
+multi-line string literals (the oracle SQL) removed and its tokens
+joined by single spaces. A code line is *duplicated* when it sits in a
+window of ``WINDOW`` consecutive code lines of one file that appears
+again, unoverlapped, elsewhere in the scanned tree. Duplicated lines are
+grouped by the set of top-level functions (or classes, or ``<module>``)
+that hold a copy of a window covering them, largest group first; the
+last line gives the duplicated and total code-line counts. Generated
+modules (docstring starting "GENERATED") are skipped.
+
+Run: ``python scripts/dup_report.py [path ...]`` (default: the
+``gasket_rs_spark`` package).
+"""
+
+from __future__ import annotations
+
+import ast
+import io
+import os
+import sys
+import tokenize
+from collections import defaultdict
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+WINDOW = 5
+
+_SKIP_TOKENS = {
+    tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE, tokenize.INDENT,
+    tokenize.DEDENT, tokenize.ENCODING, tokenize.ENDMARKER,
+}
+
+
+def _dropped_spans(tree: ast.AST) -> list[tuple[tuple[int, int], tuple[int, int]]]:
+    """(start, end) positions of docstrings and multi-line string literals."""
+    spans = []
+    for node in ast.walk(tree):
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        ) and ast.get_docstring(node, clean=False) is not None:
+            doc = node.body[0]
+            spans.append(((doc.lineno, doc.col_offset), (doc.end_lineno, doc.end_col_offset)))
+        elif (
+            isinstance(node, ast.JoinedStr)
+            or (isinstance(node, ast.Constant) and isinstance(node.value, str))
+        ) and node.end_lineno > node.lineno:
+            spans.append(((node.lineno, node.col_offset), (node.end_lineno, node.end_col_offset)))
+    return spans
+
+
+def code_lines(source: str) -> tuple[list[tuple[int, str]], ast.Module]:
+    """The file's code lines as (line number, normalized text), and its AST."""
+    tree = ast.parse(source)
+    spans = _dropped_spans(tree)
+    by_row: dict[int, list[str]] = defaultdict(list)
+    for tok in tokenize.generate_tokens(io.StringIO(source).readline):
+        if tok.type in _SKIP_TOKENS:
+            continue
+        if any(a <= tok.start < b for a, b in spans):
+            continue
+        by_row[tok.start[0]].append(tok.string)
+    return [(row, " ".join(by_row[row])) for row in sorted(by_row)], tree
+
+
+def _owner(tree: ast.Module, path: str):
+    """Line number -> "<file>:<top-level def>" for the file."""
+    spans = [
+        (node.lineno, node.end_lineno, node.name)
+        for node in tree.body
+        if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef))
+    ]
+
+    def owner(row: int) -> str:
+        for lo, hi, name in spans:
+            if lo <= row <= hi:
+                return f"{path}:{name}"
+        return f"{path}:<module>"
+
+    return owner
+
+
+def _python_files(paths: list[str]) -> list[str]:
+    out = []
+    for p in paths:
+        if os.path.isfile(p):
+            out.append(p)
+            continue
+        for root, dirs, files in os.walk(p):
+            dirs.sort()
+            out += [os.path.join(root, f) for f in sorted(files) if f.endswith(".py")]
+    return out
+
+
+def scan(paths: list[str]) -> tuple[dict[frozenset, int], int, int]:
+    """Duplicated-line counts per group of top-level defs, the number of
+    duplicated code lines and the number of code lines in ``paths``."""
+    base = paths[0] if os.path.isdir(paths[0]) else os.path.dirname(paths[0])
+    files = []  # (owner fn, [(row, text)])
+    for path in _python_files(paths):
+        with open(path) as f:
+            source = f.read()
+        lines, tree = code_lines(source)
+        if (ast.get_docstring(tree) or "").startswith("GENERATED"):
+            continue
+        files.append((_owner(tree, os.path.relpath(path, base)), lines))
+
+    seen: dict[tuple[str, ...], list[tuple[int, int]]] = defaultdict(list)
+    for fi, (_, lines) in enumerate(files):
+        texts = [t for _, t in lines]
+        for i in range(len(texts) - WINDOW + 1):
+            seen[tuple(texts[i : i + WINDOW])].append((fi, i))
+
+    groups: dict[tuple[int, int], set[str]] = defaultdict(set)  # line -> defs
+    for occ in seen.values():
+        if not any(
+            f1 != f2 or abs(i1 - i2) >= WINDOW for f1, i1 in occ for f2, i2 in occ
+        ):
+            continue
+        owners = {files[f][0](files[f][1][i][0]) for f, i in occ}
+        for f, i in occ:
+            for k in range(i, i + WINDOW):
+                groups[(f, k)] |= owners
+
+    per_group: dict[frozenset, int] = defaultdict(int)
+    for owners in groups.values():
+        per_group[frozenset(owners)] += 1
+    total = sum(len(lines) for _, lines in files)
+    return dict(per_group), len(groups), total
+
+
+def main(argv: list[str]) -> None:
+    paths = argv or [os.path.join(REPO, "gasket_rs_spark")]
+    per_group, n_dup, total = scan(paths)
+    for owners, n in sorted(per_group.items(), key=lambda kv: (-kv[1], sorted(kv[0]))):
+        print(f"{n:5d}  " + ", ".join(sorted(owners)))
+    print(f"duplicated code lines: {n_dup} of {total}")
+
+
+if __name__ == "__main__":
+    main(sys.argv[1:])

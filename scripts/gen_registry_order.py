@@ -15,8 +15,9 @@ produces and to guarantee full-catalog rotation across rounds:
      of changed-module re-checks bounds worst-case driver-evidence age
      at ~AGE_CAP+catalog/WINDOW rounds;
    - 2: no currently-valid evidence — never checked, or green but the
-     implementing module file changed since the checked snapshot commit
-     (a green row for code that no longer exists proves nothing);
+     implementing module's code (``code_fingerprint``) changed since the
+     checked snapshot commit (a green row for code that no longer exists
+     proves nothing);
    - 3: green AND unchanged, within the age cap — the old evidence
      still holds verbatim and is recent enough.
 2. within rank 2 only — ORACLE-UPGRADED entries first (r19, VERDICT
@@ -58,7 +59,9 @@ end-of-round commit so module-change staleness reflects the final code:
 
 from __future__ import annotations
 
+import ast
 import glob
+import hashlib
 import json
 import os
 import re
@@ -112,8 +115,23 @@ def _round_snapshot_commits() -> dict[int, str]:
     return out
 
 
+def code_fingerprint(source: str) -> str:
+    """sha256 of a module's code: its AST dump with the module, class and
+    function docstrings removed. Comment-, docstring- and layout-only
+    edits keep the fingerprint; any code edit changes it, including an
+    edit to another string constant such as an oracle's SQL."""
+    tree = ast.parse(source)
+    for node in ast.walk(tree):
+        if isinstance(
+            node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+        ) and ast.get_docstring(node, clean=False) is not None:
+            node.body = node.body[1:] or [ast.Pass()]
+    return hashlib.sha256(ast.dump(tree).encode()).hexdigest()
+
+
 def _module_changed_since(module_relpath: str, commit: str) -> bool:
-    """True if the module file's content differs from its state at commit."""
+    """True if the module's code (``code_fingerprint``) differs from its
+    state at commit."""
     old = subprocess.run(
         ["git", "-C", REPO, "show", f"{commit}:{module_relpath}"],
         capture_output=True, text=True,
@@ -121,7 +139,7 @@ def _module_changed_since(module_relpath: str, commit: str) -> bool:
     if old.returncode != 0:  # file didn't exist at that commit
         return True
     with open(os.path.join(REPO, module_relpath)) as f:
-        return f.read() != old.stdout
+        return code_fingerprint(f.read()) != code_fingerprint(old.stdout)
 
 
 def available_rounds() -> list[int]:

@@ -278,3 +278,22 @@ def test_degenerate_guard_cross_engine(spark, label, expr, expected):
     got_spark = spark.sql(f"SELECT {expr} AS out").collect()[0]["out"]
     got_duck = duckdb.sql(f"SELECT {expr} AS out").fetchone()[0]
     assert got_spark == got_duck == expected, label
+
+
+def test_events_ts_sec_truncates_like_duckdb_before_1970(spark, tmp_path):
+    """``tables.events_with_sec`` spells ts_sec as ``unix_millis div 1000``
+    — truncation toward zero, like the oracles' ``epoch_ms(ts) // 1000``.
+    A floor spelling reads −2 for 1969-12-31 23:59:58.500 UTC where
+    DuckDB reads −1; the fixtures hold no pre-1970 event, so only a
+    literal row shows it."""
+    from gasket_rs_spark.tables import events_with_sec
+
+    path = tmp_path / "events.parquet"
+    duckdb.sql(
+        "COPY (SELECT 1 AS event_id, 1 AS user_id, 'click' AS event_type,"
+        " TIMESTAMP '1969-12-31 23:59:58.500' AS ts, 1.0 AS value)"
+        f" TO '{path}' (FORMAT PARQUET)"
+    )
+    got_spark = events_with_sec(spark, str(tmp_path)).first()["ts_sec"]
+    got_duck = duckdb.sql(f"SELECT epoch_ms(ts) // 1000 FROM '{path}'").fetchone()[0]
+    assert got_spark == got_duck == -1

@@ -1,0 +1,55 @@
+"""scripts/dup_report.py counts copy-pasted code, not repeated prose or
+SQL: five identical code lines in two functions are reported; the same
+five lines inside a docstring or an oracle SQL string are not. No JVM."""
+
+import os
+import sys
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(REPO, "scripts"))
+
+from dup_report import scan  # noqa: E402
+
+BODY = [
+    "a = load(x)",
+    "b = a.where(a.v > 1)",
+    "c = b.groupBy('k').count()",
+    "d = c.join(b, 'k')",
+    "e = d.select('k', 'count')",
+]
+
+
+def _write(tmp_path, name, text):
+    path = tmp_path / name
+    path.write_text(text)
+    return str(tmp_path)
+
+
+def test_same_five_code_lines_in_two_functions_are_reported(tmp_path):
+    body = "".join(f"    {line}\n" for line in BODY)
+    root = _write(
+        tmp_path,
+        "m.py",
+        f"def f(x):\n{body}    return e\n\n\ndef g(x):\n{body}    return e + 1\n",
+    )
+    per_group, n_dup, total = scan([root])
+    assert per_group == {frozenset({"m.py:f", "m.py:g"}): 10}
+    assert (n_dup, total) == (10, 14)
+
+
+def test_same_lines_in_docstring_or_sql_string_are_not_reported(tmp_path):
+    body = "".join(f"    {line}\n" for line in BODY)
+    text = "".join(f"        {line}\n" for line in BODY)
+    root = _write(
+        tmp_path,
+        "m.py",
+        f"def f(x):\n{body}    return e\n\n\n"
+        f'def g(x):\n    """Doc.\n\n{text}    """\n    return x\n\n\n'
+        f'ORACLES = {{\n    "q": """\n{text}    """,\n}}\n',
+    )
+    per_group, n_dup, total = scan([root])
+    assert per_group == {}
+    assert n_dup == 0
+    # f's seven code lines, g's def and return, and what is left of the
+    # ORACLES dict around its string — none of the prose or SQL
+    assert total == 13

@@ -10,6 +10,7 @@ from gasket_rs_spark.operators.analytics import (
     q_session_path_transitions,
     q_session_trigrams,
 )
+from gasket_rs_spark.tables import events_with_sec
 
 
 def test_windowed_funnel_monotone_and_bounded_by_unbounded(spark, sf_dir):
@@ -60,12 +61,11 @@ def test_ewma_weekly_matches_python_reference(spark, sf_dir):
 
     from gasket_rs_spark.operators.analytics import (
         _EWMA_L,
-        _events_sec,
         _ewma_weights,
         q_ewma_weekly,
     )
 
-    ev = _events_sec(spark, sf_dir).collect()
+    ev = events_with_sec(spark, sf_dir).collect()
     counts = defaultdict(int)
     weeks, types = set(), set()
     for r in ev:
@@ -93,14 +93,13 @@ def test_conformal_quantile_matches_python_and_guarantees_coverage(spark, sf_dir
     from collections import defaultdict
 
     from gasket_rs_spark.operators.analytics import (
-        _events_sec,
         q_conformal_quantile,
     )
 
     vals = defaultdict(list)
     import math
 
-    for r in _events_sec(spark, sf_dir).select("event_type", "value").collect():
+    for r in events_with_sec(spark, sf_dir).select("event_type", "value").collect():
         vals[r.event_type].append(int(math.floor(r.value * 100 + 0.5)))
     rows = {r.event_type: r for r in q_conformal_quantile(spark, sf_dir).collect()}
     assert set(rows) == set(vals)
@@ -115,3 +114,35 @@ def test_conformal_quantile_matches_python_and_guarantees_coverage(spark, sf_dir
         assert got.cov6 == n_le * 1_000_000 // n
         # split-conformal finite-sample guarantee: coverage >= k/n >= 0.9
         assert got.cov6 >= 900_000
+
+
+def test_daily_counts_zero_fill_per_type_and_overall(spark):
+    """The daily-grid builder behind the nine zero-filled series
+    witnesses: a day without events and a type absent on one day must
+    read count 0, not be missing — the fixture pins recompute those
+    witnesses on data with no such gaps."""
+    from pyspark.sql import functions as F
+
+    from gasket_rs_spark.operators.analytics import _daily_counts
+
+    d0 = 19_000 * 86_400  # day 19000; day 19001 has no events at all
+    ev = spark.createDataFrame(
+        [
+            ("click", d0 + 5),
+            ("click", d0 + 60),
+            ("view", d0 + 70),
+            ("click", d0 + 2 * 86_400 + 1),  # no view on day 19002
+        ],
+        "event_type string, ts_sec bigint",
+    )
+    per_type = {
+        (r.event_type, r.day): r.c for r in _daily_counts(ev, by_type=True).collect()
+    }
+    assert per_type == {
+        ("click", 19000): 2, ("click", 19001): 0, ("click", 19002): 1,
+        ("view", 19000): 1, ("view", 19001): 0, ("view", 19002): 0,
+    }
+    overall = {r.day: r.c for r in _daily_counts(ev).collect()}
+    assert overall == {19000: 3, 19001: 0, 19002: 1}
+    views = _daily_counts(ev, nv=F.sum((F.col("event_type") == "view").cast("bigint")))
+    assert {r.day: r.nv for r in views.collect()} == {19000: 1, 19001: 0, 19002: 0}

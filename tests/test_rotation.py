@@ -431,3 +431,45 @@ def test_oracle_upgraded_subkey_fronts_rank_2():
     pending_upgrades = [n for n in order if meta[n][0] == 2 and meta[n][2]]
     for n in pending_upgrades[:50]:
         assert n in window, (n, meta[n])
+
+
+def test_code_fingerprint_counts_code_not_comments_or_docstrings():
+    """A comment- or docstring-only edit must neither demote a witness
+    to rank 2 nor retime its bench extra; a code edit, an oracle-SQL
+    edit included, must do both."""
+    sys.path.insert(0, os.path.join(REPO, "scripts"))
+    from gen_registry_order import code_fingerprint
+
+    base = '''"""Module doc."""
+ORACLES = {"q": "SELECT 1 AS x"}
+
+
+class K:
+    """Class doc."""
+
+    def m(self):
+        """Method doc."""
+        return 1
+
+
+def q_x(spark, sf_dir):
+    """Witness doc."""
+    return spark.range(1)  # trailing comment
+'''
+    fp = code_fingerprint(base)
+    same = [
+        base.replace("# trailing comment", "# another comment"),
+        base.replace('"""Module doc."""', '"""Reworded module doc."""'),
+        base.replace('"""Class doc."""', '"""Reworded class doc."""'),
+        base.replace('"""Witness doc."""', '"""Reworded\n    witness doc."""'),
+        base.replace('        """Method doc."""\n', ""),
+    ]
+    for src in same:
+        assert code_fingerprint(src) == fp, src
+    differ = [
+        base.replace("spark.range(1)", "spark.range(2)"),
+        base.replace("SELECT 1 AS x", "SELECT 2 AS x"),
+        base.replace("return 1", "return 2"),
+    ]
+    for src in differ:
+        assert code_fingerprint(src) != fp, src

@@ -10,6 +10,8 @@ from collections import defaultdict
 import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.tables import events_with_sec
+
 
 def test_markov_matches_pure_python_and_conserves_mass(spark, sf_dir):
     from gasket_rs_spark.operators.analytics import (
@@ -54,7 +56,6 @@ def test_attribution_credit_conservation(spark, sf_dir):
     """Each converted purchase awards exactly one last-touch and one
     first-touch; linear credit per purchase is <= 1e6 (floor leak)."""
     from gasket_rs_spark.operators.analytics import (
-        _events_sec,
         q_attribution_multi_touch,
     )
 
@@ -63,7 +64,7 @@ def test_attribution_credit_conservation(spark, sf_dir):
     n_first = sum(r["n_first_touch"] for r in rows)
     assert n_last == n_first  # both count converted purchases once
     # recompute converted-purchase count independently
-    ev = _events_sec(spark, sf_dir)
+    ev = events_with_sec(spark, sf_dir)
     t = ev.where(F.col("event_type").isin("click", "view", "signup")).select(
         F.col("user_id").alias("tu"), F.col("ts_sec").alias("t_sec")
     )

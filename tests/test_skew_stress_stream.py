@@ -218,7 +218,7 @@ def test_full_outer_sim_matches_real_stream_under_skew(spark, zipf_sf_dir):
     all three sim twins driven by the adversarial distribution."""
     from gasket_rs_spark.streaming.stream import (
         events_file_stream,
-        interval_join_streams_full_outer,
+        interval_join_streams,
         run_to_memory_sink,
     )
     from gasket_rs_spark.streaming.windows import (
@@ -233,7 +233,7 @@ def test_full_outer_sim_matches_real_stream_under_skew(spark, zipf_sf_dir):
     purchases = events_file_stream(spark, zipf_sf_dir).where(
         F.col("event_type") == "purchase"
     )
-    joined = interval_join_streams_full_outer(clicks, purchases)
+    joined = interval_join_streams(clicks, purchases, how="fullOuter")
     run_to_memory_sink(joined, "zipf_ssj_full", output_mode="append",
                        timeout_sec=180)
     key = lambda t: tuple(-1 if v is None else v for v in t)  # noqa: E731

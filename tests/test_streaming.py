@@ -650,7 +650,7 @@ def test_stream_stream_left_outer_join_semantics(spark, sf_dir):
     (c) never duplicated with a matched row for the same purchase."""
     from gasket_rs_spark.streaming.stream import (
         events_file_stream,
-        interval_join_streams_left_outer,
+        interval_join_streams,
         run_to_memory_sink,
     )
     from gasket_rs_spark.tables import load
@@ -659,7 +659,7 @@ def test_stream_stream_left_outer_join_semantics(spark, sf_dir):
     purchases = events_file_stream(spark, sf_dir).where(
         F.col("event_type") == "purchase"
     )
-    joined = interval_join_streams_left_outer(clicks, purchases)
+    joined = interval_join_streams(clicks, purchases, how="leftOuter")
     run_to_memory_sink(joined, "ss_loj", output_mode="append", timeout_sec=180)
     rows = spark.table("ss_loj").collect()
     got_pairs = {
@@ -701,7 +701,7 @@ def test_left_outer_join_sim_matches_streaming(spark, sf_dir):
     withheld past-watermark tail."""
     from gasket_rs_spark.streaming.stream import (
         events_file_stream,
-        interval_join_streams_left_outer,
+        interval_join_streams,
         run_to_memory_sink,
     )
     from gasket_rs_spark.streaming.windows import q_stream_left_outer_join_sim
@@ -710,7 +710,7 @@ def test_left_outer_join_sim_matches_streaming(spark, sf_dir):
     purchases = events_file_stream(spark, sf_dir).where(
         F.col("event_type") == "purchase"
     )
-    joined = interval_join_streams_left_outer(clicks, purchases)
+    joined = interval_join_streams(clicks, purchases, how="leftOuter")
     run_to_memory_sink(joined, "ss_loj_sim_pin", output_mode="append", timeout_sec=180)
     streamed = sorted(
         (r["purchase_id"], r["click_id"], r["p_user"])
@@ -743,7 +743,7 @@ def test_right_outer_join_sim_matches_streaming(spark, sf_dir):
     tail; purchases never null-extend in this variant."""
     from gasket_rs_spark.streaming.stream import (
         events_file_stream,
-        interval_join_streams_right_outer,
+        interval_join_streams,
         run_to_memory_sink,
     )
     from gasket_rs_spark.streaming.windows import q_stream_right_outer_join_sim
@@ -752,7 +752,7 @@ def test_right_outer_join_sim_matches_streaming(spark, sf_dir):
     purchases = events_file_stream(spark, sf_dir).where(
         F.col("event_type") == "purchase"
     )
-    joined = interval_join_streams_right_outer(clicks, purchases)
+    joined = interval_join_streams(clicks, purchases, how="rightOuter")
     run_to_memory_sink(joined, "ss_roj_sim_pin", output_mode="append", timeout_sec=180)
     key = lambda t: tuple(-1 if v is None else v for v in t)  # noqa: E731
     streamed = sorted(
@@ -806,7 +806,7 @@ def test_full_outer_join_sim_matches_streaming(spark, sf_dir):
     BOTH sides."""
     from gasket_rs_spark.streaming.stream import (
         events_file_stream,
-        interval_join_streams_full_outer,
+        interval_join_streams,
         run_to_memory_sink,
     )
     from gasket_rs_spark.streaming.windows import q_stream_full_outer_join_sim
@@ -815,7 +815,7 @@ def test_full_outer_join_sim_matches_streaming(spark, sf_dir):
     purchases = events_file_stream(spark, sf_dir).where(
         F.col("event_type") == "purchase"
     )
-    joined = interval_join_streams_full_outer(clicks, purchases)
+    joined = interval_join_streams(clicks, purchases, how="fullOuter")
     run_to_memory_sink(joined, "ss_foj_sim_pin", output_mode="append", timeout_sec=180)
     key = lambda t: tuple(-1 if v is None else v for v in t)  # noqa: E731
     streamed = sorted(
