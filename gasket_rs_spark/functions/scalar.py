@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.grid import snap
 from gasket_rs_spark.tables import load
 
 
@@ -101,7 +102,9 @@ def q_decimal_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("sum_dec").cast("double").alias("sum_price"),
             # avg via double on the exact sum: decimal DIVISION scale
             # rules are engine-specific, so divide after the exact part
-            (F.floor(F.col("sum_dec").cast("double") / F.col("n") * 1000000 + 0.5) / 1000000).alias("avg_price"),
+            snap(
+                F.col("sum_dec").cast("double") / F.col("n"), 1000000
+            ).alias("avg_price"),
             "n",
         )
     )
@@ -256,7 +259,7 @@ def q_xml_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             F.max("p.k").alias("max_key"),
             # 2dp-grid sum -> snap at the grid (q1 convention)
-            (F.floor(F.sum("p.total") * 100 + F.lit(0.5)) / 100).alias("sum_total"),
+            snap(F.sum("p.total"), 100).alias("sum_total"),
         )
     )
 
@@ -271,11 +274,10 @@ def q_try_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle reproduces the NULL semantics with CASE/TRY_CAST/list
     indexing — pure per-row projection, scan-bound, no shuffle."""
     li = load(spark, sf_dir, "lineitem").where((F.col("l_orderkey") % 7) == 0)
-    snap = lambda c: F.floor(c * 1000000 + F.lit(0.5)) / 1000000  # noqa: E731
     return li.select(
         "l_orderkey",
         "l_linenumber",
-        snap(F.expr("try_divide(l_extendedprice, l_quantity - 24)")).alias(
+        snap(F.expr("try_divide(l_extendedprice, l_quantity - 24)"), 1000000).alias(
             "safe_ratio"
         ),
         F.expr(
@@ -360,7 +362,7 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "user_id",
         "ts_sec",
-        (F.floor(F.sum("value").over(w) * 10000 + 0.5) / 10000).alias("sum_10min"),
+        snap(F.sum("value").over(w), 10000).alias("sum_10min"),
         F.count("*").over(w).alias("n_10min"),
     )
 

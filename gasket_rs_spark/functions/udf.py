@@ -25,6 +25,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
 
@@ -200,7 +201,7 @@ def q_arrow_python_udf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("o_orderstatus")
         .agg(
             F.count("*").alias("n_orders"),
-            (F.floor(F.sum("fee") * 10000 + F.lit(0.5)) / 10000).alias("total_fees"),
+            snap(F.sum("fee"), 10000).alias("total_fees"),
         )
     )
 
@@ -237,7 +238,7 @@ def q_map_in_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
     banded = orders.mapInArrow(batches, "o_orderkey bigint, band string, cents double")
     return banded.groupBy("band").agg(
         F.count("*").alias("n_orders"),
-        (F.floor(F.sum("cents") + F.lit(0.5))).cast("bigint").alias("sum_cents"),
+        units(F.sum("cents"), 1).alias("sum_cents"),
     )
 
 

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import events_with_sec, load
 
 
@@ -211,10 +212,7 @@ def q_rolling_zscore_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("sd").isNotNull() & (F.col("sd") > 0))
         .withColumn(
             "z",
-            F.floor(
-                F.abs((F.col("value") - F.col("mu")) / F.col("sd")) * 1e6 + F.lit(0.5)
-            )
-            / 1e6,
+            snap(F.abs((F.col("value") - F.col("mu")) / F.col("sd"))),
         )
     )
     return scored.groupBy("event_type").agg(
@@ -340,10 +338,7 @@ def q_distribution_drift_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     paired = shares.join(nxt, ["week", "event_type"])
     return paired.groupBy("week").agg(
-        (
-            F.floor(F.sum(F.abs(F.col("p_next") - F.col("p"))) * 1e6 + F.lit(0.5))
-            / 1e6
-        ).alias("l1_drift"),
+        snap(F.sum(F.abs(F.col("p_next") - F.col("p")))).alias("l1_drift"),
         F.count("*").alias("n_types"),
     )
 
@@ -472,16 +467,12 @@ def q_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "c",
             "n",
-            F.floor(
+            units(
                 F.log2(
                     (F.col("c").cast("double") * F.col("n"))
                     / (F.col("rc").cast("double") * F.col("sc"))
                 )
-                * 1e6
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("pmi6"),
+            ).alias("pmi6"),
         )
     )
     return terms.agg(
@@ -543,7 +534,7 @@ def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "event_id",
         F.floor(F.col("ts_sec") / F.lit(604800)).cast("bigint").alias("week"),
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+        units(F.col("value"), 100).alias("cents"),
     )
     w_med = Window.partitionBy("event_type", "week").orderBy("cents", "event_id")
     weekly = (
@@ -830,7 +821,7 @@ def q_conformal_quantile(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = events_with_sec(spark, sf_dir).select(
         "event_type",
         "event_id",
-        F.floor(F.col("value") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+        units(F.col("value"), 100).alias("cents"),
     )
     stats = ev.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n"),
@@ -1149,7 +1140,7 @@ def q_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     parts = load(spark, sf_dir, "part").select(
         "p_partkey",
         "p_size",
-        F.floor(F.col("p_retailprice") * 100 + F.lit(0.5)).cast("bigint").alias("cents"),
+        units(F.col("p_retailprice"), 100).alias("cents"),
     )
     per_size = parts.groupBy(F.col("p_size").alias("ms")).agg(
         F.min("cents").alias("min_eq")
@@ -1483,28 +1474,18 @@ def _binned_shares(spark: SparkSession, sf_dir: str, flag: Column) -> DataFrame:
             "b",
             "n1",
             "n0",
-            F.floor(
-                (
-                    (F.col("n1") + 1).cast("double")
-                    / (F.col("t1") + _PSI_B).cast("double")
-                    - (F.col("n0") + 1).cast("double")
-                    / (F.col("t0") + _PSI_B).cast("double")
-                )
-                * 1e6
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("diff6"),
-            F.floor(
+            units(
+                (F.col("n1") + 1).cast("double")
+                / (F.col("t1") + _PSI_B).cast("double")
+                - (F.col("n0") + 1).cast("double")
+                / (F.col("t0") + _PSI_B).cast("double")
+            ).alias("diff6"),
+            units(
                 F.log(
                     ((F.col("n1") + 1) * (F.col("t0") + _PSI_B)).cast("double")
                     / ((F.col("n0") + 1) * (F.col("t1") + _PSI_B)).cast("double")
                 )
-                * 1e6
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("ln6"),
+            ).alias("ln6"),
         )
         .withColumn("contrib12", (F.col("diff6") * F.col("ln6")).cast("bigint"))
     )
@@ -1717,7 +1698,7 @@ def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("tie_num")
         )
     )
-    z6_expr = F.floor(
+    z6_expr = units(
         (
             F.col("s").cast("double")
             - F.signum(F.col("s").cast("double"))
@@ -1730,9 +1711,7 @@ def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).cast("double")
             / F.lit(18.0)
         )
-        * 1e6
-        + F.lit(0.5)
-    ).cast("bigint")
+    )
     return (
         s_stat.crossJoin(F.broadcast(n_f))
         .crossJoin(F.broadcast(ties))
@@ -1979,16 +1958,12 @@ def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
         "dow",
         "n_d",
         "s_d",
-        F.floor(
+        units(
             (F.col("n_d") * F.col("ss_d") - F.col("s_d") * F.col("s_d")).cast(
                 "double"
             )
             / F.col("n_d").cast("double")
-            * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("ssr12_d"),
+        ).alias("ssr12_d"),
     )
     tot = grid.agg(
         F.count("*").cast("bigint").alias("n"),
@@ -1997,14 +1972,10 @@ def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(
         "n",
         "s",
-        F.floor(
+        units(
             (F.col("n") * F.col("ss") - F.col("s") * F.col("s")).cast("double")
             / F.col("n").cast("double")
-            * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("sst12"),
+        ).alias("sst12"),
     )
     # Third guard audit (r14): sst12 = 0 on a CONSTANT series (every
     # day's count equal — e.g. exactly one event per day) is legal, and
@@ -2020,15 +1991,11 @@ def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.when(F.col("sst12") == 0, F.lit(0).cast("bigint"))
             .otherwise(
                 F.greatest(
-                    F.floor(
-                        (
-                            F.lit(1.0)
-                            - F.col("ssr12").cast("double")
-                            / F.col("sst12").cast("double")
-                        )
-                        * 1e6
-                        + F.lit(0.5)
-                    ).cast("bigint"),
+                    units(
+                        F.lit(1.0)
+                        - F.col("ssr12").cast("double")
+                        / F.col("sst12").cast("double")
+                    ),
                     F.lit(0).cast("bigint"),
                 )
             )
@@ -2286,25 +2253,19 @@ def q_ucb1_bandit(spark: SparkSession, sf_dir: str) -> DataFrame:
     tot = arms.agg(F.sum("n").cast("bigint").alias("big_n"))
     per = arms.crossJoin(F.broadcast(tot)).withColumn(
         "ln6n",
-        F.floor(F.log(F.col("big_n").cast("double")) * 1e6 + F.lit(0.5)).cast(
-            "bigint"
-        ),
+        units(F.log(F.col("big_n").cast("double"))),
     )
     return per.select(
         "source",
         "n",
         "successes",
         F.expr("successes * 1000000 div n").cast("bigint").alias("mean6"),
-        F.floor(
+        units(
             F.sqrt(
                 (2 * F.col("ln6n")).cast("double")
                 / (F.col("n") * 1_000_000).cast("double")
             )
-            * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("bonus6"),
+        ).alias("bonus6"),
     ).withColumn(
         "ucb6", (F.col("mean6") + F.col("bonus6")).cast("bigint")
     ).orderBy("source")
@@ -2448,14 +2409,12 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_at_risk",
             F.when(
                 F.col("d") < F.col("n_at_risk"),
-                F.floor(
+                units(
                     F.log(
                         (F.col("n_at_risk") - F.col("d")).cast("double")
                         / F.col("n_at_risk").cast("double")
                     )
-                    * 1e6
-                    + F.lit(0.5)
-                ).cast("bigint"),
+                ),
             ).alias("ln6"),
             (F.col("d") == F.col("n_at_risk")).cast("bigint").alias("zero"),
         )
@@ -2479,9 +2438,7 @@ def q_kaplan_meier(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("d").alias("n_events"),
         F.when(F.col("hit_zero") == 1, F.lit(0).cast("bigint"))
         .otherwise(
-            F.floor(
-                F.exp(F.col("cum_ln6").cast("double") / 1e6) * 1e6 + F.lit(0.5)
-            ).cast("bigint")
+            units(F.exp(F.col("cum_ln6").cast("double") / 1e6))
         )
         .alias("surv6"),
     ).orderBy("bucket")

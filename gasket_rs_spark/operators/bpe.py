@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
 _BPE_MERGES = 24  # bounded merge count for the witness
@@ -242,10 +243,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "n_words",
         "n_bpe_tokens",
-        (
-            F.floor(F.col("n_chars") / F.col("n_bpe_tokens") * 1e6 + F.lit(0.5))
-            / 1e6
-        ).alias("chars_per_token"),
+        snap(F.col("n_chars") / F.col("n_bpe_tokens")).alias("chars_per_token"),
     )
 
 
@@ -394,7 +392,6 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "lang", F.explode(F.split("text", " ")).alias("w")
     ).where(F.length("w") > 0)
     vocab = encode_words(toks.select("w").distinct(), merges)
-    snap6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
         toks.join(F.broadcast(vocab.select("w", "n_subtok")), "w")
         .groupBy("lang")
@@ -407,8 +404,8 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "n_words",
             "n_bpe_tokens",
-            snap6(F.col("n_bpe_tokens") / F.col("n_words")).alias("fertility"),
-            snap6(F.col("n_chars") / F.col("n_bpe_tokens")).alias(
+            snap(F.col("n_bpe_tokens") / F.col("n_words")).alias("fertility"),
+            snap(F.col("n_chars") / F.col("n_bpe_tokens")).alias(
                 "chars_per_token"
             ),
         )
@@ -704,11 +701,7 @@ def q_unigram_lm_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
         vocab_counts.crossJoin(F.broadcast(total))
         .select(
             "piece",
-            F.floor(
-                F.log2(F.col("cnt").cast("double") / F.col("t")) * 1e6 + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("logp6"),
+            units(F.log2(F.col("cnt").cast("double") / F.col("t"))).alias("logp6"),
         )
         .localCheckpoint(eager=True)  # consumed by every DP round
     )

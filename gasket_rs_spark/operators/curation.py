@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.operators.dedup import (
     _JACCARD_THRESHOLD,
     _components,
@@ -62,7 +63,7 @@ def _canonical_stats(survivors: DataFrame, pairs: DataFrame) -> DataFrame:
         .agg(
             F.count("*").alias("n_docs"),
             F.sum("n_chars").cast("bigint").alias("total_chars"),
-            (F.floor(F.avg(F.length("text")) * 10000 + 0.5) / 10000).alias("avg_len"),
+            snap(F.avg(F.length("text")), 10000).alias("avg_len"),
         )
         .select("lang", "n_docs", "total_chars", "avg_len")
     )
@@ -408,22 +409,16 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     lam = ft.crossJoin(F.broadcast(tot)).select(
         "f",
-        F.floor(
-            (
-                F.log(
-                    (F.col("ct") + 1).cast("double")
-                    / (F.col("tt") + _DSIR_B).cast("double")
-                )
-                - F.log(
-                    (F.col("cr") + 1).cast("double")
-                    / (F.col("tr") + _DSIR_B).cast("double")
-                )
+        units(
+            F.log(
+                (F.col("ct") + 1).cast("double")
+                / (F.col("tt") + _DSIR_B).cast("double")
             )
-            * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("lam6"),
+            - F.log(
+                (F.col("cr") + 1).cast("double")
+                / (F.col("tr") + _DSIR_B).cast("double")
+            )
+        ).alias("lam6"),
     )
     dw = (
         dc.join(F.broadcast(lam), "f")
@@ -444,7 +439,7 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .cast("double")
         + F.lit(1.0)
     ) / F.lit(_DSIR_U_DEN)
-    g = F.floor((-F.log(-F.log(u))) * 1e6 + F.lit(0.5)) / 1e6
+    g = snap(-F.log(-F.log(u)))
     keyed = dw.select(
         "doc_id",
         (F.col("logw6") / 1e6).alias("log_weight"),

@@ -184,7 +184,7 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Size-ratio prune (sound for J >= 0.5): the intersection can't exceed
     # the smaller set, and J >= t forces |smaller| >= t * |larger| — so
     # pairs with a >2x shingle-count ratio can never reach the threshold.
-    pairs = (
+    return _jaccard_verified(
         _shingle_pairs(docs)
         .where(
             (F.col("doc_a") < F.col("doc_b"))
@@ -193,15 +193,23 @@ def q_dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_a", "doc_b", "n_a", "n_b")
         .agg(F.count("*").alias("n_common"))
-        .withColumn(
+    )
+
+
+def _jaccard_verified(pairs: DataFrame) -> DataFrame:
+    """(doc_a, doc_b, n_common, jaccard) of the pairs whose Jaccard
+    n_common / (n_a + n_b - n_common), rounded to 6 dp, reaches the
+    module threshold."""
+    return (
+        pairs.withColumn(
             "jaccard",
             F.round(
                 F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
             ),
         )
         .where(F.col("jaccard") >= _JACCARD_THRESHOLD)
+        .select("doc_a", "doc_b", "n_common", "jaccard")
     )
-    return pairs.select("doc_a", "doc_b", "n_common", "jaccard")
 
 
 _CONTAIN_NUM, _CONTAIN_DEN = 4, 5  # containment threshold 4/5 — compared in ints
@@ -563,19 +571,11 @@ def _minhash_pairs(base: DataFrame) -> DataFrame:
     docs_b = base.select(
         F.col("doc_id").alias("doc_b"), F.col("hs").alias("hs_b"), F.col("n_sh").alias("n_b")
     )
-    common = (
+    return _jaccard_verified(
         candidates.join(docs_a, "doc_a")
         .join(docs_b, "doc_b")
         .withColumn("n_common", F.size(F.array_intersect("hs_a", "hs_b")).cast("bigint"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("n_common") / (F.col("n_a") + F.col("n_b") - F.col("n_common")), 6
-            ),
-        )
-        .where(F.col("jaccard") >= _JACCARD_THRESHOLD)
     )
-    return common.select("doc_a", "doc_b", "n_common", "jaccard")
 
 
 def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -26,6 +26,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
 _PR_D = 0.85
@@ -274,10 +275,7 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_triangles",
             F.when(
                 F.col("n_wedges") > 0,
-                F.floor(
-                    3.0 * F.col("n_triangles") / F.col("n_wedges") * 1e6 + F.lit(0.5)
-                )
-                / 1e6,
+                snap(3.0 * F.col("n_triangles") / F.col("n_wedges")),
             )
             .otherwise(F.lit(0.0))
             .alias("clustering_coeff"),
@@ -638,12 +636,9 @@ def q_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("ca").alias("cust_a"),
             F.col("cb").alias("cust_b"),
             "cn",
-            F.floor(
-                F.col("cn") * 1000000.0 / (F.col("da") + F.col("db") - F.col("cn"))
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("jaccard6"),
+            units(
+                F.col("cn") * 1000000.0 / (F.col("da") + F.col("db") - F.col("cn")), 1
+            ).alias("jaccard6"),
         )
     )
     return scored.orderBy(

@@ -48,6 +48,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
+from gasket_rs_spark.grid import units
 from gasket_rs_spark.tables import load
 
 _MODALITIES = ("image", "audio", "video")
@@ -816,9 +817,7 @@ def q_video_shot_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = q_multimodal_video_temporal_diff(spark, sf_dir).select(
         "doc_id",
         "pair",
-        F.floor(F.col("mean_abs_diff") * 1e6 + F.lit(0.5))
-        .cast("bigint")
-        .alias("d6"),
+        units(F.col("mean_abs_diff")).alias("d6"),
     )
     stats = d.groupBy("doc_id").agg(
         F.count("*").cast("bigint").alias("n_pairs"),

@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
 _DIGIT = "[0-9]"
@@ -133,10 +134,9 @@ def q_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         * F.signum(centered)
         * F.log(F.lit(1.0) - F.lit(2.0) * F.abs(centered))
     )
-    snap6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return counts.select(
         "event_type",
-        snap6(F.col("n") + noise).alias("noisy_count"),
+        snap(F.col("n") + noise).alias("noisy_count"),
         F.lit(_DP_EPS).alias("epsilon"),
     )
 
@@ -153,7 +153,6 @@ def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     classes = docs.groupBy("lang", "source").agg(
         F.count("*").cast("bigint").alias("n")
     )
-    snap6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return classes.agg(
         F.lit(_K_ANON).cast("bigint").alias("k"),
         F.count("*").cast("bigint").alias("n_classes"),
@@ -163,7 +162,7 @@ def q_k_anonymity_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum(F.when(F.col("n") < _K_ANON, F.col("n")).otherwise(0))
         .cast("bigint")
         .alias("n_docs_at_risk"),
-        snap6(
+        snap(
             F.sum(F.when(F.col("n") < _K_ANON, F.col("n")).otherwise(0)).cast(
                 "double"
             )
@@ -286,16 +285,12 @@ def q_t_closeness_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "source",
             "n_g",
-            F.floor(
+            units(
                 F.col("gap_num").cast("double")
                 / (F.col("n_g") * F.col("n_total") * F.lit(_T_SENS_M - 1)).cast(
                     "double"
                 )
-                * 1e6
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("emd6"),
+            ).alias("emd6"),
         )
     )
     return per.agg(

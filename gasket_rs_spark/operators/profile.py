@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.grid import units
 from gasket_rs_spark.tables import load
 
 
@@ -202,9 +203,7 @@ def q_benford_digit_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     combine; the grand total joins back as a broadcast 1-row frame."""
     exp6 = _benford_exp6()
     li = load(spark, sf_dir, "lineitem").select(
-        F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents")
+        units(F.col("l_extendedprice"), 100).alias("cents")
     )
     g = (
         li.select(

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
 
@@ -544,7 +545,7 @@ def q_tpch_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def snapped_avg(col: str) -> F.Column:
         # floor(round(sum,2)/n * 1e6 + 0.5)/1e6 — identical spelling in SQL.
-        return F.floor(F.round(F.sum(col), 2) / cnt * 1e6 + F.lit(0.5)) / 1e6
+        return snap(F.round(F.sum(col), 2) / cnt)
 
     return (
         lineitem.where(F.col("l_shipdate") <= F.lit("1999-09-02").cast("timestamp"))
@@ -564,7 +565,7 @@ def q_tpch_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
             snapped_avg("l_discount").alias("avg_disc"),
             cnt.alias("count_order"),
         )
-        .withColumn("avg_qty", F.floor(F.col("avg_qty_raw") * 1e6 + F.lit(0.5)) / 1e6)
+        .withColumn("avg_qty", snap(F.col("avg_qty_raw")))
         .drop("avg_qty_raw")
     )
 
@@ -612,11 +613,10 @@ def q_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("n_nationkey").alias("sn_key"), F.col("n_name").alias("supp_nation")
     )
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
-    num = F.floor(
-        F.sum(F.when(F.col("supp_nation") == "NATION_7", vol).otherwise(0.0)) * 1e4
-        + F.lit(0.5)
-    ) / 1e4
-    den = F.floor(F.sum(vol) * 1e4 + F.lit(0.5)) / 1e4
+    num = snap(
+        F.sum(F.when(F.col("supp_nation") == "NATION_7", vol).otherwise(0.0)), 1e4
+    )
+    den = snap(F.sum(vol), 1e4)
     share = num / den
     return (
         lineitem.join(
@@ -640,7 +640,7 @@ def q_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast(n_supp), F.col("s_nationkey") == F.col("sn_key"))
         .withColumn("o_year", F.year("o_orderdate").cast("bigint"))
         .groupBy("o_year")
-        .agg((F.floor(share * 1e6 + F.lit(0.5)) / 1e6).alias("mkt_share"))
+        .agg(snap(share).alias("mkt_share"))
     )
 
 
@@ -746,10 +746,7 @@ def q_null_semantics(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.round(F.sum(F.coalesce("o_totalprice", F.lit(0.0))), 2).alias(
                 "sum_coalesced"
             ),
-            (
-                F.floor(F.round(F.sum("o_totalprice"), 2) / n_orders * 1e6 + F.lit(0.5))
-                / 1e6
-            ).alias("avg_matched"),
+            snap(F.round(F.sum("o_totalprice"), 2) / n_orders).alias("avg_matched"),
         )
     )
 
@@ -849,13 +846,7 @@ def q_tpch_q17_small_quantity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(qty_limit, F.col("l_partkey") == F.col("al_partkey"))
         .where(F.col("l_quantity") < F.col("qty_limit"))
         .agg(
-            (
-                F.floor(
-                    (F.floor(F.sum("l_extendedprice") * 1e2 + F.lit(0.5)) / 1e2)
-                    / 7.0 * 1e4
-                    + F.lit(0.5)
-                ) / 1e4
-            ).alias("avg_yearly")
+            snap(snap(F.sum("l_extendedprice"), 1e2) / 7.0, 1e4).alias("avg_yearly")
         )
     )
 
@@ -1045,7 +1036,7 @@ def q_tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(part, F.col("l_partkey") == F.col("p_partkey"))
         .select(
             "s_acctbal", "s_name", "n_name", "p_partkey", "p_name",
-            (F.floor(F.col("cost") * 1e6 + F.lit(0.5)) / 1e6).alias("supply_cost"),
+            snap(F.col("cost")).alias("supply_cost"),
         )
         .orderBy(F.col("s_acctbal").desc(), "n_name", "s_name", "p_partkey")
         .limit(100)
@@ -1070,9 +1061,7 @@ def q_tpch_q11_important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row global agg broadcast back as a cross join (scalar subquery),
     top-100 by TakeOrdered with a unique tiebreak.
     """
-    cents = F.floor(
-        F.col("l_extendedprice") * (1 - F.col("l_discount")) * 1e4 + F.lit(0.5)
-    ).cast("long")
+    cents = units(F.col("l_extendedprice") * (1 - F.col("l_discount")), 1e4)
     v = (
         load(spark, sf_dir, "lineitem")
         .join(broadcast(load(spark, sf_dir, "supplier")),
@@ -1346,8 +1335,8 @@ def q_window_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.rank().over(w).alias("rnk"),
             F.dense_rank().over(w).alias("drnk"),
             F.ntile(4).over(w).alias("quartile"),
-            (F.floor(F.percent_rank().over(w) * 1000000 + 0.5) / 1000000).alias("pct_rank"),
-            (F.floor(F.cume_dist().over(w) * 1000000 + 0.5) / 1000000).alias("cume"),
+            snap(F.percent_rank().over(w), 1000000).alias("pct_rank"),
+            snap(F.cume_dist().over(w), 1000000).alias("cume"),
         )
     )
 
@@ -1381,8 +1370,8 @@ def q_window_frames(spark: SparkSession, sf_dir: str) -> DataFrame:
             "event_id",
             "user_id",
             "value",
-            (F.floor(F.sum("value").over(running) * 10000 + 0.5) / 10000).alias("running_sum"),
-            (F.floor(F.avg("value").over(moving) * 10000 + 0.5) / 10000).alias("moving_avg4"),
+            snap(F.sum("value").over(running), 10000).alias("running_sum"),
+            snap(F.avg("value").over(moving), 10000).alias("moving_avg4"),
         )
     )
 

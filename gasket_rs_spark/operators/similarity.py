@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
 _DIM = 64
@@ -310,13 +311,6 @@ def similarity_ann_ivf(
 
 def q_similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity_ann_ivf(spark, sf_dir)
-
-
-def train_coarse_centroids(
-    spark: SparkSession, sf_dir: str, k: int = 8, iters: int = 10
-) -> list[list[float]]:
-    """See _train_coarse_centroids; kept as the public name."""
-    return _train_coarse_centroids(spark, sf_dir, k, iters)
 
 
 def _train_coarse_centroids(
@@ -594,15 +588,11 @@ def q_embedding_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
             # exact ints in, one identical double-op sequence out:
             # sum/n → un-quantize (÷ _PQ_QUANT²) → floor-snap at 9dp,
             # spelled verbatim in _pq_distortion_oracle
-            (
-                F.floor(
-                    F.sum("sq_err").cast("double")
-                    / F.sum("n")
-                    / F.lit(1.0e12)
-                    * F.lit(1.0e9)
-                    + F.lit(0.5)
-                )
-                / F.lit(1.0e9)
+            snap(
+                F.sum("sq_err").cast("double")
+                / F.sum("n")
+                / F.lit(1.0e12),
+                F.lit(1.0e9),
             ).alias("mse"),
         )
         .orderBy("subspace")
@@ -1201,24 +1191,19 @@ def q_bitext_margin_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
             "src_id",
             "tgt_id",
             "c6",
-            (
-                F.floor(
-                    (F.col("c6") * 2 * _BITEXT_K)
-                    # Zero-ONLY guard (ADVICE r13): dega6/degb6 are sums of
-                    # SIGNED top-K cosines, so the sum can be legitimately
-                    # negative — greatest(..., 1) would rewrite a negative
-                    # denominator to 1 and flip the margin's sign (a pair
-                    # the formula drops would be kept). Only the exact-zero
-                    # point (ANSI DIVIDE_BY_ZERO) is rewritten; negative
-                    # denominators keep their sign, yielding a negative
-                    # margin for positive c6 — correctly below TAU.
-                    / F.when(
-                        F.col("dega6") + F.col("degb6") == 0, F.lit(1)
-                    ).otherwise(F.col("dega6") + F.col("degb6"))
-                    * 1e6
-                    + F.lit(0.5)
-                )
-                / 1e6
+            snap(
+                (F.col("c6") * 2 * _BITEXT_K)
+                # Zero-ONLY guard (ADVICE r13): dega6/degb6 are sums of
+                # SIGNED top-K cosines, so the sum can be legitimately
+                # negative — greatest(..., 1) would rewrite a negative
+                # denominator to 1 and flip the margin's sign (a pair
+                # the formula drops would be kept). Only the exact-zero
+                # point (ANSI DIVIDE_BY_ZERO) is rewritten; negative
+                # denominators keep their sign, yielding a negative
+                # margin for positive c6 — correctly below TAU.
+                / F.when(
+                    F.col("dega6") + F.col("degb6") == 0, F.lit(1)
+                ).otherwise(F.col("dega6") + F.col("degb6"))
             ).alias("margin"),
         )
     )
@@ -1279,19 +1264,13 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     pairs = emb.join(broadcast(queries), F.col("vec_id") != F.col("query_id")).select(
         "query_id",
         "vec_id",
-        F.floor(
-            _dot(F.col("qvec"), F.col("vec")) / F.greatest(F.col("qnrm") * F.col("nrm"), F.lit(1e-12)) * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("c6"),
+        units(
+            _dot(F.col("qvec"), F.col("vec"))
+            / F.greatest(F.col("qnrm") * F.col("nrm"), F.lit(1e-12))
+        ).alias("c6"),
         # ||q-v||^2 = ||q||^2 + ||v||^2 - 2 q·v — element-ordered sums,
         # the exact formulation the DuckDB twin mirrors term by term
-        F.floor(
-            (qsq + sq - 2.0 * _dot(F.col("qvec"), F.col("vec"))) * 1e6 + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("d6"),
+        units(qsq + sq - 2.0 * _dot(F.col("qvec"), F.col("vec"))).alias("d6"),
     )
     from pyspark.sql import Window
 
@@ -1344,12 +1323,10 @@ def _query_scores(
     )
     dot = _dot(F.col("qvec"), F.col("vec"))
     snaps = [
-        F.floor(dot / F.greatest(F.col("qnrm") * F.col("nrm"), F.lit(1e-12)) * 1e6 + F.lit(0.5))
-        .cast("bigint")
-        .alias("c6")
+        units(dot / F.greatest(F.col("qnrm") * F.col("nrm"), F.lit(1e-12))).alias("c6")
     ]
     if raw_dot:
-        snaps.append(F.floor(dot * 1e3 + F.lit(0.5)).cast("bigint").alias("d3"))
+        snaps.append(units(dot, 1e3).alias("d3"))
     scored = emb.join(broadcast(queries), F.col("vec_id") != F.col("query_id")).select(
         "query_id", "qlabel", "vec_id", "label", *snaps
     )
@@ -2133,9 +2110,7 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         scol = F.array(*[F.lit(float(x)) for x in s["vec"]])
         sqs = F.aggregate(scol, F.lit(0.0), lambda acc, x: acc + x * x)
         dot = _dot(F.col("vec"), scol)
-        d6 = F.floor(
-            (F.col("sqx") + sqs - 2 * dot) * 1e6 + F.lit(0.5)
-        ).cast("bigint")
+        d6 = units(F.col("sqx") + sqs - 2 * dot)
         mind6 = d6 if step == 1 else F.least(F.col("mind6"), d6)
         # lazy checkpoint: materialized by this round's argmax collect,
         # carrying the running min so later rounds never re-derive it
@@ -2375,9 +2350,7 @@ def q_embedding_mmd_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.posexplode(
             F.transform(
                 F.col("embedding"),
-                lambda x: F.floor(x.cast("double") * 1e6 + F.lit(0.5)).cast(
-                    "bigint"
-                ),
+                lambda x: units(x.cast("double")),
             )
         ).alias("dim", "v6"),
     )
@@ -2408,7 +2381,7 @@ def q_embedding_mmd_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "dim",
             "gap_num",
-            F.floor(
+            units(
                 (
                     F.col("gap_num").cast("double")
                     / F.greatest((F.col("na") * F.col("nb")).cast("double"), F.lit(1.0))
@@ -2416,11 +2389,9 @@ def q_embedding_mmd_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * (
                     F.col("gap_num").cast("double")
                     / F.greatest((F.col("na") * F.col("nb")).cast("double"), F.lit(1.0))
-                )
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("gap_sq12"),
+                ),
+                1,
+            ).alias("gap_sq12"),
         )
     )
     total = per.agg(F.sum("gap_sq12").cast("bigint").alias("mmd12"))
@@ -2500,14 +2471,10 @@ def q_silhouette_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     s = a_side.join(b_side, ["ida", "la"]).select(
         "ida",
         "la",
-        F.floor(
+        units(
             (F.col("b_m") - F.col("a_m"))
             / F.greatest(F.col("a_m"), F.col("b_m"), F.lit(1e-12))
-            * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("s6"),
+        ).alias("s6"),
     )
     return (
         s.groupBy(F.col("la").alias("label"))
@@ -2628,7 +2595,7 @@ def q_rag_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "doc_id",
-            F.floor(
+            units(
                 F.log(
                     (F.col("n_docs") - F.col("df") + 0.5) / (F.col("df") + 0.5)
                     + 1.0
@@ -2640,11 +2607,7 @@ def q_rag_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
                     + _RAG_K1
                     * (1 - _RAG_B + _RAG_B * F.col("dl") / F.col("avg_dl"))
                 )
-                * 1e6
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("c6"),
+            ).alias("c6"),
         )
     )
     ws = Window.partitionBy("query_id").orderBy(F.col("s6").desc(), "doc_id")
@@ -2682,12 +2645,10 @@ def q_rag_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             F.col("vec_id").alias("doc_id"),
-            F.floor(
-                _dot(F.col("qv"), F.col("vec")) / F.greatest(F.col("qnrm") * F.col("nrm"), F.lit(1e-12)) * 1e6
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("c6"),
+            units(
+                _dot(F.col("qv"), F.col("vec"))
+                / F.greatest(F.col("qnrm") * F.col("nrm"), F.lit(1e-12))
+            ).alias("c6"),
         )
         .withColumn("ra", F.row_number().over(wd))
         .where(F.col("ra") <= _RAG_POOL)

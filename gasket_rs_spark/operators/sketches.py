@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.grid import snap
 from gasket_rs_spark.tables import load
 
 
@@ -453,11 +454,10 @@ def q_join_size_estimate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(b.select("tok", F.col("cnt").alias("nb")), "tok")
         .agg(F.sum(F.col("na") * F.col("nb")).cast("bigint").alias("exact_size"))
     )
-    snap6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return exact.crossJoin(F.broadcast(est)).select(
         "exact_size",
         "cm_estimate",
-        snap6(
+        snap(
             F.col("cm_estimate").cast("double")
             / F.col("exact_size").cast("double")
         ).alias("overestimate_ratio"),
@@ -632,16 +632,15 @@ def q_quantile_normalize_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
             (F.col("cum_below") + F.lit(0.5) * F.col("cnt_eq")) / F.col("n_total")
         ).alias("cal"),
     )
-    snap6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
         ev.select("event_type", _qbucket(F.col("value")).alias("qb"))
         .join(F.broadcast(cal), "qb")
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n"),
-            snap6(F.avg("cal")).alias("mean_cal"),
-            snap6(F.min("cal")).alias("min_cal"),
-            snap6(F.max("cal")).alias("max_cal"),
+            snap(F.avg("cal")).alias("mean_cal"),
+            snap(F.min("cal")).alias("min_cal"),
+            snap(F.max("cal")).alias("max_cal"),
         )
     )
 
@@ -669,9 +668,7 @@ def q_heavy_hitters_mg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return exact.select(
         "item",
         "freq",
-        (
-            F.floor(F.col("freq") / F.col("n_total") * 1e6 + F.lit(0.5)) / 1e6
-        ).alias("share"),
+        snap(F.col("freq") / F.col("n_total")).alias("share"),
     )
 
 

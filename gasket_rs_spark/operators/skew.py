@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.grid import snap
 from gasket_rs_spark.tables import load
 
 SALT_BUCKETS = 16
@@ -37,11 +38,11 @@ def salted_agg(df: DataFrame, key: str, value: str, buckets: int = SALT_BUCKETS)
         F.max(value).alias("_max"),
     )
     return partial.groupBy(key).agg(
-        (F.floor(F.sum("_sum") * 10000 + 0.5) / 10000).alias("sum_value"),
+        snap(F.sum("_sum"), 10000).alias("sum_value"),
         F.sum("_cnt").alias("n_events"),
         F.round(F.min("_min"), 6).alias("min_value"),
         F.round(F.max("_max"), 6).alias("max_value"),
-        (F.floor(F.sum("_sum") / F.sum("_cnt") * 1000000 + 0.5) / 1000000).alias("avg_value"),
+        snap(F.sum("_sum") / F.sum("_cnt"), 1000000).alias("avg_value"),
     )
 
 
@@ -161,7 +162,7 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     return joined.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         F.max("weight").alias("weight"),
-        (F.floor(F.sum(F.col("value") * F.col("weight")) * 10000 + 0.5) / 10000).alias(
+        snap(F.sum(F.col("value") * F.col("weight")), 10000).alias(
             "weighted_value"
         ),
     )

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
 
@@ -222,21 +223,18 @@ def q_mixture_temperature(spark: SparkSession, sf_dir: str) -> DataFrame:
     norm = powed.agg(
         F.sum("w").alias("w_sum"), F.sum("n_docs").alias("n_total")
     )
-    snap6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
         powed.crossJoin(F.broadcast(norm))
         .select(
             "source",
             "n_docs",
-            snap6(F.col("n_docs") / F.col("n_total")).alias("raw_share"),
-            snap6(F.col("w") / F.col("w_sum")).alias("temp_share"),
-            snap6(
+            snap(F.col("n_docs") / F.col("n_total")).alias("raw_share"),
+            snap(F.col("w") / F.col("w_sum")).alias("temp_share"),
+            snap(
                 (F.col("w") / F.col("w_sum"))
                 / (F.col("n_docs") / F.col("n_total"))
             ).alias("boost"),
-            F.floor(F.col("w") / F.col("w_sum") * _MIX_BUDGET + F.lit(0.5))
-            .cast("bigint")
-            .alias("epoch_quota"),
+            units(F.col("w") / F.col("w_sum"), _MIX_BUDGET).alias("epoch_quota"),
         )
     )
 
@@ -342,7 +340,6 @@ def q_winsorize_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(F.min("value").alias("p_lo"), F.max("value").alias("p_hi"))
     )
-    snap6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     clipped = F.least(F.greatest(F.col("value"), F.col("p_lo")), F.col("p_hi"))
     return (
         ev.join(F.broadcast(cuts), "event_type")
@@ -351,8 +348,8 @@ def q_winsorize_by_group(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n"),
             F.min("p_lo").alias("p01"),
             F.min("p_hi").alias("p99"),
-            snap6(F.avg("value")).alias("mean_raw"),
-            snap6(F.avg(clipped)).alias("mean_winsorized"),
+            snap(F.avg("value")).alias("mean_raw"),
+            snap(F.avg(clipped)).alias("mean_winsorized"),
         )
     )
 
@@ -386,7 +383,7 @@ def _lang_source_chi2(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.countDistinct("lang").alias("r"), F.countDistinct("source").alias("c")
     )
     return grid.agg(
-        (F.floor(F.sum(cell) * 1e6 + F.lit(0.5)) / 1e6).alias("chi2"),
+        snap(F.sum(cell)).alias("chi2"),
         F.count("*").alias("n_cells"),
         F.sum("o").alias("n"),
     ).crossJoin(F.broadcast(r_c))
@@ -419,16 +416,13 @@ def q_agg_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.floor(F.unix_millis("ts") / F.lit(1000)) % 86400).cast("double").alias("x"),
     )
 
-    def snap6(c):
-        return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
-
     return ev.groupBy("event_type").agg(
         F.regr_count("y", "x").alias("n_pts"),
-        snap6(F.regr_slope("y", "x")).alias("slope"),
-        snap6(F.regr_intercept("y", "x")).alias("intercept"),
-        snap6(F.regr_r2("y", "x")).alias("r2"),
-        snap6(F.regr_avgx("y", "x")).alias("avg_x"),
-        snap6(F.regr_avgy("y", "x")).alias("avg_y"),
+        snap(F.regr_slope("y", "x")).alias("slope"),
+        snap(F.regr_intercept("y", "x")).alias("intercept"),
+        snap(F.regr_r2("y", "x")).alias("r2"),
+        snap(F.regr_avgx("y", "x")).alias("avg_x"),
+        snap(F.regr_avgy("y", "x")).alias("avg_y"),
     )
 
 
@@ -635,13 +629,12 @@ def q_mixture_unimax_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
     alloc_raw = F.when(F.col("capped"), F.col("cap_tokens").cast("double")).otherwise(
         (F.col("budget") - F.col("s_cap")) / F.col("k_un")
     )
-    snap6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return flagged.crossJoin(F.broadcast(pools)).select(
         "stratum",
         "n_tokens",
         "cap_tokens",
         "capped",
-        snap6(alloc_raw).alias("alloc_tokens"),
+        snap(alloc_raw).alias("alloc_tokens"),
         # Third guard audit (r14): n_tokens counts NON-EMPTY whitespace
         # tokens (the filtered-split spelling), so a stratum whose docs
         # are all empty reads 0 — legal, and Spark's ANSI session raises
@@ -650,7 +643,7 @@ def q_mixture_unimax_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         # cap_tokens = 0 and an all-capped board short-circuits the
         # uncapped branch); n_tokens >= 0 by construction, so the
         # greatest() floor cannot flip a sign.
-        snap6(alloc_raw / F.greatest(F.col("n_tokens"), F.lit(1))).alias(
+        snap(alloc_raw / F.greatest(F.col("n_tokens"), F.lit(1))).alias(
             "epochs"
         ),
     )
@@ -713,7 +706,6 @@ def q_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.max("nb").cast("bigint").alias("nb"),
         )
     )
-    snap6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     # greatest(..., 1) on the pair product (both engines): a corpus with
     # only one language side would hit 0/0 -> NaN (the ADVICE-r11 class)
     nanb = F.greatest((F.col("na") * F.col("nb")).cast("double"), F.lit(1.0))
@@ -727,9 +719,9 @@ def q_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     return gap.select(
         "na",
         "nb",
-        snap6(d).alias("ks_stat"),
-        snap6(thresh).alias("reject_threshold"),
-        (snap6(d) > snap6(thresh)).alias("reject_h0"),
+        snap(d).alias("ks_stat"),
+        snap(thresh).alias("reject_threshold"),
+        (snap(d) > snap(thresh)).alias("reject_h0"),
     )
 
 
@@ -788,17 +780,12 @@ def q_auc_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     return agg.select(
         "n_pos",
         "n_neg",
-        (
-            F.floor(
-                F.col("won2").cast("double")
-                / F.greatest(
-                    (2 * F.col("n_pos") * F.col("n_neg")).cast("double"),
-                    F.lit(1.0),
-                )
-                * 1e6
-                + F.lit(0.5)
+        snap(
+            F.col("won2").cast("double")
+            / F.greatest(
+                (2 * F.col("n_pos") * F.col("n_neg")).cast("double"),
+                F.lit(1.0),
             )
-            / 1e6
         ).alias("auc"),
     )
 
@@ -830,14 +817,8 @@ def q_temperature_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     alphas = spark.range(1, 11).select(
         (F.col("id") / 10.0).alias("alpha")
     )
-    snap6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     x6 = (
-        F.floor(
-            F.exp(F.col("alpha") * F.log(F.col("n_tok").cast("double"))) * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("x6")
+        units(F.exp(F.col("alpha") * F.log(F.col("n_tok").cast("double")))).alias("x6")
     )
     scored = dom.crossJoin(F.broadcast(alphas)).select("source", "alpha", x6)
     tot = scored.groupBy("alpha").agg(F.sum("x6").cast("bigint").alias("s6"))
@@ -845,12 +826,12 @@ def q_temperature_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     terms = scored.join(F.broadcast(tot), "alpha").select(
         "alpha",
         w.alias("w"),
-        F.floor(-(w * F.log(w)) * 1e9 + F.lit(0.5)).cast("bigint").alias("h9"),
+        units(-(w * F.log(w)), 1e9).alias("h9"),
     )
     return terms.groupBy("alpha").agg(
         F.count("*").cast("bigint").alias("n_domains"),
-        snap6(F.exp(F.sum("h9").cast("double") / 1e9)).alias("effective_domains"),
-        snap6(F.max("w")).alias("max_weight"),
+        snap(F.exp(F.sum("h9").cast("double") / 1e9)).alias("effective_domains"),
+        snap(F.max("w")).alias("max_weight"),
     )
 
 
@@ -881,13 +862,12 @@ def q_domain_ablation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_tokens").cast("bigint").alias("t_tokens"),
         F.sum("n_chars").cast("bigint").alias("t_chars"),
     )
-    snap6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return dom.crossJoin(F.broadcast(tot)).select(
         "source",
         (F.col("t_docs") - F.col("n_docs")).alias("ablated_docs"),
         (F.col("t_tokens") - F.col("n_tokens")).alias("ablated_tokens"),
         (F.col("t_chars") - F.col("n_chars")).alias("ablated_chars"),
-        snap6(
+        snap(
             (F.col("t_tokens") - F.col("n_tokens")).cast("double")
             / F.col("t_tokens").cast("double")
         ).alias("remaining_share"),
@@ -991,7 +971,7 @@ def q_domain_reweight_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
     iteration t = 1.._DOREMI_T:
 
         s_i = round(w_i * exp(eta*lambda_i) * 1e9)   (int64 micro-units)
-        w_i = snap9(0.8 * s_i/sum(s) + 0.2/k)        (smooth with uniform)
+        w_i = snap(0.8 * s_i/sum(s) + 0.2/k, 1e9)    (smooth with uniform)
 
     Determinism engineering: the normalizing sum runs in INTEGER
     micro-units (sum order can't perturb low-order float bits — the
@@ -1016,14 +996,12 @@ def q_domain_reweight_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("n_chars").cast("bigint").alias("g_sum"),
     )
     kk = stats.agg(F.count("*").cast("bigint").alias("k"))
-    snap6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
-    snap9 = lambda c: F.floor(c * 1e9 + F.lit(0.5)) / 1e9  # noqa: E731
     cur = (
         stats.crossJoin(F.broadcast(glob))
         .crossJoin(F.broadcast(kk))
         .withColumn(
             "lam",
-            snap6(
+            snap(
                 F.greatest(
                     F.log(
                         F.col("sum_chars").cast("double")
@@ -1036,8 +1014,8 @@ def q_domain_reweight_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
             ),
         )
-        .withColumn("e", snap6(F.exp(F.lit(_DOREMI_ETA) * F.col("lam"))))
-        .withColumn("w", snap9(F.lit(1.0) / F.col("k")))
+        .withColumn("e", snap(F.exp(F.lit(_DOREMI_ETA) * F.col("lam"))))
+        .withColumn("w", snap(F.lit(1.0) / F.col("k"), 1e9))
         .select("source", "n_docs", "k", "lam", "e", "w")
     )
     for _ in range(_DOREMI_T):
@@ -1045,17 +1023,18 @@ def q_domain_reweight_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
         # per step or lineage doubles each iteration. k-row frame — free.
         s = cur.withColumn(
             "s",
-            F.floor(F.col("w") * F.col("e") * 1e9 + F.lit(0.5)).cast("bigint"),
+            units(F.col("w") * F.col("e"), 1e9),
         ).localCheckpoint(eager=True)
         z = s.agg(F.sum("s").cast("bigint").alias("z"))
         cur = (
             s.crossJoin(F.broadcast(z))
             .withColumn(
                 "w",
-                snap9(
+                snap(
                     F.lit(0.8)
                     * (F.col("s").cast("double") / F.col("z").cast("double"))
-                    + F.lit(0.2) / F.col("k").cast("double")
+                    + F.lit(0.2) / F.col("k").cast("double"),
+                    1e9,
                 ),
             )
             .select("source", "n_docs", "k", "lam", "e", "w")
@@ -1156,9 +1135,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     thr = _poisson1_thresholds_u16()
     orders = load(spark, sf_dir, "orders").select(
         "o_orderkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("cents"),
+        units(F.col("o_totalprice"), 100).alias("cents"),
     )
     point = orders.agg(
         F.count("*").cast("bigint").alias("n_orders"),
@@ -1483,9 +1460,7 @@ def q_agg_geometric_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one scan, one map-side-combinable agg — nothing else."""
     rows = load(spark, sf_dir, "orders").select(
         "o_orderpriority",
-        F.floor(F.log(F.col("o_totalprice")) * 1e6 + F.lit(0.5))
-        .cast("bigint")
-        .alias("ln6"),
+        units(F.log(F.col("o_totalprice"))).alias("ln6"),
     )
     return (
         rows.groupBy("o_orderpriority")
@@ -1527,9 +1502,7 @@ def q_weighted_median(spark: SparkSession, sf_dir: str) -> DataFrame:
         load(spark, sf_dir, "lineitem")
         .select(
             "l_returnflag",
-            F.floor(F.col("l_extendedprice") * 100 + F.lit(0.5))
-            .cast("bigint")
-            .alias("cents"),
+            units(F.col("l_extendedprice"), 100).alias("cents"),
             F.col("l_quantity").cast("bigint").alias("q"),
         )
         .groupBy("l_returnflag", "cents")
@@ -1908,7 +1881,7 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_items",
             "observed_agree",
             "pe_num",
-            F.floor(
+            units(
                 (F.col("n_items") * F.col("observed_agree") - F.col("pe_num")).cast(
                     "double"
                 )
@@ -1916,11 +1889,7 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
                     (F.col("n_items") * F.col("n_items") - F.col("pe_num")),
                     F.lit(1),
                 ).cast("double")
-                * 1e6
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("kappa6"),
+            ).alias("kappa6"),
         )
     )
 
@@ -1931,7 +1900,7 @@ def _events_v6(spark: SparkSession, sf_dir: str) -> DataFrame:
     return load(spark, sf_dir, "events").select(
         "event_id",
         "event_type",
-        F.floor(F.col("value") * 1e6 + F.lit(0.5)).cast("bigint").alias("v6"),
+        units(F.col("value")).alias("v6"),
     )
 
 
@@ -2052,14 +2021,12 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_type",
         "n_i",
         "r2_sum",
-        F.floor(
+        units(
             F.col("r2_sum").cast("double")
             * F.col("r2_sum").cast("double")
-            / F.col("n_i").cast("double")
-            + F.lit(0.5)
-        )
-        .cast("bigint")
-        .alias("t_i"),
+            / F.col("n_i").cast("double"),
+            1,
+        ).alias("t_i"),
     ).localCheckpoint(eager=True)
     tot = ev.agg(F.count("*").cast("bigint").alias("n"))
     ties = hist.agg(
@@ -2072,7 +2039,7 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(tot))
         .crossJoin(F.broadcast(ties))
         .select(
-            F.floor(
+            units(
                 (
                     F.lit(3.0)
                     * F.col("sum_t").cast("double")
@@ -2086,11 +2053,7 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
                         F.col("n") * F.col("n") * F.col("n") - F.col("n")
                     ).cast("double")
                 )
-                * 1e6
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("h_adj6")
+            ).alias("h_adj6")
         )
     )
     return (
@@ -2114,7 +2077,7 @@ def q_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cum·1e6) div total. Scale: one agg + one partitioned window."""
     o = load(spark, sf_dir, "orders").select(
         "o_custkey",
-        F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint").alias(
+        units(F.col("o_totalprice"), 100).alias(
             "cents"
         ),
     )
@@ -2207,7 +2170,7 @@ def q_two_proportion_ztest(spark: SparkSession, sf_dir: str) -> DataFrame:
         "x1",
         "n2",
         "x2",
-        F.floor(z * 1e6 + F.lit(0.5)).cast("bigint").alias("z6"),
+        units(z).alias("z6"),
     ).withColumn("significant", F.abs(F.col("z6")) > _Z975_6)
 
 
@@ -2365,7 +2328,7 @@ def q_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load(spark, sf_dir, "events").select(
         "event_type",
         "event_id",
-        F.floor(F.col("value") * 1e6 + F.lit(0.5)).cast("bigint").alias("v6"),
+        units(F.col("value")).alias("v6"),
     )
     w = Window.partitionBy("event_type").orderBy(
         F.md5(F.col("event_id").cast("string")), "event_id"
@@ -2655,7 +2618,6 @@ def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sum("brier_sum12_k").cast("bigint").alias("brier_sum12"),
     )
     d = per.crossJoin(F.broadcast(tot))
-    snap12 = lambda c: F.floor(c + F.lit(0.5)).cast("bigint")  # noqa: E731
     rel_term = (
         (F.col("f6") * F.col("n_k") - F.col("pos_k") * 1_000_000).cast("double")
         / F.col("n_k").cast("double")
@@ -2669,8 +2631,8 @@ def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
         "b",
         "n_k",
         "pos_k",
-        snap12(rel_term * rel_term * F.col("n_k").cast("double")).alias("rel12_k"),
-        snap12(res_term * res_term * F.col("n_k").cast("double")).alias("res12_k"),
+        units(rel_term * rel_term * F.col("n_k").cast("double"), 1).alias("rel12_k"),
+        units(res_term * res_term * F.col("n_k").cast("double"), 1).alias("res12_k"),
     )
     totals = (
         comps.agg(
@@ -2682,11 +2644,11 @@ def q_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr("brier_sum12 div n").cast("bigint").alias("brier12"),
             F.expr("rel_sum12 div n").cast("bigint").alias("reliability12"),
             F.expr("res_sum12 div n").cast("bigint").alias("resolution12"),
-            snap12(
+            units(
                 F.col("pos").cast("double")
                 * (F.col("n") - F.col("pos")).cast("double")
-                / (F.col("n").cast("double") * F.col("n").cast("double"))
-                * F.lit(1e12)
+                / (F.col("n").cast("double") * F.col("n").cast("double")),
+                1e12,
             ).alias("uncertainty12"),
         )
     )

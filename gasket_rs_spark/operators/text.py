@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
 # Marker tokens for the heuristic language scorer: English function words.
@@ -47,7 +48,7 @@ def q_text_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.size(toks).cast("bigint").alias("n_tokens"),
         F.size(F.array_distinct(toks)).cast("bigint").alias("n_distinct"),
-        (F.floor(F.size(F.array_distinct(toks)) / F.size(toks) * 1000000 + 0.5) / 1000000).alias("ttr"),
+        snap(F.size(F.array_distinct(toks)) / F.size(toks), 1000000).alias("ttr"),
         F.length("text").cast("bigint").alias("n_chars_computed"),
     )
 
@@ -75,7 +76,7 @@ def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         "lang",
-        (F.floor(ratio * 1000000 + 0.5) / 1000000).alias("marker_ratio"),
+        snap(ratio, 1000000).alias("marker_ratio"),
         F.when(ratio >= 0.08, F.lit("en")).otherwise(F.lit("other")).alias("pred_lang"),
     )
 
@@ -101,7 +102,7 @@ def q_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
         "true_lang",
         "pred_lang",
         "n",
-        (F.floor(F.col("n") / F.col("class_n") * 1e6 + F.lit(0.5)) / 1e6).alias(
+        snap(F.col("n") / F.col("class_n")).alias(
             "share_of_true"
         ),
     )
@@ -126,9 +127,9 @@ def q_text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         n_tokens.cast("bigint").alias("n_tokens"),
-        (F.floor(stop_ratio * 1000000 + 0.5) / 1000000).alias("stop_ratio"),
-        (F.floor(mean_tok_len * 1000000 + 0.5) / 1000000).alias("mean_tok_len"),
-        (F.floor(score * 1000000 + 0.5) / 1000000).alias("quality_score"),
+        snap(stop_ratio, 1000000).alias("stop_ratio"),
+        snap(mean_tok_len, 1000000).alias("mean_tok_len"),
+        snap(score, 1000000).alias("quality_score"),
         (score >= 0.5).alias("keep"),
     )
 
@@ -325,7 +326,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "token",
             "cnt",
-            (F.floor(F.col("cnt") / F.col("total") * 1000000 + 0.5) / 1000000).alias(
+            snap(F.col("cnt") / F.col("total"), 1000000).alias(
                 "share"
             ),
         )
@@ -366,7 +367,7 @@ def q_text_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn(
             "oov_rate",
-            F.floor(F.col("n_oov") / F.col("n_tokens") * 1000000 + 0.5) / 1000000,
+            snap(F.col("n_oov") / F.col("n_tokens"), 1000000),
         )
     )
 
@@ -601,24 +602,17 @@ def q_length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.expr(
             f"CAST((n_docs + {_LB_BATCH_DOCS - 1}) DIV {_LB_BATCH_DOCS} AS BIGINT)"
         ).alias("n_batches"),
-        (
-            F.floor(
-                (
-                    F.lit(1.0)
-                    - F.col("sum_tokens")
-                    / (
-                        F.expr(
-                            f"CAST((n_docs + {_LB_BATCH_DOCS - 1})"
-                            f" DIV {_LB_BATCH_DOCS} AS BIGINT)"
-                        )
-                        * _LB_BATCH_DOCS
-                        * F.col("bucket_cap")
-                    ).cast("double")
+        snap(
+            F.lit(1.0)
+            - F.col("sum_tokens")
+            / (
+                F.expr(
+                    f"CAST((n_docs + {_LB_BATCH_DOCS - 1})"
+                    f" DIV {_LB_BATCH_DOCS} AS BIGINT)"
                 )
-                * 1e6
-                + F.lit(0.5)
-            )
-            / 1e6
+                * _LB_BATCH_DOCS
+                * F.col("bucket_cap")
+            ).cast("double")
         ).alias("waste_ratio"),
     )
 
@@ -743,7 +737,7 @@ def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_grams"),
             F.count("hit").alias("n_overlap"),
-            (F.floor(ratio * 1e6 + F.lit(0.5)) / 1e6).alias("contamination"),
+            snap(ratio).alias("contamination"),
         )
         .where(F.col("n_overlap") > 0)
     )
@@ -818,7 +812,6 @@ def q_segment_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
         / F.size(toks).cast("double")
         >= _SEGQ_MIN_DISTINCT
     )
-    snap6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return (
         segs.select(
             "doc_id",
@@ -836,7 +829,7 @@ def q_segment_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_segments",
             "n_kept",
             "kept_tokens",
-            snap6(
+            snap(
                 F.col("n_kept").cast("double") / F.col("n_segments").cast("double")
             ).alias("kept_fraction"),
         )
@@ -865,7 +858,6 @@ def q_boilerplate_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("cnt"),
         F.count_distinct("doc_id").cast("bigint").alias("nd"),
     )
-    snap6 = lambda c: F.floor(c * 1e6 + F.lit(0.5)) / 1e6  # noqa: E731
     return per.groupBy("source").agg(
         F.sum("cnt").cast("bigint").alias("n_segments"),
         F.sum(F.when(F.col("nd") >= 2, F.col("cnt")).otherwise(0))
@@ -875,7 +867,7 @@ def q_boilerplate_rate_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
         "source",
         "n_segments",
         "n_boilerplate",
-        snap6(
+        snap(
             F.col("n_boilerplate").cast("double")
             / F.col("n_segments").cast("double")
         ).alias("boilerplate_rate"),
@@ -1020,9 +1012,7 @@ def span_dedup(docs: DataFrame) -> DataFrame:
             F.coalesce("n_dup_windows", F.lit(0)).cast("bigint").alias("n_dup_windows"),
             F.coalesce("n_removed", F.lit(0)).cast("bigint").alias("n_removed"),
         )
-        .withColumn(
-            "keep_ratio", F.floor(keep * 1e6 + F.lit(0.5)) / 1e6
-        )
+        .withColumn("keep_ratio", snap(keep))
     )
 
 
@@ -1123,12 +1113,8 @@ def _lm_doc_scores(docs: DataFrame) -> DataFrame:
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_trigrams"),
-            (
-                F.floor(
-                    F.sum(F.log2(F.col("c3") / F.col("c2"))) / F.count("*") * 1e6
-                    + F.lit(0.5)
-                )
-                / 1e6
+            snap(
+                F.sum(F.log2(F.col("c3") / F.col("c2"))) / F.count("*")
             ).alias("avg_log2p"),
         )
     )
@@ -1196,7 +1182,7 @@ def q_kn_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "w1",
             "w2",
-            F.floor(F.log2(p) * 1e6 + F.lit(0.5)).cast("bigint").alias("term6"),
+            units(F.log2(p)).alias("term6"),
         )
     )
     return (
@@ -1382,7 +1368,7 @@ def q_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
                 * (1 - _BM25_B + _BM25_B * F.col("dl") / F.col("avg_dl"))
             ),
         )
-        .withColumn("score", F.floor(F.col("score_raw") * 1e6 + F.lit(0.5)) / 1e6)
+        .withColumn("score", snap(F.col("score_raw")))
     )
     w = Window.partitionBy("tok").orderBy(F.col("score").desc(), "doc_id")
     return (
@@ -1412,13 +1398,10 @@ def q_corpus_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.log(F.col("rnk").cast("double")).alias("lx"),
     )
 
-    def snap6(c):
-        return F.floor(c * 1e6 + F.lit(0.5)) / 1e6
-
     return ranked.agg(
         F.regr_count("ly", "lx").alias("n_tokens"),
-        snap6(F.regr_slope("ly", "lx")).alias("zipf_slope"),
-        snap6(F.regr_r2("ly", "lx")).alias("fit_r2"),
+        snap(F.regr_slope("ly", "lx")).alias("zipf_slope"),
+        snap(F.regr_r2("ly", "lx")).alias("fit_r2"),
     )
 
 
@@ -1568,10 +1551,7 @@ def q_text_novelty(
             "doc_id",
             "n_grams",
             "n_novel",
-            (
-                F.floor(F.col("n_novel") / F.col("n_grams") * 1e6 + F.lit(0.5))
-                / 1e6
-            ).alias("novelty"),
+            snap(F.col("n_novel") / F.col("n_grams")).alias("novelty"),
         )
     )
 
@@ -1623,16 +1603,12 @@ def q_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
             "w1",
             "w2",
             "c12",
-            F.floor(
+            units(
                 F.log2(
                     (F.col("c12").cast("double") * F.col("t"))
                     / (F.col("n1").cast("double") * F.col("n2"))
                 )
-                * 1e6
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("pmi6"),
+            ).alias("pmi6"),
         )
     )
     return scored.orderBy(F.col("pmi6").desc(), "w1", "w2").limit(_PMI_TOPK)
@@ -1987,7 +1963,6 @@ def q_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("v")
     )
     dtot = train.agg(F.count("*").cast("bigint").alias("d_all"))
-    ln6 = lambda c: F.floor(F.log(c) * 1e6 + F.lit(0.5)).cast("bigint")  # noqa: E731
     lang_consts = (
         train.groupBy("lang")
         .agg(F.count("*").cast("bigint").alias("d_l"))
@@ -1996,11 +1971,11 @@ def q_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .crossJoin(F.broadcast(dtot))
         .select(
             F.col("lang").alias("cand_lang"),
-            ln6(F.col("d_l").cast("double") / F.col("d_all").cast("double")).alias(
-                "prior6"
-            ),
-            ln6(
-                F.lit(1.0) / (F.col("t_l") + F.col("v")).cast("double")
+            units(
+                F.log(F.col("d_l").cast("double") / F.col("d_all").cast("double"))
+            ).alias("prior6"),
+            units(
+                F.log(F.lit(1.0) / (F.col("t_l") + F.col("v")).cast("double"))
             ).alias("unseen6"),
             "t_l",
             "v",
@@ -2013,9 +1988,11 @@ def q_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             F.col("lang").alias("cand_lang"),
             "tok",
-            ln6(
-                (F.col("c") + 1).cast("double")
-                / (F.col("t_l") + F.col("v")).cast("double")
+            units(
+                F.log(
+                    (F.col("c") + 1).cast("double")
+                    / (F.col("t_l") + F.col("v")).cast("double")
+                )
             ).alias("ll6"),
         )
         .localCheckpoint(eager=False)
@@ -2202,24 +2179,18 @@ def q_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
             "source",
             "n_tokens",
             "vocab",
-            F.floor(
+            units(
                 F.col("coll").cast("double")
                 / F.greatest(
                     F.col("n_tokens") * (F.col("n_tokens") - 1), F.lit(1)
                 ).cast("double")
-                * 1e6
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("simpson6"),
+            ).alias("simpson6"),
         )
         .withColumn(
             "effective_vocab6",
-            F.floor(
-                F.lit(1e12)
-                / F.greatest(F.col("simpson6"), F.lit(1)).cast("double")
-                + F.lit(0.5)
-            ).cast("bigint"),
+            units(
+                F.lit(1e12) / F.greatest(F.col("simpson6"), F.lit(1)).cast("double"), 1
+            ),
         )
         .orderBy("source")
     )
@@ -2254,11 +2225,11 @@ def q_chao1_richness(spark: SparkSession, sf_dir: str) -> DataFrame:
             "f2",
             (
                 F.col("vocab") * 1_000_000
-                + F.floor(
+                + units(
                     (F.col("f1") * (F.col("f1") - 1) * 1_000_000).cast("double")
-                    / (2 * (F.col("f2") + 1)).cast("double")
-                    + F.lit(0.5)
-                ).cast("bigint")
+                    / (2 * (F.col("f2") + 1)).cast("double"),
+                    1,
+                )
             )
             .cast("bigint")
             .alias("chao1_6"),
@@ -2288,11 +2259,7 @@ def q_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the snapped μ."""
     docs = load(spark, sf_dir, "documents").select(
         "lang",
-        F.floor(
-            F.log(F.greatest(F.col("n_chars"), F.lit(1)).cast("double")) * 1e6
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        units(F.log(F.greatest(F.col("n_chars"), F.lit(1)).cast("double")))
         .alias("ln6"),
     )
     return (
@@ -2306,22 +2273,16 @@ def q_lognormal_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
             "lang",
             "n_docs",
             F.expr("s1 div n_docs").cast("bigint").alias("mu6"),
-            F.floor(
+            units(
                 (
                     F.col("s2").cast("double") / F.col("n_docs").cast("double")
                     - (F.col("s1").cast("double") / F.col("n_docs").cast("double"))
                     * (F.col("s1").cast("double") / F.col("n_docs").cast("double"))
                 )
-                / 1e6
-                + F.lit(0.5)
-            )
-            .cast("bigint")
-            .alias("var6"),
-            F.floor(
-                F.exp(F.expr("s1 div n_docs").cast("double") / 1e6) * 100
-                + F.lit(0.5)
-            )
-            .cast("bigint")
+                / 1e6,
+                1,
+            ).alias("var6"),
+            units(F.exp(F.expr("s1 div n_docs").cast("double") / 1e6), 100)
             .alias("fitted_median_c"),
         )
         .orderBy("lang")

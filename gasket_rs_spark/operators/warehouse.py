@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.grid import units
 from gasket_rs_spark.tables import load
 
 
@@ -403,7 +404,7 @@ def q_incremental_agg_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame
     partition (at 100 TB: one day, not seven years), and the merge is a
     full-outer join of two |groups|-row frames."""
     orders = load(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + F.lit(0.5)).cast("bigint")
+    cents = units(F.col("o_totalprice"), 100)
     cutoff = F.lit(_MV_CUTOFF).cast("timestamp")
 
     def agg_part(df: DataFrame, n: str, s: str) -> DataFrame:
@@ -739,9 +740,7 @@ def q_deletion_vector_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey",
         "l_linenumber",
-        F.floor(F.col("l_quantity") * 100 + F.lit(0.5))
-        .cast("bigint")
-        .alias("qty_c"),
+        units(F.col("l_quantity"), 100).alias("qty_c"),
     )
     file_id = (
         F.conv(F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 2), 16, 10)
@@ -824,11 +823,7 @@ def q_incremental_join_maintenance(spark: SparkSession, sf_dir: str) -> DataFram
         ((F.col("l_orderkey") * 31 + F.col("l_linenumber")) % 10 >= 8).alias(
             "s_new"
         ),
-        F.floor(
-            F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")) * 100
-            + F.lit(0.5)
-        )
-        .cast("bigint")
+        units(F.col("l_extendedprice") * (F.lit(1.0) - F.col("l_discount")), 100)
         .alias("cents"),
     )
 
@@ -885,7 +880,7 @@ def q_temporal_join_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         "event_id",
         "event_type",
         F.floor(F.unix_millis("ts") / F.lit(1000)).cast("bigint").alias("ts_sec"),
-        F.floor(F.col("value") * 1e4 + F.lit(0.5)).cast("bigint").alias("attr4"),
+        units(F.col("value"), 1e4).alias("attr4"),
     )
     w = Window.partitionBy("user_id").orderBy("ts_sec", "event_id")
     dim = (

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.grid import snap
 from gasket_rs_spark.pipeline.dataframe_pipeline import DFPipeline, funnel, tee
 from gasket_rs_spark.tables import load
 
@@ -74,10 +75,10 @@ def q_r11_broadcast_tee(spark: SparkSession, sf_dir: str) -> DataFrame:
     by_type, by_user = tee(
         events,
         lambda df: df.groupBy(F.col("event_type").alias("grp")).agg(
-            F.count("*").alias("n"), (F.floor(F.sum("value") * 10000 + 0.5) / 10000).alias("sum_v")
+            F.count("*").alias("n"), snap(F.sum("value"), 10000).alias("sum_v")
         ),
         lambda df: df.groupBy(F.col("user_id").cast("string").alias("grp")).agg(
-            F.count("*").alias("n"), (F.floor(F.sum("value") * 10000 + 0.5) / 10000).alias("sum_v")
+            F.count("*").alias("n"), snap(F.sum("value"), 10000).alias("sum_v")
         ),
     )
     return funnel(by_type, by_user)

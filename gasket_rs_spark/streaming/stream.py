@@ -23,6 +23,8 @@ from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.grid import snap
+
 # Scratch dirs already registered for atexit cleanup (one per fixture key).
 _SCRATCH_DIRS: set[str] = set()
 
@@ -70,7 +72,7 @@ def windowed_counts_stream(events: DataFrame, watermark: str = "1 hour") -> Data
         .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            (F.floor(F.sum("value") * 10000 + 0.5) / 10000).alias("sum_value"),
+            snap(F.sum("value"), 10000).alias("sum_value"),
         )
         .select(
             F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value"
@@ -347,7 +349,7 @@ def q_stream_availablenow_pipeline(spark: SparkSession, sf_dir: str) -> DataFram
         .agg(
             F.count("*").alias("n_events"),
             F.min("event_id").alias("first_event"),
-            (F.floor(F.sum("value") * 10000 + 0.5) / 10000).alias("sum_value"),
+            snap(F.sum("value"), 10000).alias("sum_value"),
         )
     )
 
@@ -536,7 +538,7 @@ def q_stream_static_join_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
         .agg(
             F.count("*").alias("n_events"),
             F.max("weight").alias("weight"),
-            (F.floor(F.sum(F.col("value") * F.col("weight")) * 10000 + 0.5) / 10000).alias(
+            snap(F.sum(F.col("value") * F.col("weight")), 10000).alias(
                 "weighted_value"
             ),
         )
@@ -623,7 +625,7 @@ def q_stream_stream_join_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
             F.count("*").alias("n_pairs"),
             F.count_distinct(F.col("p_id")).alias("n_purchases_attr"),
             F.min("p_id").alias("first_purchase"),
-            (F.floor(F.sum("p_value") * 10000 + F.lit(0.5)) / 10000).alias(
+            snap(F.sum("p_value"), 10000).alias(
                 "attr_value"
             ),
         )

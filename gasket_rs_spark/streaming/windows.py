@@ -21,6 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.grid import snap
 from gasket_rs_spark.tables import events_with_sec, load
 
 _TUMBLE_SEC = 600
@@ -36,7 +37,7 @@ def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.groupBy(win.alias("w"), "event_type")
         .agg(
             F.count("*").alias("n_events"),
-            (F.floor(F.sum("value") * 10000 + 0.5) / 10000).alias("sum_value"),
+            snap(F.sum("value"), 10000).alias("sum_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -59,7 +60,7 @@ def q_stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
             # floor(x*1e4+0.5)/1e4 instead of round(): both engines follow
             # IEEE double semantics for this exact expression tree, whereas
             # round() implementations disagree on .5-boundary doubles.
-            (F.floor(F.avg("value") * 10000 + 0.5) / 10000).alias("avg_value"),
+            snap(F.avg("value"), 10000).alias("avg_value"),
         )
         .select(
             F.col("w.start").alias("window_start"),
@@ -80,7 +81,7 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.groupBy(F.session_window("ts", _SESSION_GAP).alias("w"), "user_id")
         .agg(
             F.count("*").alias("n_events"),
-            (F.floor(F.sum("value") * 10000 + 0.5) / 10000).alias("sum_value"),
+            snap(F.sum("value"), 10000).alias("sum_value"),
         )
         .select(
             "user_id",
@@ -146,7 +147,7 @@ def q_stream_watermark_sim(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n_kept"),
-            (F.floor(F.sum("value") * 10000 + 0.5) / 10000).alias("sum_value"),
+            snap(F.sum("value"), 10000).alias("sum_value"),
         )
     )
 

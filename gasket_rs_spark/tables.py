@@ -82,10 +82,6 @@ def _normalize_ts(dtype) -> F.Column:
     return F.col("ts").cast("timestamp")  # µs fixture generation (NTZ → UTC)
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
-
-
 def register_views(spark: SparkSession, sf_dir: str) -> None:
     """Register every table as a temp view for spark.sql() queries."""
     for name in TABLE_NAMES:

@@ -9,13 +9,14 @@ named subset). Plans are captured at $SPARK_GRAFT_SF_DIR (default
 sf0.1) — the same data the bench times — so Exchange counts / join
 strategies / pushed filters in the files match the bench's plan shapes.
 
---full additionally writes <query>_<tag>_full.txt with
-DataFrame.localCheckpoint bypassed (identity): a checkpoint truncates
-the visible plan at a Scan ExistingRDD, hiding the whole subtree below
-it from plan evidence (VERDICT r21 #4) — the _full dump shows the plan
-the checkpointed children would execute, so scan counts / join
-strategies BELOW a checkpoint stay auditable. Capture-script-only
-monkeypatch; operators are untouched.
+--full additionally writes <query>_<tag>_full.txt: the result plan,
+then the plan of each DataFrame the query passed to localCheckpoint, in
+call order, each under a ``== localCheckpoint #i (eager=...) ==``
+header. A checkpoint truncates the visible result plan at a Scan
+ExistingRDD (VERDICT r21 #4); the recorded inputs keep scan counts and
+join strategies below every checkpoint auditable. The checkpoints still
+run, so an iterative witness's plan stays bounded. Capture-script-only
+wrapper of the concrete DataFrame class; operators are untouched.
 """
 
 from __future__ import annotations
@@ -26,6 +27,12 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE  # noqa: E402
+
+
+def _formatted(df) -> str:
+    return df._sc._jvm.PythonSQLUtils.explainString(
+        df._jdf.queryExecution(), "formatted"
+    )
 
 
 def main() -> None:
@@ -47,29 +54,36 @@ def main() -> None:
     spark = get_session("gasket-plans")
     queries = all_queries()
 
-    def capture(name: str, suffix: str) -> None:
-        df = queries[name](spark, sf_dir)
-        plan = df._sc._jvm.PythonSQLUtils.explainString(
-            df._jdf.queryExecution(), "formatted"
-        )
+    def write(name: str, suffix: str, text: str) -> None:
         with open(os.path.join(out_dir, f"{name}_{tag}{suffix}.txt"), "w") as f:
-            f.write(plan)
-        print(f"wrote {name}_{tag}{suffix}.txt ({len(plan)} chars)")
+            f.write(text)
+        print(f"wrote {name}_{tag}{suffix}.txt ({len(text)} chars)")
 
-    for name in names:
-        capture(name, "")
+    # patch the CONCRETE class (Spark 4: pyspark.sql.classic.dataframe
+    # .DataFrame overrides the pyspark.sql.DataFrame base's method, so
+    # patching the base is a silent no-op)
+    cls = type(spark.range(1))
+    orig = cls.localCheckpoint
+    inputs: list[str] = []
+
+    def recording(self, eager=True, storageLevel=None):
+        inputs.append(
+            f"== localCheckpoint #{len(inputs) + 1} (eager={eager}) ==\n"
+            + _formatted(self)
+        )
+        return orig(self, eager, storageLevel)
+
     if full:
-        # patch the CONCRETE class (Spark 4: pyspark.sql.classic.dataframe
-        # .DataFrame overrides the pyspark.sql.DataFrame base's method, so
-        # patching the base is a silent no-op)
-        cls = type(spark.range(1))
-        orig = cls.localCheckpoint
-        cls.localCheckpoint = lambda self, eager=True: self  # type: ignore[method-assign]
-        try:
-            for name in names:
-                capture(name, "_full")
-        finally:
-            cls.localCheckpoint = orig  # type: ignore[method-assign]
+        cls.localCheckpoint = recording  # type: ignore[method-assign]
+    try:
+        for name in names:
+            inputs.clear()
+            plan = _formatted(queries[name](spark, sf_dir))
+            write(name, "", plan)
+            if full:
+                write(name, "_full", "\n".join([plan, *inputs]))
+    finally:
+        cls.localCheckpoint = orig  # type: ignore[method-assign]
     spark.stop()
 
 

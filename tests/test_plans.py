@@ -223,6 +223,84 @@ def test_no_unpartitioned_window_in_source():
     )
 
 
+def test_grid_snap_spelled_only_in_grid_module():
+    """The cross-engine half-up rule floor(x * 10^k + 0.5) has one Spark
+    spelling, gasket_rs_spark/grid.py (snap / units): no module outside
+    it calls a Column floor on ``<x> * <power of ten> + 0.5`` or defines
+    its own ``snap*`` helper. An AST scan, so the oracle SQL strings
+    (which must keep spelling the rule out) are never matched; the
+    math/np.floor sites run on Python floats inside pandas-UDF kernels
+    and are not Column code."""
+    import ast
+    import math
+    import pathlib
+    import re
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "gasket_rs_spark"
+
+    def number(node):
+        if (
+            isinstance(node, ast.Call)
+            and getattr(node.func, "attr", getattr(node.func, "id", None)) == "lit"
+            and len(node.args) == 1
+        ):
+            node = node.args[0]
+        if isinstance(node, ast.Constant) and type(node.value) in (int, float):
+            return node.value
+        return None
+
+    def power_of_ten(node):
+        v = number(node)
+        return v is not None and v >= 10 and math.isclose(
+            math.log10(v), round(math.log10(v)), abs_tol=1e-12
+        )
+
+    def is_snap(call):
+        func = call.func
+        if not (isinstance(func, ast.Attribute) and func.attr == "floor"):
+            return False
+        if isinstance(func.value, ast.Name) and func.value.id in ("math", "np"):
+            return False
+        if len(call.args) != 1:
+            return False
+        arg = call.args[0]
+        if not (isinstance(arg, ast.BinOp) and isinstance(arg.op, ast.Add)):
+            return False
+        for half, other in ((arg.right, arg.left), (arg.left, arg.right)):
+            if (
+                number(half) == 0.5
+                and isinstance(other, ast.BinOp)
+                and isinstance(other.op, ast.Mult)
+                and (power_of_ten(other.right) or power_of_ten(other.left))
+            ):
+                return True
+        return False
+
+    def helper(name):  # a local snap / snap6 / snap9 / snap12
+        return re.fullmatch(r"_?snap\d*", name) is not None
+
+    offenders = []
+    for py in sorted(pkg.rglob("*.py")):
+        rel = py.relative_to(pkg).as_posix()
+        if rel == "grid.py":
+            continue
+        for node in ast.walk(ast.parse(py.read_text())):
+            if isinstance(node, ast.Call) and is_snap(node):
+                offenders.append(f"{rel}:{node.lineno}: {ast.unparse(node)}")
+            elif isinstance(node, ast.FunctionDef) and helper(node.name):
+                offenders.append(f"{rel}:{node.lineno}: def {node.name}")
+            elif isinstance(node, ast.Assign) and isinstance(node.value, ast.Lambda):
+                offenders += [
+                    f"{rel}:{node.lineno}: {t.id} = lambda"
+                    for t in node.targets
+                    if isinstance(t, ast.Name) and helper(t.id)
+                ]
+    assert not offenders, (
+        "spell the half-up grid rule through gasket_rs_spark.grid.snap/units: "
+        f"{offenders}"
+    )
+
+
 def test_tpch_additions_plan_shapes(spark, sf_dir):
     """Scale pins for the round-5 TPC-H additions: Q5's five dim joins all
     broadcast (the c=s nation equality must ride a hash join, not become
