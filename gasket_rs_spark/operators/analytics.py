@@ -1088,7 +1088,7 @@ def _holt_oracle() -> str:
     fold = _holt_fold_sql("xs").replace(" div ", " // ")
     return f"""
         WITH e AS (
-            SELECT event_type, (epoch_ms(ts) // 1000) // 86400 AS day
+            SELECT event_type, CAST(floor((epoch_ms(ts) // 1000) / 86400) AS BIGINT) AS day
             FROM events
         ), counts AS (
             SELECT event_type, day, CAST(count(*) AS BIGINT) AS c
@@ -3026,7 +3026,7 @@ ORACLES: dict[str, str] = {
     """,
     "acf_daily": """
         WITH counts AS (
-            SELECT (epoch_ms(ts) // 1000) // 86400 AS day,
+            SELECT CAST(floor((epoch_ms(ts) // 1000) / 86400) AS BIGINT) AS day,
                    CAST(count(*) AS BIGINT) AS c
             FROM events GROUP BY 1
         ), rng AS (SELECT min(day) AS d0, max(day) AS d1 FROM counts),
@@ -3054,7 +3054,8 @@ ORACLES: dict[str, str] = {
     """,
     "cusum_changepoint": """
         WITH counts AS (
-            SELECT event_type, (epoch_ms(ts) // 1000) // 86400 AS day,
+            SELECT event_type,
+                   CAST(floor((epoch_ms(ts) // 1000) / 86400) AS BIGINT) AS day,
                    CAST(count(*) AS BIGINT) AS c
             FROM events GROUP BY 1, 2
         ), rng AS (SELECT min(day) AS d0, max(day) AS d1 FROM counts),

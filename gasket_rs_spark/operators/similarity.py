@@ -730,6 +730,17 @@ _PCA_ITERS = 16
 _PCA_PROJ_DIV = 100_000_000
 
 
+def _pca_grid_weighted(pdf):
+    """``(M, QW)`` for one Arrow batch of embeddings: ``M`` the float64
+    rows, ``QW`` their half-up ``_PCA_GRID`` units times the weights
+    w_j = (j+1)² — the integer matrix both embedding_pca kernels use."""
+    import numpy as np
+
+    M = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+    w = (np.arange(M.shape[1], dtype=np.int64) + 1) ** 2
+    return M, np.floor(M * _PCA_GRID + 0.5).astype(np.int64) * w
+
+
 def _tdiv(a: int, b: int) -> int:
     """Truncate-toward-zero division — Spark ``div`` / DuckDB ``//``
     semantics. Python's ``//`` FLOORS, which disagrees whenever the
@@ -794,10 +805,8 @@ def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in it:
             if not len(pdf):
                 continue
-            M = np.array(pdf["embedding"].tolist(), dtype=np.float64)
+            M, QW = _pca_grid_weighted(pdf)
             dd = M.shape[1]
-            w = (np.arange(dd, dtype=np.int64) + 1) ** 2
-            QW = np.floor(M * _PCA_GRID + 0.5).astype(np.int64) * w
             G = QW.T @ QW  # int64-exact within the documented budget
             ii, jj = np.meshgrid(
                 np.arange(dd, dtype=np.int32),
@@ -876,10 +885,7 @@ def q_embedding_pca(spark: SparkSession, sf_dir: str) -> DataFrame:
         for pdf in it:
             if not len(pdf):
                 continue
-            M = np.array(pdf["embedding"].tolist(), dtype=np.float64)
-            dd = M.shape[1]
-            w = (np.arange(dd, dtype=np.int64) + 1) ** 2
-            QW = np.floor(M * _PCA_GRID + 0.5).astype(np.int64) * w
+            _, QW = _pca_grid_weighted(pdf)
             P = QW @ va  # ≤ 64·2.5e7·1e6 = 1.6e15: int64-exact
             pr = np.sign(P) * (np.abs(P) // _PCA_PROJ_DIV)  # trunc div
             yield pd.DataFrame(

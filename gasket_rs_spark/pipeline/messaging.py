@@ -5,15 +5,16 @@ runtime. Here each edge is a slot-token ``_Channel``: two C-level
 ``queue.SimpleQueue``s, one holding the messages and one holding ``cap``
 slot tokens. A sender takes a token before it puts and a receiver returns
 one after it gets, so a full channel blocks the producer at exactly
-``cap`` (the reference's backpressure model) while each put and get is
-one C call — ``queue.Queue`` takes a Python-level lock and condition on
-every call, which dominated the per-message cost. "Typed" means
+``cap`` (the reference's backpressure model). A port makes one call into
+its edge per send or recv, and the edge first tries a non-blocking take
+(one C call); only a miss enters the timed wait that polls the stage's
+dismissal. "Typed" means
 an optional schema/type tag checked at connect time — the analogue of the
 compile-time payload types (README.md:16), enforced at wiring ("analysis")
 time like Spark checks DataFrame schemas.
 
 Surface parity map (messaging.rs):
-- Message<T>                    → Message dataclass (payload + optional type tag)
+- Message<T>                    → Message (a slotted payload holder)
 - OutputPort/InputPort          → same names; send/recv; NotConnected errors
 - connect_ports (1:1, cap)      → same (messaging.rs:404-411)
 - funnel_ports  (N:1)           → same (messaging.rs:413-423)
@@ -29,7 +30,6 @@ from __future__ import annotations
 import queue
 import threading
 import time
-from dataclasses import dataclass
 from typing import Any, Generic, TypeVar
 
 T = TypeVar("T")
@@ -45,13 +45,15 @@ class PortTypeMismatch(TypeError):
     pass
 
 
-@dataclass(frozen=True, slots=True)
 class Message(Generic[T]):
-    payload: T
+    __slots__ = ("payload",)
+
+    def __init__(self, payload: T):
+        self.payload = payload
 
 
 # The running stage's dismissal event, published per thread by
-# runtime.spawn_stage. A port blocked on its queue polls it, so a
+# runtime.spawn_stage. An edge blocked on its queue polls it, so a
 # Daemon.teardown() interrupts a stage stuck in send/recv/close; threads
 # that are not stages have none and block as before.
 _stage = threading.local()
@@ -63,16 +65,16 @@ def _raise_if_dismissed(op: str) -> None:
         raise NotConnected(f"stage dismissed while blocked on {op}")
 
 
-def _get_until(q, deadline: float | None):
-    """``q.get`` in waits of at most 0.1 s, so a dismissed stage stops
-    waiting (NotConnected); raises ``queue.Empty`` once ``deadline`` (a
-    ``time.monotonic()`` reading, or None for no limit) has passed."""
+def _get_until(q, deadline: float | None, op: str = "recv", poll: float = 0.1):
+    """``q.get`` in waits of at most ``poll`` seconds, so a dismissed stage
+    stops waiting (NotConnected); raises ``queue.Empty`` once ``deadline``
+    (a ``time.monotonic()`` reading, or None for no limit) has passed."""
     while True:
-        wait = 0.1 if deadline is None else min(0.1, max(0.0, deadline - time.monotonic()))
+        wait = poll if deadline is None else min(poll, max(0.0, deadline - time.monotonic()))
         try:
             return q.get(timeout=wait)
         except queue.Empty:
-            _raise_if_dismissed("recv")
+            _raise_if_dismissed(op)
             if deadline is not None and time.monotonic() >= deadline:
                 raise
 
@@ -82,7 +84,9 @@ class _Channel:
     one token per free slot. ``send`` takes a token before it puts and
     ``get`` returns one after it takes a message, so exactly ``cap`` sends
     complete with no receiver; the close sentinel takes a slot like any
-    message. A sender waiting for a token polls its stage's dismissal."""
+    message. Both ends first try a non-blocking take; on a miss a sender
+    waits for a token in 0.05 s polls and a receiver for a message in
+    0.1 s polls, each checking its stage's dismissal between polls."""
 
     def __init__(self, cap: int):
         if cap < 1:
@@ -93,16 +97,17 @@ class _Channel:
             self._slots.put(None)
 
     def send(self, msg: Message) -> None:
-        while True:
-            try:
-                self._slots.get(timeout=0.05)
-                break
-            except queue.Empty:
-                _raise_if_dismissed("send")
+        try:
+            self._slots.get(False)
+        except queue.Empty:
+            _get_until(self._slots, None, "send", 0.05)
         self._items.put(msg)
 
     def get(self, timeout: float | None = None) -> Message:
-        msg = self._items.get(timeout=timeout)
+        try:
+            msg = self._items.get(False)
+        except queue.Empty:
+            msg = _get_until(self._items, None if timeout is None else time.monotonic() + timeout)
         self._slots.put(None)
         return msg
 
@@ -155,21 +160,24 @@ class InputPort(Generic[T]):
     def recv(self, timeout: float | None = None):
         """Blocking receive. Returns the Message, or None once every
         connected producer has closed (end of stream — WorkSchedule::Done);
-        raises TimeoutError after ``timeout`` seconds."""
-        if self._q is None:
+        raises TimeoutError after ``timeout`` seconds. Each message is one
+        ``get`` on the edge, which ends the wait if the stage is dismissed."""
+        edge = self._q
+        if edge is None:
             raise NotConnected("input port is not connected")
         deadline = None if timeout is None else time.monotonic() + timeout
         while True:
             try:
-                msg = _get_until(self._q, deadline)
+                msg = edge.get(timeout)
             except queue.Empty:
                 raise TimeoutError("recv timed out") from None
-            if msg.payload is _SENTINEL:
-                self._ended_producers += 1
-                if self._ended_producers >= self._producers:
-                    return None
-                continue
-            return msg
+            if msg.payload is not _SENTINEL:
+                return msg
+            self._ended_producers += 1
+            if self._ended_producers >= self._producers:
+                return None
+            if deadline is not None:
+                timeout = max(0.0, deadline - time.monotonic())
 
     def __len__(self) -> int:
         return self._q.qsize() if self._q is not None else 0
@@ -184,10 +192,7 @@ def _check_types(output: OutputPort, input_: InputPort) -> None:
 
 def connect_ports(output: OutputPort, input_: InputPort, cap: int) -> None:
     """1:1 edge over a bounded channel (messaging.rs:404-411)."""
-    _check_types(output, input_)
-    channel = _Channel(cap)
-    output.connect(channel)
-    input_.connect(channel)
+    funnel_ports([output], input_, cap)
 
 
 def funnel_ports(outputs: list[OutputPort], input_: InputPort, cap: int) -> None:
@@ -264,7 +269,8 @@ class _BroadcastRing:
 
 class _RingReceiver:
     """Per-subscriber cursor into a _BroadcastRing; duck-types the
-    _Channel surface InputPort.recv drives (get/qsize)."""
+    _Channel surface InputPort.recv drives (get/qsize), including the
+    dismissal poll: an empty ring is waited on in 0.1 s slices."""
 
     def __init__(self, ring: _BroadcastRing):
         self._ring = ring
@@ -283,12 +289,11 @@ class _RingReceiver:
                     msg = self._ring._at(self._next)
                     self._next += 1
                     return msg
-                remaining = (
-                    None if deadline is None else deadline - time.monotonic()
-                )
-                if remaining is not None and remaining <= 0:
+                remaining = 0.1 if deadline is None else deadline - time.monotonic()
+                if remaining <= 0:
                     raise queue.Empty
-                self._ring._cond.wait(remaining if remaining is not None else 0.1)
+                if not self._ring._cond.wait(min(remaining, 0.1)):
+                    _raise_if_dismissed("recv")
 
     def qsize(self) -> int:
         with self._ring._cond:
@@ -319,10 +324,7 @@ def broadcast_port(
         output.connect(ring)
         return
     for inp in inputs:
-        _check_types(output, inp)
-        channel = _Channel(cap)
-        output.connect(channel)
-        inp.connect(channel)
+        connect_ports(output, inp, cap)
 
 
 class Fanout:

@@ -1,8 +1,12 @@
 """Per-stage metrics registry — parity with gasket/src/metrics.rs:4-111
 (named counters/gauges, snapshot via collect_readings).
 
-Thread-safe the same way the reference is lock-free: Python int updates
-under a tiny lock (the GIL alone isn't a guarantee for +=).
+Thread-safe the same way the reference is lock-free: ``Counter.inc`` and
+``Gauge.set`` update under a tiny lock (the GIL alone does not make
+``+=`` atomic between writers). The stage tick counter ``tick_count`` has
+one writer, its stage's own thread, which advances it as
+``counter.value += 1`` with no lock; a reader on any other thread always
+sees a whole int, so the readings stay exact.
 
 For metrics *inside* Spark jobs, stages use ``pyspark.sql.Observation``
 (see dataframe_pipeline.py) and publish the observed values back into this
@@ -18,35 +22,27 @@ from dataclasses import dataclass, field
 
 
 class Counter:
-    __slots__ = ("_value", "_lock")
+    __slots__ = ("value", "_lock")
 
     def __init__(self) -> None:
-        self._value = 0
+        self.value = 0
         self._lock = threading.Lock()
 
     def inc(self, n: int = 1) -> None:
         with self._lock:
-            self._value += n
-
-    @property
-    def value(self) -> int:
-        return self._value
+            self.value += n
 
 
 class Gauge:
-    __slots__ = ("_value", "_lock")
+    __slots__ = ("value", "_lock")
 
     def __init__(self) -> None:
-        self._value = 0.0
+        self.value = 0.0
         self._lock = threading.Lock()
 
     def set(self, v: float) -> None:
         with self._lock:
-            self._value = v
-
-    @property
-    def value(self) -> float:
-        return self._value
+            self.value = v
 
 
 @dataclass

@@ -19,6 +19,7 @@ distributes the data plane (SURVEY §3.1).
 from __future__ import annotations
 
 import enum
+import functools
 import signal
 import threading
 import time
@@ -44,22 +45,20 @@ class WorkSchedule(enum.Enum):
 _IDLE, _UNIT, _DONE = WorkSchedule.IDLE, WorkSchedule.UNIT, WorkSchedule.DONE
 
 
-@dataclass(slots=True)
 class Scheduled:
-    kind: WorkSchedule
-    unit: Any = None
+    """What ``Worker.schedule`` returns. ``idle()``, ``unit_of(unit)`` and
+    ``done()`` are C-level partials: no Python frame beyond ``__init__``."""
 
-    @classmethod
-    def idle(cls) -> "Scheduled":
-        return cls(_IDLE)
+    __slots__ = ("kind", "unit")
 
-    @classmethod
-    def unit_of(cls, unit: Any) -> "Scheduled":
-        return cls(_UNIT, unit)
+    def __init__(self, kind: WorkSchedule, unit: Any = None):
+        self.kind = kind
+        self.unit = unit
 
-    @classmethod
-    def done(cls) -> "Scheduled":
-        return cls(_DONE)
+
+Scheduled.idle = functools.partial(Scheduled, _IDLE)
+Scheduled.unit_of = functools.partial(Scheduled, _UNIT)
+Scheduled.done = functools.partial(Scheduled, _DONE)
 
 
 class WorkerError(Exception):
@@ -110,6 +109,10 @@ class StagePhase(enum.Enum):
     EXECUTING = "executing"
     TEARDOWN = "teardown"
     ENDED = "ended"
+
+    # members are singletons: identity hashing keeps the per-tick actuator
+    # lookup off Enum's Python-level __hash__
+    __hash__ = object.__hash__
 
 
 _BOOTSTRAP, _SCHEDULING, _EXECUTING, _TEARDOWN, _ENDED = (
@@ -163,36 +166,34 @@ class StageMachine:
 
     # -- phase ops ---------------------------------------------------------
 
-    def _cancelled(self) -> bool:
-        return self._dismissed.is_set()
-
     def transition(self) -> StagePhase:
         """One state-machine tick: actuate current phase, apply the event
-        (runtime.rs:291-316), then publish the tick."""
+        (runtime.rs:291-316), then publish the tick. Only this stage's
+        thread writes ``tick_count``, so it advances with no lock."""
         try:
             self._ACTUATORS[self.phase](self)
         except BaseException as err:  # noqa: BLE001 — supervisor decides
             self.anchor.error = err
             self.phase = _ENDED if self.phase is _TEARDOWN else _TEARDOWN
-        self.tick_count.inc()
+        self.tick_count.value += 1
         anchor = self.anchor
         anchor.phase = phase = self.phase
         anchor.last_tick = time.monotonic()
         return phase
 
     def _actuate_bootstrap(self) -> None:
-        if self._cancelled():
+        if self._dismissed.is_set():
             self.phase = _TEARDOWN
             return
         retry_call(
             lambda: self.worker.bootstrap(self.stage),
             self.policy.bootstrap_retry,
-            cancelled=self._cancelled,
+            cancelled=self._dismissed.is_set,
         )
         self.phase = _SCHEDULING
 
     def _actuate_schedule(self) -> None:
-        if self._cancelled():
+        if self._dismissed.is_set():
             self.phase = _TEARDOWN
             return
         sched = self.worker.schedule(self.stage)
@@ -209,7 +210,7 @@ class StageMachine:
         """Execute the pending unit with reference retry semantics: the
         SAME unit is re-executed max_retries+1 times (runtime.rs:627-659),
         then dismissed (skip, back to scheduling) or escalated."""
-        if self._cancelled():
+        if self._dismissed.is_set():
             self.phase = _TEARDOWN
             return
         try:
@@ -239,7 +240,7 @@ class StageMachine:
                 self.phase = _SCHEDULING
                 return
             raise WorkerError(WorkerError.PANIC)
-        self._work_retry.wait_backoff(self._cancelled)
+        self._work_retry.wait_backoff(self._dismissed.is_set)
         # stay in EXECUTING: same unit retried next tick
 
     def _actuate_teardown(self) -> None:

@@ -17,11 +17,18 @@ ExistingRDD (VERDICT r21 #4); the recorded inputs keep scan counts and
 join strategies below every checkpoint auditable. The checkpoints still
 run, so an iterative witness's plan stays bounded. Capture-script-only
 wrapper of the concrete DataFrame class; operators are untouched.
+
+Every file is written normalized: the session-global counters Spark
+prints (expression ids ``name#<n>``, exchange ``plan_id=<n>``,
+checkpoint ``RDD[<n>]``) are renumbered per file in order of first
+appearance, and file_source_roundtrip's temp-dir name is blanked, so
+two captures of the same tree compare equal file for file.
 """
 
 from __future__ import annotations
 
 import os
+import re
 import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
@@ -33,6 +40,24 @@ def _formatted(df) -> str:
     return df._sc._jvm.PythonSQLUtils.explainString(
         df._jdf.queryExecution(), "formatted"
     )
+
+
+def normalize(text: str) -> str:
+    """Renumber the counters in ``text`` per kind, from 1 in order of
+    first appearance (one id keeps one number throughout the file), and
+    blank the round-trip temp dir. A ``#`` after a space is a section
+    header's index, not an expression id, and is kept."""
+    seen: dict[tuple[str, str], int] = {}
+    kinds: dict[str, int] = {}
+
+    def renumber(m: re.Match) -> str:
+        key = m.groups()
+        if key not in seen:
+            seen[key] = kinds[key[0]] = kinds.get(key[0], 0) + 1
+        return f"{key[0]}{seen[key]}"
+
+    text = re.sub(r"((?<=\S)#|plan_id=|RDD\[)(\d+)", renumber, text)
+    return re.sub(r"gasket_roundtrip_\w+", "gasket_roundtrip_<tmp>", text)
 
 
 def main() -> None:
@@ -56,7 +81,7 @@ def main() -> None:
 
     def write(name: str, suffix: str, text: str) -> None:
         with open(os.path.join(out_dir, f"{name}_{tag}{suffix}.txt"), "w") as f:
-            f.write(text)
+            f.write(normalize(text))
         print(f"wrote {name}_{tag}{suffix}.txt ({len(text)} chars)")
 
     # patch the CONCRETE class (Spark 4: pyspark.sql.classic.dataframe

@@ -297,3 +297,33 @@ def test_events_ts_sec_truncates_like_duckdb_before_1970(spark, tmp_path):
     got_spark = events_with_sec(spark, str(tmp_path)).first()["ts_sec"]
     got_duck = duckdb.sql(f"SELECT epoch_ms(ts) // 1000 FROM '{path}'").fetchone()[0]
     assert got_spark == got_duck == -1
+
+
+def test_day_buckets_agree_across_engines_before_1970(spark, sf_dir, tmp_path):
+    """The day-bucketed oracles spell ``floor(ts_sec / 86400)`` like
+    ``_daily_counts`` on the Spark side. DuckDB's integer ``//`` truncates
+    (``-1 // 86400 = 0``), so a ``ts_sec // 86400`` oracle merges the last
+    pre-1970 day into day 0. With sf0.001's ``events`` shifted to straddle
+    1970-01-01 at a non-midnight offset, each witness must match its
+    oracle row for row."""
+    import os
+    import sys
+    from pathlib import Path
+
+    sys.path.insert(0, str(Path(__file__).resolve().parent.parent / "scripts"))
+    from verify_local import verify
+
+    from gasket_rs_spark.tables import TABLE_NAMES
+
+    for t in TABLE_NAMES:
+        if t != "events":
+            os.symlink(f"{sf_dir}/{t}.parquet", tmp_path / f"{t}.parquet")
+    duckdb.sql(
+        "COPY (SELECT * REPLACE (ts - (TIMESTAMP '2024-01-01'"
+        " - TIMESTAMP '1969-12-17 05:41:13') AS ts)"
+        f" FROM read_parquet('{sf_dir}/events.parquet'))"
+        f" TO '{tmp_path}/events.parquet' (FORMAT PARQUET)"
+    )
+    names = {"holt_linear_forecast", "acf_daily", "cusum_changepoint"}
+    got = verify(spark, str(tmp_path), only=names)
+    assert {n: r["status"] for n, r in got.items()} == dict.fromkeys(names, "EXACT")

@@ -239,29 +239,18 @@ def test_teardown_interrupts_stage_blocked_on_full_queue():
     assert all(t.phase is StagePhase.ENDED for t in tethers)
 
 
-@pytest.mark.parametrize("wait", ["timer_recv", "input_recv_timeout"])
-def test_teardown_interrupts_stage_blocked_in_timed_wait(wait):
-    """A stage whose schedule waits on a 10 s TimerPort tick, or on a
-    silent InputPort with a 10 s timeout, still ends promptly on
-    Daemon.teardown() instead of holding the 5 s join."""
-    from gasket_rs_spark.pipeline.messaging import (
-        InputPort, OutputPort, TimerPort, connect_ports,
-    )
-
-    timer = TimerPort(interval=10.0)
-    silent, inp = OutputPort(), InputPort()
-    connect_ports(silent, inp, cap=1)
+def _assert_teardown_ends_wait(wait, teardown=lambda: None):
+    """Spawn a stage whose schedule calls ``wait()``, which blocks; once the
+    stage is inside it, Daemon.teardown() must end the stage within 1 s
+    instead of holding the 5 s join."""
 
     class WaitingWorker(Worker):
         def schedule(self, stage):
-            if wait == "timer_recv":
-                timer.recv()
-            else:
-                inp.recv(timeout=10.0)
+            wait()
             return Scheduled.done()
 
         def teardown(self):
-            timer.stop()
+            teardown()
 
     stage = Stage(name="waiting")
     stage.worker = WaitingWorker
@@ -275,6 +264,79 @@ def test_teardown_interrupts_stage_blocked_in_timed_wait(wait):
     Daemon([tether]).teardown()
     assert time.monotonic() - t0 < 1.0
     assert tether.phase is StagePhase.ENDED
+
+
+@pytest.mark.parametrize("wait", ["timer_recv", "input_recv_timeout"])
+def test_teardown_interrupts_stage_blocked_in_timed_wait(wait):
+    """A stage whose schedule waits on a 10 s TimerPort tick, or on a
+    silent InputPort with a 10 s timeout, still ends promptly on
+    Daemon.teardown() instead of holding the 5 s join."""
+    from gasket_rs_spark.pipeline.messaging import (
+        InputPort, OutputPort, TimerPort, connect_ports,
+    )
+
+    timer = TimerPort(interval=10.0)
+    silent, inp = OutputPort(), InputPort()
+    connect_ports(silent, inp, cap=1)
+    wait_fn = timer.recv if wait == "timer_recv" else lambda: inp.recv(timeout=10.0)
+    _assert_teardown_ends_wait(wait_fn, timer.stop)
+
+
+@pytest.mark.parametrize("edge", ["channel", "lagged_broadcast"])
+def test_teardown_interrupts_stage_blocked_in_untimed_recv(edge):
+    """An untimed recv() on an edge that never delivers, a silent
+    connect_ports channel or a lagged=True broadcast receiver, ends on
+    Daemon.teardown(): the edge's own wait, entered after its
+    non-blocking take misses, polls the stage's dismissal."""
+    from gasket_rs_spark.pipeline.messaging import (
+        InputPort, OutputPort, broadcast_port, connect_ports,
+    )
+
+    silent, inp = OutputPort(), InputPort()
+    if edge == "channel":
+        connect_ports(silent, inp, cap=1)
+    else:
+        broadcast_port(silent, [inp], cap=4, lagged=True)
+    _assert_teardown_ends_wait(inp.recv)
+
+
+def test_tick_count_exact_under_concurrent_readers():
+    """The stage thread is the only writer of tick_count and updates it
+    without a lock: with more reader threads than cores calling
+    read_metrics() in a loop, and thread switches forced every
+    microsecond, each reader sees it only grow, and the final count is
+    still exactly 2N + 3."""
+    import os
+    import sys
+    import threading
+
+    units = 2000
+    stage = MockStage(units=units)
+    stop = threading.Event()
+    reads: list[list[float]] = [[] for _ in range((os.cpu_count() or 1) + 1)]
+    switch = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        tether = spawn_stage(stage, Policy())
+
+        def reader(out):
+            while not stop.is_set():
+                out.append(tether.read_metrics()["tick_count"])
+
+        threads = [threading.Thread(target=reader, args=(r,)) for r in reads]
+        for t in threads:
+            t.start()
+        tether.join_stage(timeout=30)
+        stop.set()
+        for t in threads:
+            t.join(timeout=10)
+    finally:
+        stop.set()
+        sys.setswitchinterval(switch)
+    assert not any(t.is_alive() for t in threads)
+    assert tether.phase is StagePhase.ENDED
+    assert all(r and r == sorted(r) for r in reads)
+    assert tether.read_metrics()["tick_count"] == 2 * units + 3
 
 
 @pytest.mark.parametrize(
