@@ -2,9 +2,13 @@
 
 These run real ``readStream``/``writeStream`` queries — rate source or a
 file-replay of the events table — with watermarks and stateful dedup.
-They're exercised by the pytest streaming smoke tests (the driver's
-oracle gate can't replay a stream, so correctness of the *semantics* is
-carried by the batch twins in ``windows.py``).
+The ``q_stream_*_pipeline`` witnesses run the staged events stream to
+completion through one harness (``_events_pipeline``) and return
+arrival-order-independent aggregates of the sink, so each is
+oracle-checked EXACT by DuckDB over the events table (``ORACLES``). The
+building blocks whose output depends on batch boundaries (windowed
+counts, watermark dedup, outer interval joins) are pinned by the pytest
+streaming tests against the batch twins in ``windows.py``.
 
 Reference parity (SURVEY §2.1): a streaming query here is one running
 stage (R18/R19); ``Trigger.AvailableNow`` reproduces WorkSchedule::Done
@@ -18,12 +22,15 @@ import hashlib
 import os
 import shutil
 import tempfile
+from typing import Callable
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.streaming import DataStreamWriter
 
 from gasket_rs_spark.grid import snap
+from gasket_rs_spark.streaming.windows import window_counts
 
 # Scratch dirs already registered for atexit cleanup (one per fixture key).
 _SCRATCH_DIRS: set[str] = set()
@@ -67,16 +74,12 @@ def windowed_counts_stream(events: DataFrame, watermark: str = "1 hour") -> Data
     twin of ``windows.q_stream_tumbling`` plus late-data drop (X29+X31).
     Emits the same aggregate columns (same floor-rounding) so the pytest
     equivalence check is frame-equal, not count-only."""
-    return (
-        events.withWatermark("ts", watermark)
-        .groupBy(F.window("ts", "10 minutes").alias("w"), "event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            snap(F.sum("value"), 10000).alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value"
-        )
+    return window_counts(
+        events.withWatermark("ts", watermark),
+        F.window("ts", "10 minutes"),
+        "event_type",
+        F.col("w.start").alias("window_start"),
+        "event_type",
     )
 
 
@@ -233,17 +236,28 @@ def run_to_memory_sink(
     in-memory table — WorkSchedule::Done semantics (framework.rs:81-88):
     process everything available, then stop."""
     with tempfile.TemporaryDirectory(prefix="gasket-ckpt-") as ckpt:
-        query = (
-            df.writeStream.format("memory")
-            .queryName(query_name)
-            .outputMode(output_mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        if not query.awaitTermination(timeout_sec):
-            query.stop()
-            raise TimeoutError(f"streaming query {query_name} exceeded {timeout_sec}s")
+        writer = df.writeStream.format("memory").queryName(query_name).outputMode(output_mode)
+        _run_available_now(writer, ckpt, query_name, timeout_sec)
+
+
+def _run_available_now(
+    writer: DataStreamWriter, ckpt: str, name: str, timeout_sec: int = 180
+) -> None:
+    """Run ``writer`` under ``Trigger.AvailableNow`` until the source is
+    drained (WorkSchedule::Done); past ``timeout_sec`` the query is
+    stopped and ``TimeoutError`` raised, so no query outlives the call."""
+    query = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
+    if not query.awaitTermination(timeout_sec):
+        query.stop()
+        raise TimeoutError(f"streaming query {name} exceeded {timeout_sec}s")
+
+
+def _overwrite_batch(batch_df: DataFrame, batch_id: int, sink: str) -> None:
+    """Exactly-once ``foreachBatch`` sink (ADVICE r7): foreachBatch is
+    at-least-once, so each batch OVERWRITES its own ``batch_id=N``
+    partition directory — a redelivery after a partial write replaces
+    the partial output instead of appending a second copy."""
+    batch_df.write.mode("overwrite").parquet(os.path.join(sink, f"batch_id={batch_id}"))
 
 
 def _staged_events_scratch(
@@ -278,6 +292,37 @@ def _staged_events_scratch(
     return (src, *out)
 
 
+def _file_stream(spark: SparkSession, src: str) -> DataFrame:
+    """The staged source as a file stream of one file per microbatch —
+    ``maxFilesPerTrigger`` is the bounded-channel backpressure analogue
+    (messaging.rs:384-391)."""
+    schema = spark.read.parquet(src).schema
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+
+
+def _events_pipeline(
+    spark: SparkSession,
+    sf_dir: str,
+    tag: str,
+    build: Callable[[Callable[[], DataFrame]], DataFrame] = lambda read: read(),
+    write_batch: Callable[[DataFrame, int, str], None] = _overwrite_batch,
+    timeout_sec: int = 180,
+) -> DataFrame:
+    """Run the staged events stream to WorkSchedule::Done through a
+    ``foreachBatch`` sink and return the sink as a batch frame.
+
+    ``build(read)`` makes the streaming plan, calling ``read()`` once per
+    file-stream source it needs; ``write_batch(batch_df, batch_id, sink)``
+    lands each microbatch (default: idempotent per-batch overwrite). Sink
+    and checkpoint are ``<tag>sink``/``<tag>ckpt`` in the shared scratch,
+    reset per run."""
+    src, sink, ckpt = _staged_events_scratch(spark, sf_dir, f"{tag}sink", f"{tag}ckpt")
+    stream = build(lambda: _file_stream(spark, src))
+    writer = stream.writeStream.foreachBatch(lambda df, batch_id: write_batch(df, batch_id, sink))
+    _run_available_now(writer, ckpt, f"{tag}pipeline", timeout_sec)
+    return spark.read.parquet(sink)
+
+
 def q_stream_availablenow_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Driver-checkable REAL streaming witness (judge r6 #5): the events
     table staged as a multi-file directory, replayed through an actual
@@ -309,42 +354,22 @@ def q_stream_availablenow_pipeline(spark: SparkSession, sf_dir: str) -> DataFram
     run to WorkSchedule::Done (framework.rs:81-88); maxFilesPerTrigger is
     the bounded-channel backpressure analogue (messaging.rs:384-391).
     """
-    src, sink, ckpt = _staged_events_scratch(spark, sf_dir, "sink", "ckpt")
-    schema = spark.read.parquet(src).schema
-
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        # Idempotent: overwrite THIS batch's partition directory, so an
-        # at-least-once redelivery replaces a partial write instead of
-        # appending a second copy.
-        (
-            batch_df.where(F.col("event_type").isin("click", "purchase"))
-            .select(
+    def handle_batch(batch_df: DataFrame, batch_id: int, sink: str) -> None:
+        _overwrite_batch(
+            batch_df.where(F.col("event_type").isin("click", "purchase")).select(
                 "event_id",
                 "event_type",
                 "value",
                 F.expr(
                     "timestamp_seconds(unix_millis(ts) div 1000 div 3600 * 3600)"
                 ).alias("hour"),
-            )
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch_id={batch_id}"))
+            ),
+            batch_id,
+            sink,
         )
 
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(180):
-        query.stop()
-        raise TimeoutError("AvailableNow pipeline exceeded 180s")
-
     return (
-        spark.read.parquet(sink)
+        _events_pipeline(spark, sf_dir, "", write_batch=handle_batch)
         .groupBy("hour", "event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -376,30 +401,12 @@ def q_stream_sketch_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from ..operators.sketches import quantile_from_sketch, quantile_sketch, quantile_sketch_merge
 
-    src, sink, ckpt = _staged_events_scratch(spark, sf_dir, "sk_sink", "sk_ckpt")
-    schema = spark.read.parquet(src).schema
+    def handle_batch(batch_df: DataFrame, batch_id: int, sink: str) -> None:
+        _overwrite_batch(quantile_sketch(batch_df, "value", ["event_type"]), batch_id, sink)
 
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        (
-            quantile_sketch(batch_df, "value", ["event_type"])
-            .write.mode("overwrite")
-            .parquet(os.path.join(sink, f"batch_id={batch_id}"))
-        )
-
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
+    shards = _events_pipeline(spark, sf_dir, "sk_", write_batch=handle_batch).select(
+        "event_type", "qbucket", "qcnt"
     )
-    if not query.awaitTermination(180):
-        query.stop()
-        raise TimeoutError("sketch pipeline exceeded 180s")
-
-    shards = spark.read.parquet(sink).select("event_type", "qbucket", "qcnt")
     merged = quantile_sketch_merge(shards, ["event_type"])
     return quantile_from_sketch(merged, ["event_type"])
 
@@ -435,7 +442,7 @@ def _incremental_dedup_batch(batch_df: DataFrame, batch_id: int, sink: str) -> N
         fresh = batch_first.join(seen, "h", "left_anti")
     except AnalysisException:
         fresh = batch_first
-    fresh.write.mode("overwrite").parquet(os.path.join(sink, f"batch_id={batch_id}"))
+    _overwrite_batch(fresh, batch_id, sink)
 
 
 def q_stream_incremental_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -456,26 +463,7 @@ def q_stream_incremental_dedup_pipeline(spark: SparkSession, sf_dir: str) -> Dat
     EXACT. Per-batch kept/dropped behavior (at-least-once safety, no
     duplicate ever appended) is pinned in tests/test_streaming.py.
     """
-    src, sink, ckpt = _staged_events_scratch(spark, sf_dir, "dd_sink", "dd_ckpt")
-    schema = spark.read.parquet(src).schema
-
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        _incremental_dedup_batch(batch_df, batch_id, sink)
-
-    query = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(180):
-        query.stop()
-        raise TimeoutError("incremental dedup pipeline exceeded 180s")
-
-    sunk = spark.read.parquet(sink)
+    sunk = _events_pipeline(spark, sf_dir, "dd_", write_batch=_incremental_dedup_batch)
     from ..tables import load as _load
 
     all_events = _load(spark, sf_dir, "events")
@@ -501,39 +489,22 @@ def q_stream_static_join_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
     is oracle-checked EXACT against the plain batch join."""
     from ..tables import load as _load
 
-    src, sink, ckpt = _staged_events_scratch(spark, sf_dir, "sj_sink", "sj_ckpt")
-    schema = spark.read.parquet(src).schema
     static_dim = (
         _load(spark, sf_dir, "events")
         .select("event_type")
         .distinct()
         .withColumn("weight", F.length("event_type").cast("double"))
     )
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-        .join(F.broadcast(static_dim), "event_type")  # stream-static join
-        .select("event_id", "event_type", "value", "weight")
-    )
 
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
+    def build(read: Callable[[], DataFrame]) -> DataFrame:
+        return (
+            read()
+            .join(F.broadcast(static_dim), "event_type")  # stream-static join
+            .select("event_id", "event_type", "value", "weight")
         )
 
-    query = (
-        stream.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(180):
-        query.stop()
-        raise TimeoutError("stream-static join pipeline exceeded 180s")
-
     return (
-        spark.read.parquet(sink)
+        _events_pipeline(spark, sf_dir, "sj_", build)
         .groupBy("event_type")
         .agg(
             F.count("*").alias("n_events"),
@@ -573,53 +544,32 @@ def q_stream_stream_join_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
     double-count); the returned frame aggregates the sink per user, so
     the result is batch-split invariant (pair set is microbatching-
     independent, aggregation runs over the union)."""
-    src, sink, ckpt = _staged_events_scratch(spark, sf_dir, "ssj_sink", "ssj_ckpt")
-    schema = spark.read.parquet(src).schema
-
-    def side(event_type: str, prefix: str) -> DataFrame:
-        return (
-            spark.readStream.schema(schema)
-            .option("maxFilesPerTrigger", 1)
-            .parquet(src)
-            .where(F.col("event_type") == event_type)
-            .select(
-                F.col("user_id").alias(f"{prefix}_user"),
-                F.col("ts").alias(f"{prefix}_ts"),
-                F.col("event_id").alias(f"{prefix}_id"),
-                F.col("value").alias(f"{prefix}_value"),
+    def build(read: Callable[[], DataFrame]) -> DataFrame:
+        def side(event_type: str, prefix: str) -> DataFrame:
+            return (
+                read()
+                .where(F.col("event_type") == event_type)
+                .select(
+                    F.col("user_id").alias(f"{prefix}_user"),
+                    F.col("ts").alias(f"{prefix}_ts"),
+                    F.col("event_id").alias(f"{prefix}_id"),
+                    F.col("value").alias(f"{prefix}_value"),
+                )
+                .withWatermark(f"{prefix}_ts", "90 days")
             )
-            .withWatermark(f"{prefix}_ts", "90 days")
-        )
 
-    clicks = side("click", "c")
-    purchases = side("purchase", "p")
-    joined = purchases.join(
-        clicks,
-        (F.col("p_user") == F.col("c_user"))
-        & (F.col("p_ts") >= F.col("c_ts"))
-        & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 24 HOURS")),
-        "inner",
-    ).select(
-        F.col("p_user").alias("user_id"), "p_id", "c_id", "p_value"
-    )
-
-    def handle_batch(batch_df: DataFrame, batch_id: int) -> None:
-        batch_df.write.mode("overwrite").parquet(
-            os.path.join(sink, f"batch_id={batch_id}")
-        )
-
-    query = (
-        joined.writeStream.foreachBatch(handle_batch)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if not query.awaitTermination(180):
-        query.stop()
-        raise TimeoutError("stream-stream join pipeline exceeded 180s")
+        clicks = side("click", "c")
+        purchases = side("purchase", "p")
+        return purchases.join(
+            clicks,
+            (F.col("p_user") == F.col("c_user"))
+            & (F.col("p_ts") >= F.col("c_ts"))
+            & (F.col("p_ts") <= F.col("c_ts") + F.expr("INTERVAL 24 HOURS")),
+            "inner",
+        ).select(F.col("p_user").alias("user_id"), "p_id", "c_id", "p_value")
 
     return (
-        spark.read.parquet(sink)
+        _events_pipeline(spark, sf_dir, "ssj_", build)
         .groupBy("user_id")
         .agg(
             F.count("*").alias("n_pairs"),
@@ -652,14 +602,8 @@ def q_stream_stateful_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``stateful_user_stats_tws``) runs for real, RocksDB store and all,
     in tests/test_streaming.py where conftest guarantees the ordering."""
     src, = _staged_events_scratch(spark, sf_dir)
-    schema = spark.read.parquet(src).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1)
-        .parquet(src)
-    )
     run_to_memory_sink(
-        stateful_user_counts(stream),
+        stateful_user_counts(_file_stream(spark, src)),
         "stateful_pipeline_sink",
         output_mode="update",
     )

@@ -29,23 +29,30 @@ _SLIDE_SEC = 300
 _SESSION_GAP = "30 minutes"
 
 
-def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tumbling 10-minute event-time windows per event type."""
-    events = load(spark, sf_dir, "events")
-    win = F.window("ts", f"{_TUMBLE_SEC} seconds")
+def window_counts(events: DataFrame, win, key: str, *head) -> DataFrame:
+    """Per (window ``win``, ``key``): the event count ``n_events`` and the
+    1e-4-grid value sum ``sum_value``, projected after the ``head``
+    columns (which read the window struct as ``w``). Batch and streaming
+    window witnesses share this aggregate."""
     return (
-        events.groupBy(win.alias("w"), "event_type")
+        events.groupBy(win.alias("w"), key)
         .agg(
             F.count("*").alias("n_events"),
             snap(F.sum("value"), 10000).alias("sum_value"),
         )
-        .select(
-            F.col("w.start").alias("window_start"),
-            F.col("w.end").alias("window_end"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
+        .select(*head, "n_events", "sum_value")
+    )
+
+
+def q_stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Tumbling 10-minute event-time windows per event type."""
+    return window_counts(
+        load(spark, sf_dir, "events"),
+        F.window("ts", f"{_TUMBLE_SEC} seconds"),
+        "event_type",
+        F.col("w.start").alias("window_start"),
+        F.col("w.end").alias("window_end"),
+        "event_type",
     )
 
 
@@ -76,20 +83,13 @@ def q_stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     Batch ``F.session_window`` — identical gap-merge semantics to the
     streaming stateful operator: session end = last event + gap.
     """
-    events = load(spark, sf_dir, "events")
-    return (
-        events.groupBy(F.session_window("ts", _SESSION_GAP).alias("w"), "user_id")
-        .agg(
-            F.count("*").alias("n_events"),
-            snap(F.sum("value"), 10000).alias("sum_value"),
-        )
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-            "sum_value",
-        )
+    return window_counts(
+        load(spark, sf_dir, "events"),
+        F.session_window("ts", _SESSION_GAP),
+        "user_id",
+        "user_id",
+        F.col("w.start").alias("session_start"),
+        F.col("w.end").alias("session_end"),
     )
 
 
