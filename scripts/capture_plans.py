@@ -42,11 +42,134 @@ def _formatted(df) -> str:
     )
 
 
+def _split_top(s: str) -> list[str]:
+    """``s`` split at its top-level ``", "`` separators."""
+    parts, depth, start = [], 0, 0
+    for i, ch in enumerate(s):
+        if ch in "([":
+            depth += 1
+        elif ch in ")]":
+            depth -= 1
+        elif ch == "," and depth == 0 and s[i + 1 : i + 2] == " ":
+            parts.append(s[start:i])
+            start = i + 2
+    return parts + [s[start:]]
+
+
+def _map_lists(s: str, fn) -> str:
+    """``s`` with ``fn(elements)`` applied to the elements of every
+    bracketed or parenthesized list, innermost first."""
+    out, i = [], 0
+    while i < len(s):
+        if s[i] in "([":
+            depth, j = 0, i
+            while j < len(s):
+                depth += s[j] in "(["
+                depth -= s[j] in ")]"
+                if depth == 0:
+                    break
+                j += 1
+            if j < len(s):
+                inner = _map_lists(s[i + 1 : j], fn)
+                out.append(s[i] + ", ".join(fn(_split_top(inner))) + s[j])
+                i = j + 1
+                continue
+        out.append(s[i])
+        i += 1
+    return "".join(out)
+
+
+def _ids(s: str) -> set[str]:
+    return set(re.findall(r"(?<=\S)#(\d+)", s))
+
+
+def _id(s: str) -> str:
+    return re.search(r"(?<=\S)#(\d+)", s).group(1)
+
+
+def _strip_ids(s: str) -> str:
+    return re.sub(r"(?<=\S)#\d+", "", s)
+
+
+_EXPAND = re.compile(r"^(\(\d+\) Expand\nInput .*\nArguments: )(\[\[.*)$", re.M)
+
+
+def _canonical_expand(text: str, m: re.Match) -> str:
+    """``text`` with the Expand at ``m`` in canonical form.
+
+    Spark's distinct-aggregate rewrite emits one projection group per
+    distinct aggregate, ordered by a hash that varies per session, so the
+    same plan prints its groups, the distinct columns before ``gid`` and
+    the ``gid`` numbers in different orders. This sorts the distinct
+    columns by name and the groups by content, renumbers ``gid`` to the
+    sorted order, and reorders every key list that carries the distinct
+    columns followed by ``gid`` (Input, Keys, Results, partitioning,
+    sort order) to match."""
+    head, lists = _split_top(m.group(2))
+    groups = [_split_top(g[1:-1]) for g in _split_top(head[1:-1])]
+    outs = _split_top(lists[1:-1])
+    gid_pos = next((p for p, o in enumerate(outs) if re.fullmatch(r"gid#\d+", o)), None)
+    if gid_pos is None or any(
+        len(g) != len(outs) or not g[gid_pos].isdigit() for g in groups
+    ):
+        return text
+    gid_id = _id(outs[gid_pos])
+    perm = [p for p in range(gid_pos) if any(g[p] == "null" for g in groups)]
+    canon = sorted(perm, key=lambda p: (_strip_ids(outs[p]), p))
+    order = list(range(len(outs)))
+    for p, c in zip(perm, canon):
+        order[p] = c
+    groups = [[g[c] for c in order] for g in groups]
+    ranked = sorted(
+        groups,
+        key=lambda g: _strip_ids(", ".join(e for p, e in enumerate(g) if p != gid_pos)),
+    )
+    gid_map = {
+        g[gid_pos]: str(new) for g, new in zip(ranked, sorted(int(g[gid_pos]) for g in groups))
+    }
+    for g in ranked:
+        g[gid_pos] = gid_map[g[gid_pos]]
+    expand = m.group(1) + "[{}], [{}]".format(
+        ", ".join("[" + ", ".join(g) + "]" for g in ranked),
+        ", ".join(outs[c] for c in order),
+    )
+    perm_ids = [_id(outs[p]) for p in perm]
+    target = dict(zip(perm_ids, [_id(outs[c]) for c in canon]))
+
+    def reorder(elems: list[str]) -> list[str]:
+        refs = [_ids(e) & set(perm_ids) for e in elems]
+        at = [k for k, r in enumerate(refs) if r]
+        run = [next(iter(refs[k])) for k in at]
+        if (
+            run != perm_ids
+            or at != list(range(at[0], at[0] + len(at)))
+            or any(len(refs[k]) > 1 for k in at)
+            or at[-1] + 1 >= len(elems)
+            or _ids(elems[at[-1] + 1]) != {gid_id}
+        ):
+            return elems
+        by_id = {next(iter(refs[k])): elems[k] for k in at}
+        return elems[: at[0]] + [by_id[target[i]] for i in perm_ids] + elems[at[-1] + 1 :]
+
+    rest = text[: m.start()] + "\0" + text[m.end() :]
+    rest = "\n".join(
+        _map_lists(line, reorder) if _ids(line) & set(perm_ids) else line
+        for line in rest.split("\n")
+    )
+    rest = re.sub(
+        rf"(gid#{gid_id}(?!\d) = )(\d+)", lambda g: g.group(1) + gid_map[g.group(2)], rest
+    )
+    return rest.replace("\0", expand)
+
+
 def normalize(text: str) -> str:
-    """Renumber the counters in ``text`` per kind, from 1 in order of
+    """Put each Expand into canonical order (``_canonical_expand``), then
+    renumber the counters in ``text`` per kind, from 1 in order of
     first appearance (one id keeps one number throughout the file), and
     blank the round-trip temp dir. A ``#`` after a space is a section
     header's index, not an expression id, and is kept."""
+    for k in range(len(_EXPAND.findall(text))):
+        text = _canonical_expand(text, list(_EXPAND.finditer(text))[k])
     seen: dict[tuple[str, str], int] = {}
     kinds: dict[str, int] = {}
 
