@@ -20,9 +20,11 @@ wrapper of the concrete DataFrame class; operators are untouched.
 
 Every file is written normalized: the session-global counters Spark
 prints (expression ids ``name#<n>``, exchange ``plan_id=<n>``,
-checkpoint ``RDD[<n>]``) are renumbered per file in order of first
-appearance, and file_source_roundtrip's temp-dir name is blanked, so
-two captures of the same tree compare equal file for file.
+checkpoint ``RDD[<n>]``, lambda variables ``lambda x_<n>``) are
+renumbered per file in order of first appearance, the groups of each
+distinct-aggregate Expand are put into a canonical order, and
+file_source_roundtrip's temp-dir name is blanked, so two captures of
+the same tree compare equal file for file.
 """
 
 from __future__ import annotations
@@ -179,7 +181,7 @@ def normalize(text: str) -> str:
             seen[key] = kinds[key[0]] = kinds.get(key[0], 0) + 1
         return f"{key[0]}{seen[key]}"
 
-    text = re.sub(r"((?<=\S)#|plan_id=|RDD\[)(\d+)", renumber, text)
+    text = re.sub(r"((?<=\S)#|plan_id=|RDD\[|(?<=lambda )[A-Za-z]\w*?_)(\d+)", renumber, text)
     return re.sub(r"gasket_roundtrip_\w+", "gasket_roundtrip_<tmp>", text)
 
 
