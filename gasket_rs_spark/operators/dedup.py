@@ -26,6 +26,15 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark.operators.similarity import (
+    _as_double,
+    _corpus_n,
+    _norm,
+    cosine6,
+    int_kmeans,
+    map_vec_batches,
+    md5_quarter,
+)
 from gasket_rs_spark.tables import load
 
 # --- MinHash parameters (fixed across runs: seeded) -----------------------
@@ -910,16 +919,27 @@ def q_dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load(spark, sf_dir, "embeddings")
     as_double = F.transform(F.col("embedding"), lambda x: x.cast("double"))
     norm = F.sqrt(F.aggregate(as_double, F.lit(0.0), lambda acc, x: acc + x * x))
-    v = emb.select("vec_id", as_double.alias("vec"), norm.alias("norm"))
-    a = v.select(F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"), F.col("norm").alias("na"))
-    b = v.select(F.col("vec_id").alias("vec_b"), F.col("vec").alias("vb"), F.col("norm").alias("nb"))
-    dot = F.aggregate(F.zip_with("va", "vb", lambda x, y: x * y), F.lit(0.0), lambda acc, x: acc + x)
-    return (
-        a.crossJoin(b)
-        .where(F.col("vec_a") < F.col("vec_b"))
-        .withColumn("cosine", F.round(dot / F.greatest(F.col("na") * F.col("nb"), F.lit(1e-12)), 6))
-        .where(F.col("cosine") >= 0.4)
-        .select("vec_a", "vec_b", "cosine")
+    v = emb.select("vec_id", as_double.alias("vec"), norm.alias("nrm"))
+    pairs = _pair_side(v, "a").crossJoin(_pair_side(v, "b")).where(F.col("vec_a") < F.col("vec_b"))
+    return _cosine_at_least(pairs, 0.4).select("vec_a", "vec_b", "cosine")
+
+
+def _pair_side(vecs: DataFrame, side: str, *keys: str) -> DataFrame:
+    """One side of a (vec_id, vec, nrm) self-join: (*keys, vec_<side>,
+    v<side>, n<side>)."""
+    return vecs.select(
+        *keys,
+        F.col("vec_id").alias(f"vec_{side}"),
+        F.col("vec").alias(f"v{side}"),
+        F.col("nrm").alias(f"n{side}"),
+    )
+
+
+def _cosine_at_least(pairs: DataFrame, threshold: float) -> DataFrame:
+    """Self-join ``pairs`` with their 1e-6-grid ``cosine``, kept at or
+    above ``threshold``."""
+    return pairs.withColumn("cosine", cosine6("va", "vb", "na", "nb")).where(
+        F.col("cosine") >= threshold
     )
 
 
@@ -964,22 +984,18 @@ def _emb_buckets(emb: DataFrame) -> DataFrame:
     ).T  # dim × (B·P)
     weights = 1 << np.arange(_EMB_PLANES_N, dtype=np.int64)
 
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            S = (V @ P) >= 0.0
-            out = {"vec_id": pdf["vec_id"], "vec": pdf["vec"], "nrm": pdf["nrm"]}
-            for band in range(_EMB_BANDS_N):
-                chunk = S[:, band * _EMB_PLANES_N : (band + 1) * _EMB_PLANES_N]
-                out[f"bucket{band}"] = (chunk * weights).sum(axis=1)
-            yield pd.DataFrame(out)
+    def buckets(pdf, V):
+        S = (V @ P) >= 0.0
+        out = {"vec_id": pdf["vec_id"], "vec": pdf["vec"], "nrm": pdf["nrm"]}
+        for band in range(_EMB_BANDS_N):
+            chunk = S[:, band * _EMB_PLANES_N : (band + 1) * _EMB_PLANES_N]
+            out[f"bucket{band}"] = (chunk * weights).sum(axis=1)
+        return pd.DataFrame(out)
 
     schema = "vec_id bigint, vec array<double>, nrm double, " + ", ".join(
         f"bucket{b} bigint" for b in range(_EMB_BANDS_N)
     )
-    return emb.mapInPandas(batches, schema)
+    return map_vec_batches(emb, buckets, schema)
 
 
 def _emb_candidates(vecs: DataFrame) -> DataFrame:
@@ -1032,8 +1048,6 @@ def _planted_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     vectors at ``vec_id + _EMB_PLANT_OFFSET`` — the duplicate-grade mass
     the synthetic fixtures lack, so rows-only dedup witnesses stay
     non-vacuous at the driver (judge r7 #4)."""
-    from gasket_rs_spark.operators.similarity import _as_double, _norm
-
     emb = load(spark, sf_dir, "embeddings").select(
         "vec_id",
         _as_double(F.col("embedding")).alias("vec"),
@@ -1088,31 +1102,12 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     # checkpoint, not persist (session-lifetime leak class — see
     # _minhash_sigs).
     vecs = _emb_buckets(corpus).localCheckpoint(eager=True)
-    candidates = _emb_candidates(vecs)
-    va = vecs.select(
-        F.col("vec_id").alias("vec_a"), F.col("vec").alias("va"), F.col("nrm").alias("na")
+    pairs = (
+        _emb_candidates(vecs)
+        .join(_pair_side(vecs, "a"), "vec_a")
+        .join(_pair_side(vecs, "b"), "vec_b")
     )
-    vb = vecs.select(
-        F.col("vec_id").alias("vec_b"), F.col("vec").alias("vb"), F.col("nrm").alias("nb")
-    )
-    return (
-        candidates.join(va, "vec_a")
-        .join(vb, "vec_b")
-        .withColumn(
-            "cosine",
-            F.round(
-                F.aggregate(
-                    F.zip_with("va", "vb", lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / F.greatest(F.col("na") * F.col("nb"), F.lit(1e-12)),
-                6,
-            ),
-        )
-        .where(F.col("cosine") >= _EMB_COSINE_THRESHOLD)
-        .select("vec_a", "vec_b", "cosine")
-    )
+    return _cosine_at_least(pairs, _EMB_COSINE_THRESHOLD).select("vec_a", "vec_b", "cosine")
 
 
 # --- SemDeDup (semantic dedup over embeddings) ----------------------------
@@ -1132,9 +1127,15 @@ def q_semantic_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     (q_semantic_dedup_clustered) is measured against, mirroring the
     n-gram-Jaccard ↔ MinHash-LSH twin discipline; intentionally quadratic
     (see SCALE.md 'Known quadratic witnesses')."""
-    pairs = q_dedup_embedding_cosine(spark, sf_dir).where(
-        F.col("cosine") >= _SEM_THRESHOLD
+    return _sem_drops(
+        q_dedup_embedding_cosine(spark, sf_dir).where(F.col("cosine") >= _SEM_THRESHOLD)
     )
+
+
+def _sem_drops(pairs: DataFrame) -> DataFrame:
+    """The drop rule over qualifying (vec_a < vec_b, cosine) pairs: one
+    row per dropped vec_b with its smallest exemplar, its near-neighbour
+    count and its strongest cosine."""
     return (
         pairs.groupBy("vec_b")
         .agg(
@@ -1142,9 +1143,7 @@ def q_semantic_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").alias("n_near"),
             F.max("cosine").alias("max_cosine"),
         )
-        .select(
-            F.col("vec_b").alias("vec_id"), "exemplar", "n_near", "max_cosine"
-        )
+        .select(F.col("vec_b").alias("vec_id"), "exemplar", "n_near", "max_cosine")
     )
 
 
@@ -1182,16 +1181,8 @@ def _sem_centroids(spark: SparkSession, sf_dir: str, k: int):
     IVF trainer (similarity.py:_train_coarse_centroids), which keeps its
     float/seeded form because the ANN witnesses are rows-only anyway.
     """
-    emb = load(spark, sf_dir, "embeddings")
     sample = (
-        emb.withColumn(
-            "bucket",
-            F.conv(
-                F.substring(F.md5(F.col("vec_id").cast("string")), 1, 2), 16, 10
-            ).cast("bigint")
-            % 16,
-        )
-        .where(F.col("bucket") < 4)
+        md5_quarter(load(spark, sf_dir, "embeddings"))
         .orderBy("vec_id")
         .limit(_SEM_SAMPLE_CAP)
         .select("embedding")
@@ -1207,20 +1198,7 @@ def _sem_centroids(spark: SparkSession, sf_dir: str, k: int):
             "(md5 bucket < 4 matched no rows) — corpus too small for the "
             "clustered SemDeDup witness"
         )
-    Q = np.floor(X * _SEM_QUANT + 0.5).astype(np.int64)
-    m = len(Q)
-    C = Q[[(j * m) // k for j in range(k)]].copy()
-    for _ in range(_SEM_ITERS):
-        d = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-        assign = d.argmin(axis=1)
-        for j in range(k):
-            members = Q[assign == j]
-            if len(members):
-                s = members.sum(axis=0)
-                # divide-toward-zero (Spark div / DuckDB //); numpy //
-                # floors, which disagrees on negative sums
-                C[j] = np.sign(s) * (np.abs(s) // len(members))
-    return C
+    return int_kmeans(np.floor(X * _SEM_QUANT + 0.5).astype(np.int64), k, _SEM_ITERS)
 
 
 def _sem_assign(corpus: DataFrame, C) -> DataFrame:
@@ -1270,8 +1248,6 @@ def q_semantic_dedup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact twin's drops (precision 1.0 by construction — same threshold,
     same rounding), planted capture ≥ 0.85.
     """
-    from gasket_rs_spark.operators.similarity import _corpus_n
-
     corpus = _planted_corpus(spark, sf_dir)
     # k = max(8, floor(sqrt(n) + 0.5)) — computed HERE with half-up
     # rounding to match the oracle's params CTE verbatim (ADVICE r18:
@@ -1284,46 +1260,12 @@ def q_semantic_dedup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     # both self-join branches consume the assignment; lazy checkpoint so
     # the Arrow kernel runs once (materialized by the first action)
     assigned = _sem_assign(corpus, cents).localCheckpoint(eager=False)
-    a = assigned.select(
-        "cell",
-        F.col("vec_id").alias("vec_a"),
-        F.col("vec").alias("va"),
-        F.col("nrm").alias("na"),
-    )
-    b = assigned.select(
-        "cell",
-        F.col("vec_id").alias("vec_b"),
-        F.col("vec").alias("vb"),
-        F.col("nrm").alias("nb"),
-    )
     pairs = (
-        a.join(b, "cell")
+        _pair_side(assigned, "a", "cell")
+        .join(_pair_side(assigned, "b", "cell"), "cell")
         .where(F.col("vec_a") < F.col("vec_b"))
-        .withColumn(
-            "cosine",
-            F.round(
-                F.aggregate(
-                    F.zip_with("va", "vb", lambda x, y: x * y),
-                    F.lit(0.0),
-                    lambda acc, x: acc + x,
-                )
-                / F.greatest(F.col("na") * F.col("nb"), F.lit(1e-12)),
-                6,
-            ),
-        )
-        .where(F.col("cosine") >= _SEM_THRESHOLD)
     )
-    return (
-        pairs.groupBy("vec_b")
-        .agg(
-            F.min("vec_a").alias("exemplar"),
-            F.count("*").alias("n_near"),
-            F.max("cosine").alias("max_cosine"),
-        )
-        .select(
-            F.col("vec_b").alias("vec_id"), "exemplar", "n_near", "max_cosine"
-        )
-    )
+    return _sem_drops(_cosine_at_least(pairs, _SEM_THRESHOLD))
 
 
 def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:

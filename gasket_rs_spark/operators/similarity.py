@@ -31,6 +31,7 @@ All vector math is Catalyst higher-order functions (``zip_with`` +
 from __future__ import annotations
 
 import random
+from typing import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -69,6 +70,49 @@ def _with_vec(df: DataFrame) -> DataFrame:
     )
 
 
+def cosine6(a: str, b: str, na: str, nb: str):
+    """Cosine of vector columns ``a`` and ``b`` (norms ``na``, ``nb``) on
+    the 1e-6 grid: ``round(a·b / greatest(na·nb, 1e-12), 6)``, the
+    spelling the oracles mirror with ``list_dot_product``. The 1e-12
+    floor keeps a zero vector at cosine 0."""
+    return F.round(_dot(F.col(a), F.col(b)) / F.greatest(F.col(na) * F.col(nb), F.lit(1e-12)), 6)
+
+
+def _queries(emb: DataFrame, *extra) -> DataFrame:
+    """Every 100th corpus vector as a query: (query_id, qvec, qnrm, *extra)."""
+    return emb.where(F.col("vec_id") % 100 == 0).select(
+        F.col("vec_id").alias("query_id"),
+        F.col("vec").alias("qvec"),
+        F.col("nrm").alias("qnrm"),
+        *extra,
+    )
+
+
+def _top_by_cosine(pairs: DataFrame, k: int, *cols) -> DataFrame:
+    """Score (query, corpus vector) ``pairs`` by cosine and keep each
+    query's top ``k`` by (cosine DESC, vec_id) — a unique order, so ties
+    cannot flip between engines — as rank ``rk``, projected to ``cols``."""
+    from pyspark.sql import Window
+
+    scored = pairs.withColumn("cosine", cosine6("qvec", "vec", "qnrm", "nrm"))
+    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
+    return scored.withColumn("rk", F.row_number().over(w)).where(F.col("rk") <= k).select(*cols)
+
+
+def map_vec_batches(df: DataFrame, kernel, schema: str) -> DataFrame:
+    """``df.mapInPandas`` for the dense vector kernels: ``kernel(pdf, V)``
+    gets each non-empty Arrow batch with its ``vec`` column as a
+    (rows × dim) float64 matrix and returns the batch's output frame."""
+    import numpy as np
+
+    def batches(it):
+        for pdf in it:
+            if len(pdf):
+                yield kernel(pdf, np.array(pdf["vec"].tolist(), dtype=np.float64))
+
+    return df.mapInPandas(batches, schema)
+
+
 def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Brute-force cosine top-5 neighbors for every 100th vector.
 
@@ -84,11 +128,7 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     they remove. Kept the codegen broadcast-join form on evidence.
     """
     emb = _with_vec(load(spark, sf_dir, "embeddings"))
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-    )
+    queries = _queries(emb)
     # Scale-adaptive parallelism for the pair explosion (r22, guide §2):
     # the broadcast join multiplies each corpus row by |queries|, but the
     # stage inherits the SCAN's split count — at sf1 the corpus arrived
@@ -101,21 +141,12 @@ def q_similarity_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     # layout 4.154 -> 2.300 s; rerun with `scripts/ab.py 34f5cf9 847ce88
     # --metric similarity_topk -- python3 {ab} time --sf <sf1>
     # similarity_topk`).
-    scored = (
-        emb.repartition(spark.sparkContext.defaultParallelism)
-        .join(broadcast(queries), F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("qvec"), F.col("vec")) / F.greatest(F.col("qnrm") * F.col("nrm"), F.lit(1e-12)), 6),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= _TOP_K)
-        .select("query_id", "rk", F.col("vec_id").alias("neighbor_id"), "cosine", "label")
+    return _top_by_cosine(
+        emb.repartition(spark.sparkContext.defaultParallelism).join(
+            broadcast(queries), F.col("vec_id") != F.col("query_id")
+        ),
+        _TOP_K,
+        "query_id", "rk", F.col("vec_id").alias("neighbor_id"), "cosine", "label",
     )
 
 
@@ -127,22 +158,17 @@ def _with_bucket(df: DataFrame) -> DataFrame:
     dedup._emb_buckets; the per-plane Catalyst aggregate/zip_with dot
     formulation this replaces pays ~dim interpreted ops per plane)."""
     import numpy as np
-    import pandas as pd
 
     P = np.array(_PLANES, dtype=np.float64).T  # dim × planes
     weights = 1 << np.arange(_N_PLANES, dtype=np.int64)
 
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            out = pdf[["vec_id", "label", "vec", "nrm"]].copy()
-            out["bucket"] = (((V @ P) >= 0.0) * weights).sum(axis=1)
-            yield out
+    def bucket(pdf, V):
+        out = pdf[["vec_id", "label", "vec", "nrm"]].copy()
+        out["bucket"] = (((V @ P) >= 0.0) * weights).sum(axis=1)
+        return out
 
-    return df.mapInPandas(
-        batches, "vec_id bigint, label int, vec array<double>, nrm double, bucket bigint"
+    return map_vec_batches(
+        df, bucket, "vec_id bigint, label int, vec array<double>, nrm double, bucket bigint"
     )
 
 
@@ -154,10 +180,8 @@ def q_similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     equi-join on bucket — scales as O(n · bucket_occupancy), not O(n²).
     """
     emb = _with_bucket(_with_vec(load(spark, sf_dir, "embeddings")))
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
+    queries = _queries(
+        emb,
         F.explode(
             F.array(
                 F.col("bucket"),
@@ -165,21 +189,10 @@ def q_similarity_ann_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
         ).alias("bucket"),
     )
-    scored = (
-        emb.join(broadcast(queries), "bucket")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("qvec"), F.col("vec")) / F.greatest(F.col("qnrm") * F.col("nrm"), F.lit(1e-12)), 6),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
-        .select("query_id", "rk", F.col("vec_id").alias("neighbor_id"), "cosine")
+    return _top_by_cosine(
+        emb.join(broadcast(queries), "bucket").where(F.col("vec_id") != F.col("query_id")),
+        3,
+        "query_id", "rk", F.col("vec_id").alias("neighbor_id"), "cosine",
     )
 
 
@@ -237,55 +250,43 @@ def _ivf_assign(emb: DataFrame, cents: list[list[float]], n_probe: int) -> DataF
 
     C = np.array(cents, dtype=np.float64).T  # dim × k
 
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            order = np.argsort(-(V @ C), axis=1, kind="stable")
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "vec": pdf["vec"],
-                    "nrm": pdf["nrm"],
-                    "cell": (order[:, 0] + 1).astype("int32"),
-                    "probes": [
-                        (row[:n_probe] + 1).astype("int32").tolist() for row in order
-                    ],
-                }
-            )
+    def assign(pdf, V):
+        order = np.argsort(-(V @ C), axis=1, kind="stable")
+        return pd.DataFrame(
+            {
+                "vec_id": pdf["vec_id"],
+                "vec": pdf["vec"],
+                "nrm": pdf["nrm"],
+                "cell": (order[:, 0] + 1).astype("int32"),
+                "probes": [(row[:n_probe] + 1).astype("int32").tolist() for row in order],
+            }
+        )
 
-    return emb.mapInPandas(
-        batches, "vec_id bigint, vec array<double>, nrm double, cell int, probes array<int>"
+    return map_vec_batches(
+        emb, assign, "vec_id bigint, vec array<double>, nrm double, cell int, probes array<int>"
     )
 
 
-def _ann_ivf_plan(emb: DataFrame, cents: list[list[float]], n_probe: int) -> DataFrame:
-    """Shared IVF plan: assign cells, probe the query side's top cells,
-    equi-join on cell, exact cosine re-rank to top-3."""
-    corpus = _ivf_assign(emb, cents, n_probe)
-    queries = corpus.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-        F.explode("probes").alias("cell"),
-    )
-    scored = (
+def _ann_ivf_plan(
+    spark: SparkSession,
+    sf_dir: str,
+    k: int | None,
+    n_probe: int | None,
+    centroids: Callable[[int], list[list[float]]],
+) -> DataFrame:
+    """Shared IVF plan: derive k and n_probe (_ivf_params), assign cells
+    to ``centroids(k)``, probe the query side's top cells, equi-join on
+    cell, exact cosine re-rank to top-3."""
+    emb = _with_vec(load(spark, sf_dir, "embeddings"))
+    k, n_probe = _ivf_params(_corpus_n(emb, sf_dir), k, n_probe)
+    corpus = _ivf_assign(emb, centroids(k), n_probe)
+    queries = _queries(corpus, F.explode("probes").alias("cell"))
+    return _top_by_cosine(
         corpus.drop("probes")
         .join(broadcast(queries), "cell")
-        .where(F.col("vec_id") != F.col("query_id"))
-        .withColumn(
-            "cosine",
-            F.round(_dot(F.col("qvec"), F.col("vec")) / F.greatest(F.col("qnrm") * F.col("nrm"), F.lit(1e-12)), 6),
-        )
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= 3)
-        .select("query_id", "rk", F.col("vec_id").alias("neighbor_id"), "cosine")
+        .where(F.col("vec_id") != F.col("query_id")),
+        3,
+        "query_id", "rk", F.col("vec_id").alias("neighbor_id"), "cosine",
     )
 
 
@@ -304,13 +305,42 @@ def similarity_ann_ivf(
     k = √n, n_probe = √k (see _ivf_params). Rows-only check (cell
     assignment is seed-specific); emitted cosines are exact.
     """
-    emb = _with_vec(load(spark, sf_dir, "embeddings"))
-    k, n_probe = _ivf_params(_corpus_n(emb, sf_dir), k, n_probe)
-    return _ann_ivf_plan(emb, _ivf_random_centroids(k), n_probe)
+    return _ann_ivf_plan(spark, sf_dir, k, n_probe, _ivf_random_centroids)
 
 
 def q_similarity_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     return similarity_ann_ivf(spark, sf_dir)
+
+
+def md5_quarter(emb: DataFrame) -> DataFrame:
+    """The embeddings rows whose md5(vec_id) lands in 4 of 16 buckets —
+    a reproducible, shuffle-free ~25% slice for driver-side training."""
+    return emb.withColumn(
+        "bucket",
+        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 2), 16, 10)
+        .cast("bigint") % 16,
+    ).where(F.col("bucket") < 4)
+
+
+def int_kmeans(Q, k: int, iters: int):
+    """Deterministic INTEGER k-means over the int64 rows ``Q``, replayable
+    verbatim in SQL: stride init (centroid j = row (j·m) div k), integer
+    squared-distance argmin with first-min ties (== row_number ORDER BY
+    dist, j), means by divide-toward-zero (Spark div / DuckDB //; numpy
+    // floors, which disagrees on negative sums), empty clusters keep
+    their centroid. Returns the k × dim int64 centroids."""
+    import numpy as np
+
+    m = len(Q)
+    C = Q[[(j * m) // k for j in range(k)]].copy()
+    for _ in range(iters):
+        assign = ((Q[:, None, :] - C[None, :, :]) ** 2).sum(axis=2).argmin(axis=1)
+        for j in range(k):
+            members = Q[assign == j]
+            if len(members):
+                s = members.sum(axis=0)
+                C[j] = np.sign(s) * (np.abs(s) // len(members))
+    return C
 
 
 def _train_coarse_centroids(
@@ -325,17 +355,8 @@ def _train_coarse_centroids(
     """
     import numpy as np
 
-    emb = load(spark, sf_dir, "embeddings")
-    sample = (
-        emb.withColumn(
-            "bucket",
-            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 2), 16, 10)
-            .cast("bigint") % 16,
-        )
-        .where(F.col("bucket") < 4)  # ~25% at test SF; cap harder at scale
-        .select("embedding")
-        .limit(2000)
-    )
+    # ~25% at test SF; the limit caps it at scale
+    sample = md5_quarter(load(spark, sf_dir, "embeddings")).select("embedding").limit(2000)
     X = np.array([r["embedding"] for r in sample.collect()], dtype=np.float64)
     rng = np.random.RandomState(42)
     centroids = X[rng.choice(len(X), size=k, replace=False)]
@@ -366,10 +387,9 @@ def similarity_ann_ivf_trained(
     tests/test_similarity_recall.py); on real clustered embeddings
     training is what makes IVF beat LSH.
     """
-    emb = _with_vec(load(spark, sf_dir, "embeddings"))
-    k, n_probe = _ivf_params(_corpus_n(emb, sf_dir), k, n_probe)
-    cents = _train_coarse_centroids(spark, sf_dir, k)
-    return _ann_ivf_plan(emb, cents, n_probe)
+    return _ann_ivf_plan(
+        spark, sf_dir, k, n_probe, lambda k: _train_coarse_centroids(spark, sf_dir, k)
+    )
 
 
 def q_similarity_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -407,33 +427,29 @@ def q_embedding_quantize(spark: SparkSession, sf_dir: str) -> DataFrame:
     import numpy as np
     import pandas as pd
 
-    def batches(it):
-        for pdf in it:
-            if not len(pdf):
-                continue
-            V = np.array(pdf["vec"].tolist(), dtype=np.float64)
-            scale = np.abs(V).max(axis=1) / 127.0
-            safe = np.where(scale == 0.0, 1.0, scale)[:, None]
-            codes = np.floor(V / safe + 0.5)
-            err = np.abs(V - safe * codes)
-            err = np.where(scale[:, None] == 0.0, 0.0, err)
-            def grid6(x):
-                # floor(x*1e6+0.5)/1e6 — identical spelling to the oracle
-                # (round() half-grid behavior differs between engines)
-                return np.floor(x * 1000000 + 0.5) / 1000000
+    def grid6(x):
+        # floor(x*1e6+0.5)/1e6 — identical spelling to the oracle
+        # (round() half-grid behavior differs between engines)
+        return np.floor(x * 1000000 + 0.5) / 1000000
 
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"],
-                    "scale": grid6(scale),
-                    "max_abs_err": grid6(err.max(axis=1)),
-                    "mean_abs_err": grid6(err.mean(axis=1)),
-                }
-            )
+    def quantize(pdf, V):
+        scale = np.abs(V).max(axis=1) / 127.0
+        safe = np.where(scale == 0.0, 1.0, scale)[:, None]
+        codes = np.floor(V / safe + 0.5)
+        err = np.abs(V - safe * codes)
+        err = np.where(scale[:, None] == 0.0, 0.0, err)
+        return pd.DataFrame(
+            {
+                "vec_id": pdf["vec_id"],
+                "scale": grid6(scale),
+                "max_abs_err": grid6(err.max(axis=1)),
+                "mean_abs_err": grid6(err.mean(axis=1)),
+            }
+        )
 
     emb = _with_vec(load(spark, sf_dir, "embeddings")).select("vec_id", "vec")
-    return emb.mapInPandas(
-        batches, "vec_id bigint, scale double, max_abs_err double, mean_abs_err double"
+    return map_vec_batches(
+        emb, quantize, "vec_id bigint, scale double, max_abs_err double, mean_abs_err double"
     )
 
 
@@ -467,14 +483,8 @@ def train_pq_codebooks(spark: SparkSession, sf_dir: str):
     CTEs (_pq_distortion_oracle)."""
     import numpy as np
 
-    emb = load(spark, sf_dir, "embeddings")
     sample = (
-        emb.withColumn(
-            "bucket",
-            F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 2), 16, 10)
-            .cast("bigint") % 16,
-        )
-        .where(F.col("bucket") < 4)
+        md5_quarter(load(spark, sf_dir, "embeddings"))
         # Deterministic selection (ADVICE r8): limit() on an unordered
         # frame is partitioning-dependent, so codebooks (and every
         # number built on them) would vary run to run once the bucket
@@ -491,7 +501,6 @@ def train_pq_codebooks(spark: SparkSession, sf_dir: str):
             "(stride init needs K distinct sample rows)"
         )
     Q = np.floor(X * _PQ_QUANT + 0.5).astype(np.int64)
-    m = len(Q)
     dim = Q.shape[1]
     # The DuckDB oracle (_pq_distortion_oracle) is a static SQL string
     # whose subspace arithmetic is baked at _SUBDIM = dim/_PQ_SUBSPACES;
@@ -506,22 +515,12 @@ def train_pq_codebooks(spark: SparkSession, sf_dir: str):
             f"fixture has dim {dim}"
         )
     sub = dim // _PQ_SUBSPACES
-    books = []
-    for s in range(_PQ_SUBSPACES):
-        Qs = Q[:, s * sub:(s + 1) * sub]
-        C = Qs[[(c * m) // _PQ_K for c in range(_PQ_K)]].copy()
-        for _ in range(_PQ_ITERS):
-            d2 = ((Qs[:, None, :] - C[None, :, :]) ** 2).sum(axis=2)
-            assign = d2.argmin(axis=1)
-            for c in range(_PQ_K):
-                members = Qs[assign == c]
-                if len(members):
-                    ssum = members.sum(axis=0)
-                    # divide-toward-zero (Spark div / DuckDB //); numpy
-                    # // floors, which disagrees on negative sums
-                    C[c] = np.sign(ssum) * (np.abs(ssum) // len(members))
-        books.append(C)
-    return np.stack(books)
+    return np.stack(
+        [
+            int_kmeans(Q[:, s * sub : (s + 1) * sub], _PQ_K, _PQ_ITERS)
+            for s in range(_PQ_SUBSPACES)
+        ]
+    )
 
 
 def q_embedding_pq_distortion(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -681,34 +680,20 @@ def q_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     anchor sample (1%); the 100 TB path swaps the scored join for the
     ANN candidate generators, identical downstream."""
     emb = _with_vec(load(spark, sf_dir, "embeddings"))
-    anchors = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-        F.col("label").alias("anchor_label"),
-    )
-    scored = emb.join(
-        broadcast(anchors),
-        (F.col("vec_id") != F.col("query_id"))
-        & (F.col("label") != F.col("anchor_label")),
-    ).withColumn(
+    anchors = _queries(emb, F.col("label").alias("anchor_label"))
+    return _top_by_cosine(
+        emb.join(
+            broadcast(anchors),
+            (F.col("vec_id") != F.col("query_id"))
+            & (F.col("label") != F.col("anchor_label")),
+        ),
+        _TOP_K,
+        "query_id",
+        "anchor_label",
+        "rk",
+        F.col("vec_id").alias("negative_id"),
+        F.col("label").alias("negative_label"),
         "cosine",
-        F.round(_dot(F.col("qvec"), F.col("vec")) / F.greatest(F.col("qnrm") * F.col("nrm"), F.lit(1e-12)), 6),
-    )
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("query_id").orderBy(F.col("cosine").desc(), F.col("vec_id"))
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .where(F.col("rk") <= _TOP_K)
-        .select(
-            "query_id",
-            "anchor_label",
-            "rk",
-            F.col("vec_id").alias("negative_id"),
-            F.col("label").alias("negative_label"),
-            "cosine",
-        )
     )
 
 
@@ -1260,11 +1245,7 @@ def q_rrf_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     generators (similarity_ann_*) feeding the same fusion tail.
     """
     emb = _with_vec(load(spark, sf_dir, "embeddings"))
-    queries = emb.where(F.col("vec_id") % 100 == 0).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("vec").alias("qvec"),
-        F.col("nrm").alias("qnrm"),
-    )
+    queries = _queries(emb)
     sq = F.aggregate(F.col("vec"), F.lit(0.0), lambda acc, x: acc + x * x)
     qsq = F.aggregate(F.col("qvec"), F.lit(0.0), lambda acc, x: acc + x * x)
     pairs = emb.join(broadcast(queries), F.col("vec_id") != F.col("query_id")).select(
