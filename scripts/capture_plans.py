@@ -22,9 +22,10 @@ Every file is written normalized: the session-global counters Spark
 prints (expression ids ``name#<n>``, exchange ``plan_id=<n>``,
 checkpoint ``RDD[<n>]``, lambda variables ``lambda x_<n>``) are
 renumbered per file in order of first appearance, the groups of each
-distinct-aggregate Expand are put into a canonical order, and
-file_source_roundtrip's temp-dir name is blanked, so two captures of
-the same tree compare equal file for file.
+distinct-aggregate Expand are put into a canonical order, and the
+checkpoint RDD's call site (``<unknown>:0`` or a JVM frame, by session)
+and file_source_roundtrip's temp-dir name are blanked, so two captures
+of the same tree compare equal file for file.
 """
 
 from __future__ import annotations
@@ -168,8 +169,9 @@ def normalize(text: str) -> str:
     """Put each Expand into canonical order (``_canonical_expand``), then
     renumber the counters in ``text`` per kind, from 1 in order of
     first appearance (one id keeps one number throughout the file), and
-    blank the round-trip temp dir. A ``#`` after a space is a section
-    header's index, not an expression id, and is kept."""
+    blank the checkpoint call site and the round-trip temp dir. A ``#``
+    after a space is a section header's index, not an expression id, and
+    is kept."""
     for k in range(len(_EXPAND.findall(text))):
         text = _canonical_expand(text, list(_EXPAND.finditer(text))[k])
     seen: dict[tuple[str, str], int] = {}
@@ -182,6 +184,7 @@ def normalize(text: str) -> str:
         return f"{key[0]}{seen[key]}"
 
     text = re.sub(r"((?<=\S)#|plan_id=|RDD\[|(?<=lambda )[A-Za-z]\w*?_)(\d+)", renumber, text)
+    text = re.sub(r"(RDD\[\d+\] at \w+ at )\S+:\d+", r"\1<callsite>", text)
     return re.sub(r"gasket_roundtrip_\w+", "gasket_roundtrip_<tmp>", text)
 
 

@@ -47,13 +47,16 @@ def test_expand_groups_in_either_order_normalize_to_one_text():
     assert "partial_count(lang#3) FILTER (WHERE (gid#5 = 1)), " in normalize(source_first)
 
 
-def test_lambda_variable_counters_are_renumbered():
+def test_session_dependent_names_are_normalized():
     """Spark names higher-order-function variables from a session-wide
-    counter, so the same plan built after more lambdas reads x_120, not
-    x_7."""
-    plan = "aggregate(zip_with(vec#{a}, qvec#{b}, lambdafunction((lambda x_{x} * lambda y_{y}), " \
-        "lambda x_{x}, lambda y_{y}, false)), 0.0, lambdafunction((lambda acc_{z} + lambda x_{w})"
-    early = plan.format(a=4, b=5, x=7, y=8, z=9, w=10)
-    late = plan.format(a=40, b=41, x=120, y=121, z=122, w=123)
+    counter (the same plan built after more lambdas reads x_120, not
+    x_7), and a checkpoint RDD's call site varies by session."""
+    plan = (
+        "aggregate(zip_with(vec#{a}, qvec#{b}, lambdafunction((lambda x_{x} * lambda y_{y}), "
+        "lambda x_{x}, lambda y_{y}, false)), 0.0, lambdafunction((lambda acc_{z} + lambda x_{w})\n"
+        "Arguments: [vec#{a}], MapPartitionsRDD[{r}] at localCheckpoint at {site}:0, ExistingRDD"
+    )
+    early = plan.format(a=4, b=5, x=7, y=8, z=9, w=10, r=3, site="<unknown>")
+    late = plan.format(a=40, b=41, x=120, y=121, z=122, w=123, r=9, site="NativeMethodAccessorImpl.java")
     assert normalize(early) == normalize(late)
     assert "lambda x_1 * lambda y_1" in normalize(late)
