@@ -413,6 +413,46 @@ _PACK_BUDGET = 2048
 _PACK_BUCKETS = 64
 
 
+def _with_md5_key(df: DataFrame, key: str, n: int) -> DataFrame:
+    """``df`` (holding an md5 hex column ``h``) plus ``key`` = its first
+    md5 byte mod ``n`` — the deterministic shuffle of the packers."""
+    return df.withColumn(key, F.conv(F.substring("h", 1, 2), 16, 10).cast("bigint") % n)
+
+
+def _doc_tokens(docs: DataFrame, key: str, n: int) -> DataFrame:
+    """(doc_id, n_tokens, h = md5(doc_id), ``key``) per document."""
+    h = F.md5(F.col("doc_id").cast("string"))
+    return _with_md5_key(
+        docs.select("doc_id", F.size(_tokens()).cast("bigint").alias("n_tokens"), h.alias("h")),
+        key,
+        n,
+    )
+
+
+def _running_tokens(base: DataFrame, key: str, *ids: str) -> DataFrame:
+    """``base`` plus ``cum``: the inclusive running n_tokens within each
+    ``key`` in (h, *ids) order — one window partitioned by ``key``."""
+    w = (
+        Window.partitionBy(key)
+        .orderBy("h", *ids)
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return base.withColumn("cum", F.sum("n_tokens").over(w))
+
+
+def _pack(base: DataFrame, *ids: str) -> DataFrame:
+    """Greedy packing within each md5 ``bucket``: batch_in_bucket =
+    floor(start offset / _PACK_BUDGET)."""
+    return _running_tokens(base, "bucket", *ids).select(
+        *ids,
+        "bucket",
+        F.floor((F.col("cum") - F.col("n_tokens")) / _PACK_BUDGET)
+        .cast("bigint")
+        .alias("batch_in_bucket"),
+        "n_tokens",
+    )
+
+
 def q_text_pack_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Greedy sequential packing of documents into ~token-budget batches.
 
@@ -426,28 +466,7 @@ def q_text_pack_batches(spark: SparkSession, sf_dir: str) -> DataFrame:
     stream packing would be a one-task sort at 100 TB.
     """
     docs = load(spark, sf_dir, "documents")
-    h = F.md5(F.col("doc_id").cast("string"))
-    base = docs.select(
-        "doc_id",
-        F.size(_tokens()).cast("bigint").alias("n_tokens"),
-        h.alias("h"),
-    ).withColumn(
-        "bucket",
-        F.conv(F.substring("h", 1, 2), 16, 10).cast("bigint") % _PACK_BUCKETS,
-    )
-    w = (
-        Window.partitionBy("bucket")
-        .orderBy("h", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return base.withColumn("cum", F.sum("n_tokens").over(w)).select(
-        "doc_id",
-        "bucket",
-        F.floor((F.col("cum") - F.col("n_tokens")) / _PACK_BUDGET)
-        .cast("bigint")
-        .alias("batch_in_bucket"),
-        "n_tokens",
-    )
+    return _pack(_doc_tokens(docs, "bucket", _PACK_BUCKETS), "doc_id")
 
 
 _FP_SHARDS = 32
@@ -520,16 +539,7 @@ def q_global_token_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
     only corpus-sized shuffle. offset = shard_base + intra-shard prefix.
     Contiguity (offsets tile [0, total) exactly) is pinned in
     tests/test_text_pipeline.py; values are all int64 — EXACT oracle."""
-    docs = load(spark, sf_dir, "documents")
-    h = F.md5(F.col("doc_id").cast("string"))
-    base = docs.select(
-        "doc_id",
-        F.size(_tokens()).cast("bigint").alias("n_tokens"),
-        h.alias("h"),
-    ).withColumn(
-        "shard",
-        F.conv(F.substring("h", 1, 2), 16, 10).cast("bigint") % _OFFSET_SHARDS,
-    )
+    base = _doc_tokens(load(spark, sf_dir, "documents"), "shard", _OFFSET_SHARDS)
     totals = base.groupBy("shard").agg(
         F.sum("n_tokens").cast("bigint").alias("shard_tokens")
     )
@@ -541,13 +551,8 @@ def q_global_token_offsets(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("shard")
         .agg(F.coalesce(F.sum("t2"), F.lit(0)).cast("bigint").alias("shard_base"))
     )
-    w = (
-        Window.partitionBy("shard")
-        .orderBy("h", "doc_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     return (
-        base.withColumn("cum", F.sum("n_tokens").over(w))
+        _running_tokens(base, "shard", "doc_id")
         .join(F.broadcast(bases), "shard")
         .select(
             "doc_id",
@@ -628,24 +633,8 @@ def q_text_chunk_pack(spark: SparkSession, sf_dir: str) -> DataFrame:
             ":", F.col("doc_id").cast("string"), F.col("chunk_id").cast("string")
         )
     )
-    base = chunks.withColumn("h", h).withColumn(
-        "bucket",
-        F.conv(F.substring("h", 1, 2), 16, 10).cast("bigint") % _PACK_BUCKETS,
-    )
-    w = (
-        Window.partitionBy("bucket")
-        .orderBy("h", "doc_id", "chunk_id")
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    return base.withColumn("cum", F.sum("n_tokens").over(w)).select(
-        "doc_id",
-        "chunk_id",
-        "bucket",
-        F.floor((F.col("cum") - F.col("n_tokens")) / _PACK_BUDGET)
-        .cast("bigint")
-        .alias("batch_in_bucket"),
-        "n_tokens",
-    )
+    base = _with_md5_key(chunks.withColumn("h", h), "bucket", _PACK_BUCKETS)
+    return _pack(base, "doc_id", "chunk_id")
 
 
 def q_text_ngram_lm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
