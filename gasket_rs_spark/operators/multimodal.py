@@ -244,6 +244,44 @@ def with_payload(df: DataFrame) -> DataFrame:
     )
 
 
+def _decoded_assets(
+    spark: SparkSession, sf_dir: str, modality: str, min_bytes: int, kernel, schema: StructType
+) -> DataFrame:
+    """One Arrow-batched pass over the ``modality`` assets whose payload
+    has at least ``min_bytes`` bytes: each payload is packed into its
+    real container (``build_media_payload``) and ``kernel(doc_id,
+    container)`` returns the asset's output rows. The Arrow UDF takes the
+    kernel's name, so the plan names the kernel that runs."""
+    docs = with_payload(load(spark, sf_dir, "documents")).where(
+        (F.col("modality") == modality) & (F.length("payload") >= min_bytes)
+    ).select("doc_id", "payload")
+
+    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+        for pdf in batches:
+            rows = []
+            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
+                rows += kernel(doc_id, build_media_payload(bytes(payload), modality))
+            yield pd.DataFrame(rows, columns=[f.name for f in schema.fields])
+
+    extract.__name__ = kernel.__name__
+    return docs.mapInPandas(extract, schema)
+
+
+def _mean6(total: int, n: int) -> float:
+    """total / n floor-snapped on the 1e-6 grid — the IEEE expression the
+    oracles spell (round() implementations disagree on the half-grid)."""
+    return math.floor(total / n * 1000000 + 0.5) / 1000000
+
+
+def _image_blocks(container: bytes) -> tuple[np.ndarray, list[int]]:
+    """The decoded W×1 image as an int64 (pixels × RGB) matrix and the
+    floor boundaries of its ``_RESIZE_BLOCKS`` equal blocks."""
+    media = decode_payload(container, "image")
+    p = media.width
+    M = media.values.reshape(p, 3).astype(np.int64)
+    return M, [b * p // _RESIZE_BLOCKS for b in range(_RESIZE_BLOCKS + 1)]
+
+
 def q_multimodal_meta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Typed metadata over binary payload columns, grouped by modality."""
     docs = with_payload(load(spark, sf_dir, "documents"))
@@ -388,29 +426,12 @@ def q_multimodal_image_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
     Oracle recomputes the channel means from the text bytes by stride-3
     index selection, so the raster layout (interleaved RGB triplets, not
     planar) is part of what the EXACT match pins."""
-    docs = with_payload(load(spark, sf_dir, "documents")).where(
-        (F.col("modality") == "image") & (F.length("payload") >= 3)
-    ).select("doc_id", "payload")
+    def extract(doc_id, container):
+        px = decode_payload(container, "image").values.reshape(-1, 3).astype(np.int64)
+        n_pix = px.shape[0]
+        return [(doc_id, n_pix, *[_mean6(int(px[:, c].sum()), n_pix) for c in range(3)])]
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                media = decode_payload(
-                    build_media_payload(bytes(payload), "image"), "image"
-                )
-                px = media.values.reshape(-1, 3).astype(np.int64)
-                n_pix = px.shape[0]
-                means = [
-                    math.floor(int(px[:, c].sum()) / n_pix * 1000000 + 0.5) / 1000000
-                    for c in range(3)
-                ]
-                rows.append((doc_id, n_pix, *means))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in CHANNEL_SCHEMA.fields]
-            )
-
-    return docs.mapInPandas(extract, CHANNEL_SCHEMA)
+    return _decoded_assets(spark, sf_dir, "image", 3, extract, CHANNEL_SCHEMA)
 
 
 AUDIO_SCHEMA = StructType(
@@ -430,29 +451,12 @@ def q_multimodal_audio_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     classic cheap VAD/energy features). Sign changes are strict products
     < 0, so the int16 centering convention ((b-128)*256, exact zero at
     b=128) is part of what the EXACT oracle pins."""
-    docs = with_payload(load(spark, sf_dir, "documents")).where(
-        (F.col("modality") == "audio") & (F.length("payload") >= 3)
-    ).select("doc_id", "payload")
+    def extract(doc_id, container):
+        s = decode_payload(container, "audio").values.astype(np.int64)
+        zc = int(np.sum(s[:-1] * s[1:] < 0))
+        return [(doc_id, s.size, _mean6(int(np.abs(s).sum()), s.size), zc)]
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                media = decode_payload(
-                    build_media_payload(bytes(payload), "audio"), "audio"
-                )
-                s = media.values.astype(np.int64)
-                n = s.size
-                mean_abs = math.floor(
-                    int(np.abs(s).sum()) / n * 1000000 + 0.5
-                ) / 1000000
-                zc = int(np.sum(s[:-1] * s[1:] < 0))
-                rows.append((doc_id, n, mean_abs, zc))
-            yield pd.DataFrame(
-                rows, columns=[f.name for f in AUDIO_SCHEMA.fields]
-            )
-
-    return docs.mapInPandas(extract, AUDIO_SCHEMA)
+    return _decoded_assets(spark, sf_dir, "audio", 3, extract, AUDIO_SCHEMA)
 
 
 SPECTRUM_SCHEMA = StructType(
@@ -488,44 +492,34 @@ def q_multimodal_audio_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
     one Arrow-batched pass, fixed small output row per asset; the
     quadratic DFT lives only in the oracle.
     """
-    docs = with_payload(load(spark, sf_dir, "documents")).where(
-        (F.col("modality") == "audio") & (F.length("payload") >= 3)
-    ).select("doc_id", "payload")
+    def extract(doc_id, container):
+        media = decode_payload(container, "audio")
+        s = media.values.astype(np.float64)
+        mag = np.abs(np.fft.rfft(s))
+        if mag.size > 1:
+            body = mag[1:]
+            dom = int(np.argmax(body)) + 1
+            denom = float(body.sum())
+            centroid = (
+                float((np.arange(1, mag.size) * body).sum()) / denom
+                if denom > 0.0
+                else 0.0
+            )
+        else:
+            dom, centroid = 0, 0.0
+        dom_freq = dom * media.sample_rate / s.size
+        return [
+            (
+                doc_id,
+                s.size,
+                media.sample_rate,
+                dom,
+                math.floor(dom_freq * 10000 + 0.5) / 10000,
+                math.floor(centroid * 10000 + 0.5) / 10000,
+            )
+        ]
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                media = decode_payload(
-                    build_media_payload(bytes(payload), "audio"), "audio"
-                )
-                s = media.values.astype(np.float64)
-                mag = np.abs(np.fft.rfft(s))
-                if mag.size > 1:
-                    body = mag[1:]
-                    dom = int(np.argmax(body)) + 1
-                    denom = float(body.sum())
-                    centroid = (
-                        float((np.arange(1, mag.size) * body).sum()) / denom
-                        if denom > 0.0
-                        else 0.0
-                    )
-                else:
-                    dom, centroid = 0, 0.0
-                dom_freq = dom * media.sample_rate / s.size
-                rows.append(
-                    (
-                        doc_id,
-                        s.size,
-                        media.sample_rate,
-                        dom,
-                        math.floor(dom_freq * 10000 + 0.5) / 10000,
-                        math.floor(centroid * 10000 + 0.5) / 10000,
-                    )
-                )
-            yield pd.DataFrame(rows, columns=[f.name for f in SPECTRUM_SCHEMA.fields])
-
-    return docs.mapInPandas(extract, SPECTRUM_SCHEMA)
+    return _decoded_assets(spark, sf_dir, "audio", 3, extract, SPECTRUM_SCHEMA)
 
 
 _RESIZE_BLOCKS = 8
@@ -553,33 +547,18 @@ def q_multimodal_image_resize_decoded(spark: SparkSession, sf_dir: str) -> DataF
     reconstructs the same bytes from the doc text and block-averages
     with list arithmetic). One Arrow-batched pass; constant 8 rows out
     per asset."""
-    docs = with_payload(load(spark, sf_dir, "documents")).where(
-        (F.col("modality") == "image")
-        & (F.length("payload") >= 3 * _RESIZE_BLOCKS)
-    ).select("doc_id", "payload")
+    def extract(doc_id, container):
+        M, bounds = _image_blocks(container)
+        rows = []
+        for b in range(_RESIZE_BLOCKS):
+            lo, hi = bounds[b], bounds[b + 1]
+            means = [_mean6(int(s), hi - lo) for s in M[lo:hi].sum(axis=0)]
+            rows.append((doc_id, b, hi - lo, *means))
+        return rows
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                media = decode_payload(
-                    build_media_payload(bytes(payload), "image"), "image"
-                )
-                p = media.width
-                M = media.values.reshape(p, 3).astype(np.int64)
-                bounds = [b * p // _RESIZE_BLOCKS for b in range(_RESIZE_BLOCKS + 1)]
-                for b in range(_RESIZE_BLOCKS):
-                    lo, hi = bounds[b], bounds[b + 1]
-                    cnt = hi - lo
-                    sums = M[lo:hi].sum(axis=0)
-                    means = [
-                        math.floor(int(s) / cnt * 1000000 + 0.5) / 1000000
-                        for s in sums
-                    ]
-                    rows.append((doc_id, b, cnt, *means))
-            yield pd.DataFrame(rows, columns=[f.name for f in RESIZE_SCHEMA.fields])
-
-    return docs.mapInPandas(extract, RESIZE_SCHEMA)
+    return _decoded_assets(
+        spark, sf_dir, "image", 3 * _RESIZE_BLOCKS, extract, RESIZE_SCHEMA
+    )
 
 
 AHASH_SCHEMA = StructType(
@@ -604,32 +583,19 @@ def q_image_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     then a groupBy on the hash — the same shuffle shape as exact text
     dedup. A production variant widens to 64-bit aHash + banded Hamming
     join (the SimHash machinery in dedup.py applies unchanged)."""
-    docs = with_payload(load(spark, sf_dir, "documents")).where(
-        (F.col("modality") == "image")
-        & (F.length("payload") >= 3 * _RESIZE_BLOCKS)
-    ).select("doc_id", "payload")
+    def hashes(doc_id, container):
+        M, bounds = _image_blocks(container)
+        total_mean = M.sum() / (3 * len(M))
+        h = 0
+        for b in range(_RESIZE_BLOCKS):
+            lo, hi = bounds[b], bounds[b + 1]
+            if M[lo:hi].sum() / (3 * (hi - lo)) > total_mean:
+                h |= 1 << b
+        return [(doc_id, h)]
 
-    def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                media = decode_payload(
-                    build_media_payload(bytes(payload), "image"), "image"
-                )
-                p = media.width
-                M = media.values.reshape(p, 3).astype(np.int64)
-                total_mean = M.sum() / (3 * p)
-                bounds = [b * p // _RESIZE_BLOCKS for b in range(_RESIZE_BLOCKS + 1)]
-                h = 0
-                for b in range(_RESIZE_BLOCKS):
-                    lo, hi = bounds[b], bounds[b + 1]
-                    block_mean = M[lo:hi].sum() / (3 * (hi - lo))
-                    if block_mean > total_mean:
-                        h |= 1 << b
-                rows.append((doc_id, h))
-            yield pd.DataFrame(rows, columns=[f.name for f in AHASH_SCHEMA.fields])
-
-    hashed = docs.mapInPandas(hashes, AHASH_SCHEMA)
+    hashed = _decoded_assets(
+        spark, sf_dir, "image", 3 * _RESIZE_BLOCKS, hashes, AHASH_SCHEMA
+    )
     return (
         hashed.groupBy("ahash")
         .agg(F.count("*").alias("n_images"), F.min("doc_id").alias("rep_doc"))
@@ -659,36 +625,19 @@ def q_image_dhash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     Arrow-batched decode pass and hash-groupBy shuffle shape as
     q_image_ahash_dedup; the same 64-bit + banded-Hamming production
     widening applies."""
-    docs = with_payload(load(spark, sf_dir, "documents")).where(
-        (F.col("modality") == "image")
-        & (F.length("payload") >= 3 * _RESIZE_BLOCKS)
-    ).select("doc_id", "payload")
+    def hashes(doc_id, container):
+        M, bounds = _image_blocks(container)
+        sums = [int(M[bounds[b] : bounds[b + 1]].sum()) for b in range(_RESIZE_BLOCKS)]
+        widths = [bounds[b + 1] - bounds[b] for b in range(_RESIZE_BLOCKS)]
+        h = 0
+        for b in range(_RESIZE_BLOCKS - 1):
+            if sums[b] * widths[b + 1] > sums[b + 1] * widths[b]:
+                h |= 1 << b
+        return [(doc_id, h)]
 
-    def hashes(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                media = decode_payload(
-                    build_media_payload(bytes(payload), "image"), "image"
-                )
-                p = media.width
-                M = media.values.reshape(p, 3).astype(np.int64)
-                bounds = [b * p // _RESIZE_BLOCKS for b in range(_RESIZE_BLOCKS + 1)]
-                sums = [
-                    int(M[bounds[b]:bounds[b + 1]].sum())
-                    for b in range(_RESIZE_BLOCKS)
-                ]
-                widths = [
-                    bounds[b + 1] - bounds[b] for b in range(_RESIZE_BLOCKS)
-                ]
-                h = 0
-                for b in range(_RESIZE_BLOCKS - 1):
-                    if sums[b] * widths[b + 1] > sums[b + 1] * widths[b]:
-                        h |= 1 << b
-                rows.append((doc_id, h))
-            yield pd.DataFrame(rows, columns=[f.name for f in DHASH_SCHEMA.fields])
-
-    hashed = docs.mapInPandas(hashes, DHASH_SCHEMA)
+    hashed = _decoded_assets(
+        spark, sf_dir, "image", 3 * _RESIZE_BLOCKS, hashes, DHASH_SCHEMA
+    )
     return (
         hashed.groupBy("dhash")
         .agg(F.count("*").alias("n_images"), F.min("doc_id").alias("rep_doc"))
@@ -717,36 +666,20 @@ def q_multimodal_video_temporal_diff(spark: SparkSession, sf_dir: str) -> DataFr
     absolute-difference sum is floor-snapped — EXACT-oracled by a DuckDB
     twin that recomputes the same frame boundaries with list arithmetic
     over the reconstructed bytes."""
-    docs = with_payload(load(spark, sf_dir, "documents")).where(
-        (F.col("modality") == "video") & (F.length("payload") >= 6)
-    ).select("doc_id", "payload")
+    def extract(doc_id, stream):
+        frames, pos = [], 0
+        while pos < len(stream):
+            _, _, vals, pos = parse_ppm(stream, pos)
+            frames.append(vals.astype(np.int64))
+        rows = []
+        for k in range(len(frames) - 1):
+            a, b = frames[k], frames[k + 1]
+            m = min(a.size, b.size)
+            if m:
+                rows.append((doc_id, k, m, _mean6(int(np.abs(a[:m] - b[:m]).sum()), m)))
+        return rows
 
-    def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = []
-            for doc_id, payload in zip(pdf["doc_id"], pdf["payload"]):
-                stream = build_media_payload(bytes(payload), "video")
-                frames, pos = [], 0
-                while pos < len(stream):
-                    _, _, vals, pos = parse_ppm(stream, pos)
-                    frames.append(vals.astype(np.int64))
-                for k in range(len(frames) - 1):
-                    a, b = frames[k], frames[k + 1]
-                    m = min(a.size, b.size)
-                    if m == 0:
-                        continue
-                    total = int(np.abs(a[:m] - b[:m]).sum())
-                    rows.append(
-                        (
-                            doc_id,
-                            k,
-                            m,
-                            math.floor(total / m * 1000000 + 0.5) / 1000000,
-                        )
-                    )
-            yield pd.DataFrame(rows, columns=[f.name for f in TEMPORAL_SCHEMA.fields])
-
-    return docs.mapInPandas(extract, TEMPORAL_SCHEMA)
+    return _decoded_assets(spark, sf_dir, "video", 6, extract, TEMPORAL_SCHEMA)
 
 
 _N_FRAMES = 4
