@@ -23,6 +23,8 @@ is a sum, so salting composes if needed.
 
 from __future__ import annotations
 
+from typing import Callable
+
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -405,8 +407,15 @@ _LCC_ORACLE = _EDGES_CTES + """, deg AS (
 """
 
 
+def unrolled_sql(head: str, step: Callable[[int], str], iters: int, tail: str) -> str:
+    """An iterative oracle as one DuckDB query: the ``head`` CTEs, then
+    ``step(i)`` — the CTEs of iteration i — for i = 1..iters, then the
+    ``tail`` SELECT over the last iteration."""
+    return head + "".join(step(i) for i in range(1, iters + 1)) + tail
+
+
 def _pr_oracle() -> str:
-    body = [
+    return unrolled_sql(
         """
         WITH edges AS (
             SELECT DISTINCT o.o_custkey * 2 AS src, l.l_suppkey * 2 + 1 AS dst
@@ -421,41 +430,36 @@ def _pr_oracle() -> str:
             SELECT src, CAST(count(*) AS DOUBLE) AS outdeg FROM edges GROUP BY src
         ), rk0 AS (
             SELECT n.node, round(1.0 / nn.nn, 12) AS pr FROM nodes n CROSS JOIN nn
-        )"""
-    ]
-    for i in range(_PR_ITERS):
-        body.append(
-            f""", c{i} AS (
+        )""",
+        lambda i: f""", c{i - 1} AS (
             SELECT e.dst AS node, sum(r.pr / d.outdeg) AS contrib
             FROM edges e
             JOIN deg d ON d.src = e.src
-            JOIN rk{i} r ON r.node = e.src
+            JOIN rk{i - 1} r ON r.node = e.src
             GROUP BY e.dst
-        ), g{i} AS (
+        ), g{i - 1} AS (
             SELECT coalesce(sum(r.pr), 0) AS dmass
-            FROM rk{i} r LEFT JOIN deg d ON d.src = r.node
+            FROM rk{i - 1} r LEFT JOIN deg d ON d.src = r.node
             WHERE d.src IS NULL
-        ), rk{i + 1} AS (
+        ), rk{i} AS (
             SELECT n.node,
                    round((1 - {_PR_D}) / nn.nn
-                         + {_PR_D} * (coalesce(c.contrib, 0) + g{i}.dmass / nn.nn),
+                         + {_PR_D} * (coalesce(c.contrib, 0) + g{i - 1}.dmass / nn.nn),
                          {_PR_SNAP}) AS pr
             FROM nodes n
             CROSS JOIN nn
-            CROSS JOIN g{i}
-            LEFT JOIN c{i} c ON c.node = n.node
-        )"""
-        )
-    body.append(
+            CROSS JOIN g{i - 1}
+            LEFT JOIN c{i - 1} c ON c.node = n.node
+        )""",
+        _PR_ITERS,
         f"""
         SELECT CAST((node - 1) / 2 AS BIGINT) AS s_suppkey,
                round(pr, 9) AS pagerank
         FROM rk{_PR_ITERS}
         WHERE node % 2 = 1
         ORDER BY pagerank DESC, s_suppkey
-        LIMIT {_PR_TOPK}"""
+        LIMIT {_PR_TOPK}""",
     )
-    return "".join(body)
 
 
 _KCORE_ITERS = 5  # fixed peeling rounds — deterministic on both engines
@@ -887,7 +891,7 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _hits_oracle() -> str:
-    body = [
+    return unrolled_sql(
         """
     WITH e AS MATERIALIZED (
         SELECT DISTINCT CAST(o.o_custkey AS BIGINT) AS cust,
@@ -895,14 +899,10 @@ def _hits_oracle() -> str:
         FROM orders o JOIN lineitem l ON o.o_orderkey = l.l_orderkey
     ), a0 AS MATERIALIZED (
         SELECT DISTINCT supp, CAST(1000000 AS BIGINT) AS a6 FROM e
-    )"""
-    ]
-    for i in range(1, _HITS_ITERS + 1):
-        prev = f"a{i - 1}"
-        body.append(
-            f""", hr{i} AS MATERIALIZED (
+    )""",
+        lambda i: f""", hr{i} AS MATERIALIZED (
         SELECT e.cust, CAST(sum(p.a6) AS BIGINT) AS raw
-        FROM e JOIN {prev} p USING (supp) GROUP BY 1
+        FROM e JOIN a{i - 1} p USING (supp) GROUP BY 1
     ), h{i} AS MATERIALIZED (
         SELECT cust, CAST(raw * 1000000 // (SELECT max(raw) FROM hr{i})
                           AS BIGINT) AS h6
@@ -914,21 +914,18 @@ def _hits_oracle() -> str:
         SELECT supp, CAST(raw * 1000000 // (SELECT max(raw) FROM ar{i})
                           AS BIGINT) AS a6
         FROM ar{i}
-    )"""
-        )
-    t = _HITS_ITERS
-    body.append(
+    )""",
+        _HITS_ITERS,
         f"""
     SELECT * FROM (
         SELECT 'hub' AS side, cust AS node, h6 AS score6
-        FROM h{t} ORDER BY h6 DESC, cust LIMIT {_HITS_TOPK})
+        FROM h{_HITS_ITERS} ORDER BY h6 DESC, cust LIMIT {_HITS_TOPK})
     UNION ALL
     SELECT * FROM (
         SELECT 'auth' AS side, supp AS node, a6 AS score6
-        FROM a{t} ORDER BY a6 DESC, supp LIMIT {_HITS_TOPK})
-    """
+        FROM a{_HITS_ITERS} ORDER BY a6 DESC, supp LIMIT {_HITS_TOPK})
+    """,
     )
-    return "".join(body)
 
 
 def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1024,7 +1021,7 @@ _ASSORT_ORACLE = """
 
 
 def _lpa_oracle() -> str:
-    body = [
+    return unrolled_sql(
         """
     WITH raw AS MATERIALIZED (
         SELECT DISTINCT CAST(o.o_custkey * 2 AS BIGINT) AS src,
@@ -1034,14 +1031,10 @@ def _lpa_oracle() -> str:
         SELECT src, dst FROM raw UNION ALL SELECT dst, src FROM raw
     ), l0 AS MATERIALIZED (
         SELECT DISTINCT src AS node, src AS label FROM e
-    )"""
-    ]
-    for i in range(1, _LPA_ITERS + 1):
-        prev = f"l{i - 1}"
-        body.append(
-            f""", c{i} AS (
+    )""",
+        lambda i: f""", c{i} AS (
         SELECT e.src AS node, p.label, CAST(count(*) AS BIGINT) AS cnt
-        FROM e JOIN {prev} p ON e.dst = p.node GROUP BY 1, 2
+        FROM e JOIN l{i - 1} p ON e.dst = p.node GROUP BY 1, 2
     ), l{i} AS MATERIALIZED (
         SELECT node, label FROM (
             SELECT node, label,
@@ -1049,21 +1042,19 @@ def _lpa_oracle() -> str:
                                       ORDER BY cnt DESC, label) AS rn
             FROM c{i}
         ) WHERE rn = 1
-    )"""
-        )
-    body.append(
+    )""",
+        _LPA_ITERS,
         f"""
     SELECT label AS community, CAST(count(*) AS BIGINT) AS n_members,
            CAST(sum(node) AS BIGINT) AS member_sum
     FROM l{_LPA_ITERS} GROUP BY 1
     ORDER BY n_members DESC, community LIMIT {_LPA_TOPK}
-    """
+    """,
     )
-    return "".join(body)
 
 
 def _kcore_oracle() -> str:
-    body = [
+    return unrolled_sql(
         f"""
         WITH e0 AS MATERIALIZED (
             SELECT DISTINCT o.o_custkey * 2 AS a, l.l_suppkey * 2 + 1 AS b
@@ -1084,31 +1075,27 @@ def _kcore_oracle() -> str:
         ), kf AS MATERIALIZED (
             SELECT min(deg) AS k FROM cum
             WHERE cum >= ceil({_KCORE_Q} * n0)
-        )"""
-    ]
-    for i in range(1, _KCORE_ITERS + 1):
-        prev = f"e{i - 1}"
-        body.append(
-            f""", dg{i} AS MATERIALIZED (
+        )""",
+        lambda i: f""", dg{i} AS MATERIALIZED (
             SELECT node, count(*) AS deg FROM (
-                SELECT a AS node FROM {prev} UNION ALL SELECT b FROM {prev}
+                SELECT a AS node FROM e{i - 1} UNION ALL SELECT b FROM e{i - 1}
             ) GROUP BY node
         ), v{i} AS MATERIALIZED (
             SELECT node FROM dg{i}, kf WHERE deg >= k
         ), e{i} AS MATERIALIZED (
-            SELECT a, b FROM {prev}
+            SELECT a, b FROM e{i - 1}
             WHERE a IN (SELECT node FROM v{i})
               AND b IN (SELECT node FROM v{i})
-        )"""
-        )
-    selects = [
-        f"""SELECT CAST({i} AS BIGINT) AS iter,
+        )""",
+        _KCORE_ITERS,
+        "\n"
+        + "\nUNION ALL\n".join(
+            f"""SELECT CAST({i} AS BIGINT) AS iter,
                (SELECT CAST(count(*) AS BIGINT) FROM v{i}) AS n_nodes,
                (SELECT CAST(count(*) AS BIGINT) FROM e{i}) AS n_edges"""
-        for i in range(1, _KCORE_ITERS + 1)
-    ]
-    body.append("\n" + "\nUNION ALL\n".join(selects))
-    return "".join(body)
+            for i in range(1, _KCORE_ITERS + 1)
+        ),
+    )
 
 
 _LINKPRED_ORACLE = f"""

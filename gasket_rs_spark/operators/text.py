@@ -2064,9 +2064,9 @@ def q_keyword_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _textrank_oracle() -> str:
-    from gasket_rs_spark.operators.graph import _PR_D, _PR_ITERS, _PR_SNAP
+    from gasket_rs_spark.operators.graph import _PR_D, _PR_ITERS, _PR_SNAP, unrolled_sql
 
-    body = [
+    return unrolled_sql(
         f"""
         WITH toks AS (
             SELECT list_filter(string_split(text, ' '),
@@ -2094,40 +2094,35 @@ def _textrank_oracle() -> str:
         ), rk0 AS (
             SELECT n.node, round(1.0 / nn.nn, {_PR_SNAP}) AS pr
             FROM nodes n CROSS JOIN nn
-        )"""
-    ]
-    for i in range(_PR_ITERS):
-        body.append(
-            f""", c{i} AS (
+        )""",
+        lambda i: f""", c{i - 1} AS (
             SELECT e.dst AS node, sum(r.pr / d.outdeg) AS contrib
             FROM edges e
             JOIN deg d ON d.src = e.src
-            JOIN rk{i} r ON r.node = e.src
+            JOIN rk{i - 1} r ON r.node = e.src
             GROUP BY e.dst
-        ), g{i} AS (
+        ), g{i - 1} AS (
             SELECT coalesce(sum(r.pr), 0) AS dmass
-            FROM rk{i} r LEFT JOIN deg d ON d.src = r.node
+            FROM rk{i - 1} r LEFT JOIN deg d ON d.src = r.node
             WHERE d.src IS NULL
-        ), rk{i + 1} AS (
+        ), rk{i} AS (
             SELECT n.node,
                    round((1 - {_PR_D}) / nn.nn
                          + {_PR_D} * (coalesce(c.contrib, 0)
-                                      + g{i}.dmass / nn.nn),
+                                      + g{i - 1}.dmass / nn.nn),
                          {_PR_SNAP}) AS pr
             FROM nodes n
             CROSS JOIN nn
-            CROSS JOIN g{i}
-            LEFT JOIN c{i} c ON c.node = n.node
-        )"""
-        )
-    body.append(
+            CROSS JOIN g{i - 1}
+            LEFT JOIN c{i - 1} c ON c.node = n.node
+        )""",
+        _PR_ITERS,
         f"""
         SELECT node AS word, round(pr, 9) AS score
         FROM rk{_PR_ITERS}
         ORDER BY score DESC, word
-        LIMIT {_TEXTRANK_TOPK}"""
+        LIMIT {_TEXTRANK_TOPK}""",
     )
-    return "".join(body)
 
 
 def _source_vocab(spark: SparkSession, sf_dir: str, **aggs: Column) -> DataFrame:
