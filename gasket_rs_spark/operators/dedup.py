@@ -508,13 +508,17 @@ def _lsh_candidates_plan(b: DataFrame) -> DataFrame:
     """The candidate plan over a (persisted) banding frame — split from
     _lsh_candidates so tests can assert the physical shape (hot-key
     broadcast, no cartesian) before the candidate-set checkpoint
-    truncates the lineage. Every checkpoint in the pipeline is LAZY
-    (r21 session 3): all consumers sit under the caller's single
-    action, which materializes (and caches) each frame exactly once —
-    same compute, no mid-build job barriers (interleaved A/B minima at
-    sf0.1: minhash_lsh 1.78 → 1.59 s, components_lsh 2.23 → 1.98 s,
-    all pairs favor, identical rows); the returned candidate plan
-    stays lazy and fuses with the caller's verify join."""
+    truncates the lineage. Every checkpoint in the pipeline is
+    ``localCheckpoint(eager=False)`` (r21 session 3), which beat eager
+    checkpoints (interleaved A/B minima at sf0.1: minhash_lsh 1.78 →
+    1.59 s, components_lsh 2.23 → 1.98 s, all pairs favor, identical
+    rows). It is not job-free at build time: under adaptive execution
+    the checkpoint runs the shuffle-map stages below it when it is
+    built, so building the witness already starts jobs (3 for
+    dedup_minhash_lsh, 13 for dedup_components_lsh at sf0.1, counted by
+    job group), and the caller's action computes each checkpointed
+    frame's final stage once. The returned candidate plan itself is not
+    checkpointed and fuses with the caller's verify join."""
     stats = b.groupBy("band", "bucket").agg(
         F.count("*").alias("occ"), F.min("doc_id").alias("rep")
     )
@@ -527,7 +531,8 @@ def _lsh_candidates_plan(b: DataFrame) -> DataFrame:
     # frame (bounded at n_banded/256 rows by the occupancy cap) computes
     # it once; interleaved A/B at sf0.1: minhash_lsh min 2.494 s vs
     # 2.66 s, identical rows — and one fewer corpus×BANDS aggregation
-    # pass at scale. Lazy since session 3 (see _lsh_candidates_plan).
+    # pass at scale. Not eager since session 3 (see _lsh_candidates_plan
+    # for the jobs it still starts at build time).
     hot = (
         stats.where(F.col("occ") > _MAX_BUCKET_OCCUPANCY)
         .select("band", "bucket", "rep")
