@@ -306,11 +306,9 @@ def q_sketch_count_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to count-min — vocab-sized explode into a
     constant d×w grid (cell-additive under batch merge), broadcast
     probe of the top-k."""
-    toks = _tokens_exploded(load(spark, sf_dir, "documents"))
-    tok_counts = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
-    cells = tok_counts.select(
-        "cnt",
-        F.explode(
+    def cells_of_tok():
+        # one (row, column, sign) cell per hash row, exploded
+        return F.explode(
             F.array(*[
                 F.struct(
                     F.lit(i).alias("cs_row"),
@@ -319,7 +317,13 @@ def q_sketch_count_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 )
                 for i in range(_CM_D)
             ])
-        ).alias("cell"),
+        ).alias("cell")
+
+    toks = _tokens_exploded(load(spark, sf_dir, "documents"))
+    tok_counts = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
+    cells = tok_counts.select(
+        "cnt",
+        cells_of_tok(),
     ).select("cnt", "cell.cs_row", "cell.cs_col", "cell.sgn")
     grid = cells.groupBy("cs_row", "cs_col").agg(
         F.sum(F.col("sgn") * F.col("cnt")).cast("bigint").alias("cs_cnt")
@@ -328,16 +332,7 @@ def q_sketch_count_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = top.select(
         "tok",
         F.col("cnt").cast("bigint").alias("exact_cnt"),
-        F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("cs_row"),
-                    _cs_pos(F.col("tok"), i).alias("cs_col"),
-                    _cs_sign(F.col("tok"), i).alias("sgn"),
-                )
-                for i in range(_CM_D)
-            ])
-        ).alias("cell"),
+        cells_of_tok(),
     ).select("tok", "exact_cnt", "cell.cs_row", "cell.cs_col", "cell.sgn")
     est = (
         probes.join(F.broadcast(grid), ["cs_row", "cs_col"])
