@@ -330,13 +330,10 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                     "first_byte": [int(a[0]) if a.size else None for a in arrays],
                     "last_byte": [int(a[-1]) if a.size else None for a in arrays],
                     "mean_byte": [
-                        # floor(x*1e6+0.5)/1e6: same IEEE expression the
-                        # oracle uses (round() impls disagree on half-grid).
                         # int(a.sum())/size (not a.mean()): pairwise-
                         # summation float differs from the oracle's exact
                         # integer-sum-then-divide on low-order bits.
-                        math.floor(int(a.sum()) / a.size * 1000000 + 0.5) / 1000000
-                        if a.size else None
+                        _mean6(int(a.sum()), a.size) if a.size else None
                         for a in arrays
                     ],
                 }
@@ -385,11 +382,8 @@ def q_multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
                     build_media_payload(bytes(payload), modality), modality
                 )
                 vals = media.values
-                # int(sum)/n then floor-snap: identical IEEE expression to
-                # the oracle (see q_multimodal_features mean_byte note).
-                mean = math.floor(
-                    int(vals.sum()) / vals.size * 1000000 + 0.5
-                ) / 1000000
+                # int(sum)/n, as in q_multimodal_features' mean_byte
+                mean = _mean6(int(vals.sum()), vals.size)
                 rows.append(
                     (
                         doc_id,

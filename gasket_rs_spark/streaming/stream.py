@@ -240,9 +240,7 @@ def run_to_memory_sink(
         _run_available_now(writer, ckpt, query_name, timeout_sec)
 
 
-def _run_available_now(
-    writer: DataStreamWriter, ckpt: str, name: str, timeout_sec: int = 180
-) -> None:
+def _run_available_now(writer: DataStreamWriter, ckpt: str, name: str, timeout_sec: int) -> None:
     """Run ``writer`` under ``Trigger.AvailableNow`` until the source is
     drained (WorkSchedule::Done); past ``timeout_sec`` the query is
     stopped and ``TimeoutError`` raised, so no query outlives the call."""
