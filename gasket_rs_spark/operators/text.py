@@ -933,17 +933,24 @@ def q_text_span_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     return span_dedup(load(spark, sf_dir, "documents"))
 
 
-def span_dedup(docs: DataFrame) -> DataFrame:
-    """Core of q_text_span_dedup over any (doc_id, text) frame."""
+def _word_grams(docs: DataFrame, k: int) -> DataFrame:
+    """(doc_id, pos, tok, gram) for every full k-word window of a
+    (doc_id, text) frame: gram = the k space-split tokens from pos on,
+    joined by spaces. concat (not concat_ws): a NULL lead makes the gram
+    NULL, which drops the trailing stubs."""
     toks = docs.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
-    # concat (not concat_ws): NULL lead => NULL gram drops trailing stubs
     gram = F.concat(
         F.col("tok"),
-        *[x for i in range(1, _SPAN_W) for x in (F.lit(" "), F.lead("tok", i).over(w))],
+        *[x for i in range(1, k) for x in (F.lit(" "), F.lead("tok", i).over(w))],
     )
+    return toks.withColumn("gram", gram).where(F.col("gram").isNotNull())
+
+
+def span_dedup(docs: DataFrame) -> DataFrame:
+    """Core of q_text_span_dedup over any (doc_id, text) frame."""
     # (doc_id, pos) struct min: same collision-free first-occurrence key
     # as line_dedup (ADVICE r8 — the old doc_id*2^20+pos int64 encoding
     # broke ordering for documents past 2^20 tokens).
@@ -954,11 +961,7 @@ def span_dedup(docs: DataFrame) -> DataFrame:
     # partition) ran once per consumer. One materialization per action
     # instead (the tf/df pattern from text_tfidf_top). Interleaved A/B
     # at sf0.1: min 2.511 -> 2.054 s (-18%), identical rows.
-    grams = (
-        toks.withColumn("gram", gram)
-        .where(F.col("gram").isNotNull())
-        .localCheckpoint(eager=False)
-    )
+    grams = _word_grams(docs, _SPAN_W).localCheckpoint(eager=False)
     firsts = grams.groupBy("gram").agg(
         F.min(F.struct("doc_id", "pos")).alias("first_k")
     )
@@ -1503,15 +1506,7 @@ def q_text_novelty(
     ~10¹⁸ grams) — pinned by tests/test_text_pipeline.py::
     test_novelty_hashed_matches_string. Kept string-keyed by default so
     the DuckDB twin stays byte-comparable."""
-    toks = load(spark, sf_dir, "documents").select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    gram = F.concat(
-        F.col("tok"),
-        *[x for i in range(1, _SPAN_W) for x in (F.lit(" "), F.lead("tok", i).over(w))],
-    )
-    doc_grams = toks.withColumn("gram", gram).where(F.col("gram").isNotNull())
+    doc_grams = _word_grams(load(spark, sf_dir, "documents"), _SPAN_W)
     if hashed:
         # 8-byte shuffle keys from here down — the 100 TB variant
         doc_grams = doc_grams.select(
@@ -1680,19 +1675,7 @@ def winnow_fingerprints(docs: DataFrame) -> DataFrame:
     """Selected winnowing fingerprints ``(doc_id, mh)``, distinct, full
     windows only — the core of q_winnowing_fingerprint over any
     (doc_id, text) frame."""
-    toks = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
-    )
-    w = Window.partitionBy("doc_id").orderBy("pos")
-    gram = F.concat(
-        F.col("tok"),
-        *[x for i in range(1, _WIN_K) for x in (F.lit(" "), F.lead("tok", i).over(w))],
-    )
-    h = (
-        toks.withColumn("gram", gram)
-        .where(F.col("gram").isNotNull())
-        .select("doc_id", "pos", F.md5("gram").alias("h"))
-    )
+    h = _word_grams(docs, _WIN_K).select("doc_id", "pos", F.md5("gram").alias("h"))
     wwin = Window.partitionBy("doc_id").orderBy("pos").rowsBetween(0, _WIN_W - 1)
     fp = (
         h.select(
