@@ -279,6 +279,19 @@ def q_supplier_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
 _SESSION_GAP_SEC = 1800
 
 
+def _sessionized(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Events with ``session``: the 30-minute-gap island id within each
+    user, a running count of gap breaks in (ts_sec, event_id) order."""
+    w_user = Window.partitionBy("user_id").orderBy("ts_sec", "event_id")
+    gap_break = F.when(
+        (F.col("ts_sec") - F.lag("ts_sec").over(w_user)) > _SESSION_GAP_SEC, 1
+    ).otherwise(0)
+    return events_with_sec(spark, sf_dir).withColumn(
+        "session",
+        F.sum(gap_break).over(w_user.rowsBetween(Window.unboundedPreceding, 0)),
+    )
+
+
 def q_session_path_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Event-type transition matrix within behavioral sessions: sessions
     are 30-min-gap islands per user (same cumulative-sum sessionization
@@ -286,17 +299,7 @@ def q_session_path_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     one lead() inside each session, counted globally — the Markov-chain
     input for funnel modeling / next-action prediction. Two windows and
     one aggregation, all partitioned by user."""
-    ev = events_with_sec(spark, sf_dir)
-    w_user = Window.partitionBy("user_id").orderBy("ts_sec", "event_id")
-    gap_break = F.when(
-        (F.col("ts_sec") - F.lag("ts_sec").over(w_user)) > _SESSION_GAP_SEC, 1
-    ).otherwise(0)
-    sess = ev.withColumn(
-        "session",
-        F.sum(gap_break).over(
-            w_user.rowsBetween(Window.unboundedPreceding, 0)
-        ),
-    )
+    sess = _sessionized(spark, sf_dir)
     w_sess = Window.partitionBy("user_id", "session").orderBy("ts_sec", "event_id")
     pairs = sess.select(
         F.col("event_type").alias("from_type"),
@@ -399,15 +402,8 @@ def q_session_trigrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     matrix cannot). Same 30-min-gap sessionization, two lead()s inside
     one session window, global count, deterministic (n DESC, types)
     top-k."""
-    ev = events_with_sec(spark, sf_dir)
+    sess = _sessionized(spark, sf_dir)
     w_user = Window.partitionBy("user_id").orderBy("ts_sec", "event_id")
-    gap_break = F.when(
-        (F.col("ts_sec") - F.lag("ts_sec").over(w_user)) > _SESSION_GAP_SEC, 1
-    ).otherwise(0)
-    sess = ev.withColumn(
-        "session",
-        F.sum(gap_break).over(w_user.rowsBetween(Window.unboundedPreceding, 0)),
-    )
     # Leads masked WITHIN the user window instead of a second
     # (user_id, session)-partitioned window (r21): session ids are
     # monotonic within the user ordering, so lead(session,2)==session
