@@ -209,6 +209,18 @@ def encode_words(words: DataFrame, merges: list[dict]) -> DataFrame:
     return words.mapInPandas(kernel, "w string, n_subtok bigint, encoding string")
 
 
+def _encoded_words(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFrame]:
+    """(doc_id, w) for every non-empty space-split word of the corpus,
+    and the vocabulary of its distinct words encoded with the trained
+    merge table (``encode_words``)."""
+    docs = load(spark, sf_dir, "documents")
+    merges = _trained_merges(spark, sf_dir, _BPE_MERGES)
+    toks = docs.select(
+        "doc_id", F.explode(F.split("text", " ")).alias("w")
+    ).where(F.length("w") > 0)
+    return toks, encode_words(toks.select("w").distinct(), merges)
+
+
 def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     """BPE ENCODE — the production tokenization step after training:
     every document's text is segmented with the learned merge table and
@@ -224,12 +236,7 @@ def q_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     driver since round 11 (unrolled-CTE training twin, module
     docstring); the train→encode round trip stays exact-pinned vs the
     pure-Python reference in tests/test_bpe.py."""
-    docs = load(spark, sf_dir, "documents")
-    merges = _trained_merges(spark, sf_dir, _BPE_MERGES)
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).where(F.length("w") > 0)
-    vocab = encode_words(toks.select("w").distinct(), merges)
+    toks, vocab = _encoded_words(spark, sf_dir)
     per_doc = (
         toks.join(vocab.select("w", "n_subtok"), "w")
         .groupBy("doc_id")
@@ -299,12 +306,7 @@ def q_bpe_pack_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gasket_rs_spark.operators.stats import _EPOCH_N, _EPOCH_SHARDS
     from gasket_rs_spark.operators.text import _PACK_BUCKETS, _PACK_BUDGET
 
-    docs = load(spark, sf_dir, "documents")
-    merges = _trained_merges(spark, sf_dir, _BPE_MERGES)
-    toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
-    ).where(F.length("w") > 0)
-    vocab = encode_words(toks.select("w").distinct(), merges)
+    toks, vocab = _encoded_words(spark, sf_dir)
     per_doc = (
         toks.join(F.broadcast(vocab.select("w", "n_subtok")), "w")
         .groupBy("doc_id")
