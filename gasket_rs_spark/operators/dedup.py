@@ -1805,6 +1805,16 @@ _FUZZY_ORACLE = """
 _ER_LEV_MAX = 2  # edit-distance threshold for a candidate duplicate pair
 
 
+def _lev_match_stats(pairs: DataFrame, key: str) -> DataFrame:
+    """Per ``key`` over (key, lev) candidate pairs: the pair count, the
+    pairs within ``_ER_LEV_MAX`` edits and the smallest distance."""
+    return pairs.groupBy(key).agg(
+        F.count("*").cast("bigint").alias("n_pairs"),
+        F.sum((F.col("lev") <= _ER_LEV_MAX).cast("bigint")).cast("bigint").alias("n_matches"),
+        F.min("lev").cast("bigint").alias("min_lev"),
+    )
+
+
 def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ENTITY RESOLUTION via blocking + pairwise edit distance — the
     record-linkage pass a customer-MDM pipeline runs to find
@@ -1841,14 +1851,7 @@ def q_entity_resolution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_customers")
     )
     return (
-        pairs.groupBy("segment")
-        .agg(
-            F.count("*").cast("bigint").alias("n_pairs"),
-            F.sum((F.col("lev") <= _ER_LEV_MAX).cast("bigint"))
-            .cast("bigint")
-            .alias("n_matches"),
-            F.min("lev").cast("bigint").alias("min_lev"),
-        )
+        _lev_match_stats(pairs, "segment")
         .join(per_seg, "segment")
         .select(
             "segment",
@@ -1906,14 +1909,7 @@ def q_sorted_neighborhood_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n_customers")
     )
     return (
-        pairs.groupBy("c_nationkey")
-        .agg(
-            F.count("*").cast("bigint").alias("n_pairs"),
-            F.sum((F.col("lev") <= _ER_LEV_MAX).cast("bigint"))
-            .cast("bigint")
-            .alias("n_matches"),
-            F.min("lev").cast("bigint").alias("min_lev"),
-        )
+        _lev_match_stats(pairs, "c_nationkey")
         .join(per_n, "c_nationkey")
         .select(
             "c_nationkey", "n_customers", "n_pairs", "n_matches", "min_lev"
