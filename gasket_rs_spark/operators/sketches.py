@@ -215,6 +215,17 @@ def _cm_pos(tok_col, i: int):
     return F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % _CM_W
 
 
+def _cm_cells():
+    """The ``tok`` column's d count-min cells (cm_row, cm_col), exploded
+    as ``cell``."""
+    return F.explode(
+        F.array(*[
+            F.struct(F.lit(i).alias("cm_row"), _cm_pos(F.col("tok"), i).alias("cm_col"))
+            for i in range(_CM_D)
+        ])
+    ).alias("cell")
+
+
 def count_min_build(tok_counts: DataFrame) -> DataFrame:
     """(tok, cnt) -> sketch grid rows (cm_row, cm_col, cm_cnt).
 
@@ -224,12 +235,7 @@ def count_min_build(tok_counts: DataFrame) -> DataFrame:
     output is a constant d×w = 2048 rows."""
     cells = tok_counts.select(
         "cnt",
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(i).alias("cm_row"), _cm_pos(F.col("tok"), i).alias("cm_col"))
-                for i in range(_CM_D)
-            ])
-        ).alias("cell"),
+        _cm_cells(),
     )
     return cells.groupBy("cell.cm_row", "cell.cm_col").agg(
         F.sum("cnt").alias("cm_cnt")
@@ -253,12 +259,7 @@ def q_sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = top.select(
         "tok",
         F.col("cnt").alias("exact_cnt"),
-        F.explode(
-            F.array(*[
-                F.struct(F.lit(i).alias("cm_row"), _cm_pos(F.col("tok"), i).alias("cm_col"))
-                for i in range(_CM_D)
-            ])
-        ).alias("cell"),
+        _cm_cells(),
     ).select("tok", "exact_cnt", "cell.cm_row", "cell.cm_col")
     est = (
         probes.join(F.broadcast(grid), ["cm_row", "cm_col"])
@@ -288,6 +289,21 @@ def _cs_sign(tok_col, i: int):
     return F.when(nib < 8, F.lit(1)).otherwise(F.lit(-1)).cast("bigint")
 
 
+def _cs_cells():
+    """The ``tok`` column's d count-sketch cells (cs_row, cs_col, sgn),
+    exploded as ``cell``."""
+    return F.explode(
+        F.array(*[
+            F.struct(
+                F.lit(i).alias("cs_row"),
+                _cs_pos(F.col("tok"), i).alias("cs_col"),
+                _cs_sign(F.col("tok"), i).alias("sgn"),
+            )
+            for i in range(_CM_D)
+        ])
+    ).alias("cell")
+
+
 def q_sketch_count_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-Sketch frequency estimates (Charikar, Chen & Farach-Colton
     2002) for the corpus top-10 tokens, side by side with the exact
@@ -306,24 +322,11 @@ def q_sketch_count_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to count-min — vocab-sized explode into a
     constant d×w grid (cell-additive under batch merge), broadcast
     probe of the top-k."""
-    def cells_of_tok():
-        # one (row, column, sign) cell per hash row, exploded
-        return F.explode(
-            F.array(*[
-                F.struct(
-                    F.lit(i).alias("cs_row"),
-                    _cs_pos(F.col("tok"), i).alias("cs_col"),
-                    _cs_sign(F.col("tok"), i).alias("sgn"),
-                )
-                for i in range(_CM_D)
-            ])
-        ).alias("cell")
-
     toks = _tokens_exploded(load(spark, sf_dir, "documents"))
     tok_counts = toks.groupBy("tok").agg(F.count("*").alias("cnt"))
     cells = tok_counts.select(
         "cnt",
-        cells_of_tok(),
+        _cs_cells(),
     ).select("cnt", "cell.cs_row", "cell.cs_col", "cell.sgn")
     grid = cells.groupBy("cs_row", "cs_col").agg(
         F.sum(F.col("sgn") * F.col("cnt")).cast("bigint").alias("cs_cnt")
@@ -332,7 +335,7 @@ def q_sketch_count_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes = top.select(
         "tok",
         F.col("cnt").cast("bigint").alias("exact_cnt"),
-        cells_of_tok(),
+        _cs_cells(),
     ).select("tok", "exact_cnt", "cell.cs_row", "cell.cs_col", "cell.sgn")
     est = (
         probes.join(F.broadcast(grid), ["cs_row", "cs_col"])
