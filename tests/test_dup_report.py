@@ -13,7 +13,7 @@ from dup_report import scan  # noqa: E402
 # Duplicated code lines in the package. The budget only goes down: lower
 # it to the new count when a change removes copies; raising it needs a
 # reason in CHANGES.md.
-DUP_BUDGET = 269
+DUP_BUDGET = 194
 
 BODY = [
     "a = load(x)",
