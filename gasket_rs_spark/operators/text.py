@@ -251,8 +251,8 @@ def q_text_tfidf_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single-scan-composite pattern as rag_retrieval_pipeline. Under
     # adaptive execution building it still runs tf's shuffle-map stage
     # (2 build-time jobs for text_tfidf_top at sf0.1, counted by job
-    # group); the action computes its final stage once. Plan: 2 scans + 2 explodes →
-    # 1 scan + 1 explode; measured interleaved at sf0.1 min 0.515 s vs
+    # group); the action computes its final stage once. Plan: 2 scans +
+    # 2 explodes → 1 scan + 1 explode; measured interleaved at sf0.1 min 0.515 s vs
     # 0.842 s, identical rows; oracle EXACT ×3 SFs. Same
     # executor-loss caveat as every localCheckpoint site (SCALE.md): a
     # 1000-executor run swaps these to reliable checkpoint/persist.
