@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gasket_rs_spark import keys
 from gasket_rs_spark.grid import snap
 from gasket_rs_spark.tables import load
 
@@ -34,7 +35,7 @@ def q_string_funcs(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.substring("p_name", 1, 4).alias("name_pre4"),
             F.length("p_name").alias("name_len"),
             F.concat_ws("|", "p_brand", "p_type").alias("brand_type"),
-            F.size(F.split("p_name", " ")).cast("bigint").alias("n_words"),
+            F.size(keys.tokens("p_name")).cast("bigint").alias("n_words"),
             F.regexp_extract("p_name", "([a-z]+)$", 1).alias("last_word"),
             F.regexp_replace("p_type", "[AEIOU]", "_").alias("type_devoweled"),
             F.instr("p_name", "e").cast("bigint").alias("first_e"),
@@ -134,7 +135,7 @@ def q_array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Array manipulation depth: sort / slice / contains / position /
     distinct-count over tokenized text (arrays built in-plan)."""
     docs = load(spark, sf_dir, "documents")
-    toks = F.split("text", " ")
+    toks = keys.tokens()
     sorted_toks = F.array_sort(toks)
     return docs.select(
         "doc_id",
@@ -391,7 +392,7 @@ def q_explode_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     """explode_outer: rows with empty arrays survive with a NULL element
     (the OutputMap/splitter edge case — R6/R7 null path)."""
     docs = load(spark, sf_dir, "documents")
-    rare = F.filter(F.split("text", " "), lambda t: t.startswith("v"))
+    rare = F.filter(keys.tokens(), lambda t: t.startswith("v"))
     ex = docs.select("doc_id", F.explode_outer(rare).alias("vtoken"))
     return ex.groupBy("doc_id").agg(
         F.count("*").alias("n_rows"),

@@ -46,6 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from gasket_rs_spark import keys
 from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
@@ -56,7 +57,7 @@ def word_frequencies(docs: DataFrame) -> DataFrame:
     """(syms: array<string>, freq) — each distinct whitespace word as a
     character-symbol sequence with its corpus frequency. The ONE pass
     over the raw corpus; everything after runs on this bounded frame."""
-    words = docs.select(F.explode(F.split("text", " ")).alias("w")).where(
+    words = docs.select(F.explode(keys.tokens()).alias("w")).where(
         F.length("w") > 0
     )
     return words.groupBy("w").agg(F.count("*").alias("freq")).select(
@@ -216,7 +217,7 @@ def _encoded_words(spark: SparkSession, sf_dir: str) -> tuple[DataFrame, DataFra
     docs = load(spark, sf_dir, "documents")
     merges = _trained_merges(spark, sf_dir, _BPE_MERGES)
     toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("w")
+        "doc_id", F.explode(keys.tokens()).alias("w")
     ).where(F.length("w") > 0)
     return toks, encode_words(toks.select("w").distinct(), merges)
 
@@ -315,7 +316,7 @@ def q_bpe_pack_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
     h = F.md5(F.col("doc_id").cast("string"))
     keyed_docs = per_doc.select("doc_id", "n_bpe", h.alias("h")).withColumn(
         "bucket",
-        F.conv(F.substring("h", 1, 2), 16, 10).cast("bigint") % _PACK_BUCKETS,
+        keys.hex_int("h", 2) % _PACK_BUCKETS,
     )
     wcum = (
         Window.partitionBy("bucket")
@@ -355,10 +356,7 @@ def q_bpe_pack_shard(spark: SparkSession, sf_dir: str) -> DataFrame:
         "batch_tokens",
         "epoch",
         salted.alias("md5hex"),
-        (
-            F.conv(F.substring(salted, 1, 2), 16, 10).cast("bigint")
-            % _EPOCH_SHARDS
-        ).alias("shard"),
+        (keys.hex_int(salted, 2) % _EPOCH_SHARDS).alias("shard"),
     )
     w = Window.partitionBy("epoch", "shard").orderBy("md5hex", "batch_uid")
     ranked = keyed.withColumn("ordinal", F.row_number().over(w).cast("bigint"))
@@ -391,7 +389,7 @@ def q_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     merges = _trained_merges(spark, sf_dir, _BPE_MERGES)
     toks = docs.select(
-        "doc_id", "lang", F.explode(F.split("text", " ")).alias("w")
+        "doc_id", "lang", F.explode(keys.tokens()).alias("w")
     ).where(F.length("w") > 0)
     vocab = encode_words(toks.select("w").distinct(), merges)
     return (
@@ -662,7 +660,7 @@ def q_unigram_lm_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     unrolls the identical DP as materialized CTEs."""
     docs = load(spark, sf_dir, "documents")
     words = (
-        docs.select(F.explode(F.split("text", " ")).alias("w"))
+        docs.select(F.explode(keys.tokens()).alias("w"))
         .where(F.length("w") > 0)
         .groupBy("w")
         .agg(F.count("*").cast("bigint").alias("freq"))

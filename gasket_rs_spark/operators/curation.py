@@ -19,6 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark import keys
 from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.operators.dedup import (
     _JACCARD_THRESHOLD,
@@ -41,7 +42,7 @@ def _gated_survivors(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     kept = docs.where(
         (F.length("text") >= _MIN_CHARS)
-        & (F.size(F.split("text", " ")) >= _MIN_TOKENS)
+        & (F.size(keys.tokens()) >= _MIN_TOKENS)
     )
     exact_keep = (
         kept.groupBy(F.xxhash64("text").alias("_h"))
@@ -137,7 +138,7 @@ def q_llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     (n + 47) div 48 — never float ceil, which could flap on exact
     multiples between engines."""
     docs = load(spark, sf_dir, "documents")
-    n_tokens = F.size(F.split("text", " "))
+    n_tokens = F.size(keys.tokens())
     quality = docs.where(
         (F.col("n_chars") >= _MIN_CHARS) & (n_tokens >= _MIN_TOKENS)
     )
@@ -178,10 +179,7 @@ def q_llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # domain-mixture sampling (same md5/rate contract as
     # q_mixture_weighted_sample)
     rate = ((F.substring(F.col("source"), 4, 10).cast("int") % 4) + 1) / F.lit(4.0)
-    frac1024 = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("bigint") % 1024
-    )
+    frac1024 = keys.hex_int(F.md5(F.col("doc_id").cast("string")), 4) % 1024
     kept = deduped.where(frac1024 < rate * 1024)
     return kept.groupBy("source").agg(
         F.count("*").alias("n_docs"),
@@ -211,7 +209,7 @@ def q_quality_filter_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     empty document must read b4 = false, not raise under Spark's
     default-ANSI division (the ADVICE-r11 class)."""
     docs = load(spark, sf_dir, "documents")
-    words = F.filter(F.split("text", " "), lambda x: x != F.lit(""))
+    words = F.filter(keys.tokens(), lambda x: x != F.lit(""))
     n_words = F.size(words)
     n_alpha = F.length(F.regexp_replace("text", "[^A-Za-z]", ""))
     mean_wlen = F.aggregate(
@@ -382,10 +380,7 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         grams.select(
             "doc_id",
             "lang",
-            (
-                F.conv(F.substring(F.md5("g"), 1, 4), 16, 10).cast("bigint")
-                % _DSIR_B
-            ).alias("f"),
+            (keys.hex_int(F.md5("g"), 4) % _DSIR_B).alias("f"),
         )
         .groupBy("doc_id", "lang", "f")
         .agg(F.count("*").cast("bigint").alias("c"))
@@ -426,16 +421,7 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.sum(F.col("c") * F.col("lam6")).cast("bigint").alias("logw6"))
     )
     u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":dsir"))),
-                1,
-                12,
-            ),
-            16,
-            10,
-        )
-        .cast("bigint")
+        keys.hex_int(F.md5(F.concat(F.col("doc_id").cast("string"), F.lit(":dsir"))), 12)
         .cast("double")
         + F.lit(1.0)
     ) / F.lit(_DSIR_U_DEN)

@@ -26,6 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark import keys
 from gasket_rs_spark.operators.similarity import (
     _as_double,
     _corpus_n,
@@ -101,7 +102,7 @@ def _shingles(col: str = "text"):
     # (starts 1..3); changing _SHINGLE_K must fail loudly here instead of
     # silently emitting truncated shingles (ADVICE r21).
     assert _SHINGLE_K == 3, "zip_with chain is written for K=3"
-    toks = F.split(F.col(col), " ")
+    toks = keys.tokens(col)
     n = F.size(toks)
     win = n - (_SHINGLE_K - 1)
     return F.when(
@@ -392,7 +393,7 @@ def _minhash_sigs(docs: DataFrame) -> DataFrame:
                 {"doc_id": out_id, "hs": out_hs, "sig": out_sig, "n_sh": out_n}
             )
 
-    token_hashes = F.transform(F.split("text", " "), lambda t: F.xxhash64(t))
+    token_hashes = F.transform(keys.tokens(), lambda t: F.xxhash64(t))
     # Shared across three plan branches (banding, verify-left,
     # verify-right) via localCheckpoint, NOT persist: a persist here was
     # the same session-lifetime leak class as the r7-ADVICE banding leak
@@ -674,7 +675,7 @@ def _simhash_blocks(docs: DataFrame) -> DataFrame:
     schema = "doc_id bigint, " + ", ".join(
         f"block{b} bigint" for b in range(_SIMHASH_BLOCKS)
     )
-    token_hashes = F.transform(F.split("text", " "), lambda t: F.xxhash64(t))
+    token_hashes = F.transform(keys.tokens(), lambda t: F.xxhash64(t))
     return docs.select("doc_id", token_hashes.alias("th")).mapInPandas(
         block_batches, schema
     )
@@ -833,7 +834,7 @@ def _paragraph_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the same argument as the asof_join/q2 single-scan entries.
         .localCheckpoint(eager=False)
     )
-    toks = F.split("text", " ")
+    toks = keys.tokens()
     # token array hoisted into a named column before the transform
     # (ADVICE r9: the split previously sat INSIDE the chunking lambda —
     # the HOF re-evaluation pattern this codebase forbids elsewhere).
@@ -1618,7 +1619,7 @@ def q_dedup_keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     component-keyed window and one hash agg — both on the same
     component shuffle key, so AQE reuses the exchange."""
     docs = load(spark, sf_dir, "documents").select(
-        "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("n_tok")
+        "doc_id", F.size(keys.tokens()).cast("bigint").alias("n_tok")
     )
     comp = q_dedup_components(spark, sf_dir)
     m = comp.join(docs, "doc_id")
@@ -1678,18 +1679,8 @@ def q_leakage_safe_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select("doc_id")
     pairs = q_dedup_ngram_jaccard(spark, sf_dir).select("doc_a", "doc_b")
     comp = _components(docs, pairs)
-    u = (
-        F.conv(
-            F.substring(
-                F.md5(F.concat(F.col("component").cast("string"), F.lit(":split"))),
-                1,
-                2,
-            ),
-            16,
-            10,
-        ).cast("bigint")
-        % 10
-    )
+    salted = F.md5(F.concat(F.col("component").cast("string"), F.lit(":split")))
+    u = keys.hex_int(salted, 2) % 10
     labeled = comp.withColumn(
         "split",
         F.when(u <= 7, F.lit("train"))
@@ -1752,7 +1743,7 @@ def q_fuzzy_vocab_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     def vocab(src: str) -> DataFrame:
         return (
             docs.where(F.col("source") == src)
-            .select(F.explode(F.split("text", " ")).alias("tok"))
+            .select(F.explode(keys.tokens()).alias("tok"))
             .where(F.length("tok") >= 4)
             .distinct()
         )

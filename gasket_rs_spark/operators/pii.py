@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gasket_rs_spark import keys
 from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
@@ -123,9 +124,7 @@ def q_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count("*").cast("bigint").alias("n")
     )
     u = (
-        F.conv(F.substring(F.md5(F.concat(F.col("event_type"), F.lit(":dp"))), 1, 12), 16, 10)
-        .cast("bigint")
-        .cast("double")
+        keys.hex_int(F.md5(F.concat(F.col("event_type"), F.lit(":dp"))), 12).cast("double")
         + F.lit(1.0)
     ) / F.lit(281474976710658.0)
     centered = u - F.lit(0.5)

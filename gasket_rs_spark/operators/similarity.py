@@ -37,6 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from gasket_rs_spark import keys
 from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
@@ -317,8 +318,7 @@ def md5_quarter(emb: DataFrame) -> DataFrame:
     a reproducible, shuffle-free ~25% slice for driver-side training."""
     return emb.withColumn(
         "bucket",
-        F.conv(F.substring(F.md5(F.col("vec_id").cast("string")), 1, 2), 16, 10)
-        .cast("bigint") % 16,
+        keys.hex_int(F.md5(F.col("vec_id").cast("string")), 2) % 16,
     ).where(F.col("bucket") < 4)
 
 
@@ -343,9 +343,7 @@ def int_kmeans(Q, k: int, iters: int):
     return C
 
 
-def _train_coarse_centroids(
-    spark: SparkSession, sf_dir: str, k: int, iters: int = 10
-) -> list[list[float]]:
+def _train_coarse_centroids(spark: SparkSession, sf_dir: str, k: int) -> list[list[float]]:
     """Train IVF coarse centroids with k-means on a deterministic sample.
 
     The scale recipe: sample a bounded slice of the corpus with md5
@@ -360,7 +358,7 @@ def _train_coarse_centroids(
     X = np.array([r["embedding"] for r in sample.collect()], dtype=np.float64)
     rng = np.random.RandomState(42)
     centroids = X[rng.choice(len(X), size=k, replace=False)]
-    for _ in range(iters):
+    for _ in range(10):
         d = ((X[:, None, :] - centroids[None, :, :]) ** 2).sum(axis=2)
         assign = d.argmin(axis=1)
         for j in range(k):
@@ -370,17 +368,12 @@ def _train_coarse_centroids(
     return [[float(v) for v in c] for c in centroids]
 
 
-def similarity_ann_ivf_trained(
-    spark: SparkSession,
-    sf_dir: str,
-    k: int | None = None,
-    n_probe: int | None = None,
-) -> DataFrame:
+def q_similarity_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF ANN with k-means-trained coarse centroids (vs the seeded random
     ones in q_similarity_ann_ivf). Same plan shape (_ann_ivf_plan);
     training runs on a bounded driver-side sample and broadcasts the k×dim
     centroid matrix back — corpus size never touches the training step.
-    Defaults scale k = √n, n_probe = √k, like the untrained variant.
+    k = √n and n_probe = √k, the untrained variant's defaults.
 
     On the uniform test vectors k-means finds no structure, so recall per
     candidate matches the untrained variant (floors in
@@ -388,12 +381,8 @@ def similarity_ann_ivf_trained(
     training is what makes IVF beat LSH.
     """
     return _ann_ivf_plan(
-        spark, sf_dir, k, n_probe, lambda k: _train_coarse_centroids(spark, sf_dir, k)
+        spark, sf_dir, None, None, lambda k: _train_coarse_centroids(spark, sf_dir, k)
     )
-
-
-def q_similarity_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return similarity_ann_ivf_trained(spark, sf_dir)
 
 
 def q_similarity_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2552,7 +2541,7 @@ def q_rag_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = (
         load(spark, sf_dir, "documents")
         .join(v.select(F.col("vec_id").alias("doc_id")), "doc_id", "semi")
-        .select("doc_id", F.explode(F.split("text", " ")).alias("tok"))
+        .select("doc_id", F.explode(keys.tokens()).alias("tok"))
     )
     tf = (
         toks.groupBy("doc_id", "tok")

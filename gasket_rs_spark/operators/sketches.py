@@ -21,13 +21,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark import keys
 from gasket_rs_spark.grid import snap
 from gasket_rs_spark.tables import load
 
 
 def _tokens_exploded(docs: DataFrame) -> DataFrame:
     return docs.select(
-        "lang", "source", F.explode(F.split("text", " ")).alias("tok")
+        "lang", "source", F.explode(keys.tokens()).alias("tok")
     )
 
 
@@ -212,7 +213,7 @@ _CM_TOPK = 10  # probe tokens in the witness
 def _cm_pos(tok_col, i: int):
     """Counter index of hash row i — md5-derived, engine-independent."""
     h = F.md5(F.concat_ws(":", tok_col, F.lit(str(i))))
-    return F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % _CM_W
+    return keys.hex_int(h, 8) % _CM_W
 
 
 def _cm_cells():
@@ -278,14 +279,14 @@ def _cs_pos(tok_col, i: int):
     """Count-sketch counter index for hash row i — '#'-salted md5 so the
     position hashes are independent of count-min's ':'-salted family."""
     h = F.md5(F.concat_ws("#", tok_col, F.lit(str(i))))
-    return F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % _CM_W
+    return keys.hex_int(h, 8) % _CM_W
 
 
 def _cs_sign(tok_col, i: int):
     """±1 sign for hash row i: the 9th hex nibble of the same md5 —
     engine-independent, balanced."""
     h = F.md5(F.concat_ws("#", tok_col, F.lit(str(i))))
-    nib = F.conv(F.substring(h, 9, 1), 16, 10).cast("bigint")
+    nib = keys.hex_int(h, 1, start=9)
     return F.when(nib < 8, F.lit(1)).otherwise(F.lit(-1)).cast("bigint")
 
 
@@ -744,9 +745,7 @@ def q_kmv_distinct_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     k smallest of a union, same as every bottom-k system."""
     docs = load(spark, sf_dir, "documents").select(
         "source",
-        F.conv(F.substring(F.md5("text"), 1, 12), 16, 10)
-        .cast("bigint")
-        .alias("u48"),
+        keys.hex_int(F.md5("text"), 12).alias("u48"),
     )
     pts = docs.distinct()
     w = Window.partitionBy("source").orderBy("u48")

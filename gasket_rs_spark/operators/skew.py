@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark import keys
 from gasket_rs_spark.grid import snap
 from gasket_rs_spark.tables import load
 
@@ -193,7 +194,7 @@ def q_shard_balance_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     zip_with(sequence) — the bootstrap_ci bounded-rank pattern, no
     single-partition window)."""
     docs = load(spark, sf_dir, "documents").select(
-        "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("n_tok")
+        "doc_id", F.size(keys.tokens()).cast("bigint").alias("n_tok")
     )
     hexpos = "instr('0123456789abcdef', substring(md5(cast(doc_id as string)), {i}, 1)) - 1"
     shard = F.expr(f"({hexpos.format(i=1)}) * 16 + ({hexpos.format(i=2)})").cast(
@@ -379,32 +380,23 @@ def q_consistent_hash_ring(spark: SparkSession, sf_dir: str) -> DataFrame:
     equivalent."""
     docs = load(spark, sf_dir, "documents").select(
         "doc_id",
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 12), 16, 10)
-        .cast("bigint")
-        .alias("kh"),
+        keys.hex_int(F.md5(F.col("doc_id").cast("string")), 12).alias("kh"),
     )
 
     def ring(n_nodes: int, tag: str) -> DataFrame:
         vn = spark.range(n_nodes * _RING_VNODES).select(
             (F.col("id") % n_nodes).cast("bigint").alias("node"),
-            F.conv(
-                F.substring(
-                    F.md5(
-                        F.concat_ws(
-                            ":",
-                            (F.col("id") % n_nodes).cast("string"),
-                            F.expr(f"id div {n_nodes}").cast("string"),
-                            F.lit("ring"),
-                        )
-                    ),
-                    1,
-                    12,
+            keys.hex_int(
+                F.md5(
+                    F.concat_ws(
+                        ":",
+                        (F.col("id") % n_nodes).cast("string"),
+                        F.expr(f"id div {n_nodes}").cast("string"),
+                        F.lit("ring"),
+                    )
                 ),
-                16,
-                10,
-            )
-            .cast("bigint")
-            .alias("pos"),
+                12,
+            ).alias("pos"),
         )
         wrap = vn.orderBy("pos", "node").limit(1).select(
             F.col("node").alias(f"wrap_{tag}")

@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark import keys
 from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
@@ -21,7 +22,7 @@ from gasket_rs_spark.tables import load
 def _md5_bucket(key_col, buckets: int = 16):
     """Deterministic bucket 0..buckets-1 from the first hex digit(s) of
     md5(key) — engine-independent."""
-    return F.conv(F.substring(F.md5(key_col.cast("string")), 1, 2), 16, 10).cast("bigint") % buckets
+    return keys.hex_int(F.md5(key_col.cast("string")), 2) % buckets
 
 
 def q_sample_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -185,10 +186,7 @@ def q_mixture_weighted_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     float-boundary risk between engines."""
     docs = load(spark, sf_dir, "documents")
     rate = ((F.substring(F.col("source"), 4, 10).cast("int") % 4) + 1) / F.lit(4.0)
-    frac1024 = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 4), 16, 10)
-        .cast("bigint") % 1024
-    )
+    frac1024 = keys.hex_int(F.md5(F.col("doc_id").cast("string")), 4) % 1024
     return (
         docs.withColumn("keep_rate", rate)
         .where(frac1024 < F.col("keep_rate") * 1024)
@@ -297,9 +295,7 @@ def q_epoch_shard_order(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         "epoch",
         salted.alias("md5hex"),
-        (
-            F.conv(F.substring(salted, 1, 2), 16, 10).cast("bigint") % _EPOCH_SHARDS
-        ).alias("shard"),
+        (keys.hex_int(salted, 2) % _EPOCH_SHARDS).alias("shard"),
     )
     w = Window.partitionBy("epoch", "shard").orderBy("md5hex", "doc_id")
     ranked = keyed.withColumn("ordinal", F.row_number().over(w).cast("bigint"))
@@ -521,11 +517,8 @@ def q_weighted_sample_aes(spark: SparkSession, sf_dir: str) -> DataFrame:
     Top-k is TakeOrdered (no global sort); at 100 TB the same key is a
     per-group window for per-stratum quotas."""
     docs = load(spark, sf_dir, "documents").where(F.col("n_chars") > 0)
-    u = (
-        F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
-        .cast("double")
-        / F.lit(4294967296.0)
-    )
+    h32 = keys.hex_int(F.md5(F.col("doc_id").cast("string")), 8)
+    u = h32.cast("double") / F.lit(4294967296.0)
     key = F.round(F.pow(u, 1.0 / F.col("n_chars")), 9)
     return (
         docs.select("doc_id", "lang", "n_chars", key.alias("sample_key"))
@@ -593,7 +586,7 @@ def q_mixture_unimax_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(src_num < 18, F.lit("c"))
         .otherwise(F.lit("d"))
     )
-    ntok = F.size(F.filter(F.split("text", " "), lambda x: x != F.lit("")))
+    ntok = F.size(F.filter(keys.tokens(), lambda x: x != F.lit("")))
     strata = (
         docs.select(stratum.alias("stratum"), ntok.alias("nt"))
         .groupBy("stratum")
@@ -808,7 +801,7 @@ def q_temperature_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     a 10-row broadcast grid crossed with it — the whole tuning table
     costs one scan regardless of how many alphas are probed."""
     docs = load(spark, sf_dir, "documents")
-    ntok = F.size(F.split("text", " ")).cast("bigint")
+    ntok = F.size(keys.tokens()).cast("bigint")
     dom = (
         docs.groupBy("source")
         .agg(F.sum(ntok).cast("bigint").alias("n_tok"))
@@ -851,7 +844,7 @@ def q_domain_ablation_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     out — those need the mergeable-sketch machinery (sketches.py), not
     subtraction; the docstring is the contract."""
     docs = load(spark, sf_dir, "documents")
-    ntok = F.size(F.split("text", " ")).cast("bigint")
+    ntok = F.size(keys.tokens()).cast("bigint")
     dom = docs.groupBy("source").agg(
         F.count("*").cast("bigint").alias("n_docs"),
         F.sum(ntok).cast("bigint").alias("n_tokens"),
@@ -896,7 +889,7 @@ def q_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     EXACT oracle (same md5 arithmetic in SQL)."""
     docs = load(spark, sf_dir, "documents")
     base = docs.select(
-        "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("n_tokens")
+        "doc_id", F.size(keys.tokens()).cast("bigint").alias("n_tokens")
     ).where(F.col("n_tokens") >= _SPANC_BLOCK)
     blocks = base.select(
         "doc_id",
@@ -912,21 +905,14 @@ def q_span_corruption_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     start = (
         F.col("b") * _SPANC_BLOCK
-        + F.conv(
-            F.substring(
-                F.md5(
-                    F.concat(
-                        F.col("doc_id").cast("string"),
-                        F.lit(":"),
-                        F.col("b").cast("string"),
-                    )
-                ),
-                1,
-                8,
+        + keys.hex_int(
+            F.md5(
+                F.concat(
+                    F.col("doc_id").cast("string"), F.lit(":"), F.col("b").cast("string")
+                )
             ),
-            16,
-            10,
-        ).cast("bigint")
+            8,
+        )
         % (_SPANC_BLOCK - _SPANC_LEN + 1)
     )
     return (
@@ -1146,13 +1132,7 @@ def q_bootstrap_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
         "cents",
         F.explode(F.sequence(F.lit(0), F.lit(_BOOT_B - 1))).alias("b"),
     )
-    u16 = F.conv(
-        F.substring(
-            F.md5(F.concat_ws(":", F.col("o_orderkey"), F.col("b"))), 1, 4
-        ),
-        16,
-        10,
-    ).cast("bigint")
+    u16 = keys.hex_int(F.md5(F.concat_ws(":", F.col("o_orderkey"), F.col("b"))), 4)
     k = (
         F.when(u16 < thr[0], 0)
         .when(u16 < thr[1], 1)
@@ -1250,7 +1230,7 @@ def q_spearman_quality_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     everything after is a |langs|-row aggregate."""
     docs = load(spark, sf_dir, "documents").select(
         "lang",
-        F.size(F.split("text", " ")).cast("bigint").alias("s1"),
+        F.size(keys.tokens()).cast("bigint").alias("s1"),
         F.expr(
             "CAST(size(array_distinct(split(text, ' '))) AS BIGINT) * 1000000"
             " div size(split(text, ' '))"
@@ -1341,7 +1321,7 @@ def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     (map-side combinable, 3 int columns of state); everything after
     lives on the |strata|-row frame (broadcast-sized at any scale)."""
     docs = load(spark, sf_dir, "documents").select(
-        "lang", F.size(F.split("text", " ")).cast("bigint").alias("x")
+        "lang", F.size(keys.tokens()).cast("bigint").alias("x")
     )
     mom = docs.groupBy("lang").agg(
         F.count("*").cast("bigint").alias("n_docs"),
@@ -1745,7 +1725,7 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents").select(
         "lang",
         "doc_id",
-        F.size(F.split("text", " ")).cast("bigint").alias("s1"),
+        F.size(keys.tokens()).cast("bigint").alias("s1"),
         F.expr(
             "CAST(size(array_distinct(split(text, ' '))) AS BIGINT) * 1000000"
             " div size(split(text, ' '))"
@@ -1857,8 +1837,8 @@ def q_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(F.col("n_chars") < _KAPPA_CHAR_CUTS[1], 1)
         .otherwise(2)
         .alias("ra"),
-        F.when(F.size(F.split("text", " ")) < _KAPPA_TOK_CUTS[0], 0)
-        .when(F.size(F.split("text", " ")) < _KAPPA_TOK_CUTS[1], 1)
+        F.when(F.size(keys.tokens()) < _KAPPA_TOK_CUTS[0], 0)
+        .when(F.size(keys.tokens()) < _KAPPA_TOK_CUTS[1], 1)
         .otherwise(2)
         .alias("rb"),
     )

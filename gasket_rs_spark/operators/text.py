@@ -2,7 +2,7 @@
 plus the mandated training-data-pipeline text ops: language-ID, quality
 scoring, token counting, document fingerprinting).
 
-All tokenization is ``F.split`` + ``explode``/higher-order functions —
+All tokenization is ``keys.tokens`` + ``explode``/higher-order functions —
 JVM-side, codegen-friendly. Nothing here leaves the JVM; at 100 TB these are
 narrow projections plus one hash-partitioned aggregation each.
 
@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark import keys
 from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
@@ -25,15 +26,11 @@ from gasket_rs_spark.tables import load
 _EN_MARKERS = ("the", "a")
 
 
-def _tokens(col: str = "text"):
-    return F.split(F.col(col), " ")
-
-
 def q_text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global term frequencies: tokenize → explode → hash-agg count."""
     docs = load(spark, sf_dir, "documents")
     return (
-        docs.select(F.explode(_tokens()).alias("token"))
+        docs.select(F.explode(keys.tokens()).alias("token"))
         .groupBy("token")
         .agg(F.count("*").alias("cnt"))
     )
@@ -42,7 +39,7 @@ def q_text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_doc_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document token stats: counts, distinct, type-token ratio."""
     docs = load(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = keys.tokens()
     return docs.select(
         "doc_id",
         "lang",
@@ -61,7 +58,7 @@ def q_text_stats_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.count("*").alias("n_docs"),
             F.round(F.avg("n_chars"), 4).alias("avg_chars"),
-            F.round(F.avg(F.size(_tokens())), 4).alias("avg_tokens"),
+            F.round(F.avg(F.size(keys.tokens())), 4).alias("avg_tokens"),
             F.countDistinct("source").alias("n_sources"),
         )
     )
@@ -70,7 +67,7 @@ def q_text_stats_per_lang(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_text_lang_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Heuristic language ID: ratio of English marker tokens per doc."""
     docs = load(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = keys.tokens()
     markers = F.filter(toks, lambda t: t.isin(*_EN_MARKERS))
     ratio = F.size(markers) / F.size(toks)
     return docs.select(
@@ -89,7 +86,7 @@ def q_lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     'other') matches the predictor's output space; int/int shares
     floor-snapped."""
     docs = load(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = keys.tokens()
     markers = F.filter(toks, lambda t: t.isin(*_EN_MARKERS))
     ratio = F.size(markers) / F.size(toks)
     labeled = docs.select(
@@ -115,7 +112,7 @@ def q_text_quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     stopword ratios) with a deterministic arithmetic combination.
     """
     docs = load(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = keys.tokens()
     n_tokens = F.size(toks)
     stop_ratio = F.size(F.filter(toks, lambda t: t.isin(*_EN_MARKERS))) / n_tokens
     mean_tok_len = (F.length("text") - (n_tokens - 1)) / n_tokens
@@ -141,7 +138,7 @@ def q_text_token_regex_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.select(
         "doc_id",
         F.size(F.regexp_extract_all("text", F.lit(pat), 0)).cast("bigint").alias("n_regex_tokens"),
-        F.size(_tokens()).cast("bigint").alias("n_ws_tokens"),
+        F.size(keys.tokens()).cast("bigint").alias("n_ws_tokens"),
     )
 
 
@@ -155,7 +152,7 @@ def q_text_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     shape (explode → weighted sum → mod) is identical.
     """
     docs = load(spark, sf_dir, "documents")
-    exploded = docs.select("doc_id", F.posexplode(_tokens()).alias("pos", "tok"))
+    exploded = docs.select("doc_id", F.posexplode(keys.tokens()).alias("pos", "tok"))
     term = (F.col("pos") + 1) * (
         F.length("tok") * 31 + F.ascii(F.substring("tok", 1, 1))
     )
@@ -180,7 +177,7 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     repeats IS the point, unlike the dedup module's shingle sets).
     """
     docs = load(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = keys.tokens()
     base = docs.select(
         "doc_id",
         toks.alias("toks"),
@@ -239,7 +236,7 @@ def q_text_tfidf_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     docs = load(spark, sf_dir, "documents")
     n_df = docs.agg(F.count("*").alias("n_docs"))
-    tokens = docs.select("doc_id", F.explode(_tokens()).alias("token"))
+    tokens = docs.select("doc_id", F.explode(keys.tokens()).alias("token"))
     tf = tokens.groupBy("doc_id", "token").agg(F.count("*").alias("tf"))
     # df derived FROM tf instead of a second explode+distinct branch over
     # the raw tokens: tf has exactly one row per (doc_id, token), so
@@ -294,7 +291,7 @@ def q_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     the sketch is what makes pass 2's broadcast safe at 100 TB.
     """
     docs = load(spark, sf_dir, "documents")
-    tokens = docs.select(F.explode(_tokens()).alias("token"))
+    tokens = docs.select(F.explode(keys.tokens()).alias("token"))
 
     def mg(batches):
         # Vectorized MG via the mergeable-summaries formulation (Agarwal
@@ -350,7 +347,7 @@ def q_text_vocab_oov(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct tokens; the plan shape is V-independent.
     """
     docs = load(spark, sf_dir, "documents")
-    tokens = docs.select("doc_id", F.explode(_tokens()).alias("token"))
+    tokens = docs.select("doc_id", F.explode(keys.tokens()).alias("token"))
     vocab = (
         tokens.groupBy("token")
         .agg(F.count("*").alias("cnt"))
@@ -390,7 +387,7 @@ def q_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
     which is the operator's intrinsic cost at any scale.
     """
     docs = load(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = keys.tokens()
     starts = F.sequence(
         F.lit(0), F.floor((F.size(toks) - 1) / _CHUNK_STRIDE).cast("int")
     )
@@ -406,7 +403,7 @@ def q_text_chunk(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             F.col("chunk_id").cast("bigint").alias("chunk_id"),
             "chunk_text",
-            F.size(F.split("chunk_text", " ")).cast("bigint").alias("n_tokens"),
+            F.size(keys.tokens("chunk_text")).cast("bigint").alias("n_tokens"),
         )
     )
 
@@ -418,14 +415,14 @@ _PACK_BUCKETS = 64
 def _with_md5_key(df: DataFrame, key: str, n: int) -> DataFrame:
     """``df`` (holding an md5 hex column ``h``) plus ``key`` = its first
     md5 byte mod ``n`` — the deterministic shuffle of the packers."""
-    return df.withColumn(key, F.conv(F.substring("h", 1, 2), 16, 10).cast("bigint") % n)
+    return df.withColumn(key, keys.hex_int("h", 2) % n)
 
 
 def _doc_tokens(docs: DataFrame, key: str, n: int) -> DataFrame:
     """(doc_id, n_tokens, h = md5(doc_id), ``key``) per document."""
     h = F.md5(F.col("doc_id").cast("string"))
     return _with_md5_key(
-        docs.select("doc_id", F.size(_tokens()).cast("bigint").alias("n_tokens"), h.alias("h")),
+        docs.select("doc_id", F.size(keys.tokens()).cast("bigint").alias("n_tokens"), h.alias("h")),
         key,
         n,
     )
@@ -490,9 +487,7 @@ def q_dataset_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     root hashes the 32 bounded shard digests (zero-padded shard keys so
     string order == numeric order on both engines). EXACT oracle."""
     docs = load(spark, sf_dir, "documents")
-    h = (
-        F.conv(F.substring(F.md5("text"), 1, 12), 16, 10).cast("bigint") % _FP_P
-    )
+    h = keys.hex_int(F.md5("text"), 12) % _FP_P
     per = docs.select(
         (F.col("doc_id") % _FP_SHARDS).alias("shard"), h.alias("h")
     )
@@ -586,7 +581,7 @@ def q_length_bucket_batching(spark: SparkSession, sf_dir: str) -> DataFrame:
     map side."""
     docs = load(spark, sf_dir, "documents")
     per = (
-        docs.select(F.size(_tokens()).cast("bigint").alias("n_tokens"))
+        docs.select(F.size(keys.tokens()).cast("bigint").alias("n_tokens"))
         .where(F.col("n_tokens") >= 1)
         .withColumn(
             "bucket_cap",
@@ -797,7 +792,7 @@ def q_segment_quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     seg_arr = F.regexp_extract_all("text", F.lit(_LINE_SEG_PATTERN), 0)
     segs = docs.select("doc_id", F.explode(seg_arr).alias("seg"))
-    toks = F.split(F.col("seg"), " ")
+    toks = keys.tokens("seg")
     keep = (F.size(toks) >= _SEGQ_MIN_TOKENS) & (
         F.size(F.array_distinct(toks)).cast("double")
         / F.size(toks).cast("double")
@@ -939,7 +934,7 @@ def _word_grams(docs: DataFrame, k: int) -> DataFrame:
     joined by spaces. concat (not concat_ws): a NULL lead makes the gram
     NULL, which drops the trailing stubs."""
     toks = docs.select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
+        "doc_id", F.posexplode(keys.tokens()).alias("pos", "tok")
     )
     w = Window.partitionBy("doc_id").orderBy("pos")
     gram = F.concat(
@@ -995,7 +990,7 @@ def span_dedup(docs: DataFrame) -> DataFrame:
     # re-exploding the corpus (r22, §2.3: the count rides the
     # un-exploded row)
     counts = docs.where(F.col("text").isNotNull()).select(
-        "doc_id", F.size(F.split("text", " ")).cast("bigint").alias("n_tokens")
+        "doc_id", F.size(keys.tokens()).cast("bigint").alias("n_tokens")
     )
     keep = (F.col("n_tokens") - F.col("n_removed")) / F.col("n_tokens")
     return (
@@ -1026,7 +1021,7 @@ def q_text_inverted_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     one aggregation buffer; full postings at 100 TB would stay exploded
     as (token, doc, tf) rows, bucketed by token."""
     toks = load(spark, sf_dir, "documents").select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
+        "doc_id", F.explode(keys.tokens()).alias("tok")
     )
     tf = toks.groupBy("tok", "doc_id").agg(F.count("*").alias("tf"))
     w = Window.partitionBy("tok").orderBy(F.col("tf").desc(), "doc_id")
@@ -1283,12 +1278,9 @@ def q_text_feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     see scripts/verify_local.py's schema guard)."""
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
+        "doc_id", F.explode(keys.tokens()).alias("tok")
     )
-    dim = (
-        F.conv(F.substring(F.md5("tok"), 1, 8), 16, 10).cast("bigint")
-        % _HASH_DIMS
-    )
+    dim = keys.hex_int(F.md5("tok"), 8) % _HASH_DIMS
     counts = toks.groupBy("doc_id", dim.alias("dim")).agg(
         F.count("*").alias("cnt")
     )
@@ -1334,7 +1326,7 @@ def q_text_bm25_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     engine-exact."""
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
-        "doc_id", F.explode(F.split("text", " ")).alias("tok")
+        "doc_id", F.explode(keys.tokens()).alias("tok")
     )
     tf = toks.groupBy("doc_id", "tok").agg(F.count("*").alias("tf"))
     doclen = toks.groupBy("doc_id").agg(F.count("*").alias("dl"))
@@ -1380,7 +1372,7 @@ def q_corpus_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     slope/intercept/r2 from the one-pass regr_* aggregates; snapped with
     the floor-grid trick."""
     toks = load(spark, sf_dir, "documents").select(
-        F.explode(F.split("text", " ")).alias("tok")
+        F.explode(keys.tokens()).alias("tok")
     )
     counts = toks.groupBy("tok").agg(F.count("*").alias("freq"))
     top = counts.orderBy(F.col("freq").desc(), "tok").limit(100)
@@ -1455,7 +1447,7 @@ def q_text_token_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     this is the same shape as token counting, fully map-side combinable.
     """
     toks = load(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.explode(F.split("text", " ")).alias("tok")
+        "doc_id", "lang", F.explode(keys.tokens()).alias("tok")
     )
     counts = toks.groupBy("doc_id", "lang", "tok").agg(F.count("*").alias("c"))
     per_doc = counts.groupBy("doc_id", "lang").agg(
@@ -1776,7 +1768,7 @@ def q_text_readability(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     per_doc = docs.select(
         "lang",
-        F.size(_tokens()).cast("bigint").alias("w"),
+        F.size(keys.tokens()).cast("bigint").alias("w"),
         F.size(F.regexp_extract_all(F.lower(F.col("text")), F.lit("[aeiouy]+"), 0))
         .cast("bigint")
         .alias("y"),
@@ -1847,7 +1839,7 @@ def q_source_vocab_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast onto the bounded |sources|² output."""
     vocab = (
         load(spark, sf_dir, "documents")
-        .select("source", F.explode(F.split("text", " ")).alias("tok"))
+        .select("source", F.explode(keys.tokens()).alias("tok"))
         .distinct()
     )
     sizes = vocab.groupBy(F.col("source").alias("sz_src")).agg(
@@ -1918,7 +1910,7 @@ def q_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast join of the token-likelihood table against exploded test
     tokens — one corpus pass, no shuffle bigger than (docs × langs)."""
     docs = load(spark, sf_dir, "documents").select(
-        "doc_id", "lang", F.split("text", " ").alias("toks")
+        "doc_id", "lang", keys.tokens().alias("toks")
     )
     train = docs.where(F.col("doc_id") % _NB_TEST_MOD != 0)
     test = docs.where(F.col("doc_id") % _NB_TEST_MOD == 0)
@@ -2020,7 +2012,7 @@ def q_keyword_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load(spark, sf_dir, "documents")
     toks = docs.select(
         F.filter(
-            F.split("text", " "), lambda t: F.length(t) >= _TEXTRANK_MIN_LEN
+            keys.tokens(), lambda t: F.length(t) >= _TEXTRANK_MIN_LEN
         ).alias("ts")
     ).where(F.size("ts") >= 2)
     pairs = toks.select(
@@ -2116,7 +2108,7 @@ def _source_vocab(spark: SparkSession, sf_dir: str, **aggs: Column) -> DataFrame
     One corpus pass → (source, token) counts (map-side combinable), then
     vocabulary-bounded aggregates."""
     toks = load(spark, sf_dir, "documents").select(
-        "source", F.explode(F.split("text", " ")).alias("tok")
+        "source", F.explode(keys.tokens()).alias("tok")
     )
     counts = toks.groupBy("source", "tok").agg(
         F.count("*").cast("bigint").alias("n")
@@ -2277,7 +2269,7 @@ def q_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     positions (one doc-partitioned window), then hash aggs keyed on
     the bounded phrase vocabulary."""
     docs = load(spark, sf_dir, "documents").select(
-        "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
+        "doc_id", F.posexplode(keys.tokens()).alias("pos", "tok")
     )
     content = docs.where(F.length("tok") >= _TEXTRANK_MIN_LEN)
     wisl = Window.partitionBy("doc_id").orderBy("pos")

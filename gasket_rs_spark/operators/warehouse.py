@@ -29,6 +29,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark import keys
 from gasket_rs_spark.grid import units
 from gasket_rs_spark.tables import load
 
@@ -166,9 +167,7 @@ _BLOOM_K = 3
 def _bloom_pos(key: F.Column, i: int) -> F.Column:
     """Bit position of hash function i — md5-derived, engine-portable."""
     h = F.md5(F.concat_ws(":", key.cast("string"), F.lit(str(i))))
-    return (
-        F.conv(F.substring(h, 1, 8), 16, 10).cast("bigint") % _BLOOM_BITS
-    )
+    return keys.hex_int(h, 8) % _BLOOM_BITS
 
 
 def q_bloom_filter_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -742,11 +741,7 @@ def q_deletion_vector_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_linenumber",
         units(F.col("l_quantity"), 100).alias("qty_c"),
     )
-    file_id = (
-        F.conv(F.substring(F.md5(F.col("l_orderkey").cast("string")), 1, 2), 16, 10)
-        .cast("bigint")
-        % _DV_FILES
-    )
+    file_id = keys.hex_int(F.md5(F.col("l_orderkey").cast("string")), 2) % _DV_FILES
     w = Window.partitionBy("file_id").orderBy("l_orderkey", "l_linenumber")
     # rows feeds THREE consumers (the DV side table, the anti-join left
     # side, per_file) — unmaterialized, the scan+md5+window subtree ran
@@ -758,22 +753,17 @@ def q_deletion_vector_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     rows = li.withColumn("file_id", file_id).withColumn(
         "pos", F.row_number().over(w).cast("bigint")
     ).localCheckpoint(eager=False)
-    u16 = F.conv(
-        F.substring(
-            F.md5(
-                F.concat_ws(
-                    ":",
-                    F.col("l_orderkey").cast("string"),
-                    F.col("l_linenumber").cast("string"),
-                    F.lit("dv"),
-                )
-            ),
-            1,
-            4,
+    u16 = keys.hex_int(
+        F.md5(
+            F.concat_ws(
+                ":",
+                F.col("l_orderkey").cast("string"),
+                F.col("l_linenumber").cast("string"),
+                F.lit("dv"),
+            )
         ),
-        16,
-        10,
-    ).cast("bigint")
+        4,
+    )
     dv = rows.where(
         (F.col("file_id") < _DV_DELETED_FILES) & (u16 < _DV_U16_CUT)
     ).select("file_id", "pos")
@@ -955,7 +945,7 @@ def q_file_source_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     j = read_json(spark, json_path, schema)
 
     def per_lang(df: DataFrame, tag: str) -> DataFrame:
-        chk = F.conv(F.substring(F.md5("text"), 1, 12), 16, 10).cast("bigint")
+        chk = keys.hex_int(F.md5("text"), 12)
         return df.groupBy("lang").agg(
             F.count("*").cast("bigint").alias(f"n_{tag}"),
             F.sum("n_chars").cast("bigint").alias(f"chars_{tag}"),

@@ -10,6 +10,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from gasket_rs_spark import keys
 from gasket_rs_spark.grid import snap
 from gasket_rs_spark.pipeline.dataframe_pipeline import DFPipeline, funnel, tee
 from gasket_rs_spark.tables import load
@@ -33,7 +34,7 @@ def q_r06_splitter(spark: SparkSession, sf_dir: str) -> DataFrame:
     one row per token."""
     pipe = DFPipeline().stage(
         "splitter",
-        lambda df: df.select("doc_id", F.explode(F.split("text", " ")).alias("token")),
+        lambda df: df.select("doc_id", F.explode(keys.tokens()).alias("token")),
     ).stage(
         "count",
         lambda df: df.groupBy("doc_id").agg(F.count("*").alias("n_out")),

@@ -24,7 +24,6 @@ import shutil
 import tempfile
 from typing import Callable
 
-from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.streaming import DataStreamWriter
@@ -243,7 +242,10 @@ def run_to_memory_sink(
 def _run_available_now(writer: DataStreamWriter, ckpt: str, name: str, timeout_sec: int) -> None:
     """Run ``writer`` under ``Trigger.AvailableNow`` until the source is
     drained (WorkSchedule::Done); past ``timeout_sec`` the query is
-    stopped and ``TimeoutError`` raised, so no query outlives the call."""
+    stopped and ``TimeoutError`` raised, so no query outlives the call.
+
+    ``stop()`` waits for a running ``foreachBatch`` to return, so the
+    call can outlast ``timeout_sec`` by one batch."""
     query = writer.option("checkpointLocation", ckpt).trigger(availableNow=True).start()
     if not query.awaitTermination(timeout_sec):
         query.stop()
@@ -419,28 +421,26 @@ def _incremental_dedup_batch(batch_df: DataFrame, batch_id: int, sink: str) -> N
     discovery and EXCLUDES this batch's own partition — on a foreachBatch
     retry the batch's previously-written rows would otherwise count as
     already seen and the retry's overwrite would empty the partition,
-    losing those hashes forever. The fallback is narrowed to
-    AnalysisException (sink path missing = genuine first batch); any
-    transient read failure propagates instead of silently degrading to
-    "first batch" and appending duplicates."""
+    losing those hashes forever. The sink directory is created first and
+    read with its known ``h`` column, so the first batch reads an empty
+    sink rather than a missing path; any read failure propagates instead
+    of silently degrading to "first batch" and appending duplicates."""
     spark_b = batch_df.sparkSession
     h = F.md5(F.concat_ws(":", "user_id", "event_type"))
     hashed = batch_df.select("event_id", "user_id", "event_type", h.alias("h"))
     # within-batch first-per-hash (min event_id — deterministic)
     w_min = hashed.groupBy("h").agg(F.min("event_id").alias("event_id"))
     batch_first = hashed.join(w_min, ["h", "event_id"])
-    try:
-        seen = (
-            spark_b.read.option("basePath", sink)
-            .parquet(sink)
-            .where(F.col("batch_id") != F.lit(batch_id))
-            .select("h")
-            .distinct()
-        )
-        fresh = batch_first.join(seen, "h", "left_anti")
-    except AnalysisException:
-        fresh = batch_first
-    _overwrite_batch(fresh, batch_id, sink)
+    os.makedirs(sink, exist_ok=True)
+    seen = (
+        spark_b.read.schema("h string, batch_id int")
+        .option("basePath", sink)
+        .parquet(sink)
+        .where(F.col("batch_id") != F.lit(batch_id))
+        .select("h")
+        .distinct()
+    )
+    _overwrite_batch(batch_first.join(seen, "h", "left_anti"), batch_id, sink)
 
 
 def q_stream_incremental_dedup_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:

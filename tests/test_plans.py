@@ -301,6 +301,46 @@ def test_grid_snap_spelled_only_in_grid_module():
     )
 
 
+def test_keys_spelled_only_in_keys_module():
+    """The cross-engine tokenizer ``split(<x>, ' ')`` and md5 hex-prefix
+    integer ``conv(substring(<hex>, s, d), 16, 10)`` have one Spark
+    spelling, gasket_rs_spark/keys.py (tokens / hex_int): no module
+    outside it calls ``F.split`` on a single space or ``F.conv`` on an
+    ``F.substring``. An AST scan, so the oracle SQL strings are never
+    matched; BPE's character split ``F.split("w", "")`` is another rule."""
+    import ast
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "gasket_rs_spark"
+
+    def f_call(node, name):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == name
+            and isinstance(node.func.value, ast.Name)
+            and node.func.value.id == "F"
+        )
+
+    def is_key(node):
+        if f_call(node, "split"):
+            sep = node.args[1] if len(node.args) > 1 else None
+            return isinstance(sep, ast.Constant) and sep.value == " "
+        return f_call(node, "conv") and bool(node.args) and f_call(node.args[0], "substring")
+
+    offenders = [
+        f"{py.relative_to(pkg).as_posix()}:{node.lineno}: {ast.unparse(node)}"
+        for py in sorted(pkg.rglob("*.py"))
+        if py.relative_to(pkg).as_posix() != "keys.py"
+        for node in ast.walk(ast.parse(py.read_text()))
+        if is_key(node)
+    ]
+    assert not offenders, (
+        "spell the tokenizer and the md5 hex-prefix integer through "
+        f"gasket_rs_spark.keys.tokens/hex_int ({len(offenders)} sites): {offenders}"
+    )
+
+
 def test_tpch_additions_plan_shapes(spark, sf_dir):
     """Scale pins for the round-5 TPC-H additions: Q5's five dim joins all
     broadcast (the c=s nation equality must ride a hash join, not become
