@@ -29,6 +29,7 @@ from gasket_rs_spark.operators.dedup import (
     _shingle_pairs,
     _shingles,
 )
+from gasket_rs_spark.operators.text import _decontam_grams, _eval_doc
 from gasket_rs_spark.tables import load
 
 _MIN_CHARS = 100
@@ -142,33 +143,12 @@ def q_llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     quality = docs.where(
         (F.col("n_chars") >= _MIN_CHARS) & (n_tokens >= _MIN_TOKENS)
     )
-    # decontamination: distinct per-doc trigrams map-side (array_distinct),
-    # eval grams from the RAW corpus (doc_id % 53 == 0), broadcast probe.
-    grams_expr = F.expr(
-        "zip_with("
-        "  slice(split(text, ' '), 1, greatest(size(split(text, ' ')) - 2, 0)),"
-        "  zip_with("
-        "    slice(split(text, ' '), 2, greatest(size(split(text, ' ')) - 2, 0)),"
-        "    slice(split(text, ' '), 3, greatest(size(split(text, ' ')) - 2, 0)),"
-        "    (b, c) -> concat(b, ' ', c)),"
-        "  (a, bc) -> concat(a, ' ', bc))"
-    )
-    doc_grams = docs.select(
-        "doc_id", F.explode(F.array_distinct(grams_expr)).alias("gram")
-    )
-    eval_grams = (
-        doc_grams.where(F.col("doc_id") % 53 == 0).select("gram").distinct()
-    )
+    # decontamination: eval grams from the RAW corpus, broadcast probe
+    corpus_grams, eval_grams = _decontam_grams(docs)
     contaminated = (
-        doc_grams.where(F.col("doc_id") % 53 != 0)
-        .join(F.broadcast(eval_grams), "gram")
-        .select("doc_id")
-        .distinct()
+        corpus_grams.join(F.broadcast(eval_grams), "gram").select("doc_id").distinct()
     )
-    clean = (
-        quality.where(F.col("doc_id") % 53 != 0)
-        .join(contaminated, "doc_id", "left_anti")
-    )
+    clean = quality.where(~_eval_doc()).join(contaminated, "doc_id", "left_anti")
     # exact dedup: survivor = min doc_id per identical text
     w = Window.partitionBy("text").orderBy("doc_id")
     deduped = (
@@ -183,7 +163,7 @@ def q_llm_corpus_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     kept = deduped.where(frac1024 < rate * 1024)
     return kept.groupBy("source").agg(
         F.count("*").alias("n_docs"),
-        F.sum(F.expr("(size(split(text, ' ')) + 47) div 48")).alias("n_chunks"),
+        F.sum(F.call_function("div", n_tokens + 47, F.lit(48))).alias("n_chunks"),
         F.sum(n_tokens.cast("bigint")).alias("n_tokens"),
     )
 
@@ -360,21 +340,12 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     toks = docs.select(
         "doc_id",
         "lang",
-        F.expr("filter(split(text, ' '), x -> x != '')").alias("ts"),
+        F.filter(keys.tokens(), lambda x: x != "").alias("ts"),
     )
     grams = toks.select(
         "doc_id",
         "lang",
-        F.explode(
-            F.concat(
-                F.col("ts"),
-                F.expr(
-                    "zip_with(slice(ts, 1, greatest(size(ts) - 1, 0)),"
-                    " slice(ts, 2, greatest(size(ts) - 1, 0)),"
-                    " (a, b) -> concat(a, ' ', b))"
-                ),
-            )
-        ).alias("g"),
+        F.explode(F.concat(F.col("ts"), keys.grams(F.col("ts"), 2))).alias("g"),
     )
     dc = (
         grams.select(
@@ -479,13 +450,13 @@ def q_linear_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB this is the cheapest possible classifier pass: one scan,
     one narrow map."""
     warr = F.array(*[F.lit(w) for w in _lqc_weights()])
-    bucket = (
-        "CAST(conv(substring(md5(t), 1, 4), 16, 10) AS BIGINT)"
-        f" % {_LQC_BUCKETS}"
-    )
-    score = F.expr(
-        "aggregate(split(text, ' '), CAST(0 AS BIGINT),"
-        f" (acc, t) -> acc + element_at(warr, CAST({bucket} AS INT) + 1))"
+    score = F.aggregate(
+        keys.tokens(),
+        F.lit(0).cast("bigint"),
+        lambda acc, t: acc
+        + F.element_at(
+            F.col("warr"), (keys.hex_int(F.md5(t), 4) % _LQC_BUCKETS).cast("int") + 1
+        ),
     )
     docs = load(spark, sf_dir, "documents").withColumn(
         "warr", warr

@@ -83,42 +83,13 @@ _CC_DRIVER_EDGE_BOUND = 2_000_000
 
 
 def _shingles(col: str = "text"):
-    """Token 3-shingles as an array<string> (JVM higher-order fns only).
-
-    Built as zip_with over three shifted slices — NEVER slice/element_at
-    of the token array inside a transform lambda: an array expression
-    referenced inside a HOF lambda is re-evaluated per element
-    (project-collapse inlines the split right back), so the old
-    transform(sequence(...), i -> slice(toks, i+1, K)) spelling re-split
-    the document once per shingle — O(tokens²) per doc. The r21 A/B on
-    the raw shingle explode at sf0.1: 1.6–2.0 s → 0.46 s, bit-identical
-    arrays (same positional order, so array_distinct keeps the same
-    first occurrences).
-
-    Guarded for <k-token docs: slice lengths descend through 0 there,
-    which would fabricate bogus shingles.
-    """
-    # The zip_with chain below hardcodes exactly three shifted slices
-    # (starts 1..3); changing _SHINGLE_K must fail loudly here instead of
-    # silently emitting truncated shingles (ADVICE r21).
-    assert _SHINGLE_K == 3, "zip_with chain is written for K=3"
-    toks = keys.tokens(col)
-    n = F.size(toks)
-    win = n - (_SHINGLE_K - 1)
-    return F.when(
-        n >= _SHINGLE_K,
-        F.array_distinct(
-            F.zip_with(
-                F.slice(toks, 1, win),
-                F.zip_with(
-                    F.slice(toks, 2, win),
-                    F.slice(toks, 3, win),
-                    lambda y, z: F.concat_ws(" ", y, z),
-                ),
-                lambda x, yz: F.concat_ws(" ", x, yz),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    """The distinct token 3-shingles (``keys.grams``) of string column
+    ``col`` as an array<string>, in first-occurrence order; ``[]`` for
+    text with fewer than 3 tokens and for NULL text."""
+    return F.coalesce(
+        F.array_distinct(keys.grams(keys.tokens(col), _SHINGLE_K)),
+        F.array().cast("array<string>"),
+    )
 
 
 def q_dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:

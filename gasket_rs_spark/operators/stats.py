@@ -1207,6 +1207,21 @@ def _bootstrap_oracle_sql() -> str:
     """
 
 
+def _token_signals(docs: DataFrame, *ids: str) -> DataFrame:
+    """(lang, *ids, s1, s2) per document: the two quality signals the
+    rank correlations compare, length s1 (token count) and lexical
+    richness s2 (type-token ratio in integer micro-units)."""
+    toks = keys.tokens()
+    return docs.select(
+        "lang",
+        *ids,
+        F.size(toks).cast("bigint").alias("s1"),
+        F.call_function(
+            "div", F.size(F.array_distinct(toks)).cast("bigint") * 1000000, F.size(toks)
+        ).alias("s2"),
+    )
+
+
 def q_spearman_quality_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spearman rank correlation (Spearman 1904) per language between
     two document quality signals: length (token count) and lexical
@@ -1228,14 +1243,7 @@ def q_spearman_quality_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     every rank statistic pays — at corpus scale each language sorts in
     parallel across executors; skewed languages split under AQE);
     everything after is a |langs|-row aggregate."""
-    docs = load(spark, sf_dir, "documents").select(
-        "lang",
-        F.size(keys.tokens()).cast("bigint").alias("s1"),
-        F.expr(
-            "CAST(size(array_distinct(split(text, ' '))) AS BIGINT) * 1000000"
-            " div size(split(text, ' '))"
-        ).alias("s2"),
-    )
+    docs = _token_signals(load(spark, sf_dir, "documents"))
     w1 = Window.partitionBy("lang").orderBy("s1")
     w2 = Window.partitionBy("lang").orderBy("s2")
     t1 = Window.partitionBy("lang", "s1")
@@ -1722,15 +1730,7 @@ def q_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     (≈ groups under ~13k rows); past that it is the same IEEE-754
     rounded multiply on both engines — deterministic cross-engine, with
     relative error ≤ 2⁻⁵³ folded under the sqrt (ADVICE r13)."""
-    docs = load(spark, sf_dir, "documents").select(
-        "lang",
-        "doc_id",
-        F.size(keys.tokens()).cast("bigint").alias("s1"),
-        F.expr(
-            "CAST(size(array_distinct(split(text, ' '))) AS BIGINT) * 1000000"
-            " div size(split(text, ' '))"
-        ).alias("s2"),
-    )
+    docs = _token_signals(load(spark, sf_dir, "documents"), "doc_id")
     w = Window.partitionBy("lang").orderBy(
         F.md5(F.col("doc_id").cast("string")), "doc_id"
     )

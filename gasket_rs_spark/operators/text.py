@@ -26,6 +26,11 @@ from gasket_rs_spark.tables import load
 _EN_MARKERS = ("the", "a")
 
 
+def _w1_w2(a, b):
+    """A bigram as its (w1, w2) tokens: the ``pair`` of ``keys.grams``."""
+    return F.struct(a.alias("w1"), b.alias("w2"))
+
+
 def q_text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Global term frequencies: tokenize → explode → hash-agg count."""
     docs = load(spark, sf_dir, "documents")
@@ -173,8 +178,8 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
     from the token array in place (no explode); bigrams explode once and
     hash-aggregate per (doc, bigram) then per doc — two partial-agg
     shuffles keyed by doc_id, no window, no UDF. Bigrams keep duplicates
-    (``zip_with`` over shifted slices without distinct — counting
-    repeats IS the point, unlike the dedup module's shingle sets).
+    (``keys.grams`` without distinct — counting repeats IS the point,
+    unlike the dedup module's shingle sets).
     """
     docs = load(spark, sf_dir, "documents")
     toks = keys.tokens()
@@ -184,20 +189,8 @@ def q_text_repetition(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.size(toks).cast("bigint").alias("n_tokens"),
         F.size(F.array_distinct(toks)).alias("n_distinct"),
     ).where(F.col("n_tokens") >= 2)
-    # zip_with over two shifted slices, never element_at-in-lambda (the
-    # HOF-CSE trap): project-collapse inlines the split into the lambda,
-    # so the old transform(sequence) spelling re-split the text once per
-    # bigram — O(tokens²) per doc. Same positional order, duplicates
-    # kept (counting repeats IS the point).
     bigrams = base.select(
-        "doc_id",
-        F.explode(
-            F.zip_with(
-                F.slice(F.col("toks"), 1, (F.col("n_tokens") - 1).cast("int")),
-                F.slice(F.col("toks"), 2, (F.col("n_tokens") - 1).cast("int")),
-                lambda a, b: F.concat_ws(" ", a, b),
-            )
-        ).alias("bigram"),
+        "doc_id", F.explode(keys.grams(F.col("toks"), 2)).alias("bigram")
     )
     per_doc = (
         bigrams.groupBy("doc_id", "bigram")
@@ -641,20 +634,13 @@ def q_text_ngram_lm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     smoother consumes). Top 50 trigrams by (count DESC, gram) — the
     tiebreak makes the limit deterministic across engines.
 
-    Scale shape: trigrams are built with the same zip_with slice pattern
-    as decontamination (never element_at-in-lambda, the HOF-CSE trap);
+    Scale shape: trigrams are ``keys.grams`` split into (w1, suffix);
     both aggregations partial-aggregate map-side and the gram↔suffix
     join shuffles the (much smaller) suffix-level frame. TakeOrdered
     handles the top-k — no global sort."""
     docs = load(spark, sf_dir, "documents")
-    pairs = F.expr(
-        "zip_with("
-        "  slice(split(text, ' '), 1, greatest(size(split(text, ' ')) - 2, 0)),"
-        "  zip_with("
-        "    slice(split(text, ' '), 2, greatest(size(split(text, ' ')) - 2, 0)),"
-        "    slice(split(text, ' '), 3, greatest(size(split(text, ' ')) - 2, 0)),"
-        "    (b, c) -> concat(b, ' ', c)),"
-        "  (a, bc) -> struct(a AS w1, bc AS suffix))"
+    pairs = keys.grams(
+        keys.tokens(), 3, lambda a, bc: F.struct(a.alias("w1"), bc.alias("suffix"))
     )
     ex = docs.select("doc_id", F.explode(pairs).alias("p")).select(
         "doc_id",
@@ -677,48 +663,48 @@ def q_text_ngram_lm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _eval_doc() -> Column:
+    """The eval-set stand-in of benchmark decontamination: documents with
+    ``doc_id % 53 == 0`` (a real run reads the benchmark corpus instead;
+    same plan shape)."""
+    return F.col("doc_id") % 53 == 0
+
+
+def _decontam_grams(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """(corpus, eval) for decontamination: (doc_id, gram) for the
+    distinct trigrams of each non-eval document, and the distinct
+    trigrams (gram) of the eval documents (``_eval_doc``).
+
+    Distinct grams are only needed PER DOC: ``array_distinct`` before
+    the explode does that map-side, so the corpus side never shuffles
+    its full gram set (a global ``.distinct()`` there would be the
+    plan's largest exchange for zero semantic gain)."""
+    doc_grams = docs.select(
+        "doc_id",
+        F.explode(F.array_distinct(keys.grams(keys.tokens(), 3))).alias("gram"),
+    )
+    eval_grams = doc_grams.where(_eval_doc()).select("gram").distinct()
+    return doc_grams.where(~_eval_doc()), eval_grams
+
+
 def q_text_decontaminate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Benchmark decontamination by distinct-3-gram overlap — the GPT-3
     appendix-C / Llama eval-contamination check: flag corpus docs that
     share any whitespace 3-gram with the eval set, reporting per-doc
     overlap counts and a contamination ratio.
 
-    Eval-set stand-in: ``doc_id % 53 == 0`` (a real run reads the
-    benchmark corpus instead — same plan shape). Scale shape: the eval
-    n-gram set is benchmark-sized (fixed, ≪ corpus) so the overlap probe
-    is a broadcast equi-join on the gram; the corpus side is one linear
-    explode + per-doc distinct, shuffled on the gram hash. Trigrams are
-    formed with ``zip_with`` over three slices — NOT ``element_at``
-    inside a lambda, which re-evaluates the source array per element
-    (the HOF-CSE O(n²) trap; see .claude/skills/verify/SKILL.md).
+    Eval-set stand-in: ``_eval_doc``. Scale shape: the eval n-gram set
+    is benchmark-sized (fixed, ≪ corpus) so the overlap probe is a
+    broadcast equi-join on the gram; the corpus side is one linear
+    explode + per-doc distinct, shuffled on the gram hash
+    (``_decontam_grams``).
     """
     docs = load(spark, sf_dir, "documents")
-    grams_expr = F.expr(
-        "zip_with("
-        "  slice(split(text, ' '), 1, greatest(size(split(text, ' ')) - 2, 0)),"
-        "  zip_with("
-        "    slice(split(text, ' '), 2, greatest(size(split(text, ' ')) - 2, 0)),"
-        "    slice(split(text, ' '), 3, greatest(size(split(text, ' ')) - 2, 0)),"
-        "    (b, c) -> concat(b, ' ', c)),"
-        "  (a, bc) -> concat(a, ' ', bc))"
-    )
-    # distinct grams are only needed PER DOC — array_distinct before the
-    # explode does that map-side, so the corpus side never shuffles its
-    # full gram set (a global .distinct() here would be the plan's
-    # largest exchange for zero semantic gain).
-    doc_grams = docs.select(
-        "doc_id", F.explode(F.array_distinct(grams_expr)).alias("gram")
-    )
-    eval_grams = (
-        doc_grams.where(F.col("doc_id") % 53 == 0)
-        .select("gram")
-        .distinct()
-        .withColumn("hit", F.lit(1))
-    )
+    corpus_grams, eval_grams = _decontam_grams(docs)
+    hits = eval_grams.withColumn("hit", F.lit(1))
     ratio = F.count("hit") / F.count("*")  # int/int ratio → floor-snap, never round()
     return (
-        doc_grams.where(F.col("doc_id") % 53 != 0)
-        .join(F.broadcast(eval_grams), "gram", "left")
+        corpus_grams.join(F.broadcast(hits), "gram", "left")
         .groupBy("doc_id")
         .agg(
             F.count("*").alias("n_grams"),
@@ -932,7 +918,12 @@ def _word_grams(docs: DataFrame, k: int) -> DataFrame:
     """(doc_id, pos, tok, gram) for every full k-word window of a
     (doc_id, text) frame: gram = the k space-split tokens from pos on,
     joined by spaces. concat (not concat_ws): a NULL lead makes the gram
-    NULL, which drops the trailing stubs."""
+    NULL, which drops the trailing stubs.
+
+    The same grams as ``keys.grams(keys.tokens(), k)``, one row each with
+    its position, built from leads over a doc-partitioned window: the
+    window shape behind text_span_dedup, kept until an A/B shows that
+    exploding ``keys.grams`` with its position is no slower."""
     toks = docs.select(
         "doc_id", F.posexplode(keys.tokens()).alias("pos", "tok")
     )
@@ -1053,8 +1044,7 @@ def q_text_lm_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored on the same corpus in one plan. Low scores (high perplexity
     proxy) mark text unlike the corpus — the standard LM quality filter.
 
-    Shape: one trigram explode (the zip_with slice pattern — no
-    HOF-CSE trap), two count aggregations (gram / context — map-side
+    Shape: one trigram explode (``keys.grams``), two count aggregations (gram / context — map-side
     combinable), two equi-joins back on the gram key, one per-doc
     reduce. Per-doc float sums are ≤ doc-length terms, snapped on the
     1e-6 grid; the perplexity proxy is derived from the SNAPPED average
@@ -1074,15 +1064,13 @@ def _lm_doc_scores(docs: DataFrame) -> DataFrame:
     probability — shared by q_text_lm_score and the perplexity-bucket
     split. Snapped on the 1e-6 grid so downstream bucketing operates on
     engine-identical doubles."""
-    pairs = F.expr(
-        "zip_with("
-        "  slice(split(text, ' '), 1, greatest(size(split(text, ' ')) - 2, 0)),"
-        "  zip_with("
-        "    slice(split(text, ' '), 2, greatest(size(split(text, ' ')) - 2, 0)),"
-        "    slice(split(text, ' '), 3, greatest(size(split(text, ' ')) - 2, 0)),"
-        "    (b, c) -> concat(b, ' ', c)),"
-        "  (a, bc) -> struct(concat(a, ' ', bc) AS gram,"
-        "                    concat(a, ' ', split_part(bc, ' ', 1)) AS ctx))"
+    pairs = keys.grams(
+        keys.tokens(),
+        3,
+        lambda a, bc: F.struct(
+            F.concat(a, F.lit(" "), bc).alias("gram"),
+            F.concat(a, F.lit(" "), F.split_part(bc, F.lit(" "), F.lit(1))).alias("ctx"),
+        ),
     )
     ex = docs.select("doc_id", F.explode(pairs).alias("p")).select(
         "doc_id", F.col("p.gram").alias("gram"), F.col("p.ctx").alias("ctx")
@@ -1143,12 +1131,7 @@ def q_kn_bigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     (w1, w2) string join keys would be xxhash64'd at 100 TB (8-byte
     shuffles), the span-dedup discipline."""
     docs = load(spark, sf_dir, "documents")
-    pairs = F.expr(
-        "zip_with("
-        "  slice(split(text, ' '), 1, greatest(size(split(text, ' ')) - 1, 0)),"
-        "  slice(split(text, ' '), 2, greatest(size(split(text, ' ')) - 1, 0)),"
-        "  (a, b) -> struct(a AS w1, b AS w2))"
-    )
+    pairs = keys.grams(keys.tokens(), 2, _w1_w2)
     ex = docs.select("doc_id", F.explode(pairs).alias("p")).select(
         "doc_id", F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")
     )
@@ -1403,12 +1386,7 @@ def q_corpus_heaps_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     boilerplate."""
     docs = load(spark, sf_dir, "documents")
     bounds = docs.agg(F.max("doc_id").alias("mx"))
-    bigrams = F.expr(
-        "zip_with("
-        "  slice(split(text, ' '), 1, greatest(size(split(text, ' ')) - 1, 0)),"
-        "  slice(split(text, ' '), 2, greatest(size(split(text, ' ')) - 1, 0)),"
-        "  (a, b) -> concat(a, ' ', b))"
-    )
+    bigrams = keys.grams(keys.tokens(), 2)
     toks = docs.crossJoin(F.broadcast(bounds)).select(
         # explicit floor: Spark's double->int cast truncates but DuckDB's
         # CAST rounds — floor() spelled on both sides removes the trap
@@ -1558,12 +1536,7 @@ def q_collocation_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     Production would xxhash64 the (w1,w2) string keys before the shuffle
     (the span-dedup note, text.py span_dedup)."""
     docs = load(spark, sf_dir, "documents")
-    pairs = F.expr(
-        "zip_with("
-        "  slice(split(text, ' '), 1, greatest(size(split(text, ' ')) - 1, 0)),"
-        "  slice(split(text, ' '), 2, greatest(size(split(text, ' ')) - 1, 0)),"
-        "  (a, b) -> struct(a AS w1, b AS w2))"
-    )
+    pairs = keys.grams(keys.tokens(), 2, _w1_w2)
     ex = docs.select(F.explode(pairs).alias("p")).select(
         F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2")
     )
@@ -2016,13 +1989,7 @@ def q_keyword_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("ts")
     ).where(F.size("ts") >= 2)
     pairs = toks.select(
-        F.explode(
-            F.zip_with(
-                F.slice(F.col("ts"), 1, F.size("ts") - 1),
-                F.slice(F.col("ts"), 2, F.size("ts") - 1),
-                lambda a, b: F.struct(a.alias("w1"), b.alias("w2")),
-            )
-        ).alias("p")
+        F.explode(keys.grams(F.col("ts"), 2, _w1_w2)).alias("p")
     ).select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
     e = pairs.where(F.col("w1") != F.col("w2"))
     edges = (

@@ -20,12 +20,14 @@ wrapper of the concrete DataFrame class; operators are untouched.
 
 Every file is written normalized: the session-global counters Spark
 prints (expression ids ``name#<n>``, exchange ``plan_id=<n>``,
-checkpoint ``RDD[<n>]``, lambda variables ``lambda x_<n>``) are
-renumbered per file in order of first appearance, the groups of each
+checkpoint ``RDD[<n>]``) are renumbered per file in order of first
+appearance, every lambda variable (PySpark's ``lambda x_12#7``, SQL's
+``lambda a#7``) is renamed ``v<k>`` in the same way, the groups of each
 distinct-aggregate Expand are put into a canonical order, and the
 checkpoint RDD's call site (``<unknown>:0`` or a JVM frame, by session)
 and file_source_roundtrip's temp-dir name are blanked, so two captures
-of the same tree compare equal file for file.
+of the same tree compare equal file for file, and a SQL lambda compares
+equal to a Python lambda of the same structure.
 """
 
 from __future__ import annotations
@@ -167,13 +169,21 @@ def _canonical_expand(text: str, m: re.Match) -> str:
 
 def normalize(text: str) -> str:
     """Put each Expand into canonical order (``_canonical_expand``), then
-    renumber the counters in ``text`` per kind, from 1 in order of
-    first appearance (one id keeps one number throughout the file), and
-    blank the checkpoint call site and the round-trip temp dir. A ``#``
-    after a space is a section header's index, not an expression id, and
-    is kept."""
+    rename each lambda variable (one name and id) ``v<k>`` and renumber
+    the counters in ``text`` per kind, each from 1 in order of first
+    appearance (one id keeps one number throughout the file), and blank
+    the checkpoint call site and the round-trip temp dir. A ``#`` after
+    a space is a section header's index, not an expression id, and is
+    kept."""
     for k in range(len(_EXPAND.findall(text))):
         text = _canonical_expand(text, list(_EXPAND.finditer(text))[k])
+    lambdas: dict[tuple[str, str], int] = {}
+
+    def rename(m: re.Match) -> str:
+        k = lambdas.setdefault(m.groups(""), len(lambdas) + 1)
+        return f"lambda v{k}{m.group(2) or ''}"
+
+    text = re.sub(r"\blambda ([A-Za-z]\w*)(#\d+)?", rename, text)
     seen: dict[tuple[str, str], int] = {}
     kinds: dict[str, int] = {}
 
@@ -183,7 +193,7 @@ def normalize(text: str) -> str:
             seen[key] = kinds[key[0]] = kinds.get(key[0], 0) + 1
         return f"{key[0]}{seen[key]}"
 
-    text = re.sub(r"((?<=\S)#|plan_id=|RDD\[|(?<=lambda )[A-Za-z]\w*?_)(\d+)", renumber, text)
+    text = re.sub(r"((?<=\S)#|plan_id=|RDD\[)(\d+)", renumber, text)
     text = re.sub(r"(RDD\[\d+\] at \w+ at )\S+:\d+", r"\1<callsite>", text)
     return re.sub(r"gasket_roundtrip_\w+", "gasket_roundtrip_<tmp>", text)
 

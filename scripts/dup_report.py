@@ -2,13 +2,16 @@
 
 A code line is a source line with its comments, docstrings and
 multi-line string literals (the oracle SQL) removed and its tokens
-joined by single spaces. A code line is *duplicated* when it sits in a
-window of ``WINDOW`` consecutive code lines of one file that appears
-again, unoverlapped, elsewhere in the scanned tree. Duplicated lines are
-grouped by the set of top-level functions (or classes, or ``<module>``)
-that hold a copy of a window covering them, largest group first; the
-last line gives the duplicated and total code-line counts. Generated
-modules (docstring starting "GENERATED") are skipped.
+joined by single spaces. A string passed to a Spark SQL call
+(``expr``, ``selectExpr``, ``sql``, ``where``, ``filter``) is code, not
+prose: it is kept, one code line per source line. A code line is
+*duplicated* when it sits in a window of ``WINDOW`` consecutive code
+lines of one file that appears again, unoverlapped, elsewhere in the
+scanned tree. Duplicated lines are grouped by the set of top-level
+functions (or classes, or ``<module>``) that hold a copy of a window
+covering them, largest group first; the last line gives the duplicated
+and total code-line counts. Generated modules (docstring starting
+"GENERATED") are skipped.
 
 Run: ``python scripts/dup_report.py [path ...]`` (default: the
 ``gasket_rs_spark`` package).
@@ -26,15 +29,34 @@ from collections import defaultdict
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 WINDOW = 5
 
+_SQL_CALLS = {"expr", "selectExpr", "sql", "where", "filter"}
+
 _SKIP_TOKENS = {
     tokenize.COMMENT, tokenize.NL, tokenize.NEWLINE, tokenize.INDENT,
     tokenize.DEDENT, tokenize.ENCODING, tokenize.ENDMARKER,
 }
 
 
+def _spark_sql(tree: ast.AST) -> set[ast.AST]:
+    """The string literals in the arguments of Spark SQL calls."""
+    out = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            fn = node.func
+            name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+            if name in _SQL_CALLS:
+                for arg in [*node.args, *(k.value for k in node.keywords)]:
+                    out.update(
+                        n for n in ast.walk(arg) if isinstance(n, (ast.Constant, ast.JoinedStr))
+                    )
+    return out
+
+
 def _dropped_spans(tree: ast.AST) -> list[tuple[tuple[int, int], tuple[int, int]]]:
-    """(start, end) positions of docstrings and multi-line string literals."""
+    """(start, end) positions of docstrings and of the multi-line string
+    literals that are not Spark SQL."""
     spans = []
+    sql = _spark_sql(tree)
     for node in ast.walk(tree):
         if isinstance(
             node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
@@ -44,7 +66,7 @@ def _dropped_spans(tree: ast.AST) -> list[tuple[tuple[int, int], tuple[int, int]
         elif (
             isinstance(node, ast.JoinedStr)
             or (isinstance(node, ast.Constant) and isinstance(node.value, str))
-        ) and node.end_lineno > node.lineno:
+        ) and node.end_lineno > node.lineno and node not in sql:
             spans.append(((node.lineno, node.col_offset), (node.end_lineno, node.end_col_offset)))
     return spans
 
@@ -59,7 +81,9 @@ def code_lines(source: str) -> tuple[list[tuple[int, str]], ast.Module]:
             continue
         if any(a <= tok.start < b for a, b in spans):
             continue
-        by_row[tok.start[0]].append(tok.string)
+        for k, piece in enumerate(tok.string.split("\n")):
+            if piece.strip():
+                by_row[tok.start[0] + k].append(piece.strip())
     return [(row, " ".join(by_row[row])) for row in sorted(by_row)], tree
 
 

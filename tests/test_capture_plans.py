@@ -59,4 +59,35 @@ def test_session_dependent_names_are_normalized():
     early = plan.format(a=4, b=5, x=7, y=8, z=9, w=10, r=3, site="<unknown>")
     late = plan.format(a=40, b=41, x=120, y=121, z=122, w=123, r=9, site="NativeMethodAccessorImpl.java")
     assert normalize(early) == normalize(late)
-    assert "lambda x_1 * lambda y_1" in normalize(late)
+    assert "lambda v1 * lambda v2" in normalize(late)
+
+
+BIGRAM = (
+    "(2) Project [codegen id : 1]\n"
+    "Output [2]: [doc_id#{d}L, bigram#{g}]\n"
+    "Input [2]: [doc_id#{d}L, text#{t}]\n"
+    "Arguments: [doc_id#{d}L, zip_with(slice(split(text#{t},  , -1), 1, "
+    "greatest((size(split(text#{t},  , -1), false) - 1), 0)), "
+    "slice(split(text#{t},  , -1), 2, greatest((size(split(text#{t},  , -1), false) - 1), 0)), "
+    "lambdafunction(concat(lambda {first},  , lambda {second}), "
+    "lambda {a}, lambda {b}, false)) AS bigram#{g}]\n"
+)
+
+
+def test_sql_and_python_lambdas_of_one_structure_normalize_to_one_text():
+    """A bigram ``zip_with`` spelled in SQL (``(a, b) -> concat(a, ' ',
+    b)``, variables ``lambda a#15``) and with a Python lambda (PySpark
+    names ``lambda x_5#20``) is one plan; swapping the ``concat``
+    arguments is another."""
+    sql = BIGRAM.format(d=0, t=1, g=14, a="a#15", b="b#16", first="a#15", second="b#16")
+    col = BIGRAM.format(
+        d=3, t=4, g=19, a="x_5#20", b="y_6#21", first="x_5#20", second="y_6#21"
+    )
+    swapped = BIGRAM.format(
+        d=3, t=4, g=19, a="x_5#20", b="y_6#21", first="y_6#21", second="x_5#20"
+    )
+    assert sql != col
+    assert normalize(sql) == normalize(col)
+    assert "concat(lambda v1#4,  , lambda v2#5), lambda v1#4, lambda v2#5" in normalize(sql)
+    assert normalize(swapped) != normalize(col)
+    assert normalize(normalize(col)) == normalize(col)

@@ -302,16 +302,22 @@ def test_grid_snap_spelled_only_in_grid_module():
 
 
 def test_keys_spelled_only_in_keys_module():
-    """The cross-engine tokenizer ``split(<x>, ' ')`` and md5 hex-prefix
-    integer ``conv(substring(<hex>, s, d), 16, 10)`` have one Spark
-    spelling, gasket_rs_spark/keys.py (tokens / hex_int): no module
-    outside it calls ``F.split`` on a single space or ``F.conv`` on an
-    ``F.substring``. An AST scan, so the oracle SQL strings are never
-    matched; BPE's character split ``F.split("w", "")`` is another rule."""
+    """The cross-engine tokenizer ``split(<x>, ' ')``, its adjacent-token
+    k-grams and the md5 hex-prefix integer ``conv(substring(<hex>, s,
+    d), 16, 10)`` have one Spark spelling, gasket_rs_spark/keys.py
+    (tokens / grams / hex_int): no module outside it calls ``F.split``
+    on a single space, ``F.conv`` on an ``F.substring`` or
+    ``F.zip_with`` over an ``F.slice``, and no Spark SQL string (an
+    argument of ``expr``, ``selectExpr``, ``sql``, ``where`` or
+    ``filter``) spells ``split(<x>, ' ')`` or ``conv(``. An AST scan, so
+    the oracle SQL strings are never matched; BPE's character split
+    ``F.split("w", "")`` is another rule."""
     import ast
     import pathlib
+    import re
 
     pkg = pathlib.Path(__file__).resolve().parent.parent / "gasket_rs_spark"
+    sql_key = re.compile(r"split\(\s*\w+\s*,\s*' '\s*\)|conv\(")
 
     def f_call(node, name):
         return (
@@ -322,22 +328,48 @@ def test_keys_spelled_only_in_keys_module():
             and node.func.value.id == "F"
         )
 
+    def sql_strings(node):
+        if not isinstance(node, ast.Call):
+            return []
+        fn = node.func
+        name = fn.attr if isinstance(fn, ast.Attribute) else getattr(fn, "id", None)
+        if name not in {"expr", "selectExpr", "sql", "where", "filter"}:
+            return []
+        return [
+            s.value
+            for arg in [*node.args, *(k.value for k in node.keywords)]
+            for s in ast.walk(arg)
+            if isinstance(s, ast.Constant) and isinstance(s.value, str)
+        ]
+
     def is_key(node):
         if f_call(node, "split"):
             sep = node.args[1] if len(node.args) > 1 else None
             return isinstance(sep, ast.Constant) and sep.value == " "
+        if f_call(node, "zip_with"):
+            return any(f_call(a, "slice") for a in node.args)
+        if any(sql_key.search(s) for s in sql_strings(node)):
+            return True
         return f_call(node, "conv") and bool(node.args) and f_call(node.args[0], "substring")
 
+    def keys_spelled(node):
+        """The outermost key-spelling nodes under ``node``."""
+        if is_key(node):
+            yield node
+            return
+        for child in ast.iter_child_nodes(node):
+            yield from keys_spelled(child)
+
     offenders = [
-        f"{py.relative_to(pkg).as_posix()}:{node.lineno}: {ast.unparse(node)}"
+        f"{py.relative_to(pkg).as_posix()}:{node.lineno}: {ast.unparse(node)[:100]}"
         for py in sorted(pkg.rglob("*.py"))
         if py.relative_to(pkg).as_posix() != "keys.py"
-        for node in ast.walk(ast.parse(py.read_text()))
-        if is_key(node)
+        for node in keys_spelled(ast.parse(py.read_text()))
     ]
     assert not offenders, (
-        "spell the tokenizer and the md5 hex-prefix integer through "
-        f"gasket_rs_spark.keys.tokens/hex_int ({len(offenders)} sites): {offenders}"
+        "spell the tokenizer, its k-grams and the md5 hex-prefix integer "
+        f"through gasket_rs_spark.keys.tokens/grams/hex_int ({len(offenders)} "
+        f"sites): {offenders}"
     )
 
 
