@@ -82,12 +82,12 @@ _MAX_BUCKET_OCCUPANCY = 256
 _CC_DRIVER_EDGE_BOUND = 2_000_000
 
 
-def _shingles(col: str = "text"):
-    """The distinct token 3-shingles (``keys.grams``) of string column
-    ``col`` as an array<string>, in first-occurrence order; ``[]`` for
+def _shingles():
+    """The distinct token 3-shingles (``keys.grams``) of the ``text``
+    column as an array<string>, in first-occurrence order; ``[]`` for
     text with fewer than 3 tokens and for NULL text."""
     return F.coalesce(
-        F.array_distinct(keys.grams(keys.tokens(col), _SHINGLE_K)),
+        F.array_distinct(keys.grams(keys.tokens(), _SHINGLE_K)),
         F.array().cast("array<string>"),
     )
 
@@ -1268,9 +1268,10 @@ def q_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     return survivors.select("doc_id")
 
 
-def build_corpus_hash_index(
-    corpus: DataFrame, table_name: str, n_buckets: int = 32
-) -> None:
+_HASH_INDEX_BUCKETS = 32
+
+
+def build_corpus_hash_index(corpus: DataFrame, table_name: str) -> None:
     """Materialize the corpus dedup index as a BUCKETED table of text
     hashes — the layout lever that makes every future ingest batch's
     anti-join shuffle-free on the corpus side.
@@ -1286,7 +1287,7 @@ def build_corpus_hash_index(
     (
         corpus.select(F.xxhash64("text").alias("_h"))
         .distinct()
-        .write.bucketBy(n_buckets, "_h")
+        .write.bucketBy(_HASH_INDEX_BUCKETS, "_h")
         .sortBy("_h")
         .mode("overwrite")
         .saveAsTable(table_name)

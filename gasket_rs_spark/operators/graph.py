@@ -135,6 +135,40 @@ def _purchase_edges(
     )
 
 
+def _bipartite_edges(spark: SparkSession, sf_dir: str, u: str, v: str) -> DataFrame:
+    """The purchase edges with disjoint node ids, customer → 2c as
+    ``u`` and supplier → 2s+1 as ``v`` — the one spelling of the id
+    scheme behind the pagerank, k-core, label-propagation and
+    assortativity witnesses."""
+    return _purchase_edges(
+        spark,
+        sf_dir,
+        (F.col("o_custkey") * 2).alias(u),
+        (F.col("l_suppkey") * 2 + 1).alias(v),
+    )
+
+
+def _degrees(edges: DataFrame, u: str, v: str) -> DataFrame:
+    """``(node, deg)``: each node's degree in the undirected edge list
+    ``edges(u, v)``, one count per endpoint occurrence."""
+    return (
+        edges.select(F.col(u).alias("node"))
+        .unionByName(edges.select(F.col(v).alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("deg"))
+    )
+
+
+def _triangles(edges: DataFrame) -> DataFrame:
+    """``(a, c, b)`` per triangle of ``edges(ea, eb)`` (ea < eb): the
+    ordered wedge join e1(a,b) ⋈ e2(b,c) ⋈ e3(a,c), a < b < c, which
+    finds each triangle exactly once."""
+    e1 = edges.select(F.col("ea").alias("a"), F.col("eb").alias("b"))
+    e2 = edges.select(F.col("ea").alias("b"), F.col("eb").alias("c"))
+    e3 = edges.select(F.col("ea").alias("a"), F.col("eb").alias("c"))
+    return e1.join(e2, "b").join(e3, ["a", "c"])
+
+
 def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 suppliers by PageRank on the purchase graph.
 
@@ -146,12 +180,7 @@ def q_graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     customer = load(spark, sf_dir, "customer")
     supplier = load(spark, sf_dir, "supplier")
-    edges = _purchase_edges(
-        spark,
-        sf_dir,
-        (F.col("o_custkey") * 2).alias("src"),
-        (F.col("l_suppkey") * 2 + 1).alias("dst"),
-    )
+    edges = _bipartite_edges(spark, sf_dir, "src", "dst")
     nodes = customer.select((F.col("c_custkey") * 2).alias("node")).unionByName(
         supplier.select((F.col("s_suppkey") * 2 + 1).alias("node"))
     )
@@ -252,21 +281,11 @@ def q_graph_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     coefficient 3·triangles/wedges snapped at 6dp. EXACT oracle
     (identical SQL)."""
     edges = _strong_edges(spark, sf_dir)
-    deg = (
-        edges.select(F.col("ea").alias("node"))
-        .unionByName(edges.select(F.col("eb").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
+    deg = _degrees(edges, "ea", "eb")
     wedges = deg.agg(
         F.sum(F.col("deg") * (F.col("deg") - 1) / 2).cast("bigint").alias("n_wedges")
     )
-    e1 = edges.select(F.col("ea").alias("a"), F.col("eb").alias("b"))
-    e2 = edges.select(F.col("ea").alias("b"), F.col("eb").alias("c"))
-    e3 = edges.select(F.col("ea").alias("a"), F.col("eb").alias("c"))
-    tri = e1.join(e2, "b").join(e3, ["a", "c"]).agg(
-        F.count("*").cast("bigint").alias("n_triangles")
-    )
+    tri = _triangles(edges).agg(F.count("*").cast("bigint").alias("n_triangles"))
     n_edges = edges.agg(F.count("*").cast("bigint").alias("n_edges"))
     return (
         n_edges.crossJoin(F.broadcast(wedges))
@@ -350,16 +369,8 @@ def q_local_clustering_coefficient(spark: SparkSession, sf_dir: str) -> DataFram
     triangles witness; the credit union and both aggs shuffle on the
     8-byte node key."""
     edges = _strong_edges(spark, sf_dir)
-    deg = (
-        edges.select(F.col("ea").alias("node"))
-        .unionByName(edges.select(F.col("eb").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").cast("bigint").alias("deg"))
-    )
-    e1 = edges.select(F.col("ea").alias("a"), F.col("eb").alias("b"))
-    e2 = edges.select(F.col("ea").alias("b"), F.col("eb").alias("c"))
-    e3 = edges.select(F.col("ea").alias("a"), F.col("eb").alias("c"))
-    tris = e1.join(e2, "b").join(e3, ["a", "c"])
+    deg = _degrees(edges, "ea", "eb")
+    tris = _triangles(edges)
     tri_per_node = (
         tris.select(F.col("a").alias("node"))
         .unionByName(tris.select(F.col("b").alias("node")))
@@ -466,18 +477,6 @@ _KCORE_ITERS = 5  # fixed peeling rounds — deterministic on both engines
 _KCORE_Q = 0.6  # k = smallest degree at/above the p60 of the initial dist
 
 
-def _bipartite_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Undirected customer–supplier purchase edges with disjoint node ids
-    (customer → 2c, supplier → 2s+1) — the pagerank witness's graph,
-    reused so the graph family shares one extraction shape."""
-    return _purchase_edges(
-        spark,
-        sf_dir,
-        (F.col("o_custkey") * 2).alias("a"),
-        (F.col("l_suppkey") * 2 + 1).alias("b"),
-    )
-
-
 def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     """k-core peeling trajectory of the customer–supplier purchase graph
     (Seidman 1983; the distributed formulation is Montresor et al. 2013).
@@ -498,14 +497,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes². localCheckpoint per round truncates the O(iters)-deep
     lineage (cluster variant: reliable checkpoint, see SCALE.md).
     """
-    edges = _bipartite_edges(spark, sf_dir).localCheckpoint(eager=True)
-    deg0 = (
-        edges.select(F.col("a").alias("node"))
-        .unionByName(edges.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count("*").alias("deg"))
-    )
-    hist = deg0.groupBy("deg").agg(F.count("*").alias("cnt"))
+    edges = _bipartite_edges(spark, sf_dir, "a", "b").localCheckpoint(eager=True)
+    hist = _degrees(edges, "a", "b").groupBy("deg").agg(F.count("*").alias("cnt"))
     n_nodes0 = hist.agg(F.sum("cnt").alias("n0"))
     w = (
         # bounded: one row per distinct degree value
@@ -529,18 +522,15 @@ def kcore_peel(edges: DataFrame, kf: DataFrame, iters: int) -> DataFrame:
     (iter, n_nodes, n_edges)."""
     rows = []
     for i in range(1, iters + 1):
-        deg = (
-            edges.select(F.col("a").alias("node"))
-            .unionByName(edges.select(F.col("b").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("deg"))
-        )
+        deg = _degrees(edges, "a", "b")
         # kept feeds THREE consumers (two semi-joins + the n_nodes
         # count); unmaterialized, the degree aggregation re-ran per
-        # consumer. LAZY checkpoints throughout (r21 session 3): the
-        # fixed-round loop never inspects results mid-flight, so the
-        # single action materializes each frame once with no per-round
-        # driver barrier (interleaved A/B min 4.460 → 3.885 s at sf0.1,
+        # consumer. The checkpoints are lazy, but adaptive execution
+        # still runs every shuffle-map stage below each one while the
+        # loop builds it, so each round waits on the last: at sf0.01
+        # building q_graph_kcore starts 36 jobs, 25 of them in these
+        # two checkpoints (5 per round), and the action 16. Lazy still
+        # beat eager (interleaved A/B min 4.460 → 3.885 s at sf0.1,
         # identical trajectory rows).
         kept = (
             deg.crossJoin(F.broadcast(kf))
@@ -798,12 +788,7 @@ def q_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Labels are checkpointed per round to truncate lineage; skewed hubs
     are AQE skew-join territory. No pair explosion anywhere — cost is
     O(E) per round."""
-    raw = _purchase_edges(
-        spark,
-        sf_dir,
-        (F.col("o_custkey") * 2).cast("bigint").alias("src"),
-        (F.col("l_suppkey") * 2 + 1).cast("bigint").alias("dst"),
-    )
+    raw = _bipartite_edges(spark, sf_dir, "src", "dst")
     lab = propagate_labels(raw, _LPA_ITERS)
     return (
         lab.groupBy(F.col("label").alias("community"))
@@ -854,9 +839,12 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         # downstream of the crossJoin made the edge-join+agg subtree run
         # twice per half-step (once under the BroadcastExchange for mx,
         # once in the main branch — §2.4 pruning-defeats-reuse).
-        # Checkpoints LAZY (r21 session 3): fixed-iteration loop — one
-        # materialization per action, no per-half-step driver barrier
-        # (interleaved A/B min 3.540 → 3.045 s at sf0.1, identical rows).
+        # The checkpoints are lazy, but adaptive execution still runs
+        # each one's shuffle-map stages while the loop builds it: at
+        # sf0.01 building the witness starts 23 jobs, 19 of them in
+        # these two checkpoints (4-5 per half-step), and the action 5.
+        # Lazy still beat eager (interleaved A/B min 3.540 → 3.045 s at
+        # sf0.1, identical rows).
         hraw = (
             edges.join(auth, "supp")
             .groupBy("cust")
@@ -951,12 +939,7 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     explosion. The int64 moments hold to ~10¹⁵ edges·deg³; past that
     the moments themselves go to double (or Spark DECIMAL) with the
     same downstream arithmetic."""
-    raw = _purchase_edges(
-        spark,
-        sf_dir,
-        (F.col("o_custkey") * 2).cast("bigint").alias("src"),
-        (F.col("l_suppkey") * 2 + 1).cast("bigint").alias("dst"),
-    )
+    raw = _bipartite_edges(spark, sf_dir, "src", "dst")
     edges = raw.union(
         raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     ).localCheckpoint(eager=True)

@@ -195,14 +195,8 @@ def build_media_payload(data: bytes, modality: str) -> bytes:
     raise ValueError(f"unknown modality {modality!r}")
 
 
-def decode_payload(payload: bytes, modality: str, fake: bool = False):
-    """Decode a media payload with the pure-Python container parsers.
-
-    Returns a :class:`DecodedMedia`. ``fake=True`` keeps the legacy
-    pass-through (payload bytes unchanged) used by the byte-stats witness.
-    """
-    if fake:
-        return payload
+def decode_payload(payload: bytes, modality: str) -> DecodedMedia:
+    """Decode a media payload with the pure-Python container parsers."""
     if modality == "image":
         w, h, vals, _ = parse_ppm(payload)
         return DecodedMedia("image", 1, w, h, 0, vals)
@@ -302,8 +296,8 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     The pattern that matters at 100 TB: payloads stay partitioned, each
     Arrow batch is decoded in-process, and only the (tiny) feature vectors
-    come back. The fake decoder keeps values deterministic so the oracle
-    can recompute them from the source text.
+    come back. The statistics are over the raw payload bytes, so the
+    oracle can recompute them from the source text.
     """
     # Project to exactly the columns the extractor needs BEFORE the Arrow
     # boundary — the metadata struct would otherwise ride along in every
@@ -314,14 +308,10 @@ def q_multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def extract(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            decoded = [
-                decode_payload(p, m, fake=True)
-                for p, m in zip(pdf["payload"], pdf["modality"])
-            ]
             # Byte statistics via numpy views over the payload buffers —
             # no interpreter loop over individual bytes (at 100 TB the
             # per-byte Python loop this replaces IS the job's runtime).
-            arrays = [np.frombuffer(b, dtype=np.uint8) for b in decoded]
+            arrays = [np.frombuffer(b, dtype=np.uint8) for b in pdf["payload"]]
             yield pd.DataFrame(
                 {
                     "doc_id": pdf["doc_id"],
@@ -401,15 +391,13 @@ def q_multimodal_decode_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     return docs.mapInPandas(roundtrip, DECODE_STATS_SCHEMA)
 
 
-CHANNEL_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("n_pix", LongType()),
-        StructField("mean_r", DoubleType()),
-        StructField("mean_g", DoubleType()),
-        StructField("mean_b", DoubleType()),
-    ]
-)
+# pixel count and per-channel means of an image or of one resize block
+_CHANNEL_MEANS = [
+    StructField("n_pix", LongType()),
+    *[StructField(f"mean_{c}", DoubleType()) for c in "rgb"],
+]
+
+CHANNEL_SCHEMA = StructType([StructField("doc_id", LongType()), *_CHANNEL_MEANS])
 
 
 def q_multimodal_image_channels(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -519,14 +507,7 @@ def q_multimodal_audio_spectrum(spark: SparkSession, sf_dir: str) -> DataFrame:
 _RESIZE_BLOCKS = 8
 
 RESIZE_SCHEMA = StructType(
-    [
-        StructField("doc_id", LongType()),
-        StructField("block", LongType()),
-        StructField("n_pix", LongType()),
-        StructField("mean_r", DoubleType()),
-        StructField("mean_g", DoubleType()),
-        StructField("mean_b", DoubleType()),
-    ]
+    [StructField("doc_id", LongType()), StructField("block", LongType()), *_CHANNEL_MEANS]
 )
 
 

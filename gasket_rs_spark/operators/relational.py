@@ -20,12 +20,36 @@ plain hash aggregates with map-side partial aggregation (Catalyst default).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
 from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
+
+
+def _revenue() -> Column:
+    """The TPC-H revenue aggregate, sum(l_extendedprice·(1 − l_discount))
+    rounded to 4dp as every oracle spells it."""
+    return F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4)
+
+
+def _orders_1996_97(orders: DataFrame) -> DataFrame:
+    """The orders placed in 1996 or 1997 (the q5 / q8 order window)."""
+    return orders.where(
+        (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
+        & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
+    )
+
+
+def _pricing_sums() -> list[Column]:
+    """The sum_qty, sum_base_price and sum_disc_price columns of the
+    TPC-H Q1 pricing summary."""
+    return [
+        F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
+        F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
+        _revenue().alias("sum_disc_price"),
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -58,7 +82,7 @@ def q_flagship_revenue_by_region(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("r_name")
         .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("revenue"),
+            _revenue().alias("revenue"),
             F.count("*").alias("n_items"),
         )
         .orderBy(F.col("revenue").desc())
@@ -315,7 +339,7 @@ def q_tpch_q3_unshipped(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.col("o_custkey") == F.col("c_custkey"),
         )
         .groupBy("o_orderkey", "o_orderdate")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("revenue"))
+        .agg(_revenue().alias("revenue"))
         .orderBy(F.col("revenue").desc(), F.col("o_orderkey"))
         .limit(10)
     )
@@ -341,7 +365,7 @@ def q_tpch_q7_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("supp_nation") != F.col("cust_nation"))
         .withColumn("l_year", F.year("l_shipdate").cast("bigint"))
         .groupBy("supp_nation", "cust_nation", "l_year")
-        .agg(F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("volume"))
+        .agg(_revenue().alias("volume"))
     )
 
 
@@ -389,10 +413,7 @@ def q_tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     region = load(spark, sf_dir, "region")
     return (
         lineitem.join(
-            orders.where(
-                (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-                & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-            ),
+            _orders_1996_97(orders),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .join(broadcast(supplier), F.col("l_suppkey") == F.col("s_suppkey"))
@@ -405,11 +426,7 @@ def q_tpch_q5_local_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(broadcast(nation), F.col("s_nationkey") == F.col("n_nationkey"))
         .join(broadcast(region), F.col("n_regionkey") == F.col("r_regionkey"))
         .groupBy("r_name", "n_name")
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("revenue")
-        )
+        .agg(_revenue().alias("revenue"))
     )
 
 
@@ -495,11 +512,7 @@ def q_tpch_q19_disjunctive(spark: SparkSession, sf_dir: str) -> DataFrame:
     return (
         lineitem.join(broadcast(part), F.col("l_partkey") == F.col("p_partkey"))
         .where(cond)
-        .agg(
-            F.round(
-                F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4
-            ).alias("revenue")
-        )
+        .agg(_revenue().alias("revenue"))
     )
 
 
@@ -551,9 +564,7 @@ def q_tpch_q1_pricing(spark: SparkSession, sf_dir: str) -> DataFrame:
         lineitem.where(F.col("l_shipdate") <= F.lit("1999-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("sum_disc_price"),
+            *_pricing_sums(),
             F.round(
                 F.sum(
                     F.col("l_extendedprice") * (1 - F.col("l_discount")) * (1 + F.col("l_tax"))
@@ -625,10 +636,7 @@ def q_tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .join(broadcast(supplier), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(
-            orders.where(
-                (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
-                & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
-            ),
+            _orders_1996_97(orders),
             F.col("l_orderkey") == F.col("o_orderkey"),
         )
         .join(customer, F.col("o_custkey") == F.col("c_custkey"))
@@ -809,11 +817,7 @@ def q_tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("l_shipdate") < F.lit("1996-04-01").cast("timestamp"))
         )
         .groupBy("l_suppkey")
-        .agg(
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias(
-                "total_revenue"
-            )
-        )
+        .agg(_revenue().alias("total_revenue"))
     )
     mx = rev.agg(F.max("total_revenue").alias("max_revenue"))
     return (
@@ -1238,9 +1242,7 @@ def q_agg_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("l_shipdate") <= F.lit("1998-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(
-            F.round(F.sum("l_quantity"), 2).alias("sum_qty"),
-            F.round(F.sum("l_extendedprice"), 2).alias("sum_base_price"),
-            F.round(F.sum(F.col("l_extendedprice") * (1 - F.col("l_discount"))), 4).alias("sum_disc_price"),
+            *_pricing_sums(),
             F.round(F.avg("l_quantity"), 4).alias("avg_qty"),
             F.round(F.avg("l_discount"), 4).alias("avg_disc"),
             F.count("*").alias("count_order"),

@@ -143,9 +143,7 @@ def quantile_sketch_merge(sketches: DataFrame, group_cols: list[str]) -> DataFra
     )
 
 
-def quantile_from_sketch(
-    sketch: DataFrame, group_cols: list[str], qs: tuple[float, ...] = _Q_QS
-) -> DataFrame:
+def quantile_from_sketch(sketch: DataFrame, group_cols: list[str]) -> DataFrame:
     """Quantile estimates from a sketch: per group, the q-quantile is the
     geometric midpoint of the first bucket whose cumulative count reaches
     ceil(q·n) (the classic lower-quantile rank). Cumulative sum is a
@@ -161,7 +159,7 @@ def quantile_from_sketch(
         "total", F.sum("qcnt").over(wt)
     )
     aggs = [F.max("total").cast("bigint").alias("n_events")]
-    for q in qs:
+    for q in _Q_QS:
         tag = str(q).replace("0.", "p")
         picked = F.min(
             F.when(

@@ -25,13 +25,13 @@ from gasket_rs_spark.tables import load
 SALT_BUCKETS = 16
 
 
-def salted_agg(df: DataFrame, key: str, value: str, buckets: int = SALT_BUCKETS) -> DataFrame:
+def salted_agg(df: DataFrame, key: str, value: str) -> DataFrame:
     """Two-stage aggregation over a skewed key.
 
     Salt is derived from a uniform row attribute hash (event_id) rather
     than rand() so the plan stays deterministic and retry-safe.
     """
-    salted = df.withColumn("_salt", F.pmod(F.xxhash64("event_id"), F.lit(buckets)))
+    salted = df.withColumn("_salt", F.pmod(F.xxhash64("event_id"), F.lit(SALT_BUCKETS)))
     partial = salted.groupBy(key, "_salt").agg(
         F.sum(value).alias("_sum"),
         F.count("*").alias("_cnt"),
@@ -52,22 +52,16 @@ def q_skew_salted_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     return salted_agg(load(spark, sf_dir, "events"), "event_type", "value")
 
 
-def salted_join(
-    fact: DataFrame,
-    dim: DataFrame,
-    key: str,
-    salt_src: str,
-    buckets: int = SALT_BUCKETS,
-) -> DataFrame:
+def salted_join(fact: DataFrame, dim: DataFrame, key: str, salt_src: str) -> DataFrame:
     """Salted equi-join for a skewed fact key: replicate the right side
-    ×buckets, salt each fact row deterministically (hash of ``salt_src``,
-    not rand() — retry-safe), join on (key, salt). Every hot key spreads
-    over ``buckets`` reducers instead of one. Result is row-identical to
-    the unsalted join; only the shuffle layout changes."""
-    salt_values = F.array(*[F.lit(i) for i in range(buckets)])
+    ×SALT_BUCKETS, salt each fact row deterministically (hash of
+    ``salt_src``, not rand() — retry-safe), join on (key, salt). Every
+    hot key spreads over SALT_BUCKETS reducers instead of one. Result is
+    row-identical to the unsalted join; only the shuffle layout changes."""
+    salt_values = F.array(*[F.lit(i) for i in range(SALT_BUCKETS)])
     dim_rep = dim.withColumn("_salt", F.explode(salt_values))
     fact_s = fact.withColumn(
-        "_salt", F.pmod(F.xxhash64(salt_src), F.lit(buckets)).cast("int")
+        "_salt", F.pmod(F.xxhash64(salt_src), F.lit(SALT_BUCKETS)).cast("int")
     )
     return fact_s.join(dim_rep, [key, "_salt"]).drop("_salt")
 
@@ -156,10 +150,22 @@ def q_skew_salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     proves the rewrite is answer-invariant, the physical point (each hot
     key split over 16 reducers) is visible in the shuffle layout."""
     events = load(spark, sf_dir, "events")
-    dim = events.select("event_type").distinct().withColumn(
+    joined = salted_join(events, event_type_weights(events), "event_type", "event_id")
+    return weighted_type_totals(joined)
+
+
+def event_type_weights(events: DataFrame) -> DataFrame:
+    """``(event_type, weight)``: each event type weighted by the length of
+    its name — the attribute table of the salted and stream-static
+    joins."""
+    return events.select("event_type").distinct().withColumn(
         "weight", F.length("event_type").cast("double")
     )
-    joined = salted_join(events, dim, "event_type", "event_id")
+
+
+def weighted_type_totals(joined: DataFrame) -> DataFrame:
+    """Per event_type of the events joined to ``event_type_weights``:
+    the event count, the weight and Σ value·weight on the 1e-4 grid."""
     return joined.groupBy("event_type").agg(
         F.count("*").alias("n_events"),
         F.max("weight").alias("weight"),

@@ -26,7 +26,7 @@ Scale notes (100 TB):
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from gasket_rs_spark import keys
@@ -278,16 +278,20 @@ def q_zorder_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("l_suppkey") % 256).cast("int").alias("sy"),
     )
     zed = li.withColumn("zval", _interleave(F.col("px"), F.col("sy")))
-    return (
-        zed.groupBy(F.shiftright("zval", 10).alias("z_bucket"))
-        .agg(
-            F.count("*").alias("n_rows"),
-            F.min("px").alias("min_px"),
-            F.max("px").alias("max_px"),
-            F.min("sy").alias("min_sy"),
-            F.max("sy").alias("max_sy"),
-        )
+    return zed.groupBy(F.shiftright("zval", 10).alias("z_bucket")).agg(
+        F.count("*").alias("n_rows"), *_bucket_bounds()
     )
+
+
+def _bucket_bounds() -> list[Column]:
+    """The min and max of both quantized keys in a layout bucket — the
+    audit columns of the Z-order and Hilbert layout witnesses."""
+    return [
+        F.min("px").alias("min_px"),
+        F.max("px").alias("max_px"),
+        F.min("sy").alias("min_sy"),
+        F.max("sy").alias("max_sy"),
+    ]
 
 
 # ---------------------------------------------------------------------------
@@ -530,13 +534,7 @@ def q_hilbert_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
     hil = _hilbert_spark(pairs)
     return (
         hil.groupBy(F.shiftright("hd", 10).alias("h_bucket"))
-        .agg(
-            F.sum("cnt").cast("bigint").alias("n_rows"),
-            F.min("px").alias("min_px"),
-            F.max("px").alias("max_px"),
-            F.min("sy").alias("min_sy"),
-            F.max("sy").alias("max_sy"),
-        )
+        .agg(F.sum("cnt").cast("bigint").alias("n_rows"), *_bucket_bounds())
         .orderBy("h_bucket")
     )
 

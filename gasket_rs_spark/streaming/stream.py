@@ -34,6 +34,9 @@ from gasket_rs_spark.streaming.windows import window_counts
 # Scratch dirs already registered for atexit cleanup (one per fixture key).
 _SCRATCH_DIRS: set[str] = set()
 
+_FILES_PER_TRIGGER = 1  # maxFilesPerTrigger of every file stream here
+_WATERMARK = "1 hour"  # event-time delay of the windowed and dedup streams
+
 
 def rate_source(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
     """Interval tick source — the reference's TimerPort (messaging.rs:151-209)
@@ -45,7 +48,7 @@ def rate_source(spark: SparkSession, rows_per_second: int = 100) -> DataFrame:
     )
 
 
-def events_file_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: int = 1) -> DataFrame:
+def events_file_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Replay the events table as a bounded file stream.
 
     ``maxFilesPerTrigger`` is the backpressure bound — the analogue of the
@@ -60,7 +63,7 @@ def events_file_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: 
     os.symlink(f"{sf_dir}/events.parquet", os.path.join(stage_dir, "events.parquet"))
     stream = (
         spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
+        .option("maxFilesPerTrigger", _FILES_PER_TRIGGER)
         .parquet(stage_dir)
     )
     from ..tables import _normalize_ts
@@ -68,13 +71,13 @@ def events_file_stream(spark: SparkSession, sf_dir: str, max_files_per_trigger: 
     return stream.withColumn("ts", _normalize_ts(raw_schema["ts"].dataType))
 
 
-def windowed_counts_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def windowed_counts_stream(events: DataFrame) -> DataFrame:
     """Tumbling-window counts + value sums with watermark — the streaming
     twin of ``windows.q_stream_tumbling`` plus late-data drop (X29+X31).
     Emits the same aggregate columns (same floor-rounding) so the pytest
     equivalence check is frame-equal, not count-only."""
     return window_counts(
-        events.withWatermark("ts", watermark),
+        events.withWatermark("ts", _WATERMARK),
         F.window("ts", "10 minutes"),
         "event_type",
         F.col("w.start").alias("window_start"),
@@ -82,9 +85,9 @@ def windowed_counts_stream(events: DataFrame, watermark: str = "1 hour") -> Data
     )
 
 
-def deduped_stream(events: DataFrame, watermark: str = "1 hour") -> DataFrame:
+def deduped_stream(events: DataFrame) -> DataFrame:
     """Stateful streaming dedup within the watermark (X32)."""
-    return events.withWatermark("ts", watermark).dropDuplicatesWithinWatermark(
+    return events.withWatermark("ts", _WATERMARK).dropDuplicatesWithinWatermark(
         ["user_id", "event_type"]
     )
 
@@ -297,7 +300,11 @@ def _file_stream(spark: SparkSession, src: str) -> DataFrame:
     ``maxFilesPerTrigger`` is the bounded-channel backpressure analogue
     (messaging.rs:384-391)."""
     schema = spark.read.parquet(src).schema
-    return spark.readStream.schema(schema).option("maxFilesPerTrigger", 1).parquet(src)
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", _FILES_PER_TRIGGER)
+        .parquet(src)
+    )
 
 
 def _events_pipeline(
@@ -485,14 +492,10 @@ def q_stream_static_join_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
     aggregates the sink, which is batch-split invariant because the
     join is row-local — so a real multi-microbatch stream-static join
     is oracle-checked EXACT against the plain batch join."""
+    from ..operators.skew import event_type_weights, weighted_type_totals
     from ..tables import load as _load
 
-    static_dim = (
-        _load(spark, sf_dir, "events")
-        .select("event_type")
-        .distinct()
-        .withColumn("weight", F.length("event_type").cast("double"))
-    )
+    static_dim = event_type_weights(_load(spark, sf_dir, "events"))
 
     def build(read: Callable[[], DataFrame]) -> DataFrame:
         return (
@@ -501,17 +504,7 @@ def q_stream_static_join_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame
             .select("event_id", "event_type", "value", "weight")
         )
 
-    return (
-        _events_pipeline(spark, sf_dir, "sj_", build)
-        .groupBy("event_type")
-        .agg(
-            F.count("*").alias("n_events"),
-            F.max("weight").alias("weight"),
-            snap(F.sum(F.col("value") * F.col("weight")), 10000).alias(
-                "weighted_value"
-            ),
-        )
-    )
+    return weighted_type_totals(_events_pipeline(spark, sf_dir, "sj_", build))
 
 
 def q_stream_stream_join_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:

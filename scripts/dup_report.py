@@ -1,10 +1,12 @@
 """Report copy-pasted code in the package.
 
-A code line is a source line with its comments, docstrings and
-multi-line string literals (the oracle SQL) removed and its tokens
-joined by single spaces. A string passed to a Spark SQL call
+A code line is a source line with its comments, docstrings, import
+statements and multi-line string literals (the oracle SQL) removed and
+its tokens joined by single spaces. A string passed to a Spark SQL call
 (``expr``, ``selectExpr``, ``sql``, ``where``, ``filter``) is code, not
-prose: it is kept, one code line per source line. A code line is
+prose: it is kept without its quotes, one code line per source line, so
+SQL written as implicitly concatenated pieces matches the same SQL in
+one triple-quoted literal. A code line is
 *duplicated* when it sits in a window of ``WINDOW`` consecutive code
 lines of one file that appears again, unoverlapped, elsewhere in the
 scanned tree. Duplicated lines are grouped by the set of top-level
@@ -22,6 +24,7 @@ from __future__ import annotations
 import ast
 import io
 import os
+import re
 import sys
 import tokenize
 from collections import defaultdict
@@ -52,36 +55,52 @@ def _spark_sql(tree: ast.AST) -> set[ast.AST]:
     return out
 
 
-def _dropped_spans(tree: ast.AST) -> list[tuple[tuple[int, int], tuple[int, int]]]:
-    """(start, end) positions of docstrings and of the multi-line string
-    literals that are not Spark SQL."""
+Span = tuple[tuple[int, int], tuple[int, int]]
+
+
+def _span(node: ast.AST) -> Span:
+    return (node.lineno, node.col_offset), (node.end_lineno, node.end_col_offset)
+
+
+def _dropped_spans(tree: ast.AST, sql: set[ast.AST]) -> list[Span]:
+    """(start, end) positions of docstrings, of import statements and of
+    the multi-line string literals that are not Spark SQL."""
     spans = []
-    sql = _spark_sql(tree)
     for node in ast.walk(tree):
-        if isinstance(
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            spans.append(_span(node))
+        elif isinstance(
             node, (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
         ) and ast.get_docstring(node, clean=False) is not None:
-            doc = node.body[0]
-            spans.append(((doc.lineno, doc.col_offset), (doc.end_lineno, doc.end_col_offset)))
+            spans.append(_span(node.body[0]))
         elif (
             isinstance(node, ast.JoinedStr)
             or (isinstance(node, ast.Constant) and isinstance(node.value, str))
         ) and node.end_lineno > node.lineno and node not in sql:
-            spans.append(((node.lineno, node.col_offset), (node.end_lineno, node.end_col_offset)))
+            spans.append(_span(node))
     return spans
+
+
+# a string token's prefix letters and quotes around its body
+_QUOTES = re.compile(r"""^[a-zA-Z]*('{3}|"{3}|'|")(.*)\1$""", re.S)
 
 
 def code_lines(source: str) -> tuple[list[tuple[int, str]], ast.Module]:
     """The file's code lines as (line number, normalized text), and its AST."""
     tree = ast.parse(source)
-    spans = _dropped_spans(tree)
+    sql = _spark_sql(tree)
+    spans = _dropped_spans(tree, sql)
+    sql_spans = [_span(node) for node in sql]
     by_row: dict[int, list[str]] = defaultdict(list)
     for tok in tokenize.generate_tokens(io.StringIO(source).readline):
         if tok.type in _SKIP_TOKENS:
             continue
         if any(a <= tok.start < b for a, b in spans):
             continue
-        for k, piece in enumerate(tok.string.split("\n")):
+        text = tok.string
+        if tok.type == tokenize.STRING and any(a <= tok.start < b for a, b in sql_spans):
+            text = _QUOTES.match(text).group(2)
+        for k, piece in enumerate(text.split("\n")):
             if piece.strip():
                 by_row[tok.start[0] + k].append(piece.strip())
     return [(row, " ".join(by_row[row])) for row in sorted(by_row)], tree

@@ -16,7 +16,13 @@ Checks (seconds each, except the full-suite run — the one JVM step,
      unaudited single-partition windows).
   4. pytest tests/test_registry_schemas.py — structural witness/oracle
      registry invariants (no top-level array columns in oracled
-     witnesses, every oracle key has a witness, docstring discipline).
+     witnesses, every oracle key has a witness, docstring discipline);
+     pytest tests/test_dup_report.py — the duplication scan and the
+     package's DUP_BUDGET; and the test_plans.py source guards
+     test_grid_snap_spelled_only_in_grid_module,
+     test_keys_spelled_only_in_keys_module and
+     test_collect_sites_are_allowlisted (one spelling of the grid snap
+     and of the keys; every driver collect allowlisted).
   5. LOCALVERIFY_r{N}.json freshness — the committed 3-SF sweep artifact
      for the closing round must exist, report zero failures, cover the
      full current catalog, AND have no operator-source diff since its
@@ -75,6 +81,10 @@ FAST_TESTS = [
     "tests/test_rotation.py",
     "tests/test_plans.py::test_no_unpartitioned_window_in_source",
     "tests/test_registry_schemas.py",
+    "tests/test_dup_report.py",
+    "tests/test_plans.py::test_grid_snap_spelled_only_in_grid_module",
+    "tests/test_plans.py::test_keys_spelled_only_in_keys_module",
+    "tests/test_plans.py::test_collect_sites_are_allowlisted",
 ]
 
 

@@ -76,9 +76,6 @@ def test_prometheus_rendering():
 
 def test_decode_rejects_garbage_and_keeps_passthrough():
     """Since round 7 ``decode_payload`` is a real container parser — junk
-    bytes fail with a parse error (not NotImplementedError), and the
-    legacy fake=True pass-through is preserved for the byte-stats
-    witness."""
+    bytes fail with a parse error (not NotImplementedError)."""
     with pytest.raises(ValueError, match="not a P6"):
         decode_payload(b"xx", "image")
-    assert decode_payload(b"xx", "image", fake=True) == b"xx"

@@ -112,10 +112,6 @@ def test_video_framing_small_inputs():
     assert media.values.tolist() == list(range(15))
 
 
-def test_fake_passthrough_still_supported():
-    assert decode_payload(b"xyz", "image", fake=True) == b"xyz"
-
-
 from hypothesis import given, settings
 from hypothesis import strategies as st
 
