@@ -14,6 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark import store
 from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import events_with_sec, load
 
@@ -237,16 +238,16 @@ def q_supplier_cooccurrence(spark: SparkSession, sf_dir: str) -> DataFrame:
     at the 100× target, same policy as every other SF-scaled join
     (VERDICT r8 #5; pinned in tests/test_plans.py). Snap
     at 6dp; (co DESC, s1, s2) makes the top-k deterministic."""
-    d = (
+    d = store.materialize(
         load(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_suppkey")
-        .distinct()
+        .distinct(),
         # d feeds THREE consumers (both pair sides + the per-supplier
         # counts) — unmaterialized, the scan+distinct shuffle ran per
         # consumer (§2.4). Lazy: one materialization per action (r21
         # interleaved A/B min 2.407 → 1.954 s at sf0.1, every pair
         # favors, identical rows).
-        .localCheckpoint(eager=False)
+        "analytics.cooccurrence", eager=False,
     )
     a = d.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s1"))
     b = d.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s2"))
@@ -533,12 +534,12 @@ def q_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
         units(F.col("value"), 100).alias("cents"),
     )
     w_med = Window.partitionBy("event_type", "week").orderBy("cents", "event_id")
-    weekly = (
+    weekly = store.materialize(
         ev.withColumn("rn", F.row_number().over(w_med))
         .withColumn("cnt", F.count("*").over(Window.partitionBy("event_type", "week")))
         .where(F.expr("rn = (cnt + 1) div 2"))  # lower median
-        .select("event_type", "week", F.col("cents").alias("med_cents"))
-        .localCheckpoint(eager=True)  # feeds n_weeks + both pair sides
+        .select("event_type", "week", F.col("cents").alias("med_cents")),
+        "analytics.theil_sen_weekly", eager=True,  # feeds n_weeks + both pair sides
     )
     n_weeks = weekly.groupBy("event_type").agg(
         F.count("*").cast("bigint").alias("n_weeks")
@@ -594,15 +595,15 @@ def q_assoc_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     25-row broadcast; the min-support filter prunes before the rule
     explosion. The lineitem⋈part brand lookup is an SF-scaled equi-join
     left to AQE (no broadcast hint — the r8 #5 policy)."""
-    baskets = (
+    baskets = store.materialize(
         load(spark, sf_dir, "lineitem")
         .join(
             load(spark, sf_dir, "part"),
             F.col("l_partkey") == F.col("p_partkey"),
         )
         .select(F.col("l_orderkey").alias("ok"), F.col("p_brand").alias("brand"))
-        .distinct()
-        .localCheckpoint(eager=True)  # feeds N, per-brand counts, both pair sides
+        .distinct(),
+        "analytics.assoc_baskets", eager=True,  # feeds N, per-brand counts, both pair sides
     )
     n_baskets = baskets.agg(F.countDistinct("ok").cast("bigint").alias("n"))
     cnt = baskets.groupBy("brand").agg(F.count("*").cast("bigint").alias("cnt"))
@@ -1341,9 +1342,9 @@ def q_acf_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     thousands of rows for decades), localCheckpointed once and reused
     by the totals, the lag join (a 7×-exploded bounded self-join) and
     the denominator — no second corpus scan."""
-    grid = _daily_counts(events_with_sec(spark, sf_dir)).localCheckpoint(
-        eager=True  # bounded; feeds tot + both join sides
-    )
+    # bounded; feeds tot + both join sides
+    grid = _daily_counts(events_with_sec(spark, sf_dir))
+    grid = store.materialize(grid, "analytics.acf_grid", eager=True)
     tot = grid.agg(
         F.count("*").cast("bigint").alias("n"), F.sum("c").cast("bigint").alias("s")
     )
@@ -1535,7 +1536,7 @@ def q_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = load(spark, sf_dir, "lineitem").select(
         "l_orderkey", (F.col("l_partkey") % _APRIORI_ITEMS).cast("bigint").alias("item")
     )
-    bi = li.distinct().localCheckpoint(eager=True)
+    bi = store.materialize(li.distinct(), "analytics.apriori_items", eager=True)
     nb = bi.select("l_orderkey").distinct().count()
     minsup = max(nb // _APRIORI_MINSUP_DIV, 2)
     f1 = (
@@ -1544,23 +1545,24 @@ def q_apriori_triples(spark: SparkSession, sf_dir: str) -> DataFrame:
         .where(F.col("s") >= minsup)
         .select("item")
     )
-    bi1 = bi.join(F.broadcast(f1), "item", "left_semi").localCheckpoint(eager=True)
+    bi1 = bi.join(F.broadcast(f1), "item", "left_semi")
+    bi1 = store.materialize(bi1, "analytics.apriori_frequent_items", eager=True)
     a = bi1.select("l_orderkey", F.col("item").alias("ia"))
     b = bi1.select("l_orderkey", F.col("item").alias("ib"))
     # lazy checkpoint: the basket-pair join feeds THREE consumers (the L2
     # count and both sides of the candidate self-join) — without it the
     # per-basket pair explosion ran once per consumer (§2.4)
-    bp = (
+    bp = store.materialize(
         a.join(b, "l_orderkey")
-        .where(F.col("ia") < F.col("ib"))
-        .localCheckpoint(eager=False)
+        .where(F.col("ia") < F.col("ib")),
+        "analytics.apriori_pairs", eager=False,
     )
-    l2 = (
+    l2 = store.materialize(
         bp.groupBy("ia", "ib")
         .agg(F.count("*").cast("bigint").alias("s"))
         .where(F.col("s") >= minsup)
-        .select("ia", "ib")
-        .localCheckpoint(eager=True)
+        .select("ia", "ib"),
+        "analytics.apriori_l2", eager=True,
     )
     bpf = bp.join(F.broadcast(l2), ["ia", "ib"], "left_semi")
     cand = (
@@ -1669,7 +1671,8 @@ def q_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     variance (an all-tied series zeroes it, and S is 0 there too — the
     guarded z is 0, never a divergent NaN cast). The trend verdict compares
     |z| against the Python-inlined 1.959964 literal."""
-    grid = _daily_counts(events_with_sec(spark, sf_dir)).localCheckpoint(eager=True)
+    grid = _daily_counts(events_with_sec(spark, sf_dir))
+    grid = store.materialize(grid, "analytics.mann_kendall_grid", eager=True)
     a = grid.select(F.col("day").alias("di"), F.col("c").alias("ci"))
     b = grid.select(F.col("day").alias("dj"), F.col("c").alias("cj"))
     s_stat = (
@@ -1736,7 +1739,7 @@ def q_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
     Variant note: effects are not re-centered through an overall term
     (the classic presentation's optional step), identically on both
     engines. Scale: one corpus pass → the calendar-bounded matrix."""
-    cells = (
+    cells = store.materialize(
         _daily_counts(events_with_sec(spark, sf_dir))
         .select(
             (F.col("day") % 7).cast("bigint").alias("dow"),
@@ -1745,8 +1748,8 @@ def q_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .withColumn("resid", F.col("c"))
         .withColumn("roweff", F.lit(0).cast("bigint"))
-        .withColumn("coleff", F.lit(0).cast("bigint"))
-        .localCheckpoint(eager=True)
+        .withColumn("coleff", F.lit(0).cast("bigint")),
+        "analytics.polish_cells", eager=True,
     )
 
     def med_of(df: DataFrame, key: str, out: str) -> DataFrame:
@@ -1762,20 +1765,20 @@ def q_median_polish(spark: SparkSession, sf_dir: str) -> DataFrame:
     cur = cells
     for _ in range(_POLISH_T):
         rm = med_of(cur, "dow", "m_r")
-        cur = (
+        cur = store.materialize(
             cur.join(F.broadcast(rm), "dow")
             .withColumn("resid", F.col("resid") - F.col("m_r"))
             .withColumn("roweff", F.col("roweff") + F.col("m_r"))
-            .drop("m_r")
-            .localCheckpoint(eager=True)
+            .drop("m_r"),
+            "analytics.polish_rows", eager=True,
         )
         cm = med_of(cur, "week", "m_c")
-        cur = (
+        cur = store.materialize(
             cur.join(F.broadcast(cm), "week")
             .withColumn("resid", F.col("resid") - F.col("m_c"))
             .withColumn("coleff", F.col("coleff") + F.col("m_c"))
-            .drop("m_c")
-            .localCheckpoint(eager=True)
+            .drop("m_c"),
+            "analytics.polish_cols", eager=True,
         )
     return cur.select("dow", "week", "c", "roweff", "coleff", "resid").orderBy(
         "dow", "week"
@@ -1850,7 +1853,8 @@ def q_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair join is metadata-sized at any corpus SF); the argmax breaks
     ties by day. One corpus pass to daily counts, everything after on
     the day grid."""
-    grid = _daily_counts(events_with_sec(spark, sf_dir)).localCheckpoint(eager=True)
+    grid = _daily_counts(events_with_sec(spark, sf_dir))
+    grid = store.materialize(grid, "analytics.pettitt_grid", eager=True)
     a = grid.select(F.col("day").alias("di"), F.col("c").alias("ci"))
     b = grid.select(F.col("day").alias("dj"), F.col("c").alias("cj"))
     pairs = a.join(F.broadcast(b), F.col("dj") > F.col("di")).select(
@@ -1939,10 +1943,10 @@ def q_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     varies across engines); same for the global SS; one final division
     makes strength6. Output: the 7 dow rows (n, mean) with the
     corpus-level strength on every row."""
-    grid = (
+    grid = store.materialize(
         _daily_counts(events_with_sec(spark, sf_dir))
-        .select((F.col("day") % 7).cast("bigint").alias("dow"), "c")
-        .localCheckpoint(eager=True)
+        .select((F.col("day") % 7).cast("bigint").alias("dow"), "c"),
+        "analytics.seasonal_grid", eager=True,
     )
     per_dow = grid.groupBy("dow").agg(
         F.count("*").cast("bigint").alias("n_d"),
@@ -2077,7 +2081,7 @@ def q_sliding_distinct_users(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("ts_sec") / F.lit(86400)).cast("bigint").alias("day"),
         "user_id",
     )
-    ud = ev.distinct().localCheckpoint(eager=True)
+    ud = store.materialize(ev.distinct(), "analytics.user_days", eager=True)
     grid = _day_range(ud)
     win = (
         grid.alias("g")
@@ -2131,7 +2135,8 @@ def q_lead_lag_xcorr(spark: SparkSession, sf_dir: str) -> DataFrame:
         events_with_sec(spark, sf_dir),
         ca=F.sum((F.col("event_type") == _XCORR_A).cast("bigint")),
         cb=F.sum((F.col("event_type") == _XCORR_B).cast("bigint")),
-    ).localCheckpoint(eager=True)
+    )
+    grid = store.materialize(grid, "analytics.xcorr_grid", eager=True)
     tot = grid.agg(
         F.count("*").cast("bigint").alias("n"),
         F.sum("ca").cast("bigint").alias("sa"),
@@ -2181,10 +2186,10 @@ def q_topk_churn(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     wu = ev.groupBy("week", "user_id").agg(F.count("*").cast("bigint").alias("c"))
     w = Window.partitionBy("week").orderBy(F.col("c").desc(), "user_id")
-    top = (
+    top = store.materialize(
         wu.select("week", "user_id", F.row_number().over(w).alias("rk"))
-        .where(F.col("rk") <= _CHURN_TOPK)
-        .localCheckpoint(eager=True)
+        .where(F.col("rk") <= _CHURN_TOPK),
+        "analytics.churn_top", eager=True,
     )
     prev = top.select(
         (F.col("week") + 1).alias("week"), F.col("user_id").alias("prev_user")

@@ -19,8 +19,8 @@ Scale design (the 100 TB story):
   PageRank's dangling mass); the merge rewrite is a JVM-side aggregate()
   fold over each word's symbol array — no Python in the loop.
 - Lineage: the words frame is rebuilt every iteration and consumed by
-  two branches (pair counting + rewrite), so each iteration ends in
-  localCheckpoint(eager=True) — the PageRank discipline (graph.py:48);
+  two branches (pair counting + rewrite), so each iteration ends in an
+  eager ``store.materialize`` — the PageRank discipline (graph.pagerank);
   without it the plan re-runs the tokenization O(iters) times.
 
 Determinism: the winning pair each round is (freq DESC, left ASC,
@@ -46,7 +46,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from gasket_rs_spark import keys
+from gasket_rs_spark import keys, store
 from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
@@ -117,7 +117,7 @@ def train_bpe(spark: SparkSession, docs: DataFrame, n_merges: int) -> list[dict]
     """Run ``n_merges`` BPE merge rounds; returns the learned merge table
     as a list of dicts (merge_idx, left, right, new_symbol, pair_freq).
     Driver state is one 1-row collect per round — bounded."""
-    words = word_frequencies(docs).localCheckpoint(eager=True)
+    words = store.materialize(word_frequencies(docs), "bpe.words", eager=True)
     merges: list[dict] = []
     for it in range(n_merges):
         top = (
@@ -138,9 +138,8 @@ def train_bpe(spark: SparkSession, docs: DataFrame, n_merges: int) -> list[dict]
                 "pair_freq": pf,
             }
         )
-        words = words.select(
-            _merge_pair_expr(l, r).alias("syms"), "freq"
-        ).localCheckpoint(eager=True)
+        words = words.select(_merge_pair_expr(l, r).alias("syms"), "freq")
+        words = store.materialize(words, "bpe.merge_round", eager=True)
     return merges
 
 
@@ -659,12 +658,12 @@ def q_unigram_lm_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     JVM-side throughout, no driver collect, no UDF. The DuckDB twin
     unrolls the identical DP as materialized CTEs."""
     docs = load(spark, sf_dir, "documents")
-    words = (
+    words = store.materialize(
         docs.select(F.explode(keys.tokens()).alias("w"))
         .where(F.length("w") > 0)
         .groupBy("w")
-        .agg(F.count("*").cast("bigint").alias("freq"))
-        .localCheckpoint(eager=True)  # feeds candidates, edges and output
+        .agg(F.count("*").cast("bigint").alias("freq")),
+        "bpe.unigram_words", eager=True,  # feeds candidates, edges and output
     )
     cand_parts = []
     for j in range(1, _UNI_MAX_PIECE + 1):
@@ -697,22 +696,22 @@ def q_unigram_lm_tokenizer(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     vocab_counts = chars.unionByName(multi).select("piece", "cnt")
     total = vocab_counts.agg(F.sum("cnt").cast("bigint").alias("t"))
-    vocab = (
+    vocab = store.materialize(
         vocab_counts.crossJoin(F.broadcast(total))
         .select(
             "piece",
             units(F.log2(F.col("cnt").cast("double") / F.col("t"))).alias("logp6"),
-        )
-        .localCheckpoint(eager=True)  # consumed by every DP round
+        ),
+        "bpe.unigram_vocab", eager=True,  # consumed by every DP round
     )
     # the output set is fixed BEFORE the DP: top-30 by (freq DESC, word)
     # over words the 8-round DP could complete (length ≤ _UNI_MAX_WORD;
     # single-char coverage makes every such word reachable)
-    sel = (
+    sel = store.materialize(
         words.where(F.length("w") <= _UNI_MAX_WORD)
         .orderBy(F.col("freq").desc(), "w")
-        .limit(_UNI_TOPK)  # TakeOrdered — bounded, no global sort
-        .localCheckpoint(eager=True)  # feeds the edge explode + the output
+        .limit(_UNI_TOPK),  # TakeOrdered — bounded, no global sort
+        "bpe.unigram_sel", eager=True,  # feeds the edge explode + the output
     )
     edge_parts = []
     for j in range(1, _UNI_MAX_PIECE + 1):

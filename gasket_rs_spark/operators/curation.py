@@ -19,7 +19,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gasket_rs_spark import keys
+from gasket_rs_spark import keys, store
 from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.operators.dedup import (
     _JACCARD_THRESHOLD,
@@ -108,9 +108,10 @@ def q_curation_pipeline_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     Σ bucket²) where the witness is O(n²). Every LSH pair passes the same
     Jaccard≥0.5 verify, so the pair graph is a SUBSET of the witness's:
     components can only be finer, never merge docs the exact composite
-    keeps apart. Rows-only driver check (LSH recall is
-    parameter-specific); equality-modulo-recall vs the exact composite
-    plus a no-cartesian plan pin live in tests/test_curation_lsh.py.
+    keeps apart. On the fixtures the two graphs are equal at every SF,
+    so the witness is checked EXACT against q_curation_pipeline's
+    oracle; equality-modulo-recall vs the exact composite plus a
+    no-cartesian plan pin live in tests/test_curation_lsh.py.
     """
     survivors = _gated_survivors(spark, sf_dir)
     pairs = _minhash_pairs(
@@ -347,21 +348,20 @@ def q_dsir_select(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         F.explode(F.concat(F.col("ts"), keys.grams(F.col("ts"), 2))).alias("g"),
     )
-    dc = (
+    # dc feeds TWO consumers — the feature table (under lam's broadcast
+    # subtree) and the per-doc weighted sum — so without materialization
+    # the corpus explode + per-gram md5 ran twice (§2.4
+    # pruning-defeats-reuse). Lazy: one materialization per action (r21
+    # interleaved A/B min 2.132 → 1.568 s at sf0.1, identical rows).
+    dc = store.materialize(
         grams.select(
             "doc_id",
             "lang",
             (keys.hex_int(F.md5("g"), 4) % _DSIR_B).alias("f"),
         )
         .groupBy("doc_id", "lang", "f")
-        .agg(F.count("*").cast("bigint").alias("c"))
-        # dc feeds TWO consumers — the feature table (under lam's
-        # broadcast subtree) and the per-doc weighted sum — so without
-        # materialization the corpus explode + per-gram md5 ran twice
-        # (§2.4 pruning-defeats-reuse). Lazy: one materialization per
-        # action (r21 interleaved A/B min 2.132 → 1.568 s at sf0.1,
-        # identical rows).
-        .localCheckpoint(eager=False)
+        .agg(F.count("*").cast("bigint").alias("c")),
+        "curation.dsir_counts", eager=False,
     )
     ft = dc.groupBy("f").agg(
         F.sum(F.when(F.col("lang") == _DSIR_TARGET_LANG, F.col("c")).otherwise(0))
@@ -807,3 +807,5 @@ ORACLES: dict[str, str] = {
         GROUP BY lang
     """,
 }
+# The LSH pair graph equals the exact one on the fixtures.
+ORACLES["curation_pipeline_lsh"] = ORACLES["curation_pipeline"]

@@ -26,7 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gasket_rs_spark import keys
+from gasket_rs_spark import keys, store
 from gasket_rs_spark.operators.similarity import (
     _as_double,
     _corpus_n,
@@ -323,9 +323,8 @@ def _minhash_sigs(docs: DataFrame) -> DataFrame:
     evaluate ~128 interpreted ops per shingle and clocked 2-4× slower at
     sf0.1, while the earlier per-token Python ``crc32`` loop was the
     kernel's remaining interpreter-bound part. Hash values are
-    engine-internal (the query is rows-only checked) — only pair
-    membership must match the exact witness, which the Jaccard verify
-    step guarantees.
+    engine-internal — only pair membership must match the exact
+    witness, which the Jaccard verify step guarantees.
     """
     m = _MERSENNE
     perm_a = np.array([a for a, _ in _MINHASH_AB], dtype=np.int64)[:, None]
@@ -366,23 +365,13 @@ def _minhash_sigs(docs: DataFrame) -> DataFrame:
 
     token_hashes = F.transform(keys.tokens(), lambda t: F.xxhash64(t))
     # Shared across three plan branches (banding, verify-left,
-    # verify-right) via localCheckpoint, NOT persist: a persist here was
-    # the same session-lifetime leak class as the r7-ADVICE banding leak
-    # (never unpersisted; CacheManager holds it until session end), and
-    # the round-9 3-pass A/B measured the checkpoint equal-or-faster
-    # (minhash 2.4-3.0s vs 2.4-3.3s, components 3.1-3.8 vs 3.2-4.7 at
-    # sf0.1). Blocks are ContextCleaner-freed on dereference.
-    # Reliability tradeoff (ADVICE r9): localCheckpoint blocks are
-    # UNREPLICATED and lineage is severed — on a real cluster an executor
-    # loss makes the frame unrecoverable and fails the query, where
-    # persist would recompute from lineage. Correct for local[N] and for
-    # short-lived frames inside one query; a 1000-executor run should
-    # swap these sites to reliable checkpoint() (setCheckpointDir on
-    # HDFS/S3) or persist(MEMORY_AND_DISK_2) — 1-line swap, same plan
-    # shapes. See SCALE.md "Round-10 first wave".
-    return docs.select("doc_id", token_hashes.alias("th")).mapInPandas(
+    # verify-right); the round-9 3-pass A/B measured the checkpoint
+    # equal-or-faster than a persist (minhash 2.4-3.0s vs 2.4-3.3s,
+    # components 3.1-3.8 vs 3.2-4.7 at sf0.1).
+    sigs = docs.select("doc_id", token_hashes.alias("th")).mapInPandas(
         sig_batches, "doc_id bigint, hs array<bigint>, sig array<bigint>, n_sh int"
-    ).localCheckpoint(eager=False)
+    )
+    return store.materialize(sigs, "dedup.minhash_sigs", eager=False)
 
 
 def _minhash_base(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -462,18 +451,15 @@ def _lsh_candidates(banded: DataFrame) -> DataFrame:
     (min 1.99 s vs 1.61 s) — the premium for bounded executor memory.
     ``element_at`` indexes a materialized attribute (no HOF re-evaluation
     trap, which applies to DERIVED arrays referenced in lambdas)."""
-    # Share the banding across its three consumers (stats, cold, star) via
-    # localCheckpoint, NOT persist: a persist here leaked for the session
-    # lifetime (ADVICE r7), and the r8 fix — eagerly checkpointing the
-    # CANDIDATE set so the persist could be released — forced a blocking
-    # extra materialization that cost a durable ~2s on
+    # Share the banding across its three consumers (stats, cold, star).
+    # The r8 shape — eagerly checkpointing the CANDIDATE set instead —
+    # forced a blocking extra materialization that cost a durable ~2s on
     # dedup_components_lsh at sf0.1 (round-9 same-session bisect, 3
     # interleaved passes: eager-candidates 5.1-6.7s vs 3.0-3.5s for this
     # shape ≈ the round-7 lazy baseline; SCALE.md round-9 forensics).
-    # Checkpoint blocks are freed by the ContextCleaner once the returned
-    # plan is dereferenced, so no session-lifetime leak; the candidate
-    # plan stays lazy and fuses with the caller's verify join.
-    return _lsh_candidates_plan(banded.localCheckpoint(eager=False))
+    # The candidate plan stays lazy and fuses with the caller's verify
+    # join.
+    return _lsh_candidates_plan(store.materialize(banded, "dedup.banded", eager=False))
 
 
 def _lsh_candidates_plan(b: DataFrame) -> DataFrame:
@@ -484,9 +470,8 @@ def _lsh_candidates_plan(b: DataFrame) -> DataFrame:
     ``localCheckpoint(eager=False)`` (r21 session 3), which beat eager
     checkpoints (interleaved A/B minima at sf0.1: minhash_lsh 1.78 →
     1.59 s, components_lsh 2.23 → 1.98 s, all pairs favor, identical
-    rows). It is not job-free at build time: under adaptive execution
-    the checkpoint runs the shuffle-map stages below it when it is
-    built, so building the witness already starts jobs (3 for
+    rows). It is not job-free at build time (``store.materialize``):
+    building the witness already starts jobs (3 for
     dedup_minhash_lsh, 13 for dedup_components_lsh at sf0.1, counted by
     job group), and the caller's action computes each checkpointed
     frame's final stage once. The returned candidate plan itself is not
@@ -505,10 +490,10 @@ def _lsh_candidates_plan(b: DataFrame) -> DataFrame:
     # 2.66 s, identical rows — and one fewer corpus×BANDS aggregation
     # pass at scale. Not eager since session 3 (see _lsh_candidates_plan
     # for the jobs it still starts at build time).
-    hot = (
+    hot = store.materialize(
         stats.where(F.col("occ") > _MAX_BUCKET_OCCUPANCY)
-        .select("band", "bucket", "rep")
-        .localCheckpoint(eager=False)
+        .select("band", "bucket", "rep"),
+        "dedup.hot_buckets", eager=False,
     )
     cold = (
         b.join(
@@ -571,8 +556,10 @@ def q_dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``_minhash_sigs``) → 32 bands × 4 rows → equi-join on (band,
     band-signature) buckets → verify candidates with exact Jaccard over
     the int64 hashed-shingle sets. Output matches q_dedup_ngram_jaccard
-    up to LSH recall (no oracle: hash values are engine-specific, driver
-    records rows-only).
+    up to LSH recall. The fixtures and the permutations are fixed, and
+    at every SF recall is complete, so the witness is checked EXACT
+    against its twin's oracle: a recall miss fails the gate.
+    tests/test_dedup_recall.py guards the band layout.
     """
     return _minhash_pairs(_minhash_base(spark, sf_dir))
 
@@ -700,13 +687,15 @@ def simhash_pairs(docs: DataFrame) -> DataFrame:
     shared by the document witness above and the paragraph-granularity
     witness (q_dedup_simhash_paragraph), so both grains ride the same
     pigeonhole-complete candidate scheme and Hamming verify."""
-    # banding + both verify branches consume the sigs; checkpoint, not
-    # persist (the session-lifetime leak class — see _minhash_sigs).
-    # Lazy (r21 session 3): single-action consumers — one
-    # materialization, no mid-build barrier (A/B min 1.31 → 1.20 s at
-    # sf0.1; the same flip on dedup_embedding_lsh's vecs measured a
-    # wash, 0.86 vs 0.89 — left eager there).
-    sigs = _simhash_blocks(docs).localCheckpoint(eager=False)
+    # banding + both verify branches consume the sigs. The checkpoint
+    # is lazy (r21 session 3), but adaptive execution still runs the
+    # shuffle-map stage below it while the witness is built: at sf0.01
+    # building dedup_simhash starts 2 jobs, 1 of them in this
+    # checkpoint, and the action 4 (over the paragraph corpus it starts
+    # none). Lazy still beat eager (A/B min 1.31 → 1.20 s at sf0.1; the
+    # same flip on dedup_embedding_lsh's vecs measured a wash, 0.86 vs
+    # 0.89 — left eager there).
+    sigs = store.materialize(_simhash_blocks(docs), "dedup.simhash_sigs", eager=False)
     candidates = _simhash_candidates(sigs)
     sig_a = sigs.select(
         F.col("doc_id").alias("doc_a"),
@@ -775,7 +764,7 @@ def _paragraph_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
     # into the +2^40/+2^41 plant bands and silently corrupt the family
     # classification and capture accounting.
     _max_organic_doc = _PARA_PLANT_ROT >> _PARA_POS_BITS  # 2^28
-    paras = (
+    paras = store.materialize(
         load(spark, sf_dir, "documents")
         .select("doc_id", F.posexplode(seg).alias("pos", "ptext"))
         .select(
@@ -794,7 +783,7 @@ def _paragraph_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
             )
             .alias("doc_id"),
             F.col("ptext").alias("text"),
-        )
+        ),
         # Lazy checkpoint (r22, §2.4): paras feeds THREE union branches
         # (itself + the reorder/edit plant builders via `eligible`), so
         # the documents scan + paragraph regexp/posexplode ran once per
@@ -803,7 +792,7 @@ def _paragraph_corpus(spark: SparkSession, sf_dir: str) -> DataFrame:
         # identical rows — the simhash kernel dominates at this SF);
         # kept for the 3 -> 1 documents-scan reduction at corpus scale,
         # the same argument as the asof_join/q2 single-scan entries.
-        .localCheckpoint(eager=False)
+        "dedup.paragraphs", eager=False,
     )
     toks = keys.tokens()
     # token array hoisted into a named column before the transform
@@ -1075,10 +1064,8 @@ def q_dedup_embedding_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus) — structurally > 0 at every SF.
     """
     corpus = _planted_corpus(spark, sf_dir)
-    # candidates + both verify branches consume the bucketed vectors;
-    # checkpoint, not persist (session-lifetime leak class — see
-    # _minhash_sigs).
-    vecs = _emb_buckets(corpus).localCheckpoint(eager=True)
+    # candidates + both verify branches consume the bucketed vectors.
+    vecs = store.materialize(_emb_buckets(corpus), "dedup.embedding_buckets", eager=True)
     pairs = (
         _emb_candidates(vecs)
         .join(_pair_side(vecs, "a"), "vec_a")
@@ -1236,7 +1223,7 @@ def q_semantic_dedup_clustered(spark: SparkSession, sf_dir: str) -> DataFrame:
     cents = _sem_centroids(spark, sf_dir, k)
     # both self-join branches consume the assignment; lazy checkpoint so
     # the Arrow kernel runs once (materialized by the first action)
-    assigned = _sem_assign(corpus, cents).localCheckpoint(eager=False)
+    assigned = store.materialize(_sem_assign(corpus, cents), "dedup.semantic_assigned", eager=False)
     pairs = (
         _pair_side(assigned, "a", "cell")
         .join(_pair_side(assigned, "b", "cell"), "cell")
@@ -1340,7 +1327,7 @@ def build_corpus_minhash_index(
         .mode("overwrite")
         .saveAsTable(docs_table)
     )
-    # base is a checkpoint (see _minhash_sigs); its blocks free via the
+    # base is a checkpoint (store.materialize); its blocks free via the
     # ContextCleaner once this frame goes out of scope — no unpersist.
 
 
@@ -1365,9 +1352,9 @@ def incremental_neardup_against_index(
     signature and survive by definition.
 
     ``eager`` (default): the survivor set — batch-sized, id-only — is
-    materialized via localCheckpoint before returning, so a long-running
+    materialized (``store.materialize``) before returning, so a long-running
     ingest loop holds only id-sized state per batch; the batch signature
-    checkpoint (see ``_minhash_sigs``) is then unreferenced and its
+    checkpoint (``_minhash_sigs``) is then unreferenced and its
     blocks are ContextCleaner-freed. Pass ``eager=False`` to get the
     fully lazy plan instead (plan inspection, composing into a larger
     query).
@@ -1414,7 +1401,7 @@ def incremental_neardup_against_index(
         # Execute now (survivors are batch-sized ids — cheap to hold);
         # dropping the reference to `b` lets the ContextCleaner free its
         # checkpoint blocks.
-        out = out.localCheckpoint(eager=True)
+        out = store.materialize(out, "dedup.index_probe", eager=True)
     return out
 
 
@@ -1469,7 +1456,7 @@ def _components(
     within the round cap — unconverged labels would silently split
     components.
     """
-    pairs_c = pairs.select("doc_a", "doc_b").localCheckpoint()
+    pairs_c = store.materialize(pairs.select("doc_a", "doc_b"), "dedup.component_pairs", eager=True)
     n_pairs = pairs_c.count()  # metadata read of the materialized checkpoint
     if n_pairs <= driver_edge_bound:
         # collect(), not toLocalIterator(): the iterator fetches partition
@@ -1502,7 +1489,7 @@ def _components(
         return docs.join(F.broadcast(labels), "doc_id", "left").select(
             "doc_id", F.coalesce("component", "doc_id").alias("component")
         )
-    edges = (
+    edges = store.materialize(
         pairs_c.select(
             F.explode(
                 F.array(
@@ -1511,14 +1498,14 @@ def _components(
                 )
             ).alias("e")
         )
-        .select(F.col("e.src").alias("doc_a"), F.col("e.dst").alias("doc_b"))
-        .localCheckpoint()
+        .select(F.col("e.src").alias("doc_a"), F.col("e.dst").alias("doc_b")),
+        "dedup.components_edges", eager=True,
     )
-    labels = (
+    labels = store.materialize(
         edges.select(F.col("doc_a").alias("doc_id"))
         .distinct()
-        .select("doc_id", F.col("doc_id").alias("component"))
-        .localCheckpoint()
+        .select("doc_id", F.col("doc_id").alias("component")),
+        "dedup.components_labels", eager=True,
     )
     max_rounds = 30
     changed = -1
@@ -1539,10 +1526,10 @@ def _components(
         jumped = propagated.select(
             F.col("doc_id").alias("component"), F.col("component").alias("grand")
         )
-        new_labels = (
+        new_labels = store.materialize(
             propagated.join(jumped, "component", "left")
-            .select("doc_id", F.coalesce("grand", "component").alias("component"))
-            .localCheckpoint()
+            .select("doc_id", F.coalesce("grand", "component").alias("component")),
+            "dedup.components_round", eager=True,
         )
         changed = (
             new_labels.alias("n")
@@ -1623,8 +1610,9 @@ def q_dedup_components_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Scale-path cluster canonicalization: connected components over the
     MinHash-LSH candidate pairs (verified at Jaccard>=0.5). End-to-end this
     is the 100 TB near-dup recipe — bucketed candidate generation, exact
-    verify on candidates only, then min-label clustering. Rows-only check
-    (LSH recall makes the edge set engine-specific)."""
+    verify on candidates only, then min-label clustering. Checked EXACT
+    against q_dedup_components' oracle: at every SF the LSH edge set
+    equals the exact one (see q_dedup_minhash_lsh)."""
     docs = load(spark, sf_dir, "documents").select("doc_id")
     pairs = q_dedup_minhash_lsh(spark, sf_dir).select("doc_a", "doc_b")
     return _components(docs, pairs)
@@ -2334,3 +2322,6 @@ ORACLES: dict[str, str] = {
         GROUP BY vec_b
     """,
 }
+# The LSH paths give their exact twin's rows on the fixtures.
+ORACLES["dedup_minhash_lsh"] = ORACLES["dedup_ngram_jaccard"]
+ORACLES["dedup_components_lsh"] = ORACLES["dedup_components"]

@@ -14,9 +14,8 @@ Scale notes (100 TB): edge extraction is one distinct over the
 fact-join (shuffle on the pair); each iteration is one equi-join
 (edges ⋈ ranks on src, shuffle on node id) + a groupBy(dst) with
 map-side partial sums, plus a 1-row dangling aggregate cross-joined
-back (broadcast). A production run would persist each iteration's
-ranks and localCheckpoint every few rounds to truncate lineage; with a
-fixed 5 iterations the plan stays shallow enough without. Skewed
+back (broadcast). Each iteration's ranks are checkpointed
+(``store.materialize``), so the lineage stays one round deep. Skewed
 in-degree (celebrity nodes) is AQE skew-split territory — the groupBy
 is a sum, so salting composes if needed.
 """
@@ -28,6 +27,7 @@ from typing import Callable
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from gasket_rs_spark import store
 from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
@@ -60,15 +60,17 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = _PR_ITERS) -> Data
     # dangling-mass probe is a FILTER (outdeg IS NULL), not a
     # per-iteration anti-join against deg. Per-edge terms are the same
     # IEEE divisions (pr/outdeg per node, replicated over its edges);
-    # oracle EXACT ×3 SFs after the restructure. Checkpoints are LAZY
-    # (r21 session 3): a fixed-iteration loop never inspects results
-    # mid-flight, so the single downstream action materializes (and
-    # caches) every frame exactly once — same per-frame compute, minus
-    # one driver job barrier per round (interleaved A/B min 4.058 →
-    # 3.664 s at sf0.1, identical rows).
-    edges_c = edges.select("src", "dst").localCheckpoint(eager=False)
+    # oracle EXACT ×3 SFs after the restructure. The checkpoints are
+    # lazy (r21 session 3), but adaptive execution still runs every
+    # shuffle-map stage below each one while the loop builds it, so each
+    # round waits on the last: at sf0.01 building graph_pagerank starts
+    # 51 jobs, 47 of them in these checkpoints (2 for edges_c, 5 for the
+    # initial ranks, 8 per round), and the action 1. Lazy still beat
+    # eager (interleaved A/B min 4.058 → 3.664 s at sf0.1, identical
+    # rows).
+    edges_c = store.materialize(edges.select("src", "dst"), "graph.pagerank_edges", eager=False)
     deg = edges_c.groupBy("src").agg(F.count("*").cast("double").alias("outdeg"))
-    ranks = (
+    ranks = store.materialize(
         nodes.crossJoin(F.broadcast(n_frame))
         .join(deg, nodes.node == deg.src, "left")
         .select(
@@ -76,8 +78,8 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = _PR_ITERS) -> Data
             "nn",
             "outdeg",
             F.round(F.lit(1.0) / F.col("nn"), _PR_SNAP).alias("pr"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "graph.pagerank_init", eager=False,
     )
     for _ in range(iters):
         contrib = (
@@ -94,7 +96,7 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = _PR_ITERS) -> Data
             ranks.where(F.col("outdeg").isNull())
             .agg(F.coalesce(F.sum("pr"), F.lit(0.0)).alias("dmass"))
         )
-        ranks = (
+        ranks = store.materialize(
             ranks.select("node", "nn", "outdeg")
             .join(contrib.withColumnRenamed("dst", "node"), "node", "left")
             .crossJoin(F.broadcast(dangling))
@@ -111,8 +113,8 @@ def pagerank(nodes: DataFrame, edges: DataFrame, iters: int = _PR_ITERS) -> Data
                     ),
                     _PR_SNAP,
                 ).alias("pr"),
-            )
-            .localCheckpoint(eager=False)
+            ),
+            "graph.pagerank_round", eager=False,
         )
     return ranks.select("node", "pr")
 
@@ -213,11 +215,11 @@ def _strong_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     a = d.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s1"))
     b = d.select(F.col("l_orderkey").alias("ok"), F.col("l_suppkey").alias("s2"))
-    co = (
+    co = store.materialize(
         a.join(b, "ok")
         .where(F.col("s1") < F.col("s2"))
         .groupBy(F.col("s1").alias("ea"), F.col("s2").alias("eb"))
-        .agg(F.count("*").alias("co"))
+        .agg(F.count("*").alias("co")),
         # co feeds TWO consumers (histogram, edge filter) and its derived
         # edges frame feeds FIVE more — without lineage truncation the
         # basket self-join (the dominant shuffle) re-executed per branch.
@@ -225,10 +227,8 @@ def _strong_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
         # / med 5.09 s → this shape min 3.19 s / med 3.43 s at sf0.1,
         # identical output; rerun with `scripts/ab.py 4657ee8^ 4657ee8
         # --metric graph_triangles -- python3 {ab} time --sf <sf0.1>
-        # graph_triangles`. Same storage rule as
-        # pagerank/dedup: share multi-consumer frames via
-        # localCheckpoint(eager=True), keep single-consumer plans lazy.
-        .localCheckpoint(eager=True)
+        # graph_triangles`.
+        "graph.strong_cooccur", eager=True,
     )
     hist = co.groupBy("co").agg(F.count("*").alias("cnt"))
     # n_pairs as a 1-row broadcast agg (not a second full-frame window):
@@ -247,13 +247,13 @@ def _strong_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     thr = cum.where(
         F.col("cum") >= F.ceil(F.lit(_TRI_EDGE_Q) * F.col("n_pairs"))
     ).agg(F.min("co").alias("thr"))
-    return (
+    return store.materialize(
         co.crossJoin(F.broadcast(thr))
         .where(F.col("co") >= F.col("thr"))
-        .select("ea", "eb")
+        .select("ea", "eb"),
         # the small post-p90 decile, consumed by deg/e1/e2/e3/n_edges —
         # cheap to materialize, saves 5 re-filters of co.
-        .localCheckpoint(eager=True)
+        "graph.strong_edges", eager=True,
     )
 
 
@@ -497,7 +497,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     nodes². localCheckpoint per round truncates the O(iters)-deep
     lineage (cluster variant: reliable checkpoint, see SCALE.md).
     """
-    edges = _bipartite_edges(spark, sf_dir, "a", "b").localCheckpoint(eager=True)
+    edges = _bipartite_edges(spark, sf_dir, "a", "b")
+    edges = store.materialize(edges, "graph.kcore_edges", eager=True)
     hist = _degrees(edges, "a", "b").groupBy("deg").agg(F.count("*").alias("cnt"))
     n_nodes0 = hist.agg(F.sum("cnt").alias("n0"))
     w = (
@@ -506,12 +507,12 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
         .orderBy("deg")
         .rowsBetween(Window.unboundedPreceding, 0)
     )
-    kf = (
+    kf = store.materialize(
         hist.select("deg", F.sum("cnt").over(w).alias("cum"))
         .crossJoin(F.broadcast(n_nodes0))
         .where(F.col("cum") >= F.ceil(F.lit(_KCORE_Q) * F.col("n0")))
-        .agg(F.min("deg").alias("k"))
-        .localCheckpoint(eager=True)  # consumed every round
+        .agg(F.min("deg").alias("k")),
+        "graph.kcore_degrees", eager=True,  # consumed every round
     )
     return kcore_peel(edges, kf, _KCORE_ITERS)
 
@@ -532,17 +533,17 @@ def kcore_peel(edges: DataFrame, kf: DataFrame, iters: int) -> DataFrame:
         # two checkpoints (5 per round), and the action 16. Lazy still
         # beat eager (interleaved A/B min 4.460 → 3.885 s at sf0.1,
         # identical trajectory rows).
-        kept = (
+        kept = store.materialize(
             deg.crossJoin(F.broadcast(kf))
             .where(F.col("deg") >= F.col("k"))
-            .select("node")
-            .localCheckpoint(eager=False)
+            .select("node"),
+            "graph.peel_kept", eager=False,
         )
-        edges = (
+        edges = store.materialize(
             edges.join(kept.withColumnRenamed("node", "a"), "a", "semi")
             .join(kept.withColumnRenamed("node", "b"), "b", "semi")
-            .select("a", "b")
-            .localCheckpoint(eager=False)
+            .select("a", "b"),
+            "graph.peel_edges", eager=False,
         )
         stat = (
             edges.agg(F.count("*").cast("bigint").alias("n_edges"))
@@ -573,11 +574,11 @@ def _capped_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     wcap = Window.partitionBy("supp").orderBy(
         F.md5(F.concat_ws(":", F.col("supp"), F.col("cust"))), "cust"
     )
-    return (
+    return store.materialize(
         raw.withColumn("rn", F.row_number().over(wcap))
         .where(F.col("rn") <= _LP_CAP)
-        .select("cust", "supp")
-        .localCheckpoint(eager=True)
+        .select("cust", "supp"),
+        "graph.capped_edges", eager=True,
     )
 
 
@@ -731,9 +732,8 @@ def propagate_labels(raw_edges: DataFrame, iters: int = _LPA_ITERS) -> DataFrame
     Returns ``(node, label)`` after ``iters`` rounds; ties break to the
     smallest label. Pure int64; join-per-iteration with per-round
     localCheckpoint (see q_label_propagation for scale notes)."""
-    edges = raw_edges.union(
-        raw_edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=False)
+    edges = raw_edges.union(raw_edges.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = store.materialize(edges, "graph.lpa_edges", eager=False)
     lab = edges.select("src").distinct().select(
         F.col("src").alias("node"), F.col("src").alias("label")
     )
@@ -753,14 +753,18 @@ def propagate_labels(raw_edges: DataFrame, iters: int = _LPA_ITERS) -> DataFrame
         # window needed hash(node) after cnts' hash(node,label)).
         # Interleaved A/B at sf0.1 (quiet box, 4 pairs): every pair
         # favors the agg shape, min 4.065 s vs 4.512 s, identical
-        # labels. Checkpoints LAZY (r21 session 3): fixed-iteration
-        # loop, nothing inspected mid-flight — one materialization per
-        # action, no per-round job barrier (A/B min 5.006 → 3.807 s).
-        lab = (
+        # labels. The checkpoints are lazy (r21 session 3), but adaptive
+        # execution still runs every shuffle-map stage below each one
+        # while the loop builds it, so each round waits on the last: at
+        # sf0.01 building label_propagation starts 18 jobs, 16 of them
+        # in this function's checkpoints (2 for edges, 14 over the 3
+        # rounds), and the action 2. Lazy still beat eager (A/B min
+        # 5.006 → 3.807 s).
+        lab = store.materialize(
             cnts.groupBy("node")
             .agg(F.max(F.struct(F.col("cnt"), (-F.col("label")).alias("nl"))).alias("m"))
-            .select("node", (-F.col("m.nl")).alias("label"))
-            .localCheckpoint(eager=False)
+            .select("node", (-F.col("m.nl")).alias("label")),
+            "graph.lpa_round", eager=False,
         )
     return lab
 
@@ -828,7 +832,8 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         sf_dir,
         F.col("o_custkey").cast("bigint").alias("cust"),
         F.col("l_suppkey").cast("bigint").alias("supp"),
-    ).localCheckpoint(eager=False)
+    )
+    edges = store.materialize(edges, "graph.hits_edges", eager=False)
     auth = edges.select("supp").distinct().select(
         "supp", F.lit(1_000_000).cast("bigint").alias("a6")
     )
@@ -845,21 +850,21 @@ def q_hits_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
         # these two checkpoints (4-5 per half-step), and the action 5.
         # Lazy still beat eager (interleaved A/B min 3.540 → 3.045 s at
         # sf0.1, identical rows).
-        hraw = (
+        hraw = store.materialize(
             edges.join(auth, "supp")
             .groupBy("cust")
-            .agg(F.sum("a6").cast("bigint").alias("raw"))
-            .localCheckpoint(eager=False)
+            .agg(F.sum("a6").cast("bigint").alias("raw")),
+            "graph.hits_hubs", eager=False,
         )
         hmax = hraw.agg(F.max("raw").alias("mx"))
         hub = hraw.crossJoin(F.broadcast(hmax)).select(
             "cust", F.expr("raw * 1000000 div mx").cast("bigint").alias("h6")
         )
-        araw = (
+        araw = store.materialize(
             edges.join(hub, "cust")
             .groupBy("supp")
-            .agg(F.sum("h6").cast("bigint").alias("raw"))
-            .localCheckpoint(eager=False)
+            .agg(F.sum("h6").cast("bigint").alias("raw")),
+            "graph.hits_auths", eager=False,
         )
         amax = araw.agg(F.max("raw").alias("mx"))
         auth = araw.crossJoin(F.broadcast(amax)).select(
@@ -940,9 +945,8 @@ def q_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     the moments themselves go to double (or Spark DECIMAL) with the
     same downstream arithmetic."""
     raw = _bipartite_edges(spark, sf_dir, "src", "dst")
-    edges = raw.union(
-        raw.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    ).localCheckpoint(eager=True)
+    edges = raw.union(raw.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
+    edges = store.materialize(edges, "graph.assortativity_edges", eager=True)
     deg = edges.groupBy(F.col("src").alias("node")).agg(
         F.count("*").cast("bigint").alias("deg")
     )

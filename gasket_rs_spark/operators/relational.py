@@ -24,6 +24,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
+from gasket_rs_spark import store
 from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
@@ -1029,7 +1030,7 @@ def q_tpch_q2_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     # twice (§2.4 pruning-defeats-reuse). Lazy checkpoint: one scan/agg
     # per action — local delta small (A/B min 1.548 → 1.483 s at
     # sf0.1), but at 100 TB this halves the query's lineitem I/O.
-    eu_cost = _q2_eu_cost(spark, sf_dir).localCheckpoint(eager=False)
+    eu_cost = store.materialize(_q2_eu_cost(spark, sf_dir), "relational.q2_eu_cost", eager=False)
     part_min = eu_cost.groupBy(F.col("l_partkey").alias("m_partkey")).agg(
         F.min("cost").alias("min_cost")
     )

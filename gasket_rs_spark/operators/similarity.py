@@ -37,7 +37,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import broadcast
 
-from gasket_rs_spark import keys
+from gasket_rs_spark import keys, store
 from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
@@ -999,7 +999,8 @@ def _bank_pairs(spark, left, right, kernel, schema, every, labeled=False, upper=
         return df.groupBy(key.alias("blk")).agg(bank.alias("bank"))
 
     if right is None:
-        left_banks = right_banks = banks(left, every_l).localCheckpoint(eager=False)
+        left_banks = store.materialize(banks(left, every_l), "similarity.banks", eager=False)
+        right_banks = left_banks
     else:
         left_banks, right_banks = banks(left, every_l), banks(right, every_r)
     la = left_banks.select(F.col("blk").alias("blk_a"), F.col("bank").alias("bank_a"))
@@ -1137,8 +1138,8 @@ def q_bitext_margin_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
     deg_k computed over the candidate pool — same margin arithmetic."""
     from pyspark.sql import Window
 
-    pairs = (
-        _bitext_pairs(spark, load(spark, sf_dir, "embeddings"))
+    pairs = store.materialize(
+        _bitext_pairs(spark, load(spark, sf_dir, "embeddings")),
         # THREE consumers (deg_k per side + the margin join) re-derived
         # this frame, re-running the all-pairs cosine kernel per branch;
         # the checkpoint computes it once and the branches read the
@@ -1148,7 +1149,7 @@ def q_bitext_margin_mine(spark: SparkSession, sf_dir: str) -> DataFrame:
         # favors the checkpoint, identical rows. The pair table is the
         # witness's own quadratic-by-design intermediate (this is the
         # exact twin; the scale path is LSH candidate generation).
-        .localCheckpoint(eager=True)
+        "similarity.bitext_pairs", eager=True,
     )
     wa = Window.partitionBy("src_id").orderBy(F.col("c6").desc(), "tgt_id")
     da = (
@@ -2090,9 +2091,8 @@ def q_kcenter_coreset(spark: SparkSession, sf_dir: str) -> DataFrame:
         mind6 = d6 if step == 1 else F.least(F.col("mind6"), d6)
         # lazy checkpoint: materialized by this round's argmax collect,
         # carrying the running min so later rounds never re-derive it
-        cur = cur.select(
-            "vec_id", "label", "vec", "sqx", mind6.alias("mind6")
-        ).localCheckpoint(eager=False)
+        cur = cur.select("vec_id", "label", "vec", "sqx", mind6.alias("mind6"))
+        cur = store.materialize(cur, "similarity.kcenter_dist", eager=False)
         chosen = (
             cur.where(~F.col("vec_id").isin([s2["vec_id"] for s2 in selected]))
             .select("vec_id", "label", "vec", "mind6")
@@ -2195,14 +2195,13 @@ def q_dbscan_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     from gasket_rs_spark.operators.dedup import _components
 
     emb3 = load(spark, sf_dir, "embeddings").where(F.col("vec_id") % 3 == 0)
-    pairs = _dbscan_pairs(spark, emb3).localCheckpoint(eager=True)
+    pairs = store.materialize(_dbscan_pairs(spark, emb3), "similarity.dbscan_pairs", eager=True)
     sym = pairs.select(F.col("ida").alias("u"), F.col("idb").alias("v")).unionAll(
         pairs.select(F.col("idb").alias("u"), F.col("ida").alias("v"))
     )
     degree = sym.groupBy("u").agg(F.count("*").cast("bigint").alias("deg"))
-    core = degree.where(F.col("deg") >= _DBSCAN_MINPTS).select(
-        F.col("u").alias("vec_id")
-    ).localCheckpoint(eager=True)
+    core = degree.where(F.col("deg") >= _DBSCAN_MINPTS).select(F.col("u").alias("vec_id"))
+    core = store.materialize(core, "similarity.dbscan_core", eager=True)
     core_edges = (
         pairs.join(core.withColumnRenamed("vec_id", "ida"), "ida")
         .join(core.withColumnRenamed("vec_id", "idb"), "idb")
@@ -2527,15 +2526,15 @@ def q_rag_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         f" sqrt(aggregate(slice(vec, i * 8 + 1, 8), CAST(0.0 AS DOUBLE),"
         f"  (a, x) -> a + x * x)))"
     )
-    v = (
+    v = store.materialize(
         load(spark, sf_dir, "embeddings")
         .select(
             "vec_id",
             _as_double(F.col("embedding")).alias("vec"),
             _norm(F.col("embedding")).alias("nrm"),
         )
-        .withColumn("nrm8", sub_norms)
-        .localCheckpoint(eager=False)
+        .withColumn("nrm8", sub_norms),
+        "similarity.rag_vectors", eager=False,
     )
     # ---- sparse side: BM25 over the EMBEDDED documents (one scan) -----
     toks = (
@@ -2543,10 +2542,10 @@ def q_rag_retrieval_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(v.select(F.col("vec_id").alias("doc_id")), "doc_id", "semi")
         .select("doc_id", F.explode(keys.tokens()).alias("tok"))
     )
-    tf = (
+    tf = store.materialize(
         toks.groupBy("doc_id", "tok")
-        .agg(F.count("*").cast("bigint").alias("tf"))
-        .localCheckpoint(eager=False)
+        .agg(F.count("*").cast("bigint").alias("tf")),
+        "similarity.rag_tf", eager=False,
     )
     doclen = tf.groupBy("doc_id").agg(F.sum("tf").cast("bigint").alias("dl"))
     stats = doclen.agg(

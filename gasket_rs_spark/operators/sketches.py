@@ -21,7 +21,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gasket_rs_spark import keys
+from gasket_rs_spark import keys, store
 from gasket_rs_spark.grid import snap
 from gasket_rs_spark.tables import load
 
@@ -611,10 +611,9 @@ def q_quantile_normalize_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     # bounded rows — checkpoint so the corpus bucket pass runs once, and
     # derive the total FROM the sketch (sum of bucket counts) instead of
     # a second corpus scan: build pass + apply pass are the only two.
-    hist = (
-        ev.groupBy(_qbucket(F.col("value")).alias("qb"))
-        .agg(F.count("*").alias("cnt_eq"))
-        .localCheckpoint(eager=True)
+    hist = store.materialize(
+        ev.groupBy(_qbucket(F.col("value")).alias("qb")).agg(F.count("*").alias("cnt_eq")),
+        "sketches.qbucket_hist", eager=True,
     )
     hb = hist.select(F.col("qb").alias("qb2"), F.col("cnt_eq").alias("cnt2"))
     below = (

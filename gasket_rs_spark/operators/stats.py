@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gasket_rs_spark import keys
+from gasket_rs_spark import keys, store
 from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
@@ -587,18 +587,18 @@ def q_mixture_unimax_waterfill(spark: SparkSession, sf_dir: str) -> DataFrame:
         .otherwise(F.lit("d"))
     )
     ntok = F.size(F.filter(keys.tokens(), lambda x: x != F.lit("")))
-    strata = (
+    strata = store.materialize(
         docs.select(stratum.alias("stratum"), ntok.alias("nt"))
         .groupBy("stratum")
         .agg(F.sum("nt").cast("bigint").alias("n_tokens"))
         .withColumn(
             "cap_tokens", (F.col("n_tokens") * _UNIMAX_EMAX).cast("bigint")
-        )
+        ),
         # strata feeds THREE consumers (minsum self-join both sides +
         # budget agg): without truncation the corpus token-count pass
         # re-executes per branch (6 scans in the physical plan — measured
         # round 10). The frame is 4 rows; materializing it is free.
-        .localCheckpoint(eager=True)
+        "stats.unimax_strata", eager=True,
     )
     budget = strata.agg(F.sum("n_tokens").cast("bigint").alias("budget"))
     minsums = (
@@ -660,7 +660,7 @@ def q_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     carries greatest(..., 1.0) on both engines: a one-language corpus
     would otherwise hit 0/0 (the ADVICE-r11 class)."""
     docs = load(spark, sf_dir, "documents")
-    hist = (
+    hist = store.materialize(
         docs.select(
             F.col("n_chars").cast("bigint").alias("s"),
             (F.col("lang") == "en").cast("int").alias("is_a"),
@@ -669,8 +669,8 @@ def q_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum("is_a").cast("bigint").alias("ca"),
             F.sum(1 - F.col("is_a")).cast("bigint").alias("cb"),
-        )
-        .localCheckpoint(eager=True)  # bounded rows; two consumers
+        ),
+        "stats.ks_hist", eager=True,  # bounded rows; two consumers
     )
     h2 = hist.select(
         F.col("s").alias("s2"), F.col("ca").alias("ca2"), F.col("cb").alias("cb2")
@@ -725,7 +725,7 @@ def _en_length_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
     groupBy, bounded by the score's value range, not the corpus;
     checkpointed because every consumer reads it twice."""
     docs = load(spark, sf_dir, "documents")
-    return (
+    return store.materialize(
         docs.select(
             F.col("n_chars").cast("bigint").alias("s"),
             (F.col("lang") == "en").cast("int").alias("pos"),
@@ -734,8 +734,8 @@ def _en_length_hist(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(
             F.sum("pos").cast("bigint").alias("np"),
             F.sum(1 - F.col("pos")).cast("bigint").alias("nn"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "stats.en_length_hist", eager=True,
     )
 
 
@@ -802,10 +802,10 @@ def q_temperature_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     costs one scan regardless of how many alphas are probed."""
     docs = load(spark, sf_dir, "documents")
     ntok = F.size(keys.tokens()).cast("bigint")
-    dom = (
+    dom = store.materialize(
         docs.groupBy("source")
-        .agg(F.sum(ntok).cast("bigint").alias("n_tok"))
-        .localCheckpoint(eager=True)  # k rows; feeds grid join + via sums
+        .agg(F.sum(ntok).cast("bigint").alias("n_tok")),
+        "stats.temperature_domains", eager=True,  # k rows; feeds grid join + via sums
     )
     alphas = spark.range(1, 11).select(
         (F.col("id") / 10.0).alias("alpha")
@@ -1007,10 +1007,8 @@ def q_domain_reweight_doremi(spark: SparkSession, sf_dir: str) -> DataFrame:
     for _ in range(_DOREMI_T):
         # s feeds two consumers (the sum agg + the update join): truncate
         # per step or lineage doubles each iteration. k-row frame — free.
-        s = cur.withColumn(
-            "s",
-            units(F.col("w") * F.col("e"), 1e9),
-        ).localCheckpoint(eager=True)
+        s = cur.withColumn("s", units(F.col("w") * F.col("e"), 1e9))
+        s = store.materialize(s, "stats.doremi_step", eager=True)
         z = s.agg(F.sum("s").cast("bigint").alias("z"))
         cur = (
             s.crossJoin(F.broadcast(z))
@@ -1347,7 +1345,7 @@ def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).alias("s6"),
     )
     tot = s.agg(F.sum("s6").cast("bigint").alias("stot"))
-    base = (
+    base = store.materialize(
         s.crossJoin(F.broadcast(tot))
         .select(
             "lang",
@@ -1357,8 +1355,8 @@ def q_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"{_NEYMAN_B} * s6 - ({_NEYMAN_B} * s6 div stot) * stot")
             .cast("bigint")
             .alias("rem"),
-        )
-        .localCheckpoint(eager=True)  # |strata| rows; consumed by 3 branches
+        ),
+        "stats.neyman_base", eager=True,  # |strata| rows; consumed by 3 branches
     )
     deficit = base.agg(
         (F.lit(_NEYMAN_B) - F.sum("floor_alloc")).cast("bigint").alias("d")
@@ -1976,9 +1974,8 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
     bg = ev.groupBy("b", "event_type").agg(
         F.count("*").cast("bigint").alias("c")
     )
-    hist = bg.groupBy("b").agg(F.sum("c").cast("bigint").alias("cnt")).localCheckpoint(
-        eager=True
-    )
+    hist = bg.groupBy("b").agg(F.sum("c").cast("bigint").alias("cnt"))
+    hist = store.materialize(hist, "stats.kruskal_hist", eager=True)
     h2 = hist.select(F.col("b").alias("b2"), F.col("cnt").alias("cnt2"))
     less = (
         hist.join(F.broadcast(h2), F.col("b2") < F.col("b"), "left")
@@ -2007,7 +2004,8 @@ def q_kruskal_wallis(spark: SparkSession, sf_dir: str) -> DataFrame:
             / F.col("n_i").cast("double"),
             1,
         ).alias("t_i"),
-    ).localCheckpoint(eager=True)
+    )
+    terms = store.materialize(terms, "stats.kruskal_terms", eager=True)
     tot = ev.agg(F.count("*").cast("bigint").alias("n"))
     ties = hist.agg(
         F.sum(F.col("cnt") * F.col("cnt") * F.col("cnt") - F.col("cnt"))
@@ -2176,28 +2174,28 @@ def q_huber_location(spark: SparkSession, sf_dir: str) -> DataFrame:
     # eager checkpoint: med feeds THREE consumers (dev, base, the output
     # row) — unmaterialized, the corpus-wide median window re-ran once
     # per consumer inside the base-build job (§2.4)
-    med = (
+    med = store.materialize(
         _lower_median(ev, "v6")
-        .select("event_type", F.col("v6").alias("med6"), "n")
-        .localCheckpoint(eager=True)
+        .select("event_type", F.col("v6").alias("med6"), "n"),
+        "stats.huber_median", eager=True,
     )
-    mad = (
+    mad = store.materialize(
         _lower_median(_abs_dev(ev, med), "d6")
         .select(
             "event_type",
             F.col("d6").alias("mad6"),
             F.expr(f"(d6 * {_HUBER_K_PM}) div 1000").cast("bigint").alias("k6"),
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "stats.huber_mad", eager=True,
     )
     # the IRLS loop only reads (event_type, v6, k6) — med6/mad6/n for the
     # output row come from the tiny checkpointed frames, so the corpus
     # checkpoint is 3 columns, not 6, and no final corpus pass re-derives
     # the per-type constants (it was a 5th full aggregation)
-    base = (
+    base = store.materialize(
         ev.join(F.broadcast(mad.select("event_type", "k6")), "event_type")
-        .select("event_type", "v6", "k6")
-        .localCheckpoint(eager=True)
+        .select("event_type", "v6", "k6"),
+        "stats.huber_base", eager=True,
     )
     cur = med.select("event_type", F.col("med6").alias("mu6"))
     for _ in range(_HUBER_T):
@@ -2313,11 +2311,11 @@ def q_hodges_lehmann(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("event_type").orderBy(
         F.md5(F.col("event_id").cast("string")), "event_id"
     )
-    samp = (
+    samp = store.materialize(
         ev.withColumn("rk", F.row_number().over(w))
         .where(F.col("rk") <= _HL_SAMPLE)
-        .select("event_type", "rk", "v6")
-        .localCheckpoint(eager=True)
+        .select("event_type", "rk", "v6"),
+        "stats.hodges_sample", eager=True,
     )
     a = samp.select("event_type", F.col("rk").alias("i"), F.col("v6").alias("va"))
     b = samp.select(

@@ -16,7 +16,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gasket_rs_spark import keys
+from gasket_rs_spark import keys, store
 from gasket_rs_spark.grid import snap, units
 from gasket_rs_spark.tables import load
 
@@ -237,16 +237,14 @@ def q_text_tfidf_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     # §2.4). ReuseExchange alone cannot fuse the two consumers — column
     # pruning drops the tf count from the df branch's copy of the
     # subtree, making the exchanges physically different — so tf is
-    # shared through localCheckpoint(eager=False), the same
+    # shared through a lazy checkpoint, the same
     # single-scan-composite pattern as rag_retrieval_pipeline. Under
     # adaptive execution building it still runs tf's shuffle-map stage
     # (2 build-time jobs for text_tfidf_top at sf0.1, counted by job
     # group); the action computes its final stage once. Plan: 2 scans +
     # 2 explodes → 1 scan + 1 explode; measured interleaved at sf0.1 min 0.515 s vs
-    # 0.842 s, identical rows; oracle EXACT ×3 SFs. Same
-    # executor-loss caveat as every localCheckpoint site (SCALE.md): a
-    # 1000-executor run swaps these to reliable checkpoint/persist.
-    tf = tf.localCheckpoint(eager=False)
+    # 0.842 s, identical rows; oracle EXACT ×3 SFs.
+    tf = store.materialize(tf, "text.tfidf_tf", eager=False)
     df_ = tf.groupBy("token").agg(F.count("*").alias("df"))
     from pyspark.sql import Window
 
@@ -947,7 +945,7 @@ def span_dedup(docs: DataFrame) -> DataFrame:
     # partition) ran once per consumer. One materialization per action
     # instead (the tf/df pattern from text_tfidf_top). Interleaved A/B
     # at sf0.1: min 2.511 -> 2.054 s (-18%), identical rows.
-    grams = _word_grams(docs, _SPAN_W).localCheckpoint(eager=False)
+    grams = store.materialize(_word_grams(docs, _SPAN_W), "text.span_grams", eager=False)
     firsts = grams.groupBy("gram").agg(
         F.min(F.struct("doc_id", "pos")).alias("first_k")
     )
@@ -1081,7 +1079,7 @@ def _lm_doc_scores(docs: DataFrame) -> DataFrame:
     # build time, the consuming action materializes the trigram stream
     # once (r21; with the b-frame checkpoint in q_perplexity_buckets,
     # interleaved A/B at sf0.1: min 2.775 s vs 5.843 s, identical rows).
-    ex = ex.localCheckpoint(eager=False)
+    ex = store.materialize(ex, "text.lm_examples", eager=False)
     c3 = ex.groupBy("gram").agg(F.count("*").alias("c3"))
     c2 = ex.groupBy("ctx").agg(F.count("*").alias("c2"))
     return (
@@ -1211,10 +1209,10 @@ def q_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     # of the doc-sized (id + 3 numbers) score frame — the hist branch's
     # eager build materializes it, the final join reads it (r21; A/B
     # evidence at the _lm_doc_scores ex checkpoint).
-    b = b.localCheckpoint(eager=False)
+    b = store.materialize(b, "text.perplexity_docs", eager=False)
     # bounded grid (few hundred rows), three consumers — checkpoint
-    hist = (
-        b.groupBy("qb").agg(F.count("*").alias("cnt")).localCheckpoint(eager=True)
+    hist = store.materialize(
+        b.groupBy("qb").agg(F.count("*").alias("cnt")), "text.perplexity_hist", eager=True
     )
     h2 = hist.select(F.col("qb").alias("qb2"), F.col("cnt").alias("cnt2"))
     cum = (
@@ -1486,7 +1484,7 @@ def q_text_novelty(
         doc_grams = doc_grams.select("doc_id", "gram")
     # lazy checkpoint: the distinct gram table feeds both doc-level
     # branches below; pruning would otherwise defeat exchange reuse (§2.4)
-    doc_grams = doc_grams.distinct().localCheckpoint(eager=False)
+    doc_grams = store.materialize(doc_grams.distinct(), "text.novelty_grams", eager=False)
     # n_novel per doc == |{grams whose min doc_id is this doc}|, i.e. a
     # count over the first-occurrence table grouped by its OWNER — the
     # former formulation joined firsts back onto the full gram table
@@ -1665,7 +1663,7 @@ def winnow_pairs(docs: DataFrame) -> DataFrame:
         .where((F.col("df") >= 2) & (F.col("df") <= _WIN_MAXDF))
         .select("mh")
     )
-    fpk = fp.join(df, "mh").localCheckpoint(eager=True)
+    fpk = store.materialize(fp.join(df, "mh"), "text.winnow_fingerprints", eager=True)
     a = fpk.select("mh", F.col("doc_id").alias("doc_a"))
     b = fpk.select("mh", F.col("doc_id").alias("doc_b"))
     pairs = (
@@ -1894,15 +1892,14 @@ def q_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
     # df-from-tf trick (§2.4); counts itself is lazily checkpointed for
     # its two consumers (totals/vocab subtree + the likelihood table).
     # r21 interleaved A/B min 1.522 → 1.307 s at sf0.1, identical rows.
-    counts = tr_tok.groupBy("lang", "tok").agg(
-        F.count("*").cast("bigint").alias("c")
-    ).localCheckpoint(eager=False)
+    counts = tr_tok.groupBy("lang", "tok").agg(F.count("*").cast("bigint").alias("c"))
+    counts = store.materialize(counts, "text.nb_counts", eager=False)
     totals = counts.groupBy("lang").agg(F.sum("c").cast("bigint").alias("t_l"))
     vocab = counts.select("tok").distinct().agg(
         F.count("*").cast("bigint").alias("v")
     )
     dtot = train.agg(F.count("*").cast("bigint").alias("d_all"))
-    lang_consts = (
+    lang_consts = store.materialize(
         train.groupBy("lang")
         .agg(F.count("*").cast("bigint").alias("d_l"))
         .join(totals, "lang")
@@ -1918,10 +1915,10 @@ def q_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
             ).alias("unseen6"),
             "t_l",
             "v",
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "text.nb_lang_consts", eager=False,
     )
-    ll = (
+    ll = store.materialize(
         counts.join(totals, "lang")
         .crossJoin(F.broadcast(vocab))
         .select(
@@ -1933,8 +1930,8 @@ def q_naive_bayes_langid(spark: SparkSession, sf_dir: str) -> DataFrame:
                     / (F.col("t_l") + F.col("v")).cast("double")
                 )
             ).alias("ll6"),
-        )
-        .localCheckpoint(eager=False)
+        ),
+        "text.nb_loglik", eager=False,
     )
     te = test.select(
         "doc_id", F.col("lang").alias("true_lang"), F.explode("toks").alias("tok")
@@ -1992,11 +1989,11 @@ def q_keyword_textrank(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.explode(keys.grams(F.col("ts"), 2, _w1_w2)).alias("p")
     ).select(F.col("p.w1").alias("w1"), F.col("p.w2").alias("w2"))
     e = pairs.where(F.col("w1") != F.col("w2"))
-    edges = (
+    edges = store.materialize(
         e.select(F.col("w1").alias("src"), F.col("w2").alias("dst"))
         .unionAll(e.select(F.col("w2").alias("src"), F.col("w1").alias("dst")))
-        .distinct()
-        .localCheckpoint(eager=True)
+        .distinct(),
+        "text.textrank_edges", eager=True,
     )
     nodes = edges.select(F.col("src").alias("node")).distinct()
     ranks = pagerank(nodes, edges)
@@ -2240,9 +2237,8 @@ def q_rake_keyphrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     content = docs.where(F.length("tok") >= _TEXTRANK_MIN_LEN)
     wisl = Window.partitionBy("doc_id").orderBy("pos")
-    phr_tok = content.withColumn(
-        "island", F.col("pos") - F.row_number().over(wisl)
-    ).localCheckpoint(eager=True)
+    phr_tok = content.withColumn("island", F.col("pos") - F.row_number().over(wisl))
+    phr_tok = store.materialize(phr_tok, "text.rake_phrases", eager=True)
     phr_len = phr_tok.groupBy("doc_id", "island").agg(
         F.count("*").cast("bigint").alias("plen")
     )

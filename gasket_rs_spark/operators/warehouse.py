@@ -29,7 +29,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from gasket_rs_spark import keys
+from gasket_rs_spark import keys, store
 from gasket_rs_spark.grid import units
 from gasket_rs_spark.tables import load
 
@@ -585,7 +585,7 @@ def q_zonemap_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
         ( _dt.date.fromisoformat(c) - _dt.date(1970, 1, 1)).days
         for c in _ZONEMAP_CUTS
     ]
-    files = (
+    files = store.materialize(
         load(spark, sf_dir, "lineitem")
         .select(
             F.expr("l_orderkey div 100").alias("file_id"),
@@ -600,8 +600,8 @@ def q_zonemap_pruning_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count("*").cast("bigint").alias("rows"),
             F.min("ship_day").cast("bigint").alias("min_day"),
             F.max("ship_day").cast("bigint").alias("max_day"),
-        )
-        .localCheckpoint(eager=True)  # metadata-sized; 8 cutoff consumers
+        ),
+        "warehouse.zonemap_files", eager=True,  # metadata-sized; 8 cutoff consumers
     )
     cuts = files.sparkSession.range(1).select(
         F.explode(
@@ -748,9 +748,8 @@ def q_deletion_vector_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pair favors, identical rows). The anti-join itself stays — it IS
     # the merge-on-read DV shape this witness demonstrates (production
     # deletes arrive as a separate side table, not a derivable filter).
-    rows = li.withColumn("file_id", file_id).withColumn(
-        "pos", F.row_number().over(w).cast("bigint")
-    ).localCheckpoint(eager=False)
+    rows = li.withColumn("file_id", file_id).withColumn("pos", F.row_number().over(w).cast("bigint"))
+    rows = store.materialize(rows, "warehouse.dv_rows", eager=False)
     u16 = keys.hex_int(
         F.md5(
             F.concat_ws(
@@ -871,7 +870,7 @@ def q_temporal_join_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
         units(F.col("value"), 1e4).alias("attr4"),
     )
     w = Window.partitionBy("user_id").orderBy("ts_sec", "event_id")
-    dim = (
+    dim = store.materialize(
         ev.where(F.col("event_type") == "purchase")
         .select(
             "user_id",
@@ -879,8 +878,8 @@ def q_temporal_join_scd2(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lead("ts_sec").over(w).alias("valid_to"),
             F.row_number().over(w).cast("bigint").alias("version"),
             "attr4",
-        )
-        .localCheckpoint(eager=True)
+        ),
+        "warehouse.scd2_dim", eager=True,
     )
     clicks = (
         ev.where(F.col("event_type") == "click")

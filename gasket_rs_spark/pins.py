@@ -1,11 +1,12 @@
 """Witness → pytest-pin mapping for the rows-only class (VERDICT r13 #3).
 
-A rows-only witness (no ``oracle_sql()`` entry — approx sketches, LSH/ANN
-candidate paths, iterative PCA) gets only a row-count check from the
-driver, so its real evidence is a named pytest pin: a recall/error/capture
-floor, a merge-invariance property, or a pure-Python recompute. Until r13
-that mapping lived in COVERAGE.md prose, which nothing machine-checked — a
-new rows-only witness could ship pinless and the close would stay green.
+A rows-only witness (no ``oracle_sql()`` entry — approx sketches, the
+SimHash and embedding-LSH candidate paths, ANN) gets only a row-count
+check from the driver, so its real evidence is a named pytest pin: a
+recall/error/capture floor, a merge-invariance property, or a
+pure-Python recompute. Until r13 that mapping lived in COVERAGE.md
+prose, which nothing machine-checked — a new rows-only witness could
+ship pinless and the close would stay green.
 
 This table IS the machine-checked mapping: ``scripts/round_close.py``
 fails the close if any rows-only witness in the registry lacks an entry
@@ -18,9 +19,14 @@ delete its row (round_close flags leftovers as stale, non-fatally).
 
 Pin-count basis (VERDICT r15 #4): the canonical count is UNIQUE pytest
 node ids — what ``round_close`` prints ("N pin ids all collect") — not
-table tuples: a pin may back several witnesses (dedup_minhash_lsh and
-dedup_components_lsh share the MinHash recall-floor pin), so the tuple
-count can exceed the id count by the number of shared pins.
+table tuples: a pin may back several witnesses, so the tuple count can
+exceed the id count by the number of shared pins.
+
+The MinHash-LSH witnesses (dedup_minhash_lsh, dedup_components_lsh,
+curation_pipeline_lsh) left this map: on the fixtures each gives its
+exact twin's rows at every SF, so each is checked EXACT against the
+twin's oracle. Their recall and band-layout pins stay as supplementary
+evidence (tests/test_dedup_recall.py, tests/test_curation_lsh.py).
 """
 
 from __future__ import annotations
@@ -41,27 +47,10 @@ ROWS_ONLY_PINS: dict[str, tuple[str, ...]] = {
         # coverage without registry growth.
         "tests/test_approx_bounds.py::test_exact_percentile_plumbing_cross_engine",
     ),
-    # LSH curation path: equal to the exact-twin pipeline modulo the
-    # pinned recall floor, with a plan assert (no cartesian).
-    "curation_pipeline_lsh": (
-        "tests/test_curation_lsh.py::test_equality_modulo_recall",
-        "tests/test_curation_lsh.py::test_no_cartesian_in_plan",
-    ),
-    # components-over-LSH-pairs: edge recall pinned via the MinHash
-    # floor; the clustering algebra pinned against a pure-Python
-    # union-find on random graphs.
-    "dedup_components_lsh": (
-        "tests/test_dedup_recall.py::test_minhash_lsh_recall_floor",
-        "tests/test_dedup_components.py::test_paths_agree_on_random_graph",
-    ),
     "dedup_embedding_lsh": (
         "tests/test_dedup_embedding_lsh.py::test_lsh_pairs_subset_of_exact_witness",
         "tests/test_dedup_embedding_lsh.py::test_true_duplicates_are_captured",
         "tests/test_dedup_embedding_lsh.py::test_candidate_volume_stays_subquadratic",
-    ),
-    "dedup_minhash_lsh": (
-        "tests/test_dedup_recall.py::test_minhash_lsh_recall_floor",
-        "tests/test_dedup_recall.py::test_minhash_band_layout_midpoint",
     ),
     "dedup_simhash": (
         "tests/test_dedup_simhash.py::test_pigeonhole_completeness_exhaustive",

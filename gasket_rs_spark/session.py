@@ -64,14 +64,13 @@ def get_session(app_name: str = "gasket_rs_spark", cpus: int | None = None) -> S
 def clear_caches(spark: SparkSession) -> None:
     """Drop every persisted DataFrame in the session.
 
-    Since round 9 the dedup/similarity sketch bases use
-    ``localCheckpoint(eager=True)`` instead of persist (checkpoint blocks
-    are ContextCleaner-freed once the plan is dereferenced — no
-    session-lifetime CacheManager residency; see SCALE.md round-9
-    forensics), so this mostly guards remaining ad-hoc persists and the
-    bench's pass isolation (CacheManager dedups identical plans, which
-    would otherwise turn bench passes 2-3 into warm-cache reads of any
-    cached frame). At 100 TB the equivalent lever is an explicit
-    unpersist policy per pipeline stage, not session-lifetime LRU.
+    The operators never persist: every shared frame goes through
+    ``store.materialize``, whose checkpoint blocks the ContextCleaner
+    frees once the frame is dereferenced, so this mostly guards ad-hoc
+    persists by callers and the bench's pass isolation (CacheManager
+    dedups identical plans, which would otherwise turn bench passes 2-3
+    into warm-cache reads of any cached frame). At 100 TB the equivalent
+    lever is an explicit unpersist policy per pipeline stage, not
+    session-lifetime LRU.
     """
     spark.catalog.clearCache()

@@ -10,13 +10,15 @@ sf0.1) — the same data the bench times — so Exchange counts / join
 strategies / pushed filters in the files match the bench's plan shapes.
 
 --full additionally writes <query>_<tag>_full.txt: the result plan,
-then the plan of each DataFrame the query passed to localCheckpoint, in
-call order, each under a ``== localCheckpoint #i (eager=...) ==``
-header. A checkpoint truncates the visible result plan at a Scan
+then the plan of each DataFrame the query passed to the storage seam
+(``store.materialize``), in call order, each under a
+``== localCheckpoint #i (eager=...) site=<label> ==`` header naming the
+call site. A checkpoint truncates the visible result plan at a Scan
 ExistingRDD (VERDICT r21 #4); the recorded inputs keep scan counts and
 join strategies below every checkpoint auditable. The checkpoints still
-run, so an iterative witness's plan stays bounded. Capture-script-only
-wrapper of the concrete DataFrame class; operators are untouched.
+run, so an iterative witness's plan stays bounded. ``recording`` wraps
+``store.materialize`` for the length of the capture; operators are
+untouched.
 
 Every file is written normalized: the session-global counters Spark
 prints (expression ids ``name#<n>``, exchange ``plan_id=<n>``,
@@ -32,6 +34,7 @@ equal to a Python lambda of the same structure.
 
 from __future__ import annotations
 
+import contextlib
 import os
 import re
 import sys
@@ -39,6 +42,7 @@ import sys
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from bench import HEADLINE  # noqa: E402
+from gasket_rs_spark import store  # noqa: E402
 
 
 def _formatted(df) -> str:
@@ -198,6 +202,27 @@ def normalize(text: str) -> str:
     return re.sub(r"gasket_roundtrip_\w+", "gasket_roundtrip_<tmp>", text)
 
 
+@contextlib.contextmanager
+def recording(inputs: list[str]):
+    """Inside the block, each ``store.materialize`` call appends its input
+    frame's formatted plan to ``inputs`` under a ``== localCheckpoint #i
+    (eager=...) site=<label> ==`` header, then materializes as usual."""
+    orig = store.materialize
+
+    def recorded(df, site, *, eager):
+        inputs.append(
+            f"== localCheckpoint #{len(inputs) + 1} (eager={eager}) site={site} ==\n"
+            + _formatted(df)
+        )
+        return orig(df, site, eager=eager)
+
+    store.materialize = recorded
+    try:
+        yield
+    finally:
+        store.materialize = orig
+
+
 def main() -> None:
     tag = sys.argv[1]
     args = sys.argv[2:]
@@ -222,31 +247,14 @@ def main() -> None:
             f.write(normalize(text))
         print(f"wrote {name}_{tag}{suffix}.txt ({len(text)} chars)")
 
-    # patch the CONCRETE class (Spark 4: pyspark.sql.classic.dataframe
-    # .DataFrame overrides the pyspark.sql.DataFrame base's method, so
-    # patching the base is a silent no-op)
-    cls = type(spark.range(1))
-    orig = cls.localCheckpoint
     inputs: list[str] = []
-
-    def recording(self, eager=True, storageLevel=None):
-        inputs.append(
-            f"== localCheckpoint #{len(inputs) + 1} (eager={eager}) ==\n"
-            + _formatted(self)
-        )
-        return orig(self, eager, storageLevel)
-
-    if full:
-        cls.localCheckpoint = recording  # type: ignore[method-assign]
-    try:
+    with recording(inputs) if full else contextlib.nullcontext():
         for name in names:
             inputs.clear()
             plan = _formatted(queries[name](spark, sf_dir))
             write(name, "", plan)
             if full:
                 write(name, "_full", "\n".join([plan, *inputs]))
-    finally:
-        cls.localCheckpoint = orig  # type: ignore[method-assign]
     spark.stop()
 
 

@@ -14,15 +14,16 @@ Checks (seconds each, except the full-suite run — the one JVM step,
   3. pytest test_plans.py::test_no_unpartitioned_window_in_source —
      the source-level anti-pattern guard (bare Window.orderBy /
      unaudited single-partition windows).
-  4. pytest tests/test_registry_schemas.py — structural witness/oracle
-     registry invariants (no top-level array columns in oracled
-     witnesses, every oracle key has a witness, docstring discipline);
-     pytest tests/test_dup_report.py — the duplication scan and the
+  4. pytest tests/test_dup_report.py — the duplication scan and the
      package's DUP_BUDGET; and the test_plans.py source guards
      test_grid_snap_spelled_only_in_grid_module,
-     test_keys_spelled_only_in_keys_module and
-     test_collect_sites_are_allowlisted (one spelling of the grid snap
-     and of the keys; every driver collect allowlisted).
+     test_keys_spelled_only_in_keys_module,
+     test_collect_sites_are_allowlisted and
+     test_materialize_is_the_only_storage_call (one spelling of the grid
+     snap, of the keys and of the storage call; every driver collect
+     allowlisted). tests/test_registry_schemas.py (structural
+     witness/oracle registry invariants) needs a SparkSession, so it
+     runs only in the full suite (check 10).
   5. LOCALVERIFY_r{N}.json freshness — the committed 3-SF sweep artifact
      for the closing round must exist, report zero failures, cover the
      full current catalog, AND have no operator-source diff since its
@@ -80,11 +81,11 @@ sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 FAST_TESTS = [
     "tests/test_rotation.py",
     "tests/test_plans.py::test_no_unpartitioned_window_in_source",
-    "tests/test_registry_schemas.py",
     "tests/test_dup_report.py",
     "tests/test_plans.py::test_grid_snap_spelled_only_in_grid_module",
     "tests/test_plans.py::test_keys_spelled_only_in_keys_module",
     "tests/test_plans.py::test_collect_sites_are_allowlisted",
+    "tests/test_plans.py::test_materialize_is_the_only_storage_call",
 ]
 
 

@@ -373,6 +373,46 @@ def test_keys_spelled_only_in_keys_module():
     )
 
 
+def test_materialize_is_the_only_storage_call():
+    """The storage policy has one spelling, gasket_rs_spark/store.py
+    (``materialize``): no module outside it calls ``.localCheckpoint``,
+    ``.checkpoint``, ``.persist`` or ``.cache``, or imports a name from
+    ``gasket_rs_spark.store`` (a name bound that way escapes a wrapper of
+    ``store.materialize``, such as the plan capture's), and every
+    ``materialize`` call labels its site with a string literal no other
+    call site uses. An AST scan, so docstrings and comments that name
+    the calls are never matched."""
+    import ast
+    import pathlib
+    from collections import Counter
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "gasket_rs_spark"
+    storage = {"localCheckpoint", "checkpoint", "persist", "cache"}
+
+    offenders, labels = [], Counter()
+    for py in sorted(pkg.rglob("*.py")):
+        rel = py.relative_to(pkg).as_posix()
+        if rel == "store.py":
+            continue
+        for node in ast.walk(ast.parse(py.read_text())):
+            if isinstance(node, ast.ImportFrom) and node.module == "gasket_rs_spark.store":
+                offenders.append(f"{rel}:{node.lineno}: {ast.unparse(node)}")
+            elif isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+                if node.func.attr in storage:
+                    offenders.append(f"{rel}:{node.lineno}: .{node.func.attr}(")
+                elif node.func.attr == "materialize":
+                    site = node.args[1] if len(node.args) > 1 else None
+                    if isinstance(site, ast.Constant) and isinstance(site.value, str):
+                        labels[site.value] += 1
+                    else:
+                        offenders.append(f"{rel}:{node.lineno}: materialize site is not a literal")
+    offenders += [f"site {s!r} labels {n} call sites" for s, n in labels.items() if n > 1]
+    assert not offenders, (
+        "materialize frames through gasket_rs_spark.store.materialize, one "
+        f"literal site label per call ({len(offenders)} offenders): {offenders}"
+    )
+
+
 def test_tpch_additions_plan_shapes(spark, sf_dir):
     """Scale pins for the round-5 TPC-H additions: Q5's five dim joins all
     broadcast (the c=s nation equality must ride a hash join, not become
